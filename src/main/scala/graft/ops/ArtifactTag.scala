@@ -35,6 +35,15 @@ object ArtifactTag {
     try out.write(tag.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Whether the artifact at `path` carries a tag at all — its
+    * writer's commit point: the Materialize writers write the tag
+    * LAST, after every part and the props sidecar, so an untagged
+    * directory is a torn or failed write. */
+  def committed(s: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path, Name)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Require that the artifact at `path` was written for corpus
     * `tag`. Throws on a missing sidecar (an artifact not written
     * through the tagged writer is not admissible) or a mismatch. */
@@ -62,7 +71,8 @@ object ArtifactTag {
   private val PropsName = "_graft_props"
 
   /** Version of the provenance FORMAT — specifically the content-
-    * checksum formula ([[Materialize.ccSliceChecksum]]'s SliceXor) a
+    * checksum formula (the per-row hash [[Materialize.ccSliceChecksum]]
+    * and every refresh admission XOR) a
     * reader replays against `content_xor`. Bumped when the formula
     * changes (round 11 moved from a string concat to separate
     * xxhash64 args + a null sentinel — v2); without this key a

@@ -131,6 +131,61 @@ object Materialize {
   def bestSurvivorCorpus(s: SparkSession, dir: String, path: String): Unit =
     partitioned(bestSurvivorFrame(s, dir), path, Seq("split"), Seq("doc_id"))
 
+  /** Write `df` range-partitioned on `range` and sorted within
+    * partitions on `sort` — the layout rule every index part follows
+    * ([[partitioned]]'s argument without the directory split): files
+    * are disjoint sorted key ranges, so a key filter prunes row
+    * groups. */
+  private def sortedWrite(df: DataFrame, path: String, range: Seq[String],
+      sort: Seq[String]): Unit =
+    df.repartitionByRange(range.map(col): _*)
+      .sortWithinPartitions(sort.map(col): _*)
+      .write.parquet(path)
+
+  /** Run a writer's independent steps concurrently — its part writes,
+    * each with its own old-side reads, and its admission aggregate
+    * beside its batch preparation ([[admit]]); return once every step
+    * has finished, then rethrow the first failure (in completion order
+    * — any later ones ride along as suppressed). A refresh is short
+    * work: each step is a few small Spark jobs whose cost is mostly
+    * driver and scheduler latency, so one step's jobs fill the cores
+    * another's leave idle. The threads are created per call, so they
+    * inherit the caller's Spark local properties (job group and
+    * description — what every listener attributes jobs by) and its
+    * active session; pooled threads would carry whatever properties
+    * they were created under. Every step runs even when another
+    * fails, so no write is still in flight when the writer throws —
+    * and callers [[seal]] only after this returns. */
+  private[graft] def concurrently(parts: (() => Unit)*): Unit = {
+    val failures =
+      new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = parts.map { p =>
+      new Thread(() => {
+        try p() catch { case t: Throwable => failures.add(t) }
+        ()
+      }, "graft-part")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(t => first.addSuppressed(t))
+      throw first
+    }
+  }
+
+  /** Write an artifact's sidecars once every part has landed: the
+    * `_graft_props` provenance first, the `_graft_corpus` tag LAST.
+    * The tag is the commit point — every reader and admission requires
+    * it first — so a writer that fails, or a crash anywhere before the
+    * tag lands, leaves an untagged directory whose reader refuses with
+    * "carries no _graft_corpus tag — rebuild it", never a tagged
+    * artifact with missing provenance. */
+  private def seal(s: SparkSession, path: String, tag: String,
+      props: Map[String, String]): Unit = {
+    ArtifactTag.writeProps(s, path, props)
+    ArtifactTag.write(s, path, tag)
+  }
+
   /** Materialize the IVF ANN index the way `ann_ivf_topk`'s scale story
     * promises: the (vec_id, embedding, cid) assignment written
     * `partitionBy(cid)` under `path`/index — a query that probes
@@ -144,14 +199,20 @@ object Materialize {
   /** [[ivfIndex]] over an explicit (vec_id, embedding) slice — the
     * base build of the IVF generational append cycle
     * ([[ivfIndexAppend]]), write-once + vector-slice provenance. */
-  def ivfIndexOf(s: SparkSession, vecs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+  def ivfIndexOf(s: SparkSession, vecs: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
     val (index, cents) = graft.operators.Similarity.ivfBuildOf(s, vecs)
-    partitioned(index, s"$path/index", Seq("cid"), Seq("vec_id"))
-    cents.coalesce(1).write.parquet(s"$path/centroids")
-    writeVecProvenance(s, path, vecs, tag)
+    concurrently(ivfParts(path, index, cents): _*)
+    seal(s, path, tag, sliceProps(Vecs, vecs))
   }
+
+  /** The IVF parts — cell-partitioned assignments + the centroid
+    * copy; ONE layout for the full, append and compaction writers. */
+  private def ivfParts(path: String, index: => DataFrame,
+      cents: => DataFrame): Seq[() => Unit] = Seq(
+    () => partitioned(index, s"$path/index", Seq("cid"), Seq("vec_id")),
+    () => cents.coalesce(1).write.parquet(s"$path/centroids"))
 
   /** Materialize the MINHASH band-bucket index — the near-dup serving
     * artifact completing the from-index matrix on the DEDUP side the
@@ -178,84 +239,25 @@ object Materialize {
     * the OLD-corpus-only state `dedup_minhash_incremental` probes.
     * `tag` is the corpus directory the slice came from (the
     * [[ccLabelsOf]] tagging discipline); write-once + slice
-    * provenance since round 11, so the artifact-boundary incremental
-    * mode can refuse a wrong or drifted previous cycle. */
-  def minhashIndexOf(s: SparkSession, docs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+    * provenance (n_docs, content_xor, max_doc_id): max_doc_id + 1 IS
+    * the old/new cut an artifact-boundary reader or the next append
+    * refreshes from (deriving it from the current table's midpoint
+    * double-emits or drops docs the moment the artifact slice and
+    * the midpoint disagree), and the checksum lets it refuse id
+    * reuse, backfill, or in-place edits of already-indexed docs. */
+  def minhashIndexOf(s: SparkSession, docs: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
-    val (bands, sigs) =
-      graft.operators.Dedup.minhashIndexFramesOf(s, docs)
-    bands.repartitionByRange(col("band"), col("band_sig"))
-      .sortWithinPartitions("band", "band_sig", "doc_id")
-      .write.parquet(s"$path/bands")
-    sigs.repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.parquet(s"$path/sigs")
-    writeSliceProvenance(s, path, docs, tag)
+    val (bands, sigs) = graft.operators.Dedup.minhashIndexFramesOf(s, docs)
+    concurrently(minhashParts(path, bands, sigs): _*)
+    seal(s, path, tag, sliceProps(Docs, docs))
   }
 
-  /** Tag + provenance sidecars for a slice-derived signature index —
-    * the `_graft_corpus` binding plus the (n_docs, content_xor,
-    * max_doc_id) facts an ARTIFACT-BOUNDARY incremental reader needs:
-    * max_doc_id + 1 IS the old/new cut (the index defines the
-    * boundary, the [[ccLabelsOf]] rule — deriving it from the current
-    * table's midpoint double-emits or drops docs the moment the
-    * artifact slice and the midpoint disagree), and the checksum lets
-    * the reader refuse id reuse, backfill, or in-place edits of
-    * already-indexed docs instead of serving stale signatures. */
-  private def writeSliceProvenance(s: SparkSession, path: String,
-      docs: org.apache.spark.sql.DataFrame, tag: String,
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    // ONE aggregate pass for all three provenance facts — a second
-    // max(doc_id) action would re-scan the (doc_id, text) slice,
-    // a full redundant corpus read at nightly-refresh sizes. The xor
-    // expression is the same [[SliceXor]] the reader replays.
-    val r = docs.select("doc_id", "text")
-      .agg(count(lit(1L)), expr(SliceXor), max("doc_id")).head()
-    val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_docs" -> r.getLong(0).toString,
-      "content_xor" -> xor.toString) ++
-      (if (r.isNullAt(2)) Map.empty[String, String]
-       else Map("max_doc_id" -> r.getLong(2).toString)) ++ extra)
-  }
-
-  /** Additive provenance for an APPEND generation (round-12 advisor
-    * fix): the new head's facts merge from the PARENT's recorded props
-    * plus a BATCH-only aggregate — n_docs adds, content_xor XORs,
-    * max_doc_id maxes — so the append cycle's compute stays strictly
-    * ∝ batch, as the append writers' contract documents (the previous
-    * full-corpus [[writeSliceProvenance]] call re-ran the md5
-    * content-xor over every OLD row on every refresh, a
-    * corpus-proportional scan that even `graft.artifact
-    * .trustOldContent` did not remove). Soundness: the corpus is the
-    * disjoint union of the below-cut slice and the batch, XOR/count/
-    * max all merge over disjoint unions, and the parent's facts were
-    * verified at admission (checksum replay — or count-only under
-    * trustOldContent, which trusts the stored xor by contract), so
-    * parent ⊕ batch is BIT-EQUAL to the full-slice aggregate (the
-    * next cycle's admission replay still passes; MaterializeSpec pins
-    * the equality). */
-  private def writeSliceProvenanceAppended(s: SparkSession, path: String,
-      batch: org.apache.spark.sql.DataFrame, tag: String,
-      parent: Map[String, String],
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    val r = batch.select("doc_id", "text")
-      .agg(count(lit(1L)), expr(SliceXor), max("doc_id")).head()
-    val bXor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val maxId = (parent.get("max_doc_id").map(_.toLong) ++
-      (if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      .reduceOption(_ max _)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_docs" -> (parent("n_docs").toLong + r.getLong(0)).toString,
-      "content_xor" ->
-        (parent("content_xor").toLong ^ bXor).toString) ++
-      maxId.map(m => "max_doc_id" -> m.toString) ++ extra)
-  }
+  private def minhashParts(path: String, bands: DataFrame,
+      sigs: DataFrame): Seq[() => Unit] = Seq(
+    () => sortedWrite(bands, s"$path/bands", Seq("band", "band_sig"),
+      Seq("band", "band_sig", "doc_id")),
+    () => sortedWrite(sigs, s"$path/sigs", Seq("doc_id"), Seq("doc_id")))
 
   /** Materialize the SIMHASH banded-signature index — the
     * [[minhashIndex]] treatment for the simhash candidate family:
@@ -272,37 +274,16 @@ object Materialize {
   /** [[simhashIndex]] over an explicit (doc_id, text) slice — the
     * old-corpus-only index `dedup_simhash_incremental` point-probes
     * (the [[minhashIndexOf]] discipline, provenance included). */
-  def simhashIndexOf(s: SparkSession,
-      docs: org.apache.spark.sql.DataFrame, path: String,
+  def simhashIndexOf(s: SparkSession, docs: DataFrame, path: String,
       tag: String): Unit = {
     requireFresh(s, path)
-    graft.operators.Dedup.simhashBandedOf(s, docs)
-      .repartitionByRange(col("k"), col("bh"))
-      .sortWithinPartitions("k", "bh", "doc_id")
-      .write.parquet(s"$path/bands")
-    writeSliceProvenance(s, path, docs, tag)
+    simhashPart(path, graft.operators.Dedup.simhashBandedOf(s, docs))
+    seal(s, path, tag, sliceProps(Docs, docs))
   }
 
-  /** The shared admission prefix of the signature-index APPEND
-    * writers ([[lexAdmission]]'s sibling on the signature side): tag,
-    * provenance version, boundary presence, and the old-slice guard.
-    * Returns (cut, props, full-corpus docs). */
-  private def sigAdmission(s: SparkSession, dir: String,
-      oldPath: String, what: String): (Long, Map[String, String],
-      org.apache.spark.sql.DataFrame) = {
-    ArtifactTag.require(s, oldPath, dir)
-    val props = ArtifactTag.readProps(s, oldPath)
-    ArtifactTag.requireProvVersion(props, oldPath)
-    require(props.contains("max_doc_id"),
-      s"$what index at $oldPath carries no max_doc_id provenance — an " +
-        "empty or pre-provenance index has no append mode; rebuild it " +
-        "with the Materialize writer")
-    val cut = props("max_doc_id").toLong + 1L
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    requireDocSlice(s, props, oldPath, docs, cut,
-      "signed", s"re-sign the corpus with the full $what writer instead")
-    (cut, props, docs)
-  }
+  private def simhashPart(path: String, banded: DataFrame): Unit =
+    sortedWrite(banded, s"$path/bands", Seq("k", "bh"),
+      Seq("k", "bh", "doc_id"))
 
   /** GENERATIONAL (append-mode) refresh of the MINHASH band index —
     * the [[lexicalIndexAppend]] shape on the signature side, and the
@@ -312,26 +293,23 @@ object Materialize {
     * pointer — there is no cumulative part at all. Write cost strictly
     * ∝ batch: no old doc is re-tokenized, re-signed, read, or
     * rewritten, and the provenance sidecar merges additively
-    * ([[writeSliceProvenanceAppended]]). Readers resolve the
-    * [[genChain]] and union per-generation sorted scans — a band
-    * probe prunes row groups inside every generation exactly as in a
-    * merged index. COMPACTION = [[sigIndexCompact]]: a pure columnar
-    * chain-collapse re-sort, no signature recompute. */
+    * ([[admit]]). Readers resolve the [[genChain]] and union
+    * per-generation sorted scans — a band probe prunes row groups
+    * inside every generation exactly as in a merged index. COMPACTION
+    * = [[sigIndexCompact]]: a pure columnar chain-collapse re-sort, no
+    * signature recompute. */
   def minhashIndexAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, docs) = sigAdmission(s, dir, oldPath, "minhash")
-    val batch = docs.filter(col("doc_id") >= cut)
-    val (bands, sigs) =
-      graft.operators.Dedup.minhashIndexFramesOf(s, batch)
-    bands.repartitionByRange(col("band"), col("band_sig"))
-      .sortWithinPartitions("band", "band_sig", "doc_id")
-      .write.parquet(s"$newPath/bands")
-    sigs.repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.parquet(s"$newPath/sigs")
-    writeSliceProvenanceAppended(s, newPath, batch, dir, props,
-      Map("parent" -> oldPath))
+    val docs = Tables.documents(s, dir).select("doc_id", "text")
+    val (a, (bands, sigs)) = admit(s, dir, oldPath, Docs, docs,
+        "minhash index",
+        "re-sign the corpus with the full minhash writer instead") { cut =>
+      graft.operators.Dedup.minhashIndexFramesOf(s,
+        docs.filter(col("doc_id") >= cut))
+    }
+    concurrently(minhashParts(newPath, bands, sigs): _*)
+    seal(s, newPath, dir, a.next + ("parent" -> oldPath))
   }
 
   /** [[minhashIndexAppend]] for the SIMHASH banded-signature index —
@@ -339,40 +317,46 @@ object Materialize {
   def simhashIndexAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, docs) = sigAdmission(s, dir, oldPath, "simhash")
-    val batch = docs.filter(col("doc_id") >= cut)
-    graft.operators.Dedup.simhashBandedOf(s, batch)
-      .repartitionByRange(col("k"), col("bh"))
-      .sortWithinPartitions("k", "bh", "doc_id")
-      .write.parquet(s"$newPath/bands")
-    writeSliceProvenanceAppended(s, newPath, batch, dir, props,
-      Map("parent" -> oldPath))
+    val docs = Tables.documents(s, dir).select("doc_id", "text")
+    val (a, banded) = admit(s, dir, oldPath, Docs, docs,
+        "simhash index",
+        "re-sign the corpus with the full simhash writer instead") { cut =>
+      graft.operators.Dedup.simhashBandedOf(s,
+        docs.filter(col("doc_id") >= cut))
+    }
+    simhashPart(newPath, banded)
+    seal(s, newPath, dir, a.next + ("parent" -> oldPath))
   }
 
-  /** COMPACTION of a signature-index generation chain: the per-doc
-    * parts chain-union → one range-re-sort → a merged write-once
+  /** The shared COMPACTION shape of the signature and vector indexes:
+    * the head's generation chain collapses into one merged write-once
     * artifact carrying the head's (cumulative, admission-verified)
-    * provenance without a parent pointer. Pure columnar I/O — unlike
-    * the lexical/feature compactions (which route through their merge
-    * writers), signatures never recompute here because nothing in the
-    * artifact is derived across docs. `parts` maps part name →
-    * (projection columns, range-sort key). */
-  def sigIndexCompact(s: SparkSession, dir: String, headPath: String,
-      newPath: String,
-      parts: Map[String, (Seq[String], Seq[String])]): Unit = {
+    * provenance without a parent pointer. Pure columnar I/O —
+    * `parts` read the chain ([[chainRead]]); nothing in these
+    * artifacts is derived across docs, so nothing recomputes (the
+    * lexical and feature compactions route through their merge
+    * writers instead). */
+  private def compact(s: SparkSession, dir: String, headPath: String,
+      newPath: String)(parts: Seq[() => Unit]): Unit = {
     requireFresh(s, newPath)
     ArtifactTag.require(s, headPath, dir)
     val props = ArtifactTag.readProps(s, headPath)
     ArtifactTag.requireProvVersion(props, headPath)
-    parts.foreach { case (part, (cols, sortCols)) =>
-      chainRead(s, headPath, dir, part, cols)
-        .repartitionByRange(sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.parquet(s"$newPath/$part")
-    }
-    ArtifactTag.write(s, newPath, dir)
-    ArtifactTag.writeProps(s, newPath, props - "parent")
+    concurrently(parts: _*)
+    seal(s, newPath, dir, props - "parent")
   }
+
+  /** COMPACTION of a signature-index generation chain: the per-doc
+    * parts chain-union → one range-re-sort each. `parts` maps part
+    * name → (projection columns, range-sort key). */
+  def sigIndexCompact(s: SparkSession, dir: String, headPath: String,
+      newPath: String,
+      parts: Map[String, (Seq[String], Seq[String])]): Unit =
+    compact(s, dir, headPath, newPath)(parts.toSeq.map {
+      case (part, (cols, sortCols)) => () =>
+        sortedWrite(chainRead(s, headPath, dir, part, cols),
+          s"$newPath/$part", sortCols, sortCols)
+    })
 
   /** The minhash-index parts' (projection, range-sort key) layout —
     * shared by the compactor's callers and the spec (one
@@ -404,8 +388,8 @@ object Materialize {
     * the pairs were built under (readers refuse stage/df-cap drift —
     * a dfcap-built graph is missing exactly the hot-only pairs the
     * prefix stage keeps) plus the [[ccSliceChecksum]] of the source
-    * corpus, recorded for audit and any future artifact-boundary
-    * incremental contract. */
+    * corpus and its max_doc_id — the cut [[pairGraphDelta]] refreshes
+    * from. */
   def pairGraph(s: SparkSession, dir: String, path: String): Unit =
     pairGraphOf(s, Tables.documents(s, dir).select("doc_id", "text"),
       path, dir)
@@ -416,18 +400,15 @@ object Materialize {
     * via the conf-routed candidate stage — never reads
     * `graft.dedup.pairsPath` back (the [[graft.operators.Dedup
     * .loopLabels]] self-reference rule). */
-  def pairGraphOf(s: SparkSession, docs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+  def pairGraphOf(s: SparkSession, docs: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
-    graft.operators.Dedup.ngramJaccardOf(s, docs)
-      .repartitionByRange(col("a_id"), col("b_id"))
-      .sortWithinPartitions("a_id", "b_id")
-      .write.parquet(path)
-    // full slice provenance INCLUDING max_doc_id: the recorded max id
-    // + 1 is the artifact-boundary cut [[pairGraphDelta]] refreshes
-    // from (the round-11 signature-index discipline applied to pairs)
-    writeSliceProvenance(s, path, docs, tag, pairStageProps(s))
+    pairsPart(path, graft.operators.Dedup.ngramJaccardOf(s, docs))
+    seal(s, path, tag, sliceProps(Docs, docs) ++ pairStageProps(s))
   }
+
+  private def pairsPart(path: String, pairs: DataFrame): Unit =
+    sortedWrite(pairs, path, Seq("a_id", "b_id"), Seq("a_id", "b_id"))
 
   /** The candidate-stage configuration props a pair-derived artifact
     * records — ONE definition for the full writer, the delta writer,
@@ -449,8 +430,8 @@ object Materialize {
     * b side is new docs only, so candidate cost is Σ df·df_new —
     * linear in the batch where the full build's Σ df² is linear in
     * the corpus). The merged output is written WRITE-ONCE to
-    * `newPath` with full current-corpus provenance, so the next
-    * refresh deltas from it in turn.
+    * `newPath` with current-corpus provenance (parent ⊕ batch, see
+    * [[admit]]), so the next refresh deltas from it in turn.
     *
     * Content contract: under the default `prefix` stage the output is
     * row-identical to a full [[pairGraph]] rebuild at every corpus
@@ -463,49 +444,34 @@ object Materialize {
     * (stage and cap-value drift are still refused).
     *
     * Guards, in order: `_graft_corpus` tag must name THIS corpus;
-    * candidate-stage/df-cap drift refused; provenance version gated
-    * ([[ArtifactTag.requireProvVersion]] — a formula change reads as
-    * "rebuild", not as corpus corruption); `max_doc_id` must exist
-    * (empty or pre-round-12 artifacts have no delta mode); and the
-    * stored content checksum must replay on the current below-cut
-    * slice (id reuse, backfill, or in-place edits of already-paired
-    * docs refuse loudly — a stale pair graph silently corrupts every
+    * candidate-stage/df-cap drift refused; then the rest of
+    * [[admit]]'s matrix (a stale pair graph silently corrupts every
     * downstream graph metric). */
   def pairGraphDelta(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    ArtifactTag.require(s, oldPath, dir)
-    val props = ArtifactTag.readProps(s, oldPath)
-    val stage = graft.operators.Dedup.candidateStage(s)
-    require(props.get("pair_stage").contains(stage),
-      s"pair-graph artifact at $oldPath was built under pair stage " +
-        s"'${props.getOrElse("pair_stage", "<none>")}' but this " +
-        s"session runs '$stage' (graft.dedup.candidateStage) — a " +
-        "delta under a different stage diverges from a rebuild; " +
-        "rebuild the artifact or match the conf")
-    require(stage != "dfcap"
-        || props.get("max_shingle_df")
-             .contains(graft.operators.Dedup.maxShingleDf(s).toString),
-      s"pair-graph artifact at $oldPath was built with maxShingleDf=" +
-        s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
-        s"session caps at ${graft.operators.Dedup.maxShingleDf(s)} — " +
-        "a df-cap change changes the pair graph; rebuild")
-    ArtifactTag.requireProvVersion(props, oldPath)
-    require(props.contains("max_doc_id"),
-      s"pair-graph artifact at $oldPath carries no max_doc_id " +
-        "provenance — an empty or pre-delta artifact has no " +
-        "incremental mode; run the full pairGraph build once")
-    val cut = props("max_doc_id").toLong + 1L
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    requireDocSlice(s, props, oldPath, docs, cut,
-      "paired", "run the full pairGraph build instead")
-    val oldPairs = s.read.parquet(oldPath)
-      .select("a_id", "b_id", "inter", "na", "nb")
-    oldPairs.unionAll(graft.operators.Dedup.deltaPairGraph(s, dir, cut))
-      .repartitionByRange(col("a_id"), col("b_id"))
-      .sortWithinPartitions("a_id", "b_id")
-      .write.parquet(newPath)
-    writeSliceProvenance(s, newPath, docs, dir, pairStageProps(s))
+    val stage = graft.operators.Dedup.candidateStage(s)
+    val (a, deltaPairs) = admit(s, dir, oldPath, Docs, docs,
+        "pair-graph artifact", "run the full pairGraph build instead",
+        props => {
+        require(props.get("pair_stage").contains(stage),
+          s"pair-graph artifact at $oldPath was built under pair stage " +
+            s"'${props.getOrElse("pair_stage", "<none>")}' but this " +
+            s"session runs '$stage' (graft.dedup.candidateStage) — a " +
+            "delta under a different stage diverges from a rebuild; " +
+            "rebuild the artifact or match the conf")
+        require(stage != "dfcap"
+            || props.get("max_shingle_df")
+                 .contains(graft.operators.Dedup.maxShingleDf(s).toString),
+          s"pair-graph artifact at $oldPath was built with maxShingleDf=" +
+            s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
+            s"session caps at ${graft.operators.Dedup.maxShingleDf(s)} " +
+            "— a df-cap change changes the pair graph; rebuild")
+      })(graft.operators.Dedup.deltaPairGraph(s, dir, _))
+    pairsPart(newPath, s.read.parquet(oldPath)
+      .select("a_id", "b_id", "inter", "na", "nb").unionAll(deltaPairs))
+    seal(s, newPath, dir, a.next ++ pairStageProps(s))
   }
 
   /** Materialize the connected-component LABEL artifact — the
@@ -533,8 +499,8 @@ object Materialize {
     * is the corpus directory the slice came from — written into the
     * artifact's `_graft_corpus` sidecar so readers can refuse a
     * wrong-corpus serve ([[ArtifactTag]]). */
-  def ccLabelsOf(s: SparkSession, docs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit =
+  def ccLabelsOf(s: SparkSession, docs: DataFrame, path: String,
+      tag: String): Unit =
     // guardPairs = false: [[graft.operators.Dedup.loopLabelsOf]]
     // derives the slice's pairs in-query (never reads
     // graft.dedup.pairsPath), so there is no pair artifact to be
@@ -543,83 +509,153 @@ object Materialize {
     writeCcLabels(s, graft.operators.Dedup.loopLabelsOf(s, docs), docs,
       path, tag, guardPairs = false)
 
-  /** The (n_docs, content_xor) checksum of a (doc_id, text) slice —
-    * ONE definition shared by the label-artifact writer and
-    * `cc_incremental`'s artifact-mode reader (round-9 advisor fix #2:
-    * the coverage guard compared only row counts, so 1:1 doc_id reuse
-    * or in-place edits of already-labeled docs served stale labels
-    * silently). XOR of per-doc (doc_id, md5(text)) hashes is
-    * order-invariant and associative, so it map-side combines; any id
-    * substitution or content edit flips it w.h.p. The fields hash as
-    * SEPARATE xxhash64 args with the null text coalesced to a sentinel
-    * (round-10 advisor fix: a string concat with a NULL text is NULL,
-    * so every null-text doc hashed to the constant seed and doc_id was
-    * never mixed in — id substitution confined to null-text docs below
-    * the cut passed the guard); separate args mix doc_id even when the
-    * text side degenerates, and the sentinel keeps null ≠ ''. */
-  /** The per-doc hash the checksum XORs — ONE definition for the
-    * reader-side replay ([[ccSliceChecksum]]) and the writer-side
-    * combined provenance aggregate ([[writeSliceProvenance]]); two
-    * inline copies could drift and the checksum guard would then
-    * refuse every artifact. */
-  private val SliceXor =
-    "bit_xor(xxhash64(doc_id, coalesce(md5(text), '<null>')))"
+  /** One slice family's provenance vocabulary: the id column whose
+    * recorded max + 1 is the old/new cut, the per-row content hash the
+    * checksum XORs, the three sidecar keys, and the noun refusals use.
+    * XOR of per-row hashes is order-invariant and associative, so it
+    * map-side combines and merges over disjoint unions; any id
+    * substitution or content edit flips it w.h.p. */
+  private final case class Slice(id: String, hash: String, n: String,
+      xor: String, max: String, noun: String)
 
-  private[graft] def ccSliceChecksum(
-      docs: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val r = docs.agg(count(lit(1L)), expr(SliceXor)).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  /** Documents: (doc_id, md5(text)) hashed as SEPARATE xxhash64 args
+    * with the null text coalesced to a sentinel (round-10 advisor fix:
+    * a string concat with a NULL text is NULL, so every null-text doc
+    * hashed to the constant seed and doc_id was never mixed in); the
+    * sentinel keeps null ≠ ''. This formula is what
+    * [[ArtifactTag.ProvVersion]] versions. */
+  private val Docs = Slice("doc_id",
+    "xxhash64(doc_id, coalesce(md5(text), '<null>'))",
+    "n_docs", "content_xor", "max_doc_id", "docs")
+
+  /** Vectors: xxhash64 hashes the float array natively (Spark-side
+    * admission only, never oracle-replayed). */
+  private val Vecs = Slice("vec_id", "xxhash64(vec_id, embedding)",
+    "n_vecs", "content_xor", "max_vec_id", "vectors")
+
+  /** Events: the five columns the feature-store snapshots derive from;
+    * the cut runs on `day` (a store holds whole days). */
+  private val Events = Slice("day", "xxhash64(event_id, user_id, day, " +
+    "v_centi, coalesce(event_type, '<null>'))",
+    "n_events", "events_xor", "max_day", "events")
+
+  private def xorAt(r: org.apache.spark.sql.Row, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getLong(i)
+
+  /** Full-slice provenance — (n, content xor, max id) in ONE aggregate
+    * pass — for the full builds; max id is absent for an empty
+    * slice. */
+  private def sliceProps(k: Slice, df: DataFrame): Map[String, String] = {
+    val r = df.agg(count(lit(1L)), expr(s"bit_xor(${k.hash})"),
+      max(k.id)).head()
+    Map("prov_ver" -> ArtifactTag.ProvVersion,
+      k.n -> r.getLong(0).toString, k.xor -> xorAt(r, 1).toString) ++
+      (if (r.isNullAt(2)) Nil else Seq(k.max -> r.getLong(2).toString))
+  }
+
+  /** The (n_docs, content_xor) checksum of a (doc_id, text) slice —
+    * the [[Docs]] formula, shared with `cc_incremental`'s
+    * artifact-mode reader (round-9 advisor fix #2: the coverage guard
+    * compared only row counts, so 1:1 doc_id reuse or in-place edits
+    * of already-labeled docs served stale labels silently). */
+  private[graft] def ccSliceChecksum(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1L)), expr(s"bit_xor(${Docs.hash})")).head()
+    (r.getLong(0), xorAt(r, 1))
   }
 
   /** The [[graft.operators.Dedup]] `graft.cc.trustOldContent`
-    * downgrade, generalized to every delta writer: a deployment on an
-    * IMMUTABLE store may skip the old-slice content replay (the one
-    * corpus-proportional md5 scan in a delta refresh) and keep only
-    * the count guard — catches backfill and dropped rows, NOT 1:1
-    * substitution or in-place edits, which an immutable store rules
-    * out by construction. Default off: the checksum replay is the
-    * guard that makes a delta artifact trustworthy on a mutable
-    * store. */
+    * downgrade, generalized to every refresh writer: a deployment on
+    * an IMMUTABLE store may skip the below-cut content hash (the one
+    * corpus-proportional md5 in a refresh) and keep only the count
+    * guard — catches backfill and dropped rows, NOT 1:1 substitution
+    * or in-place edits, which an immutable store rules out by
+    * construction. Default off: the checksum replay is the guard that
+    * makes a refreshed artifact trustworthy on a mutable store. */
   private def trustOldContent(s: SparkSession): Boolean =
     s.conf.getOption("graft.artifact.trustOldContent").contains("true")
 
-  /** Old-slice admission guard for the doc-keyed delta writers (pair
-    * graph, lexical index) — ONE definition so the two refusals can
-    * never drift: full mode replays the writer's content checksum on
-    * the current below-cut slice; [[trustOldContent]] mode checks the
-    * count only. `verb` names what the previous cycle did with the
-    * slice; `remedy` is the rebuild instruction. */
-  private def requireDocSlice(s: SparkSession,
-      props: Map[String, String], oldPath: String,
-      docs: org.apache.spark.sql.DataFrame, cut: Long,
-      verb: String, remedy: String): Unit = {
-    val below = docs.filter(col("doc_id") < cut)
-    if (trustOldContent(s)) {
-      val n = below.count()
-      require(props.get("n_docs").contains(n.toString),
+  /** An admitted refresh: the parent's props and the new generation's
+    * provenance (parent ⊕ batch). */
+  private final case class Admitted(parent: Map[String, String],
+      next: Map[String, String])
+
+  /** THE admission path of every refresh writer (lexical, feature
+    * store, minhash/simhash, ivf/pq, pair graph — append and delta
+    * alike). Guards, in order: `_graft_corpus` tag must name `dir`;
+    * the caller's `guard` over the parent props (pair-stage drift);
+    * provenance version ([[ArtifactTag.requireProvVersion]] — a
+    * formula change reads as "rebuild", not as corpus corruption); the
+    * boundary key's presence (empty or pre-provenance artifacts have
+    * no refresh mode); and the below-cut slice guard.
+    *
+    * `prepare(cut)` — the writer's batch preparation (its one batch
+    * checkpoint) — runs [[concurrently]] with the aggregate: it writes
+    * nothing, so a refused admission still leaves no file behind.
+    * ONE conditional aggregate over `frame` serves both the guard and
+    * the new sidecar: the below-cut count and xor (count only under
+    * [[trustOldContent]]) must equal the parent's recorded facts, and
+    * the batch's (≥ cut) count, xor and max id merge with them
+    * additively — n adds, xor XORs, max maxes — into the next
+    * generation's provenance. Sound because the corpus is the disjoint
+    * union of the below-cut slice and the batch and the guard has just
+    * verified below-cut = parent, so parent ⊕ batch is BIT-EQUAL to a
+    * full-slice aggregate (the "delta props ≡ rebuild props" pins).
+    * Under trust mode the sidecar keeps the parent's STORED xor, so a
+    * same-count in-place edit the count guard lets through is never
+    * laundered into fresh provenance: the next checked admission
+    * still refuses it. */
+  private def admit[A](s: SparkSession, dir: String, oldPath: String,
+      k: Slice, frame: DataFrame, what: String, remedy: String,
+      guard: Map[String, String] => Unit = _ => ())(
+      prepare: Long => A): (Admitted, A) = {
+    ArtifactTag.require(s, oldPath, dir)
+    val props = ArtifactTag.readProps(s, oldPath)
+    guard(props)
+    ArtifactTag.requireProvVersion(props, oldPath)
+    require(props.contains(k.max),
+      s"$what at $oldPath carries no ${k.max} provenance — an empty or " +
+        s"pre-provenance artifact has no refresh mode; $remedy")
+    val cut = props(k.max).toLong + 1L
+    val trust = trustOldContent(s)
+    val (id, h) = (col(k.id), expr(k.hash))
+    val (below, batch) = (id < cut, id >= cut)
+    var r: org.apache.spark.sql.Row = null
+    var prepared: Option[A] = None
+    concurrently(
+      () => r = frame.select(Seq(count(when(batch, 1)),
+        bit_xor(when(batch, h)), max(when(batch, id)),
+        count(when(below, 1))) ++
+        (if (trust) Nil else Seq(bit_xor(when(below, h)))): _*).head(),
+      () => prepared = Some(prepare(cut)))
+    val n = r.getLong(3)
+    val bound = s"the ${k.noun} below the boundary (${k.id} < $cut)"
+    if (trust)
+      require(props.get(k.n).contains(n.toString),
         s"old-slice count mismatch at $oldPath (artifact " +
-          s"n=${props.getOrElse("n_docs", "<none>")}, corpus n=$n) — " +
-          s"docs appeared or vanished below the boundary ($cut) since " +
-          s"the previous cycle $verb the slice (id backfill or " +
-          s"drops); $remedy")
-    } else {
-      val (n, xor) = ccSliceChecksum(below)
-      require(props.get("n_docs").contains(n.toString)
-          && props.get("content_xor").contains(xor.toString),
+          s"n=${props.getOrElse(k.n, "<none>")}, corpus n=$n) — $bound " +
+          "gained or lost rows since the previous cycle recorded them " +
+          s"(backfill, late arrivals, or drops); $remedy")
+    else
+      require(props.get(k.n).contains(n.toString)
+          && props.get(k.xor).contains(xorAt(r, 4).toString),
         s"old-slice checksum mismatch at $oldPath (artifact " +
-          s"n=${props.getOrElse("n_docs", "<none>")} " +
-          s"xor=${props.getOrElse("content_xor", "<none>")}, " +
-          s"corpus n=$n xor=$xor) — the docs below the boundary " +
-          s"($cut) are not the slice the previous cycle $verb " +
-          s"(id reuse, backfill, or in-place edits); $remedy")
-    }
+          s"n=${props.getOrElse(k.n, "<none>")} " +
+          s"xor=${props.getOrElse(k.xor, "<none>")}, corpus n=$n " +
+          s"xor=${xorAt(r, 4)}) — $bound are not the slice the " +
+          "previous cycle recorded (id reuse, backfill, late " +
+          s"arrivals, or in-place edits); $remedy")
+    (Admitted(props, Map("prov_ver" -> ArtifactTag.ProvVersion,
+      k.n -> (props(k.n).toLong + r.getLong(0)).toString,
+      k.xor -> (props(k.xor).toLong ^ xorAt(r, 1)).toString,
+      k.max -> (if (r.isNullAt(2)) props(k.max)
+                else r.getLong(2).toString))), prepared.get)
   }
 
   private def writeCcLabels(s: SparkSession,
-      labels: => org.apache.spark.sql.DataFrame, // by-name: the CC loop
-      // runs jobs eagerly, so evaluate only after the guards pass
-      docs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String, guardPairs: Boolean): Unit = {
+      labels: => DataFrame, // by-name: the CC loop runs jobs eagerly,
+      // so evaluate only after the guards pass
+      docs: DataFrame, path: String, tag: String,
+      guardPairs: Boolean): Unit = {
     requireFresh(s, path)
     // the checksum of the slice being labeled — computed BEFORE any
     // file is written, because it double-duties as the stale-pair
@@ -650,21 +686,14 @@ object Materialize {
             "yet carry a fresh checksum (provenance laundering); " +
             "rebuild the pair artifact first")
       }
-    labels
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.parquet(path)
-    ArtifactTag.write(s, path, tag)
+    sortedWrite(labels, path, Seq("doc_id"), Seq("doc_id"))
     // provenance props (round-9 advisor fixes #1+#2): the pair-stage
     // configuration the labels were built under, and the content
     // checksum of the labeled slice — cc_incremental's reader refuses
     // stage/cap drift and silent slice substitution
-    ArtifactTag.writeProps(s, path, Map(
+    seal(s, path, tag, pairStageProps(s) ++ Map(
       "prov_ver" -> ArtifactTag.ProvVersion,
-      "pair_stage" -> graft.operators.Dedup.candidateStage(s),
-      "max_shingle_df" -> graft.operators.Dedup.maxShingleDf(s).toString,
-      "n_docs" -> n.toString,
-      "content_xor" -> xor.toString))
+      "n_docs" -> n.toString, "content_xor" -> xor.toString))
   }
 
   /** Materialize the LEXICAL inverted index — the serving artifact the
@@ -706,15 +735,16 @@ object Materialize {
     * `Σdl/n` reproduces Spark's own `avg(dl)` BIT-EXACTLY, so
     * from-index BM25 scores never drift between a full build and a
     * merged one. */
-  def lexicalIndexOf(s: SparkSession, docs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+  def lexicalIndexOf(s: SparkSession, docs: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
     val (postings, grams, nDl, sumDl) = lexBatchParts(s, docs)
-    writeLexParts(s, path, postings, grams,
-      grams.groupBy("gram").agg(count(lit(1)).as("n")), nDl, sumDl)
-    writeSliceProvenance(s, path, docs, tag, Map(
-      "n_dl" -> nDl.toString, "sum_dl" -> sumDl.toString))
+    writeLexParts(s, path, postings, grams, gramCounts(grams), nDl, sumDl)
+    seal(s, path, tag, sliceProps(Docs, docs) ++ lexStats(nDl, sumDl))
   }
+
+  private def lexStats(nDl: Long, sumDl: Long): Map[String, String] =
+    Map("n_dl" -> nDl.toString, "sum_dl" -> sumDl.toString)
 
   /** INCREMENTAL refresh of the lexical index — the [[pairGraphDelta]]
     * shape for postings (round-11 verdict task #2): the stored
@@ -725,24 +755,22 @@ object Materialize {
     * tok/gram-range re-sort; the 1-row (n, avgdl) BM25 globals merge
     * ADDITIVELY from the recorded (n_dl, sum_dl) facts — bit-equal to
     * a rebuild's `avg(dl)` (see [[lexicalIndexOf]]); and `gramstats`
-    * occurrence totals merge by summation. Guards: corpus tag,
-    * provenance version, max_doc_id presence, and the below-cut
-    * content-checksum replay (id reuse, backfill, or in-place edits of
-    * already-indexed docs refuse loudly — stale postings silently
-    * mis-rank every query). RetrievalOracleSpec pins {old + delta} ≡
-    * full rebuild part-for-part and `bm25_from_index` /
-    * `phrase_from_index` row-identical when served off the delta
-    * artifact via `graft.lex.indexPath`. */
+    * occurrence totals merge by summation. Guards: [[admit]]'s matrix
+    * (stale postings silently mis-rank every query). RetrievalOracleSpec
+    * pins {old + delta} ≡ full rebuild part-for-part and
+    * `bm25_from_index` / `phrase_from_index` row-identical when served
+    * off the delta artifact via `graft.lex.indexPath`. */
   def lexicalIndexDelta(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, docs) = lexAdmission(s, dir, oldPath)
-    val (postings, grams, gramstats, nTot, sumTot) =
-      lexDeltaParts(s, docs, oldPath, cut,
-        props("n_dl").toLong, props("sum_dl").toLong)
-    writeLexParts(s, newPath, postings, grams, gramstats, nTot, sumTot)
-    writeSliceProvenance(s, newPath, docs, dir, Map(
-      "n_dl" -> nTot.toString, "sum_dl" -> sumTot.toString))
+    val (a, (newPost, newGrams, nNew, sumNew)) = lexAdmit(s, dir, oldPath)
+    val nTot = a.parent("n_dl").toLong + nNew
+    val sumTot = a.parent("sum_dl").toLong + sumNew
+    // the old side is read inside each part's thread (by-name frames)
+    writeLexParts(s, newPath, lexMerged(s, oldPath, "postings", newPost),
+      lexMerged(s, oldPath, "grams", newGrams),
+      gramstatsMerged(s, oldPath, newGrams), nTot, sumTot)
+    seal(s, newPath, dir, a.next ++ lexStats(nTot, sumTot))
   }
 
   /** GENERATIONAL (append-mode) refresh of the lexical index — the
@@ -761,56 +789,33 @@ object Materialize {
     * [[lexicalIndexDelta]] over a chain head reads the full chain on
     * its old side, so `lexicalIndexDelta(dir, chainHead, newPath)`
     * collapses any chain into one merged artifact (spec-pinned).
-    *
-    * Admission guards are [[lexicalIndexDelta]]'s ([[lexAdmission]] —
-    * one definition); provenance records the FULL current corpus, so
-    * the next refresh (append or merge) cuts from this generation's
-    * boundary. */
+    * Admission and provenance are [[admit]]'s: the sidecar records
+    * the FULL current corpus, so the next refresh (append or merge)
+    * cuts from this generation's boundary. */
   def lexicalIndexAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, docs) = lexAdmission(s, dir, oldPath)
-    val batch = docs.filter(col("doc_id") >= cut)
-    val (newPost, newGrams, nNew, sumNew) = lexBatchParts(s, batch)
+    val (a, (newPost, newGrams, nNew, sumNew)) = lexAdmit(s, dir, oldPath)
+    val nTot = a.parent("n_dl").toLong + nNew
+    val sumTot = a.parent("sum_dl").toLong + sumNew
     // vocabulary-sized merges only — the whole point of append mode
-    // is that per-DOC state (postings, grams) is never rewritten.
-    // gramstats reads the HEAD generation alone: every writer stores
-    // the CUMULATIVE totals, so a chain union would double-count
-    val gramstats = s.read.parquet(s"$oldPath/gramstats")
-      .select("gram", "n")
-      .unionAll(newGrams.groupBy("gram").agg(count(lit(1)).as("n")))
-      .groupBy("gram").agg(sum("n").as("n"))
-    val nTot = props("n_dl").toLong + nNew
-    val sumTot = props("sum_dl").toLong + sumNew
-    writeLexParts(s, newPath, newPost, newGrams, gramstats, nTot,
-      sumTot)
-    // provenance merges ADDITIVELY from the admitted parent + the
-    // batch — the append contract's "write cost strictly ∝ batch"
-    // holds for the sidecar too ([[writeSliceProvenanceAppended]])
-    writeSliceProvenanceAppended(s, newPath, batch, dir, props, Map(
-      "n_dl" -> nTot.toString, "sum_dl" -> sumTot.toString,
-      "parent" -> oldPath))
+    // is that per-DOC state (postings, grams) is never rewritten
+    writeLexParts(s, newPath, newPost, newGrams,
+      gramstatsMerged(s, oldPath, newGrams), nTot, sumTot)
+    seal(s, newPath, dir,
+      a.next ++ lexStats(nTot, sumTot) + ("parent" -> oldPath))
   }
 
-  /** The shared admission prefix of the two lexical refresh writers:
-    * tag, provenance version, boundary presence, and the old-slice
-    * guard ([[requireDocSlice]]). Returns (cut, props, full-corpus
-    * docs). */
-  private def lexAdmission(s: SparkSession, dir: String,
-      oldPath: String): (Long, Map[String, String],
-      org.apache.spark.sql.DataFrame) = {
-    ArtifactTag.require(s, oldPath, dir)
-    val props = ArtifactTag.readProps(s, oldPath)
-    ArtifactTag.requireProvVersion(props, oldPath)
-    require(props.contains("max_doc_id"),
-      s"lexical index at $oldPath carries no max_doc_id provenance — " +
-        "an empty or pre-delta index has no incremental mode; run the " +
-        "full lexicalIndex build once")
-    val cut = props("max_doc_id").toLong + 1L
+  /** The lexical refresh prefix shared by the merge and append
+    * writers: [[admit]] over the corpus, beside the batch's one
+    * tokenization ([[lexBatchParts]] over the `doc_id ≥ cut` slice). */
+  private def lexAdmit(s: SparkSession, dir: String, oldPath: String)
+      : (Admitted, (DataFrame, DataFrame, Long, Long)) = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    requireDocSlice(s, props, oldPath, docs, cut,
-      "indexed", "re-index the corpus instead")
-    (cut, props, docs)
+    admit(s, dir, oldPath, Docs, docs, "lexical index",
+        "re-index the corpus with the full lexicalIndex writer instead") {
+      cut => lexBatchParts(s, docs.filter(col("doc_id") >= cut))
+    }
   }
 
   /** Resolve an artifact's generation chain, head first — a merged
@@ -843,102 +848,108 @@ object Materialize {
     * scans, so pushed filters prune row groups inside every
     * generation. */
   private[graft] def chainRead(s: SparkSession, path: String,
-      tag: String, part: String,
-      cols: Seq[String]): org.apache.spark.sql.DataFrame =
+      tag: String, part: String, cols: Seq[String]): DataFrame =
     genChain(s, path, tag)
       .map(p => s.read.parquet(s"$p/$part")
         .select(cols.map(col): _*))
       .reduce(_ unionAll _)
 
-  /** The merged frames a delta refresh writes — ONE definition shared
-    * with the spec's plan pin (the [[graft.operators.Dedup
-    * .ccIncrementalStage]] discipline), so the pinned plan is the very
-    * plan the writer executes: the old side of every merged frame is a
-    * parquet scan of the INDEX files — the merged plans contain no
-    * `documents` scan at all (spec-pinned); the new side tokenizes
-    * only the `doc_id ≥ cut` batch, the filter applied before
-    * tokenization by construction ([[lexBatchParts]] over the filtered
-    * slice, whose eager checkpoint is where the one corpus read
-    * happens). */
-  private[graft] def lexDeltaParts(s: SparkSession,
-      docs: org.apache.spark.sql.DataFrame, oldPath: String, cut: Long,
-      nOld: Long, sumOld: Long): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      Long, Long) = {
-    val (newPost, newGrams, nNew, sumNew) =
+  /** The merged frames a delta refresh writes, composed from the very
+    * functions [[lexicalIndexDelta]] calls ([[lexBatchParts]],
+    * [[lexMerged]], [[gramstatsMerged]]) — the spec's plan pin (the
+    * [[graft.operators.Dedup.ccIncrementalStage]] discipline): the old
+    * side of every merged frame is a parquet scan of the INDEX files —
+    * the merged plans contain no `documents` scan at all; the new side
+    * tokenizes only the `doc_id ≥ cut` batch, the filter applied
+    * before tokenization by construction ([[lexBatchParts]] over the
+    * filtered slice, whose eager checkpoint is where the one batch
+    * read happens). */
+  private[graft] def lexDeltaParts(s: SparkSession, docs: DataFrame,
+      oldPath: String, cut: Long): (DataFrame, DataFrame, DataFrame) = {
+    val (newPost, newGrams, _, _) =
       lexBatchParts(s, docs.filter(col("doc_id") >= cut))
-    // the old side resolves the GENERATION CHAIN (one scan for a
-    // merged artifact; per-generation scans for an append chain) —
-    // which is what makes this writer the chain's COMPACTION: a merge
-    // refresh over a chain head collapses every generation into one
-    // artifact. The tag is taken from the head's own sidecar: callers
-    // already admitted the head against the corpus dir, and the chain
-    // walk re-verifies each generation against the same tag.
-    val tag = ArtifactTag.readTag(s, oldPath)
-    val postings = chainRead(s, oldPath, tag, "postings",
-        Seq("tok", "doc_id", "dl", "tf"))
-      .unionAll(newPost.select("tok", "doc_id", "dl", "tf"))
-    val grams = chainRead(s, oldPath, tag, "grams",
-        Seq("doc_id", "pos", "gram"))
-      .unionAll(newGrams.select("doc_id", "pos", "gram"))
-    // occurrence totals merge additively from the HEAD's cumulative
-    // gramstats ∪ new-batch counts (never re-counts the old postings,
-    // and never chain-unions — each generation's totals are cumulative)
-    val gramstats = s.read.parquet(s"$oldPath/gramstats")
-      .select("gram", "n")
-      .unionAll(newGrams.groupBy("gram").agg(count(lit(1)).as("n")))
-      .groupBy("gram").agg(sum("n").as("n"))
-    (postings, grams, gramstats, nOld + nNew, sumOld + sumNew)
+    (lexMerged(s, oldPath, "postings", newPost),
+      lexMerged(s, oldPath, "grams", newGrams),
+      gramstatsMerged(s, oldPath, newGrams))
   }
+
+  /** One per-doc lexical part merged: the old side resolves the
+    * GENERATION CHAIN (one scan for a merged artifact; per-generation
+    * scans for an append chain) — which is what makes the merge writer
+    * the chain's COMPACTION: a merge refresh over a chain head
+    * collapses every generation into one artifact. The tag is taken
+    * from the head's own sidecar: callers already admitted the head
+    * against the corpus dir, and the chain walk re-verifies each
+    * generation against the same tag. */
+  private def lexMerged(s: SparkSession, oldPath: String, part: String,
+      batch: DataFrame): DataFrame = {
+    val cols = LexCols(part)
+    chainRead(s, oldPath, ArtifactTag.readTag(s, oldPath), part, cols)
+      .unionAll(batch.select(cols.map(col): _*))
+  }
+
+  private val LexCols = Map(
+    "postings" -> Seq("tok", "doc_id", "dl", "tf"),
+    "grams" -> Seq("doc_id", "pos", "gram"))
+
+  private def gramCounts(grams: DataFrame): DataFrame =
+    grams.groupBy("gram").agg(count(lit(1)).as("n"))
+
+  /** Occurrence totals merged additively from the HEAD's cumulative
+    * gramstats ∪ the batch's counts — never a re-count of old grams,
+    * and never a chain union (every generation stores cumulative
+    * totals, so a union would double-count). */
+  private def gramstatsMerged(s: SparkSession, oldPath: String,
+      newGrams: DataFrame): DataFrame =
+    s.read.parquet(s"$oldPath/gramstats").select("gram", "n")
+      .unionAll(gramCounts(newGrams))
+      .groupBy("gram").agg(sum("n").as("n"))
 
   /** Tokenize ONE (doc_id, text) batch into its index contribution:
     * (postings, positional grams, n_dl, sum_dl). Shared by the full
-    * writer and the delta writer, so batch rows can never drift from
-    * rebuild rows. */
+    * writer and the refresh writers, so batch rows can never drift from
+    * rebuild rows. The batch is read and tokenized ONCE, into one
+    * checkpoint the stats, the postings and the grams all derive from
+    * (a doc with no token has no gram either, so the dl > 0 filter
+    * drops no gram). */
   private def lexBatchParts(s: SparkSession,
-      docs: org.apache.spark.sql.DataFrame): (org.apache.spark.sql
-      .DataFrame, org.apache.spark.sql.DataFrame, Long, Long) = {
+      docs: DataFrame): (DataFrame, DataFrame, Long, Long) = {
     val c = docs
       .select(col("doc_id"), Fns.tokens(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
       .filter(col("dl") > 0)
-      .localCheckpoint() // consumed by the stats agg AND the postings
+      .localCheckpoint()
     val postings = c
       .select(col("doc_id"), col("dl"), explode(col("w")).as("tok"))
       .groupBy("tok", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-    val st = c.agg(count(lit(1)), sum("dl")).head()
-    val grams = docs
-      .select(col("doc_id"),
-        posexplode_outer(Fns.shingles3(Fns.tokens(col("text")))))
+    val grams = c
+      .select(col("doc_id"), posexplode_outer(Fns.shingles3(col("w"))))
       .toDF("doc_id", "pos", "gram")
       .filter(col("gram").isNotNull)
-      .localCheckpoint() // consumed by the postings write + the stats
+    val st = c.agg(count(lit(1)), sum("dl")).head()
     (postings, grams, st.getLong(0),
       if (st.isNullAt(1)) 0L else st.getLong(1))
   }
 
-  /** Lay out the four lexical-index parts (see [[lexicalIndex]] for
-    * the per-part sort rationale). The stats row is written from the
-    * additive (n_dl, Σdl) facts — bit-equal to `avg(dl)` (integer dl,
-    * exact double sums below 2⁵³), and the ONLY form a delta refresh
-    * can reproduce without rescanning old documents. */
+  /** Lay out the four lexical-index parts concurrently (see
+    * [[lexicalIndex]] for the per-part sort rationale). The stats row
+    * is written from the additive (n_dl, Σdl) facts — bit-equal to
+    * `avg(dl)` (integer dl, exact double sums below 2⁵³), and the ONLY
+    * form a delta refresh can reproduce without rescanning old
+    * documents. */
   private def writeLexParts(s: SparkSession, path: String,
-      postings: org.apache.spark.sql.DataFrame,
-      grams: org.apache.spark.sql.DataFrame,
-      gramstats: org.apache.spark.sql.DataFrame,
-      nDl: Long, sumDl: Long): Unit = {
-    postings.repartitionByRange(col("tok"))
-      .sortWithinPartitions("tok", "doc_id")
-      .write.parquet(s"$path/postings")
-    s.range(1).select(lit(nDl.toDouble).as("n"),
+      postings: => DataFrame, grams: => DataFrame,
+      gramstats: => DataFrame, nDl: Long, sumDl: Long): Unit =
+    concurrently(
+    () => sortedWrite(postings, s"$path/postings", Seq("tok"),
+      Seq("tok", "doc_id")),
+    () => s.range(1).select(lit(nDl.toDouble).as("n"),
         (if (nDl == 0L) lit(null).cast("double")
          else lit(sumDl.toDouble / nDl)).as("avgdl"))
-      .coalesce(1).write.parquet(s"$path/stats")
-    grams.repartitionByRange(col("gram"))
-      .sortWithinPartitions("gram", "doc_id")
-      .write.parquet(s"$path/grams")
-    gramstats.write.parquet(s"$path/gramstats")
-  }
+      .coalesce(1).write.parquet(s"$path/stats"),
+    () => sortedWrite(grams, s"$path/grams", Seq("gram"),
+      Seq("gram", "doc_id")),
+    () => gramstats.write.parquet(s"$path/gramstats"))
 
   /** Materialize the PQ index `ann_pq_topk`'s scale story promises:
     * the (vec_id, sub, code) byte-codes under `path`/codes — the ONLY
@@ -955,111 +966,25 @@ object Materialize {
   /** [[pqIndex]] over an explicit (vec_id, embedding) slice — the
     * base build of the PQ generational append cycle, with the same
     * write-once + provenance discipline as the signature indexes. */
-  def pqIndexOf(s: SparkSession, vecs: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+  def pqIndexOf(s: SparkSession, vecs: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
     val (codes, cb) = graft.operators.Similarity.pqBuildOf(s, vecs)
-    codes.repartitionByRange(col("vec_id"))
-      .sortWithinPartitions("vec_id", "sub")
-      .write.parquet(s"$path/codes")
-    cb.coalesce(1).write.parquet(s"$path/codebooks")
-    writeVecProvenance(s, path, vecs, tag)
+    concurrently(pqParts(path, codes, cb): _*)
+    seal(s, path, tag, sliceProps(Vecs, vecs))
   }
+
+  /** The PQ parts — vec_id-sorted codes + the codebook copy; ONE
+    * layout for the full, append and compaction writers. */
+  private def pqParts(path: String, codes: => DataFrame,
+      cb: => DataFrame): Seq[() => Unit] = Seq(
+    () => sortedWrite(codes, s"$path/codes", Seq("vec_id"),
+      Seq("vec_id", "sub")),
+    () => cb.coalesce(1).write.parquet(s"$path/codebooks"))
 
   // ——— Vector-index generational append (round 14: the one index
   // family still rebuilding from scratch — minhash/simhash/lexical/
   // gram/feature-store all had the LSM rung already) ———
-
-  /** Per-row vector content hash for the embedding-slice checksum —
-    * the [[SliceXor]] idea on the vector side (xxhash64 hashes the
-    * float array natively; Spark-side admission only, never
-    * oracle-replayed). */
-  private val VecSliceXor = "bit_xor(xxhash64(vec_id, embedding))"
-
-  /** (n_vecs, content_xor, max_vec_id) provenance for a vector-index
-    * artifact — what an append cycle needs to define its id boundary
-    * and refuse id reuse/backfill/in-place edits of already-indexed
-    * vectors (the [[writeSliceProvenance]] discipline). */
-  private def writeVecProvenance(s: SparkSession, path: String,
-      vecs: org.apache.spark.sql.DataFrame, tag: String,
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    val r = vecs.select("vec_id", "embedding")
-      .agg(count(lit(1L)), expr(VecSliceXor), max("vec_id")).head()
-    val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_vecs" -> r.getLong(0).toString,
-      "content_xor" -> xor.toString) ++
-      (if (r.isNullAt(2)) Map.empty[String, String]
-       else Map("max_vec_id" -> r.getLong(2).toString)) ++ extra)
-  }
-
-  /** Additive provenance for a vector APPEND generation — parent ⊕
-    * batch, so the append's compute stays strictly ∝ batch (the
-    * [[writeSliceProvenanceAppended]] soundness argument: disjoint
-    * union, XOR/count/max all merge). */
-  private def writeVecProvenanceAppended(s: SparkSession, path: String,
-      batch: org.apache.spark.sql.DataFrame, tag: String,
-      parent: Map[String, String],
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    val r = batch.select("vec_id", "embedding")
-      .agg(count(lit(1L)), expr(VecSliceXor), max("vec_id")).head()
-    val bXor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val maxId = (parent.get("max_vec_id").map(_.toLong) ++
-      (if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      .reduceOption(_ max _)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_vecs" -> (parent("n_vecs").toLong + r.getLong(0)).toString,
-      "content_xor" ->
-        (parent("content_xor").toLong ^ bXor).toString) ++
-      maxId.map(m => "max_vec_id" -> m.toString) ++ extra)
-  }
-
-  /** The shared admission prefix of the vector append writers
-    * ([[sigAdmission]] on the embedding side): tag, provenance
-    * version, boundary presence, and the old-slice replay —
-    * count-only under `graft.artifact.trustOldContent`, full
-    * [[VecSliceXor]] checksum otherwise. Returns (cut, props,
-    * full-corpus vecs). */
-  private def vecAdmission(s: SparkSession, dir: String,
-      oldPath: String, what: String): (Long, Map[String, String],
-      org.apache.spark.sql.DataFrame) = {
-    ArtifactTag.require(s, oldPath, dir)
-    val props = ArtifactTag.readProps(s, oldPath)
-    ArtifactTag.requireProvVersion(props, oldPath)
-    require(props.contains("max_vec_id"),
-      s"$what index at $oldPath carries no max_vec_id provenance — an " +
-        "empty or pre-provenance index has no append mode; rebuild it " +
-        "with the Materialize writer")
-    val cut = props("max_vec_id").toLong + 1L
-    val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val below = vecs.filter(col("vec_id") < cut)
-    if (trustOldContent(s)) {
-      val n = below.count()
-      require(props.get("n_vecs").contains(n.toString),
-        s"old-slice count mismatch at $oldPath (artifact " +
-          s"n=${props.getOrElse("n_vecs", "<none>")}, corpus n=$n) — " +
-          s"vectors appeared or vanished below the boundary ($cut) " +
-          s"since the previous cycle indexed the slice; re-index with " +
-          s"the full $what writer instead")
-    } else {
-      val r = below.agg(count(lit(1L)), expr(VecSliceXor)).head()
-      val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
-      require(props.get("n_vecs").contains(r.getLong(0).toString)
-          && props.get("content_xor").contains(xor.toString),
-        s"old-slice checksum mismatch at $oldPath (artifact " +
-          s"n=${props.getOrElse("n_vecs", "<none>")} " +
-          s"xor=${props.getOrElse("content_xor", "<none>")}, corpus " +
-          s"n=${r.getLong(0)} xor=$xor) — the vectors below the " +
-          s"boundary ($cut) are not the slice the previous cycle " +
-          s"indexed (id reuse, backfill, or in-place edits); re-index " +
-          s"with the full $what writer instead")
-    }
-    (cut, props, vecs)
-  }
 
   /** GENERATIONAL (append-mode) refresh of the IVF index — the
     * nightly-embedding-ingest rung the vector family was missing:
@@ -1079,14 +1004,15 @@ object Materialize {
   def ivfIndexAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, vecs) = vecAdmission(s, dir, oldPath, "ivf")
-    val batch = vecs.filter(col("vec_id") >= cut)
-    val cents = s.read.parquet(s"$oldPath/centroids")
-    partitioned(graft.operators.Similarity.ivfAssignFrozen(batch, cents),
-      s"$newPath/index", Seq("cid"), Seq("vec_id"))
-    cents.coalesce(1).write.parquet(s"$newPath/centroids")
-    writeVecProvenanceAppended(s, newPath, batch, dir, props,
-      Map("parent" -> oldPath))
+    val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding")
+    val (a, (assigned, cents)) = admit(s, dir, oldPath, Vecs, vecs,
+        "ivf index", "re-index with the full ivf writer instead") { cut =>
+      val cents = s.read.parquet(s"$oldPath/centroids")
+      (graft.operators.Similarity
+        .ivfAssignFrozen(vecs.filter(col("vec_id") >= cut), cents), cents)
+    }
+    concurrently(ivfParts(newPath, assigned, cents): _*)
+    seal(s, newPath, dir, a.next + ("parent" -> oldPath))
   }
 
   /** [[ivfIndexAppend]] for the PQ byte-code index: the batch encodes
@@ -1098,57 +1024,36 @@ object Materialize {
   def pqIndexAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cut, props, vecs) = vecAdmission(s, dir, oldPath, "pq")
-    val batch = vecs.filter(col("vec_id") >= cut)
-    val cb = s.read.parquet(s"$oldPath/codebooks")
-    graft.operators.Similarity.pqEncodeFrozen(batch, cb)
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions("vec_id", "sub")
-      .write.parquet(s"$newPath/codes")
-    cb.coalesce(1).write.parquet(s"$newPath/codebooks")
-    writeVecProvenanceAppended(s, newPath, batch, dir, props,
-      Map("parent" -> oldPath))
+    val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding")
+    val (a, (codes, cb)) = admit(s, dir, oldPath, Vecs, vecs,
+        "pq index", "re-index with the full pq writer instead") { cut =>
+      val cb = s.read.parquet(s"$oldPath/codebooks")
+      (graft.operators.Similarity
+        .pqEncodeFrozen(vecs.filter(col("vec_id") >= cut), cb), cb)
+    }
+    concurrently(pqParts(newPath, codes, cb): _*)
+    seal(s, newPath, dir, a.next + ("parent" -> oldPath))
   }
 
   /** COMPACTION of an IVF generation chain: chain-union of the
     * per-generation cell rows → ONE re-partitioned cell-partitioned
     * write + the head's centroids + the head's (cumulative) props
-    * without a parent pointer. Pure columnar I/O — frozen-quantizer
-    * assignments never recompute. MaterializeSpec pins compacted ≡
+    * without a parent pointer. MaterializeSpec pins compacted ≡
     * chain row sets. */
   def ivfIndexCompact(s: SparkSession, dir: String, headPath: String,
-      newPath: String): Unit = {
-    requireFresh(s, newPath)
-    ArtifactTag.require(s, headPath, dir)
-    val props = ArtifactTag.readProps(s, headPath)
-    ArtifactTag.requireProvVersion(props, headPath)
-    partitioned(
+      newPath: String): Unit =
+    compact(s, dir, headPath, newPath)(ivfParts(newPath,
       chainRead(s, headPath, dir, "index",
         Seq("vec_id", "embedding", "cid")),
-      s"$newPath/index", Seq("cid"), Seq("vec_id"))
-    s.read.parquet(s"$headPath/centroids")
-      .coalesce(1).write.parquet(s"$newPath/centroids")
-    ArtifactTag.write(s, newPath, dir)
-    ArtifactTag.writeProps(s, newPath, props - "parent")
-  }
+      s.read.parquet(s"$headPath/centroids")))
 
   /** [[ivfIndexCompact]] for the PQ chain: codes re-sort to one
     * vec_id-range artifact, head codebooks + props carry over. */
   def pqIndexCompact(s: SparkSession, dir: String, headPath: String,
-      newPath: String): Unit = {
-    requireFresh(s, newPath)
-    ArtifactTag.require(s, headPath, dir)
-    val props = ArtifactTag.readProps(s, headPath)
-    ArtifactTag.requireProvVersion(props, headPath)
-    chainRead(s, headPath, dir, "codes", Seq("vec_id", "sub", "code"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions("vec_id", "sub")
-      .write.parquet(s"$newPath/codes")
-    s.read.parquet(s"$headPath/codebooks")
-      .coalesce(1).write.parquet(s"$newPath/codebooks")
-    ArtifactTag.write(s, newPath, dir)
-    ArtifactTag.writeProps(s, newPath, props - "parent")
-  }
+      newPath: String): Unit =
+    compact(s, dir, headPath, newPath)(pqParts(newPath,
+      chainRead(s, headPath, dir, "codes", Seq("vec_id", "sub", "code")),
+      s.read.parquet(s"$headPath/codebooks")))
 
   /** Materialize the SQ serving index — the (vec_id, qs) symmetric
     * unit-norm int8 code table behind `ann_sq_from_index`: 64 longs
@@ -1159,12 +1064,9 @@ object Materialize {
     * the in-query twin computes. */
   def sqIndex(s: SparkSession, dir: String, path: String): Unit = {
     requireFresh(s, path)
-    graft.operators.Similarity.sqNormCodes(
-      graft.sources.Tables.embeddings(s, dir))
-      .select("vec_id", "qs")
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.parquet(path)
+    sortedWrite(graft.operators.Similarity.sqNormCodes(
+        graft.sources.Tables.embeddings(s, dir)).select("vec_id", "qs"),
+      path, Seq("vec_id"), Seq("vec_id"))
   }
 
   /** Materialize the point-in-time FEATURE STORE — the (user_id, day)
@@ -1190,14 +1092,14 @@ object Materialize {
     * day, v_centi) event slice — the old-cycle state
     * [[featureStoreDelta]] refreshes from (a previous cycle persisted
     * its store over events with day ≤ its max_day). */
-  def featureStoreOf(s: SparkSession, ev: org.apache.spark.sql.DataFrame,
-      path: String, tag: String): Unit = {
+  def featureStoreOf(s: SparkSession, ev: DataFrame, path: String,
+      tag: String): Unit = {
     requireFresh(s, path)
     val daily = graft.operators.Training.pitDaily(ev).localCheckpoint()
-    writeFeatureParts(s, path,
+    writeFeatureParts(path,
       graft.operators.Training.pitFeatureFromDaily(daily),
       totalsOf(daily))
-    writeEventProvenance(s, path, ev, tag)
+    seal(s, path, tag, sliceProps(Events, ev))
   }
 
   /** INCREMENTAL refresh of the feature store — the artifact a
@@ -1212,28 +1114,24 @@ object Materialize {
     * additively. All sums are longs, so {stored + delta} is
     * row-identical to a full rebuild (TrainingSpec pins it).
     *
-    * Guards: corpus tag, provenance version, max_day presence, and
-    * the ≤-max_day event-slice checksum replay — LATE-ARRIVING events
-    * (day ≤ max_day) refuse loudly, because their day's snapshot and
-    * every later prior would silently understate; so do edits or
-    * backfill of already-stored events. */
+    * Guards: [[admit]]'s matrix over the ≤ max_day event slice —
+    * LATE-ARRIVING events (day ≤ max_day) refuse loudly, because their
+    * day's snapshot and every later prior would silently understate;
+    * so do edits or backfill of already-stored events. */
   def featureStoreDelta(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cutDay, _, ev) = featAdmission(s, dir, oldPath)
-    val newDaily = graft.operators.Training
-      .pitDaily(ev.filter(col("day") > cutDay))
-      .localCheckpoint() // consumed by the snapshots AND the totals
+    val (a, newDaily) = featAdmit(s, dir, oldPath)
     // old snapshots resolve the GENERATION CHAIN (one scan for a
     // merged store; per-generation scans for an append chain) — which
-    // makes this writer the chain's COMPACTION, the lexDeltaParts rule
+    // makes this writer the chain's COMPACTION, the lexMerged rule
     val snapshots = chainRead(s, oldPath, ArtifactTag.readTag(s, oldPath),
         "snapshots", Seq("user_id", "day", "n_events_prior",
           "n_purchases_prior", "value_centi_prior", "days_active_prior"))
       .unionAll(featSeeded(s, oldPath, newDaily))
-    writeFeatureParts(s, newPath, snapshots,
+    writeFeatureParts(newPath, snapshots,
       featTotalsMerged(s, oldPath, newDaily))
-    writeEventProvenance(s, newPath, ev, dir)
+    seal(s, newPath, dir, a.next)
   }
 
   /** GENERATIONAL (append-mode) refresh of the feature store — the
@@ -1249,57 +1147,24 @@ object Materialize {
   def featureStoreAppend(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
-    val (cutDay, props, ev) = featAdmission(s, dir, oldPath)
-    val batch = ev.filter(col("day") > cutDay)
-    val newDaily = graft.operators.Training.pitDaily(batch)
-      .localCheckpoint() // consumed by the snapshots AND the totals
-    writeFeatureParts(s, newPath, featSeeded(s, oldPath, newDaily),
+    val (a, newDaily) = featAdmit(s, dir, oldPath)
+    writeFeatureParts(newPath, featSeeded(s, oldPath, newDaily),
       featTotalsMerged(s, oldPath, newDaily))
-    // additive sidecar from the admitted parent + the batch events —
-    // the [[writeSliceProvenanceAppended]] rule on the event side
-    writeEventProvenanceAppended(s, newPath, batch, dir, props,
-      Map("parent" -> oldPath))
+    seal(s, newPath, dir, a.next + ("parent" -> oldPath))
   }
 
-  /** The shared admission prefix of the two feature-store refresh
-    * writers ([[lexAdmission]]'s sibling): tag, provenance version,
-    * boundary presence, and the stored-event-slice guard (checksum
-    * replay, or the count guard under [[trustOldContent]]). Returns
-    * (cutDay, props, full pitEvents frame). */
-  private def featAdmission(s: SparkSession, dir: String,
-      oldPath: String): (Long, Map[String, String],
-      org.apache.spark.sql.DataFrame) = {
-    ArtifactTag.require(s, oldPath, dir)
-    val props = ArtifactTag.readProps(s, oldPath)
-    ArtifactTag.requireProvVersion(props, oldPath)
-    require(props.contains("max_day"),
-      s"feature store at $oldPath carries no max_day provenance — an " +
-        "empty or pre-delta store has no incremental mode; run the " +
-        "full featureStore build once")
-    val cutDay = props("max_day").toLong
+  /** The feature-store refresh prefix shared by the merge and append
+    * writers: [[admit]] over the store's events, beside the batch
+    * days' daily aggregates checkpointed (consumed by the snapshots
+    * AND the totals — the batch's one events read). */
+  private def featAdmit(s: SparkSession, dir: String,
+      oldPath: String): (Admitted, DataFrame) = {
     val ev = graft.operators.Training.pitEvents(s, dir)
-    val below = ev.filter(col("day") <= cutDay)
-    if (trustOldContent(s)) {
-      val n = below.count()
-      require(props.get("n_events").contains(n.toString),
-        s"stored-slice count mismatch at $oldPath (store " +
-          s"n=${props.getOrElse("n_events", "<none>")}, events n=$n) " +
-          s"— events arrived at day ≤ $cutDay since the previous " +
-          "cycle snapshotted (late-arriving events or backfill); " +
-          "rebuild the store instead")
-    } else {
-      val (n, xor) = eventSliceChecksum(below)
-      require(props.get("n_events").contains(n.toString)
-          && props.get("events_xor").contains(xor.toString),
-        s"stored-slice checksum mismatch at $oldPath (store " +
-          s"n=${props.getOrElse("n_events", "<none>")} " +
-          s"xor=${props.getOrElse("events_xor", "<none>")}, " +
-          s"events n=$n xor=$xor) — the events at day ≤ $cutDay are " +
-          "not the slice the previous cycle snapshotted " +
-          "(late-arriving events, edits, or backfill); rebuild the " +
-          "store instead")
+    admit(s, dir, oldPath, Events, ev, "feature store",
+        "rebuild the store with the full featureStore writer instead") {
+      cut => graft.operators.Training.pitDaily(ev.filter(col("day") >= cut))
+        .localCheckpoint()
     }
-    (cutDay, props, ev)
   }
 
   /** The batch days' snapshot rows, priors seeded from the stored
@@ -1309,8 +1174,7 @@ object Materialize {
     * at the cut, term by term, in long arithmetic. ONE definition for
     * the merge and append writers. */
   private def featSeeded(s: SparkSession, oldPath: String,
-      newDaily: org.apache.spark.sql.DataFrame): org.apache.spark.sql
-      .DataFrame = {
+      newDaily: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val prior = w.partitionBy("user_id").orderBy("day")
       .rowsBetween(w.unboundedPreceding, -1)
@@ -1340,8 +1204,7 @@ object Materialize {
     * old-only users carry over) — never chain-unioned, the gramstats
     * rule. ONE definition for the merge and append writers. */
   private def featTotalsMerged(s: SparkSession, oldPath: String,
-      newDaily: org.apache.spark.sql.DataFrame): org.apache.spark.sql
-      .DataFrame =
+      newDaily: DataFrame): DataFrame =
     s.read.parquet(s"$oldPath/totals")
       .select("user_id", "n_total", "n_purch_total", "v_total",
         "days_total")
@@ -1355,75 +1218,18 @@ object Materialize {
   /** Per-user running totals over a daily frame — the delta seed.
     * `v_total` coalesces a sum that is null only when every summand
     * is (matching the rebuild's coalesce-to-0 of the prior window). */
-  private def totalsOf(
-      daily: org.apache.spark.sql.DataFrame): org.apache.spark.sql
-      .DataFrame =
+  private def totalsOf(daily: DataFrame): DataFrame =
     daily.groupBy("user_id")
       .agg(sum("n").as("n_total"),
         sum("n_purch").as("n_purch_total"),
         coalesce(sum("v_sum"), lit(0L)).as("v_total"),
         count(lit(1)).as("days_total"))
 
-  private def writeFeatureParts(s: SparkSession, path: String,
-      snapshots: org.apache.spark.sql.DataFrame,
-      totals: org.apache.spark.sql.DataFrame): Unit = {
-    snapshots.repartitionByRange(col("user_id"), col("day"))
-      .sortWithinPartitions("user_id", "day")
-      .write.parquet(s"$path/snapshots")
-    totals.repartitionByRange(col("user_id"))
-      .sortWithinPartitions("user_id")
-      .write.parquet(s"$path/totals")
-  }
-
-  /** The per-event content hash the store's provenance XORs — the
-    * [[SliceXor]] idea over the five columns the snapshots derive
-    * from; any edit, id reuse, or late arrival below the cut flips it
-    * w.h.p. */
-  private val EventXor = "bit_xor(xxhash64(event_id, user_id, day, " +
-    "v_centi, coalesce(event_type, '<null>')))"
-
-  private[graft] def eventSliceChecksum(
-      ev: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val r = ev.agg(count(lit(1L)), expr(EventXor)).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  /** [[writeSliceProvenanceAppended]] on the event side: n_events
-    * adds, events_xor XORs, max_day maxes from the parent's verified
-    * props + a batch-only aggregate — the feature-store append cycle
-    * never re-hashes stored events. */
-  private def writeEventProvenanceAppended(s: SparkSession, path: String,
-      batch: org.apache.spark.sql.DataFrame, tag: String,
-      parent: Map[String, String],
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    val r = batch.agg(count(lit(1L)), expr(EventXor), max("day")).head()
-    val bXor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val maxDay = (parent.get("max_day").map(_.toLong) ++
-      (if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      .reduceOption(_ max _)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_events" -> (parent("n_events").toLong + r.getLong(0)).toString,
-      "events_xor" ->
-        (parent("events_xor").toLong ^ bXor).toString) ++
-      maxDay.map(m => "max_day" -> m.toString) ++ extra)
-  }
-
-  private def writeEventProvenance(s: SparkSession, path: String,
-      ev: org.apache.spark.sql.DataFrame, tag: String,
-      extra: Map[String, String] = Map.empty): Unit = {
-    ArtifactTag.write(s, path, tag)
-    // one fused pass for all three facts (the writeSliceProvenance
-    // rule): count + content xor + the max stored day that defines
-    // the next delta's cut
-    val r = ev.agg(count(lit(1L)), expr(EventXor), max("day")).head()
-    val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    ArtifactTag.writeProps(s, path, Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_events" -> r.getLong(0).toString,
-      "events_xor" -> xor.toString) ++
-      (if (r.isNullAt(2)) Map.empty[String, String]
-       else Map("max_day" -> r.getLong(2).toString)) ++ extra)
-  }
+  /** The two feature-store parts, written concurrently. */
+  private def writeFeatureParts(path: String, snapshots: => DataFrame,
+      totals: => DataFrame): Unit = concurrently(
+    () => sortedWrite(snapshots, s"$path/snapshots",
+      Seq("user_id", "day"), Seq("user_id", "day")),
+    () => sortedWrite(totals, s"$path/totals", Seq("user_id"),
+      Seq("user_id")))
 }

@@ -278,11 +278,12 @@ object Pipelines {
     *    that to multi-file commits in production (StreamingSpec pins
     *    the marker/frontier/relanding paths).
     *  - each GENERATION is batchId-keyed: a `next` path already
-    *    carrying its provenance sidecar is a COMMITTED previous
+    *    carrying its corpus tag is a COMMITTED previous
     *    attempt of this very tick — adopt it (flip) instead of
-    *    failing requireFresh; a sidecar-less leftover directory is a
-    *    torn write of this batchId's previous attempt (props write
-    *    LAST) — swept and re-appended. */
+    *    failing requireFresh; an untagged leftover directory is a
+    *    torn write of this batchId's previous attempt (the tag writes
+    *    LAST, after every part and the props) — swept and
+    *    re-appended. */
   def docRefreshTick(st: RefreshState)(
       batch: DataFrame, batchId: Long): Unit = {
     val rows = batch.select(col("doc_id"), col("text"))
@@ -307,14 +308,13 @@ object Pipelines {
 
   /** The per-family committed/torn/fresh decision of a replayed tick
     * (shared by the doc- and event-side ticks): committed generation
-    * (provenance sidecar present) → adopt; torn leftover → sweep +
-    * append; fresh → append. */
+    * (corpus tag present — [[graft.ops.ArtifactTag.committed]]) →
+    * adopt; torn leftover → sweep + append; fresh → append. */
   private def appendIdempotent(st: RefreshState, family: String,
       append: (SparkSession, String, String, String) => Unit,
       conf: Option[String], batchId: Long): Unit = {
     val next = s"${st.root}/$family-g${batchId + 1}"
-    if (!graft.ops.ArtifactTag.readProps(st.s, next)
-        .contains("prov_ver")) {
+    if (!graft.ops.ArtifactTag.committed(st.s, next)) {
       val p = new org.apache.hadoop.fs.Path(next)
       val fs = p.getFileSystem(st.s.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true) // torn previous attempt

@@ -275,10 +275,8 @@ class MaterializeSpec extends SparkSpec {
     // the merged frames never rescan the corpus: old side is index
     // parquet only (the new side's one batch read happened inside the
     // builder's eager checkpoint, scoped to doc_id >= cut)
-    val oldProps = graft.ops.ArtifactTag.readProps(spark, s"$base/old")
-    val (post, grams, gstats, _, _) = Materialize.lexDeltaParts(spark,
-      docs, s"$base/old", cut, oldProps("n_dl").toLong,
-      oldProps("sum_dl").toLong)
+    val (post, grams, gstats) = Materialize.lexDeltaParts(spark,
+      docs, s"$base/old", cut)
     Seq("postings" -> post, "grams" -> grams, "gramstats" -> gstats)
       .foreach { case (nm, df) =>
         val plan = df.queryExecution.executedPlan.toString
@@ -449,6 +447,16 @@ class MaterializeSpec extends SparkSpec {
     graft.ops.ArtifactTag.write(spark, oldP, dir2)
     withConf("graft.artifact.trustOldContent" -> "true") {
       Materialize.lexicalIndexDelta(spark, dir2, oldP, s"$base/n5")
+      // …but the edit is NOT laundered into fresh provenance: the
+      // sidecar is parent ⊕ batch, so it keeps the STORED xor of the
+      // unedited slice rather than re-hashing the edited corpus
+      val docsOf = (d: String) => graft.sources.Tables.documents(spark, d)
+      assert(graft.ops.ArtifactTag.readProps(spark, s"$base/n5")
+          .get("content_xor")
+          .contains(Materialize.ccSliceChecksum(docsOf(dir))._2.toString),
+        "trust-mode delta must record parent ⊕ batch, not the edited corpus")
+      assert(Materialize.ccSliceChecksum(docsOf(dir))._2 !==
+        Materialize.ccSliceChecksum(docsOf(dir2))._2)
       // count drift below the cut (a doc backfilled at id -1): the
       // count guard still refuses, and names counts, not checksums
       val dirLow = {
@@ -467,6 +475,133 @@ class MaterializeSpec extends SparkSpec {
       assert(!e5.getMessage.contains("checksum"),
         "trust mode must use the count guard, not the checksum replay")
     }
+    // so the next checked-mode admission still refuses the edit
+    val e7 = intercept[IllegalArgumentException] {
+      Materialize.lexicalIndexAppend(spark, dir2, s"$base/n5", s"$base/n7")
+    }
+    assert(e7.getMessage.contains("checksum mismatch"), e7.getMessage)
     graft.ops.ArtifactTag.write(spark, oldP, dir)
+  }
+
+  /** An old lexical generation over the lower half of sf0001's doc ids
+    * (tagged for sf0001), so a refresh writer over sf0001 has a real
+    * batch. */
+  private def lexOld(path: String): Unit = {
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+      .select("doc_id", "text")
+    Materialize.lexicalIndexOf(spark,
+      docs.filter(col("doc_id") < Dedup.idCut(docs)), path, sf0001)
+  }
+
+  test("each lexical refresh writer reads the corpus in exactly two " +
+      "actions: the fused admission/provenance aggregate and the one " +
+      "batch token checkpoint") {
+    val base = Files.createTempDirectory("graft-lexscans").toString
+    lexOld(s"$base/old")
+    val append = tableScans("documents.parquet") {
+      Materialize.lexicalIndexAppend(spark, sf0001, s"$base/old",
+        s"$base/g1")
+    }
+    assert(append === 2, s"lexicalIndexAppend read the corpus $append times")
+    val delta = tableScans("documents.parquet") {
+      Materialize.lexicalIndexDelta(spark, sf0001, s"$base/old",
+        s"$base/d1")
+    }
+    assert(delta === 2, s"lexicalIndexDelta read the corpus $delta times")
+  }
+
+  test("concurrently runs every part even when one throws, rethrows the " +
+      "first failure as itself and keeps later ones as suppressed") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val first = new IllegalStateException("part one failed")
+    val later = new RuntimeException("part three failed later")
+    val e = intercept[IllegalStateException] {
+      Materialize.concurrently(
+        () => { ran.incrementAndGet(); throw first },
+        () => { Thread.sleep(300); ran.incrementAndGet() },
+        () => { Thread.sleep(600); ran.incrementAndGet(); throw later })
+    }
+    assert(e eq first, s"rethrew $e instead of the first failure")
+    assert(e.getMessage === "part one failed")
+    assert(ran.get === 3, "a part did not run to completion")
+    assert(e.getSuppressed.toSeq === Seq(later))
+  }
+
+  test("a failed or torn refresh leaves an untagged directory that " +
+      "admission refuses by name") {
+    import java.nio.file.{Path, Paths, StandardCopyOption}
+    val base = Files.createTempDirectory("graft-lextorn").toString
+    lexOld(s"$base/old")
+    val sidecars = Seq("_graft_corpus", "_graft_props")
+    def has(p: String, f: String) = Files.exists(Paths.get(p, f))
+    // a part that fails inside its thread: one unreadable file in the
+    // parent's gramstats (the schema still resolves from a summary
+    // file, so the failure surfaces only when the part's job reads it)
+    val gs = Paths.get(base, "old", "gramstats")
+    val good: Path = Files.list(gs).filter(_.getFileName.toString
+      .endsWith(".parquet")).findFirst().get
+    Files.copy(good, gs.resolve("_common_metadata"),
+      StandardCopyOption.REPLACE_EXISTING)
+    Files.write(gs.resolve("part-99999-unreadable.parquet"),
+      Array.fill[Byte](64)(7))
+    val e = intercept[Exception] {
+      Materialize.lexicalIndexAppend(spark, sf0001, s"$base/old",
+        s"$base/g1")
+    }
+    assert(e.getMessage.contains("part-99999-unreadable"), e.getMessage)
+    // every other part still ran to completion …
+    Seq("postings", "stats", "grams").foreach { p =>
+      assert(has(s"$base/g1/$p", "_SUCCESS"), s"part $p did not complete")
+    }
+    // … and no sidecar was written, so the directory is refused whole
+    sidecars.foreach(f => assert(!has(s"$base/g1", f), s"$f was written"))
+    val e1 = intercept[IllegalArgumentException] {
+      Materialize.lexicalIndexAppend(spark, sf0001, s"$base/g1",
+        s"$base/g2")
+    }
+    assert(e1.getMessage.contains("carries no _graft_corpus tag"),
+      e1.getMessage)
+    // a crash between the sidecars (props land first, the tag last)
+    // reads the same way: a fresh artifact with its tag deleted, or
+    // with both sidecars deleted, is refused as untagged — never as a
+    // pre-version provenance format
+    Seq(Seq("_graft_corpus"), sidecars).zipWithIndex.foreach {
+      case (gone, i) =>
+        val p = s"$base/fresh$i"
+        lexOld(p)
+        gone.foreach(f => Files.delete(Paths.get(p, f)))
+        val e2 = intercept[IllegalArgumentException] {
+          Materialize.lexicalIndexAppend(spark, sf0001, p, s"$p-next")
+        }
+        assert(e2.getMessage.contains("carries no _graft_corpus tag"),
+          e2.getMessage)
+    }
+  }
+
+  test("every job a refresh writer launches, from any part thread, " +
+      "carries the caller's job group and job description") {
+    val base = Files.createTempDirectory("graft-lexgroup").toString
+    lexOld(s"$base/old")
+    val ev = graft.operators.Training.pitEvents(spark, sf0001)
+    val b = ev.agg(min("day"), max("day")).head()
+    Materialize.featureStoreOf(spark,
+      ev.filter(col("day") <= (b.getLong(0) + b.getLong(1)) / 2),
+      s"$base/fold", sf0001)
+    val sc = spark.sparkContext
+    val props = jobProperties {
+      sc.setJobGroup("graft-spec/refresh", "op:spec-refresh")
+      try {
+        Materialize.lexicalIndexAppend(spark, sf0001, s"$base/old",
+          s"$base/g1")
+        Materialize.featureStoreDelta(spark, sf0001, s"$base/fold",
+          s"$base/f1")
+      } finally sc.clearJobGroup()
+    }
+    assert(props.size >= 6, s"only ${props.size} jobs observed")
+    props.foreach { p =>
+      assert(p != null, "a job ran without local properties")
+      assert(p.getProperty("spark.jobGroup.id") === "graft-spec/refresh")
+      assert(p.getProperty("spark.job.description") === "op:spec-refresh")
+    }
   }
 }

@@ -26,6 +26,52 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `body` and count the SQL actions it executed — checkpoints,
+    * collects, writes — whose plan reads the table directory named
+    * `table` (e.g. `documents.parquet`). Listener events are
+    * asynchronous, so the bus is drained before the count is read. */
+  protected def tableScans(table: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.collectWithSubqueries {
+              case r: LogicalRelation => r.relation
+            }.exists {
+              case h: HadoopFsRelation =>
+                h.location.rootPaths.exists(_.getName == table)
+              case _ => false
+            }) n.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    n.get
+  }
+
+  /** Run `body` and return the local properties of every Spark job it
+    * launched, from any thread (null for a job launched without
+    * any). */
+  protected def jobProperties(body: => Unit): Seq[java.util.Properties] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val got =
+      new java.util.concurrent.ConcurrentLinkedQueue[Option[java.util.Properties]]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        got.add(Option(e.properties))
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    got.toArray(Array.empty[Option[java.util.Properties]]).toSeq
+      .map(_.orNull)
+  }
 }
 
 object SparkSpec {

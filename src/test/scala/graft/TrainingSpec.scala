@@ -484,5 +484,48 @@ class TrainingSpec extends SparkSpec {
       Materialize.featureStoreDelta(spark, dir, oldP, s"$base/n4")
     }
     assert(e4.getMessage.contains("write-once"), e4.getMessage)
+    // trust mode (graft.artifact.trustOldContent): a same-count
+    // in-place edit of a stored event passes the count guard, but the
+    // new sidecar is parent ⊕ batch — it keeps the STORED xor, so the
+    // edit is not laundered into fresh provenance and the next
+    // checked-mode admission still refuses it
+    val dirEdit = dirOf(rows.updated(1, (1L, 1L, "purchase", 1L * dayNs, 6.0)))
+    graft.ops.ArtifactTag.write(spark, oldP, dirEdit)
+    withConf("graft.artifact.trustOldContent" -> "true") {
+      Materialize.featureStoreDelta(spark, dirEdit, oldP, s"$base/n5")
+    }
+    Materialize.featureStore(spark, dirEdit, s"$base/fullEdit")
+    def xorOf(p: String) =
+      graft.ops.ArtifactTag.readProps(spark, p).get("events_xor")
+    assert(xorOf(s"$base/n5") === xorOf(s"$base/full"),
+      "trust-mode delta must record parent ⊕ batch, not the edited events")
+    assert(xorOf(s"$base/n5") !== xorOf(s"$base/fullEdit"))
+    val e5 = intercept[IllegalArgumentException] {
+      Materialize.featureStoreDelta(spark, dirEdit, s"$base/n5", s"$base/n6")
+    }
+    assert(e5.getMessage.contains("checksum mismatch"), e5.getMessage)
+  }
+
+  test("each feature-store refresh writer reads the events in exactly " +
+      "two actions: the fused admission/provenance aggregate and the " +
+      "one batch checkpoint") {
+    import graft.ops.Materialize
+    val ev = Training.pitEvents(spark, sf0001)
+    val b = ev.agg(min("day"), max("day")).head()
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-featscans").toString
+    Materialize.featureStoreOf(spark,
+      ev.filter(col("day") <= (b.getLong(0) + b.getLong(1)) / 2),
+      s"$base/old", sf0001)
+    val append = tableScans("events.parquet") {
+      Materialize.featureStoreAppend(spark, sf0001, s"$base/old",
+        s"$base/g1")
+    }
+    assert(append === 2, s"featureStoreAppend read the events $append times")
+    val delta = tableScans("events.parquet") {
+      Materialize.featureStoreDelta(spark, sf0001, s"$base/old",
+        s"$base/d1")
+    }
+    assert(delta === 2, s"featureStoreDelta read the events $delta times")
   }
 }

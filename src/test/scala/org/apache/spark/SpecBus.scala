@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until every listener event posted so far has been delivered.
+  * The listener bus is Spark-internal; this bridge lives in Spark's
+  * package namespace so the specs can read complete listener counts
+  * without sleeping and guessing. */
+object SpecBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
