@@ -14,14 +14,16 @@
 # a sketch sibling or a justified allowlist entry cannot land either;
 # CodegenGateSpec (round 11) re-runs the registry with codegen
 # fallback disabled — a janino compile failure in any expression is a
-# silent 10×+ interpreted fallback in production and a red gate here.
+# silent 10×+ interpreted fallback in production and a red gate here;
+# ToolsSpec covers the dev mains' shared scaffolding (Profile's
+# per-stage counts, the plan census, the median-of-3 failure rule).
 # Exit is nonzero on any failure — wire it in front of the commit and
 # a stale contract cannot land.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec' \
+if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec' \
     > /tmp/snapshot_gate.log 2>&1; then
-  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate green)"
+  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools green)"
 else
   tail -40 /tmp/snapshot_gate.log >&2
   echo "snapshot gate FAILED — contract drift or a broken query; do NOT commit" >&2

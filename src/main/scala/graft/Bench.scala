@@ -1,74 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints one JSON line. A full untimed warmup pass runs first so
-  * the timed pass measures steady-state execution (JIT-compiled code,
-  * warm page cache) rather than JVM startup artifacts on whichever
-  * query happens to run first.
-  *
-  * Output hygiene: a query that throws is recorded as -1 (never as its
-  * near-zero elapsed time, which would silently deflate the total) and
-  * listed under "failed". The metric line is printed to stdout AND
+  * by [[Tool.medianOf3]] and prints one JSON line. A query that throws
+  * is listed under "failed". The metric line is printed to stdout AND
   * written to SPARK_GRAFT_BENCH_OUT (default bench_metric.json) so log
   * noise interleaved on stdout can't corrupt the driver's parse. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_metric.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-    // between-query hygiene: the dedup family localCheckpoints its
-    // shingle index per invocation; across 4 passes × 120 queries those
-    // blocks accumulate until storage memory saturates and LATER
-    // queries pay eviction + GC (the Stress harness measured this as
-    // 3-5× wall inflation with unchanged shuffle bytes). Queries are
-    // independent jobs in production; drop leftover state between them.
-    def resetState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    qs.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => }
-      resetState()
-    }
-    // three timed passes, per-query MEDIAN as the headline estimator
+    val spark = Tool.session(Tool.cpus())
+    // per-query MEDIAN of three timed passes as the headline estimator
     // (round-10 verdict ask #3: single-run numbers swing ±20% on this
-    // shared host, making the 2× contract and round deltas unreadable;
-    // the median of three is noise-robust in both directions where min
-    // hides sustained contention and mean chases one GC pause). The
-    // per-query min/max ride along so a verdict can see the spread.
-    def timedPass(): Seq[(String, Double)] = qs.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val el = (System.nanoTime() - t0) / 1e9 // reset runs off the clock
-      resetState()
-      name -> (if (ok) el else -1.0)
-    }
-    val passes = Seq(timedPass().toMap, timedPass().toMap, timedPass().toMap)
-    val stats = qs.map { case (name, _) =>
-      val ts = passes.map(_(name)).sorted
-      name -> (if (ts.exists(_ < 0)) (-1.0, -1.0, -1.0)
-               else (ts(1), ts(0), ts(2))) // (median, min, max) of 3
-    }
-    val failed = stats.collect { case (n, (m, _, _)) if m < 0 => n }
-    def qJson(pick: ((Double, Double, Double)) => Double): String =
-      stats.map { case (k, v) => "\"" + k + "\":" + pick(v) }
-        .mkString("{", ",", "}")
-    val fJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def total(pick: ((Double, Double, Double)) => Double): Double =
-      stats.map(s => pick(s._2)).filter(_ >= 0).sum
+    // shared host, making the 2× contract and round deltas unreadable).
+    // The per-query min/max ride along so a verdict can see the spread.
+    val (passes, stats) = Tool.medianOf3(spark,
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> (() => fn(spark, sfDir).count())
+      })
+    val failed = Tool.failed(stats)
     // "queries"/"value" carry the MEDIAN (the driver's parse contract
     // is untouched — scalar per query); the min/max triples ride along
     // under extra keys so BENCH_r{N} records the spread.
@@ -98,12 +48,11 @@ object Bench {
     val (hostFactor, regressions) = regressionGate(
       stats.map { case (n, (m, _, _)) => n -> m }, prev,
       stats.map { case (n, (_, mn, _)) => n -> mn }.toMap)
-    val regressed = regressions
-      .map { case (n, p, m) => s""""$n":[$p,$m]""" }
-      .mkString("{", ",", "}")
+    val regressed =
+      Tool.obj(regressions.map { case (n, p, m) => n -> s"[$p,$m]" })
     val line =
-      s"""{"metric":"total","value":${total(_._1)},"unit":"sec","estimator":"median_of_3","value_min":${total(_._2)},"value_max":${total(_._3)},"value_passes":$passTotals,"queries":${qJson(_._1)},"queries_min":${qJson(_._2)},"queries_max":${qJson(_._3)},"failed":$fJson,"regressed":$regressed,"host_factor":$hostFactor,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
+      s"""{"metric":"total","value":${Tool.total(stats, _._1)},"unit":"sec","estimator":"median_of_3","value_min":${Tool.total(stats, _._2)},"value_max":${Tool.total(stats, _._3)},"value_passes":$passTotals,"queries":${Tool.column(stats, _._1)},"queries_min":${Tool.column(stats, _._2)},"queries_max":${Tool.column(stats, _._3)},"failed":${Tool.strs(failed)},"regressed":$regressed,"host_factor":$hostFactor,"sf":"$sfDir"}"""
+    Tool.writeFile(outFile, line + "\n")
     println(line)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

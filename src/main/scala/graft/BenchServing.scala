@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** SERVING-MODE benchmark — the round-over-round regression line for
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions.col
   * conf-consuming queries through them, and emits ONE JSON line
   * (`bench_serving.json`) with per-query median-of-3 timings under the
   * same hygiene rules as `Bench` (untimed whole-panel warmup,
-  * resetState off the clock). It also regenerates the serving-plan
+  * Tool.reset off the clock). It also regenerates the serving-plan
   * census (`docs/PLANS_SERVING.md`): shuffle/broadcast/codegen counts
   * per serving plan plus a checked "reads its artifact" column, so a
   * routing regression is visible structurally, not just as wall time.
@@ -46,24 +45,6 @@ object BenchServing {
     "phrase_from_index" -> "graft.lex.indexPath",
     "feature_pit_from_index" -> "graft.features.storePath")
 
-  /** Scratch-dir marker each query's executed plan must scan — the
-    * census's structural "actually served from the artifact" check.
-    * cc_incremental and the signature incrementals also read the
-    * corpus (their delta half is in-query by design), so the check is
-    * contains-marker, not corpus-free. */
-  private val Marker: Map[String, String] = Map(
-    "dedup_clusters" -> "bench-cclabels",
-    "dedup_soft_weights" -> "bench-cclabels",
-    "dedup_best_survivor" -> "bench-cclabels",
-    "dedup_cluster_size_dist" -> "bench-cclabels",
-    "cc_incremental" -> "bench-oldlabels",
-    "dedup_simhash_incremental" -> "bench-simhash-old",
-    "dedup_minhash_incremental" -> "bench-minhash-old",
-    "bm25_from_index" -> "bench-lex",
-    "phrase_from_index" -> "bench-lex",
-    "feature_pit_from_index" -> "bench-featstore"
-  ).withDefaultValue("bench-pairs")
-
   /** Iterative kernels localCheckpoint their edge input before the
     * loop, so their FINAL executed plan roots at checkpoint-RDD scans
     * and structurally cannot show the artifact read (it happened one
@@ -76,57 +57,45 @@ object BenchServing {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outFile =
       sys.env.getOrElse("SPARK_GRAFT_SERVING_OUT", "bench_serving.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.session(Tool.cpus())
 
     // ---- build every serving artifact once (recorded, off the query
     // clock). Order matters: the pair graph goes first and its conf is
     // set immediately, so the CC label build itself serves off one
     // pair scan — the nightly one-pair-job composition DEPLOY.md
     // prescribes.
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     val builds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val pairs = graft.ops.Scratch.dir("bench-pairs")
     builds("pair_graph") =
-      timed(graft.ops.Materialize.pairGraph(spark, sfDir, pairs))._2
+      Tool.secs(graft.ops.Materialize.pairGraph(spark, sfDir, pairs))
     spark.conf.set("graft.dedup.pairsPath", pairs)
     val labels = graft.ops.Scratch.dir("bench-cclabels")
     builds("cc_labels") =
-      timed(graft.ops.Materialize.ccLabels(spark, sfDir, labels))._2
+      Tool.secs(graft.ops.Materialize.ccLabels(spark, sfDir, labels))
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
     val cut = graft.operators.Dedup.idCut(docs)
     val old = docs.filter(col("doc_id") < cut)
     val oldLabels = graft.ops.Scratch.dir("bench-oldlabels")
     builds("old_cc_labels") =
-      timed(graft.ops.Materialize.ccLabelsOf(spark, old, oldLabels,
-        sfDir))._2
+      Tool.secs(graft.ops.Materialize.ccLabelsOf(spark, old, oldLabels,
+        sfDir))
     val simOld = graft.ops.Scratch.dir("bench-simhash-old")
     builds("old_simhash_index") =
-      timed(graft.ops.Materialize.simhashIndexOf(spark, old, simOld,
-        sfDir))._2
+      Tool.secs(graft.ops.Materialize.simhashIndexOf(spark, old, simOld,
+        sfDir))
     val mhOld = graft.ops.Scratch.dir("bench-minhash-old")
     builds("old_minhash_index") =
-      timed(graft.ops.Materialize.minhashIndexOf(spark, old, mhOld,
-        sfDir))._2
+      Tool.secs(graft.ops.Materialize.minhashIndexOf(spark, old, mhOld,
+        sfDir))
     val lex = graft.ops.Scratch.dir("bench-lex")
     builds("lexical_index") =
-      timed(graft.ops.Materialize.lexicalIndex(spark, sfDir, lex))._2
+      Tool.secs(graft.ops.Materialize.lexicalIndex(spark, sfDir, lex))
     val feat = graft.ops.Scratch.dir("bench-featstore")
     builds("feature_store") =
-      timed(graft.ops.Materialize.featureStore(spark, sfDir, feat))._2
+      Tool.secs(graft.ops.Materialize.featureStore(spark, sfDir, feat))
     spark.conf.set("graft.cc.labelsPath", labels)
     spark.conf.set("graft.cc.oldLabelsPath", oldLabels)
     spark.conf.set("graft.simhash.oldIndexPath", simOld)
@@ -136,32 +105,10 @@ object BenchServing {
 
     // ---- timing (the Bench methodology: untimed warmup, 3 timed
     // passes, per-query median; state dropped off the clock)
-    def resetState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    Served.foreach { case (name, _) =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => }
-      resetState()
-    }
-    def timedPass(): Map[String, Double] = Served.map { case (name, _) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val el = (System.nanoTime() - t0) / 1e9
-      resetState()
-      name -> (if (ok) el else -1.0)
-    }.toMap
-    val passes = Seq(timedPass(), timedPass(), timedPass())
-    val stats = Served.map { case (name, _) =>
-      val ts = passes.map(_(name)).sorted
-      name -> (if (ts.exists(_ < 0)) (-1.0, -1.0, -1.0)
-               else (ts(1), ts(0), ts(2)))
-    }
-    val failed = stats.collect { case (n, (m, _, _)) if m < 0 => n }
+    val (_, stats) = Tool.medianOf3(spark, Served.map { case (name, _) =>
+      name -> (() => SparkEntry.queries(name)(spark, sfDir).count())
+    })
+    val failed = Tool.failed(stats)
 
     // ---- serving-plan census (PLANS.md style, serving confs live)
     val sb = new StringBuilder
@@ -178,50 +125,40 @@ object BenchServing {
     val median = stats.toMap
     Served.foreach { case (name, route) =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.collect() // finalize AQE so codegen ids are real
-        val full = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val tree = full.split("== Initial Plan ==")(0)
-        val nSh =
-          """(?<!Broadcast)Exchange \(\d+\)""".r.findAllIn(tree).length
-        val nBc = """BroadcastExchange \(\d+\)""".r.findAllIn(tree).length
-        val nCg = """\[codegen id : \d+\]""".r.findAllIn(full)
-          .toSeq.distinct.length
+        val full = Tool.finalPlan(SparkEntry.queries(name)(spark, sfDir))
+        val (nSh, nBc, nCg) = Tool.census(full)
+        // the structural "actually served from the artifact" check: the
+        // executed plan scans the routed artifact's scratch dir.
+        // cc_incremental and the signature incrementals also read the
+        // corpus (their delta half is in-query by design), so the check
+        // is contains-artifact, not corpus-free.
+        val artifact = spark.conf.get(route).split('/').last
         val reads =
           if (CheckpointedKernels(name))
             "n/a (kernel checkpoints edges; spec-pinned)"
-          else if (full.contains(Marker(name))) "yes"
+          else if (full.contains(artifact)) "yes"
           else "NO — ROUTING REGRESSION"
         val m = median(name)._1
         sb ++= f"| $name | $route | $m%.2f | $nSh | $nBc | $nCg | " +
           s"$reads |\n"
-        resetState()
+        Tool.reset(spark)
       } catch {
-        case e: Throwable => sb ++= s"| $name | $route | FAILED: " +
-          s"${e.getMessage.linesIterator.next()} | | | | |\n"
+        case e: Throwable =>
+          val msg = String.valueOf(e.getMessage).linesIterator.take(1)
+          sb ++= s"| $name | $route | FAILED: ${msg.mkString} | | | | |\n"
       }
     }
-    val census = java.nio.file.Paths.get("docs/PLANS_SERVING.md")
-    Option(census.getParent)
-      .foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(census, sb.toString)
+    Tool.writeFile("docs/PLANS_SERVING.md", sb.toString)
 
-    def qJson(pick: ((Double, Double, Double)) => Double): String =
-      stats.map { case (k, v) => "\"" + k + "\":" + pick(v) }
-        .mkString("{", ",", "}")
-    def total(pick: ((Double, Double, Double)) => Double): Double =
-      stats.map(s => pick(s._2)).filter(_ >= 0).sum
-    val bJson = builds.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"serving_total","value":${total(_._1)},""" +
+    val line =
+      s"""{"metric":"serving_total","value":${Tool.total(stats, _._1)},""" +
       s""""unit":"sec","estimator":"median_of_3",""" +
-      s""""value_min":${total(_._2)},"value_max":${total(_._3)},""" +
-      s""""queries":${qJson(_._1)},"builds":$bJson,""" +
-      s""""failed":$fJson,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), line + "\n")
+      s""""value_min":${Tool.total(stats, _._2)},""" +
+      s""""value_max":${Tool.total(stats, _._3)},""" +
+      s""""queries":${Tool.column(stats, _._1)},""" +
+      s""""builds":${Tool.obj(builds)},""" +
+      s""""failed":${Tool.strs(failed)},"sf":"$sfDir"}"""
+    Tool.writeFile(outFile, line + "\n")
     println(line)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -1,43 +1,31 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-
-/** Plan-audit tool: dumps `.explain("formatted")` for every query so
-  * shuffle counts, PushedFilters, ReadSchema pruning, and
-  * WholeStageCodegen spans can be reviewed (SURVEY.md §5 contract).
+/** Plan-audit tool: dumps each query's AQE-finalized
+  * `.explain("formatted")` to `<outDir>/<name>.txt` so shuffle counts,
+  * PushedFilters, ReadSchema pruning, and WholeStageCodegen spans can
+  * be reviewed (SURVEY.md §5 contract), and a per-query census to
+  * `SUMMARY.txt`.
   *
-  * Usage: runMain graft.Explain <sfDir> <outDir>
+  * Usage: runMain graft.Explain <sfDir> <outDir> [name,name,...]
+  * (the optional third argument restricts the dump to a query subset)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    if (args.length < 2 || args.length > 3) Tool.usage(
+      "runMain graft.Explain <sfDir> <outDir> [name,name,...]",
+      "expected 2 or 3 arguments")
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.lift(2).map(_.split(",").toSet)
+    val spark = Tool.session("4")
     spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get(outDir))
     val summary = new StringBuilder
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        df.collect() // materialize THIS plan so AQE finalizes it (codegen ids)
-        val full = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), full)
-        // operator counts from the AQE final-plan TREE only (the
-        // echoed initial plan would double-count); codegen ids come
-        // from the shared details section (distinct ids)
-        val tree = full.split("== Initial Plan ==")(0)
-        val nShuffles =
-          """(?<!Broadcast)Exchange \(\d+\)""".r.findAllIn(tree).length
-        val nBroadcast =
-          """BroadcastExchange \(\d+\)""".r.findAllIn(tree).length
-        val nCodegen = """\[codegen id : \d+\]""".r.findAllIn(full)
-          .toSeq.distinct.length
+        val full = Tool.finalPlan(fn(spark, sfDir))
+        Tool.writeFile(s"$outDir/$name.txt", full)
+        val (nShuffles, nBroadcast, nCodegen) = Tool.census(full)
         summary.append(f"$name%-28s shuffles=$nShuffles%2d " +
           f"broadcasts=$nBroadcast%2d codegenSpans=$nCodegen%2d\n")
       } catch {
@@ -45,7 +33,7 @@ object Explain {
           summary.append(s"$name FAILED: ${e.getMessage}\n")
       }
     }
-    Files.writeString(Paths.get(s"$outDir/SUMMARY.txt"), summary.toString)
+    Tool.writeFile(s"$outDir/SUMMARY.txt", summary.toString)
     print(summary)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: one coherent latency table for the SERVING-side query
   * family (round-6 verdict ask #8; round-10 verdict ask #4 made the
   * output a GENERATED artifact — `docs/SERVING_LATENCY.md` is written
@@ -86,26 +84,12 @@ object ServeBench {
     "feature_pit_join" -> "feature_pit_from_index")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 1) args(1).toInt else 4
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    // steady is the min over the reps after the first: it needs two
+    val reps = Tool.intArg(args, 1, "reps", 2,
+      "runMain graft.ServeBench [sfDir] [reps]").getOrElse(4)
     val out = "docs/SERVING_LATENCY.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // measurement hygiene (the Bench.resetState rule): queries pin
-    // localCheckpoint/cache blocks that accumulate across a pass and
-    // inflate LATER rows 3-5× via eviction + GC — drop leftover state
-    // off the clock after the warmup and between timed blocks
-    def resetState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
+    val spark = Tool.session(Tool.cpus())
     // untimed warmup of the WHOLE panel first, so JIT and page-cache
     // warmth are uniform across rows; then forget all scratch
     // artifacts before each query's timed block, so every from-index
@@ -114,21 +98,19 @@ object ServeBench {
     // was 1.02 s against ann_pq_from_index's 6.46 s purely because
     // earlier rows had already materialized the shared codebooks —
     // the cold column ordered by run position, not by build cost)
-    Served.foreach { case (name, _) =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => }
-      resetState()
+    Tool.pass(spark, Served.map { case (name, _) =>
+      name -> (() => SparkEntry.queries(name)(spark, sfDir).count())
+    })
+    // reps timed runs of q, leftover state dropped off the clock after
+    // each, so no row pays a predecessor's eviction or GC
+    def runs(q: String): Seq[Double] = (1 to reps).map { _ =>
+      val el = Tool.secs(SparkEntry.queries(q)(spark, sfDir).count())
+      Tool.reset(spark)
+      el
     }
     val timed = Served.map { case (name, family) =>
       graft.ops.BuildOnce.resetForBench()
-      val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val el = (System.nanoTime() - t0) / 1e9
-        resetState() // off the clock
-        el
-      }
+      val times = runs(name)
       (name, family, times.head, times.drop(1).min)
     }
     val steady = timed.map { case (n, _, _, s) => n -> s }.toMap
@@ -164,19 +146,11 @@ object ServeBench {
     val pairQs = Seq("neardup_degree_dist", "neardup_pagerank",
       "neardup_triangles", "neardup_kcore", "neardup_quality_delta",
       "dedup_cross_source_rate")
-    def steadyOf(q: String): Double =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, sfDir).count()
-        val el = (System.nanoTime() - t0) / 1e9
-        resetState() // off the clock (the timed-panel hygiene rule)
-        el
-      }.drop(1).min
+    def steadyOf(q: String): Double = runs(q).drop(1).min
     val inQuery = pairQs.map(q => q -> steadyOf(q)).toMap
     val pairPath = graft.ops.Scratch.dir("servebench-pairs")
-    val tb = System.nanoTime()
-    graft.ops.Materialize.pairGraph(spark, sfDir, pairPath)
-    val buildSec = (System.nanoTime() - tb) / 1e9
+    val buildSec =
+      Tool.secs(graft.ops.Materialize.pairGraph(spark, sfDir, pairPath))
     spark.conf.set("graft.dedup.pairsPath", pairPath)
     val served =
       try pairQs.map(q => q -> steadyOf(q)).toMap
@@ -193,13 +167,7 @@ object ServeBench {
       val (b, sv) = (inQuery(q), served(q))
       sb ++= f"| $q | $b%.2f | $sv%.2f | ${b / sv}%.1f× |\n"
     }
-    // the repo-relative target assumes a repo-root cwd; create the
-    // parent when missing so a run from elsewhere still lands its
-    // 20-minute measurement instead of dying at the final write
-    val outPath = java.nio.file.Paths.get(out)
-    Option(outPath.getParent)
-      .foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(outPath, sb.toString)
+    Tool.writeFile(out, sb.toString)
     println(sb.toString)
     println(s"[servebench] wrote $out")
     spark.stop()

@@ -1,10 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.ops.Materialize
 
 /** Scale-stress harness for the dedup/ANN suite: synthesizes a K×-scaled
   * corpus from the sf0.1 testdata and measures the operators on it, so
@@ -23,159 +22,46 @@ import org.apache.spark.sql.functions._
   * counts are also recorded: candidates ∝ n·bands (not n²) is the exact
   * claim the band-bucket design makes.
   *
-  * Scaling construction (deterministic, no RNG):
-  *  - documents: K namespaced copies — every token is prefixed with a
-  *    per-copy letter tag (regexp on word boundaries), so copies share
-  *    ZERO shingles: the result is K independent corpora in one table,
-  *    and the near-dup structure (planted pairs, df distribution shape)
-  *    scales exactly linearly. Appending identical copies instead would
-  *    make every doc a K-clique of its clones — a quadratic artifact
-  *    the real pipeline never sees.
-  *  - embeddings: K×n fresh vectors with components derived from
-  *    xxhash64(vec_id, component) — uniform in [-1, 1), which preserves
-  *    the "random directions, low pairwise cosine" regime of the
-  *    original table.
+  * Scaling construction: [[Tool.scaledCorpus]].
   *
   * Emits one JSON line with per-query seconds/rows/shuffle bytes.
   */
 object Stress {
-  /** Doc-id namespace stride between the K scaled copies — ONE named
-    * constant shared by the corpus builder, the echo offset, and the
-    * delta-refresh cut so the three can never drift: a stride change
-    * in one place would otherwise silently cut the old/new boundary
-    * mid-copy and measure a different batch than documented. */
-  val CopyStride = 10000000L
-
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(4)
     val sfDir =
       if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.session(Tool.cpus())
     // the receipts below call package-private stages directly (e.g.
     // hyperplaneCandidates → the cosine expression) — register the
     // custom functions up front so a delta-sweep subset that skips
     // every self-registering query still resolves them
     graft.plans.GraftFunctions.register(spark)
 
-    // stage-level shuffle accounting; reset around each measurement
-    val shuffleBytes = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val m = ev.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    // measurement hygiene: queries are independent jobs in production,
-    // but in ONE sweep JVM each query's localCheckpoint blocks
-    // (hundreds of MB at 16×, MEMORY_AND_DISK) would otherwise pile up
-    // until storage memory saturates and later queries pay eviction +
-    // GC — measured as 3-5× wall inflation with UNCHANGED shuffle
-    // bytes (the giveaway that it was the harness, not the operator).
-    // ONE definition, called after every measured action AND after
-    // un-measured setup work (artifact builds) — two inline copies of
-    // the ritual could drift
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      Thread.sleep(400) // let the listener bus drain stage events
-    }
-    def measure(tag: String)(action: => Long): (Double, Long, Long) = {
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val rows = action
-      val sec = (System.nanoTime() - t0) / 1e9
-      hygiene()
-      val sb = shuffleBytes.get()
+    val nBase = graft.sources.Tables.documents(spark, sfDir).count()
+    val nVecs = k * 5000
+    // the JSON line's receipts, in measurement order
+    val out = scala.collection.mutable.LinkedHashMap[String, Any](
+      "stress_scale" -> k, "n_docs" -> nBase * k, "n_vecs" -> nVecs)
+    // shuffle accounting (read + written) per measurement; Tool.reset
+    // runs after every measured action AND after un-measured setup work
+    // (artifact builds). A `key` also records the measurement as the
+    // receipts <key>_sec and <key>_shuffle.
+    val listener = Tool.listener(spark)
+    def measure(tag: String, key: String = "")(action: => Long)
+        : (Double, Long, Long) = {
+      val (sec, rows, c) = listener.measure(spark)(action)
+      val sb = c.readBytes + c.writeBytes
       System.err.println(
         f"[stress] $tag%-24s $sec%7.2f s  ${sb / 1048576.0}%8.1f MiB shuffle  ($rows rows)")
+      if (key.nonEmpty) { out(key + "_sec") = sec; out(key + "_shuffle") = sb }
       (sec, rows, sb)
     }
-
-    val dir = graft.ops.Scratch.dir(s"stress-x$k")
-    val base = graft.sources.Tables.documents(spark, sfDir)
-      .select("doc_id", "text")
-    val nBase = base.count()
-    val copies = (0 until k).map { i =>
-      val tag = "q" + ('a' + i).toChar // letters only: a digit would
-      // split the token under the [^a-z]+ tokenizer
-      base.select(
-        (col("doc_id") + lit(i.toLong * CopyStride)).as("doc_id"),
-        regexp_replace(col("text"), "([a-z]+)", tag + "$1").as("text"),
-        lit(s"src$i").as("source"))
-        .withColumn("lang", lit("xx"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-    }
-    // repartition before write: a K-copy union otherwise lands as K
-    // parquet files (1 at K=1), and the driver testdata is a single
-    // sub-128MB file either way — so every CPU-heavy scan (tokenize,
-    // shingle, winnow) would run as ONE task and the curve would
-    // measure packing, not the operator. A real cluster reads
-    // thousands of splits; cpus-many files model that here.
-    copies.reduce(_ unionAll _).repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    val nVecs = k * 5000
-    spark.range(0, nVecs).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          ((pmod(xxhash64(col("id"), j), lit(2000L)) - 1000L)
-            .cast("double") / 1000.0).cast("float")).as("embedding"),
-        pmod(col("id"), lit(10L)).as("label"))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-
-    // relational fact scaling: K orderkey-offset copies of orders +
-    // lineitem (each copied order keeps its own basket under a fresh
-    // orderkey — basket sizes and join fan-outs stay constant, row
-    // volume scales exactly K×); dims (customer/supplier/part/nation/
-    // region) are fixed, as at a real site where facts grow and
-    // reference data doesn't — per-customer/supplier activity thus
-    // grows K×, which is the skew direction that stresses the
-    // partitioned windows and semi/anti joins
-    val keyOff = 1000000000L
-    def scaleFact(name: String, keyCol: String): Unit = {
-      val t = graft.sources.Tables.table(spark, sfDir, name)
-      (0 until k).map(i =>
-          t.withColumn(keyCol, col(keyCol) + lit(i.toLong * keyOff)))
-        .reduce(_ unionAll _)
-        .write.mode("overwrite").parquet(s"$dir/$name.parquet")
-    }
-    scaleFact("orders", "o_orderkey")
-    scaleFact("lineitem", "l_orderkey")
-    Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
-      graft.sources.Tables.table(spark, sfDir, t)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    // events: K user-offset copies (event ids re-keyed too) — user
-    // count grows K×, per-user timeline density stays constant: the
-    // organic growth direction for sessionization and the stream-
-    // stream interval join (whose state is per-user). ts round-trips
-    // as the raw ns BIGINT (Tables.events re-derives ts_us).
-    val ev = graft.sources.Tables.events(spark, sfDir)
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    (0 until k).map(i => ev
-        .withColumn("event_id", col("event_id") + lit(i.toLong * keyOff))
-        .withColumn("user_id", col("user_id") + lit(i.toLong * keyOff)))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-
-    // the lexical retrieval terms must exist in the tag-prefixed
-    // synthetic vocabulary: one query-term set per copy tag, so
-    // per-term df stays 1/K of docs and total term-row volume scales
-    // exactly K× (query volume per sub-corpus constant)
-    spark.conf.set(graft.operators.Retrieval.QTermsConf,
-      (0 until k).map(i => "q" + ('a' + i).toChar)
-        .flatMap(t => graft.operators.Retrieval.QTerms.map(t + _))
-        .mkString(","))
+    // a writer receipt: times `write`, then counts the rows it wrote
+    def measureWrite(tag: String, key: String, rows: String)(
+        write: => Unit): Unit =
+      measure(tag, key) { write; spark.read.parquet(rows).count() }
+    val dir = Tool.scaledCorpus(spark, sfDir, k)
 
     // optional 3rd arg: comma-separated subset (delta sweeps for newly
     // added operators without re-running the recorded full curve)
@@ -235,22 +121,22 @@ object Stress {
     val results = queries.map { name =>
       val (sec, rows, sb) =
         measure(name)(SparkEntry.queries(name)(spark, dir).count())
-      (name, sec, rows, sb)
+      name -> Tool.obj(Seq("sec" -> sec, "rows" -> rows, "shuffle_bytes" -> sb))
     }
     // candidate-count receipts: the LSH designs' core claim is that the
     // pre-verification candidate volume grows ∝ n, never n²
-    val (_, lshCands, _) = measure("minhash_lsh_candidates")(
-      graft.operators.Dedup.minhashCandidateStage(spark, dir)._1.count())
-    val (_, ngramCands, _) = measure("ngram_candidates")(
-      graft.operators.Dedup.ngramCandidateStage(spark, dir)._1.count())
+    out("lsh_candidates") = measure("minhash_lsh_candidates")(
+      graft.operators.Dedup.minhashCandidateStage(spark, dir)._1.count())._2
+    out("ngram_candidates") = measure("ngram_candidates")(
+      graft.operators.Dedup.ngramCandidateStage(spark, dir)._1.count())._2
     // prefix-filter receipt: candidates from the rarest-⌊n/2⌋+1 prefix
     // index must grow ∝ n like the df-capped index's — but with ZERO
     // false negatives at any corpus (the completeness the cap trades
     // away); same stage the query itself verifies
-    val (_, prefixCands, _) = measure("jaccard_prefix_candidates")(
+    out("jaccard_prefix_candidates") = measure("jaccard_prefix_candidates")(
       graft.operators.Dedup.jaccardPrefixStage(spark,
         graft.sources.Tables.documents(spark, dir)
-          .select("doc_id", "text"))._2.count())
+          .select("doc_id", "text"))._2.count())._2
     // triangle-wedge receipt on a HUB-PLANTED graph (one mega-hub of
     // degree ~2000·K + a degree-≤3 chain — the boilerplate-template
     // shape the near-dup graph takes at corpus scale): the
@@ -262,8 +148,8 @@ object Stress {
     // PRODUCTION cell-size knob (cells ∝ n, target occupancy 256) must
     // grow ~K — the oracle-mode 256-cell cap would grow them ~K²/C
     spark.conf.set("graft.semantic.cellSize", "256")
-    val (_, semCands, _) = measure("semantic_candidates_prod")(
-      graft.operators.Dedup.semanticStage(spark, dir)._2.count())
+    out("semantic_candidates_prod") = measure("semantic_candidates_prod")(
+      graft.operators.Dedup.semanticStage(spark, dir)._2.count())._2
     spark.conf.unset("graft.semantic.cellSize")
     // dbscan production receipt: under the occupancy-scaled plane
     // count (buckets ∝ n, the embeddingLsh rule) the hyperplane
@@ -272,11 +158,12 @@ object Stress {
     val dbPlanes =
       graft.ops.Fns.lshPlanes(spark, "graft.dbscan.lshPlanes", nVecs)
     spark.conf.set("graft.dbscan.lshPlanes", dbPlanes.toString)
-    val (_, dbCands, _) = measure("dbscan_candidates_prod")(
+    out("dbscan_lsh_planes") = dbPlanes
+    out("dbscan_candidates_prod") = measure("dbscan_candidates_prod")(
       graft.operators.Dedup.hyperplaneCandidates(
         graft.sources.Tables.embeddings(spark, dir)
           .select("vec_id", "embedding"), nBands = 8, nPlanes = dbPlanes)
-        .count())
+        .count())._2
     measure("cluster_dbscan_prod")(
       SparkEntry.queries("cluster_dbscan")(spark, dir).count())
     spark.conf.unset("graft.dbscan.lshPlanes")
@@ -287,24 +174,21 @@ object Stress {
     // volume (Σ df·(df−1)/2, computed from the dfs, never
     // materialized) records the quadratic blow-up that was avoided
     val nDeg = k * 5000L
-    spark.range(0, nDeg)
-      .select(col("id").as("doc_id"),
-        lit("the same blank frame payload every single time").as("text"))
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dir-deg/documents.parquet")
+    Tool.writeParts(spark.range(0, nDeg).select(col("id").as("doc_id"),
+        lit("the same blank frame payload every single time").as("text")),
+      s"$dir-deg/documents.parquet")
     // both numbers read inside ONE measured action: measure()'s
-    // hygiene pass unpersists localCheckpoint blocks afterwards, so a
+    // reset unpersists localCheckpoint blocks afterwards, so a
     // second read of the stage frames would hit
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the hubPairs note)
-    var phashAvoided = 0L
-    val (_, phashSurvivors, _) = measure("phash_capped_band_rows") {
+    out("phash_capped_band_rows") = measure("phash_capped_band_rows") {
       val (bandedDeg, hotDeg) =
         graft.operators.Multimodal.phashBandStage(spark, s"$dir-deg")
-      phashAvoided = hotDeg
+      out("phash_avoided_pairs") = hotDeg
         .agg(coalesce(sum(expr("df * (df - 1) div 2")), lit(0L)))
         .head().getLong(0)
       bandedDeg.count()
-    }
+    }._2
     // cc_incremental working-set receipt: the contracted loop input
     // (touched super-nodes + contracted delta edges) must stay a small
     // fraction of the full graph at every K — the "untouched
@@ -319,24 +203,21 @@ object Stress {
     // the echoed components — a measured, nonzero working set to hold
     // against the TOTAL old-component population (untouched components
     // must dominate at every K).
-    val echoOff = 3L * k * CopyStride
-    graft.sources.Tables.documents(spark, dir)
+    val echoOff = 3L * k * Tool.CopyStride
+    Tool.writeParts(graft.sources.Tables.documents(spark, dir)
       .select("doc_id", "text")
       .unionAll(graft.sources.Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(64)) === 0)
-        .select((col("doc_id") + lit(echoOff)).as("doc_id"), col("text")))
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dir-cc/documents.parquet")
-    var ccContracted = 0L
-    var ccOldComponents = 0L
-    val (_, ccTouched, _) = measure("cc_inc_working_set") {
+        .select((col("doc_id") + lit(echoOff)).as("doc_id"), col("text"))),
+      s"$dir-cc/documents.parquet")
+    out("cc_inc_touched_supernodes") = measure("cc_inc_working_set") {
       val (touched, contracted, oldLabels) =
         graft.operators.Dedup.ccIncrementalStage(spark, s"$dir-cc")
-      ccContracted = contracted.count()
-      ccOldComponents =
+      out("cc_inc_contracted_edges") = contracted.count()
+      out("cc_inc_old_components") =
         oldLabels.select("label").distinct().count()
       touched.count()
-    }
+    }._2
     // artifact-mode receipt: with the previous cycle's labels
     // persisted (Materialize.ccLabelsOf over the old half — built
     // OUTSIDE the measurement: that cost belongs to the previous
@@ -349,12 +230,12 @@ object Stress {
     // publish a curve for a misaligned configuration
     val ccCut = graft.operators.Dedup.idCut(ccDocs)
     val ccOldPath = s"$dir-cc-oldlabels"
-    graft.ops.Materialize.ccLabelsOf(spark,
+    Materialize.ccLabelsOf(spark,
       ccDocs.filter(col("doc_id") < ccCut).select("doc_id", "text"),
       ccOldPath, s"$dir-cc")
     // the build is NOT part of either measurement (it is the previous
-    // cycle's cost) — hygiene so its checkpoint blocks and straggler
-    // stage events cannot load the default-mode measurement below.
+    // cycle's cost) — reset so its checkpoint blocks cannot load the
+    // default-mode measurement below.
     // The measured action is a VALUE-LEVEL checksum, not a bare
     // count: cc_incremental emits one row per doc in both modes, so
     // counts are equal even if every cluster label diverged — the
@@ -362,17 +243,21 @@ object Stress {
     // so the sum stays ANSI-safe up to ~10¹⁴ rows) is what actually
     // checks the published "output row-identical across modes" claim
     // where the modes could diverge (slice-vs-full df caps)
-    hygiene()
-    def ccChecksum(): Long =
-      SparkEntry.queries("cc_incremental")(spark, s"$dir-cc")
-        .agg(sum(pmod(xxhash64(col("doc_id"), col("cluster_id"),
-          col("is_survivor")), lit(1000000007L))))
-        .head().getLong(0)
-    val (ccDefSec, ccDefChk, ccDefSb) =
-      measure("cc_incremental_default")(ccChecksum())
+    Tool.reset(spark)
+    // coalesce: sum over an empty output is NULL (the phashAvoided
+    // rule) — an empty frame must checksum as 0, not NPE hours in
+    def checksum(df: DataFrame, cols: Seq[String]): Long =
+      df.agg(coalesce(sum(pmod(xxhash64(cols.map(col): _*),
+        lit(1000000007L))), lit(0L))).head().getLong(0)
+    def ccChecksum(): Long = checksum(
+      SparkEntry.queries("cc_incremental")(spark, s"$dir-cc"),
+      Seq("doc_id", "cluster_id", "is_survivor"))
+    val ccDefChk =
+      measure("cc_incremental_default", "cc_inc_default")(ccChecksum())._2
     spark.conf.set("graft.cc.oldLabelsPath", ccOldPath)
-    val (ccArtSec, ccArtChk, ccArtSb) =
-      try measure("cc_incremental_artifact")(ccChecksum())
+    val ccArtChk =
+      try measure("cc_incremental_artifact", "cc_inc_artifact")(
+        ccChecksum())._2
       finally spark.conf.unset("graft.cc.oldLabelsPath")
     require(ccDefChk == ccArtChk,
       s"artifact-mode cc_incremental output checksum $ccArtChk != " +
@@ -390,25 +275,21 @@ object Stress {
     val pairPath = s"$dir-pairs-artifact"
     // measured (not just timed): the build's shuffle is the yardstick
     // the delta receipt below compares against
-    val (pairBuildSec, _, pairBuildSb) = measure("pair_graph_build") {
-      graft.ops.Materialize.pairGraph(spark, dir, pairPath)
-      spark.read.parquet(pairPath).count()
-    }
+    measureWrite("pair_graph_build", "pair_graph_build", pairPath)(
+      Materialize.pairGraph(spark, dir, pairPath))
     val pairConsumers = Seq("neardup_degree_dist", "neardup_pagerank",
       "neardup_triangles", "neardup_kcore", "neardup_quality_delta",
       "dedup_cross_source_rate")
     def graphChecksum(): Long = pairConsumers.map { q =>
       val df = SparkEntry.queries(q)(spark, dir)
-      // coalesce: sum over an empty output is NULL (the phashAvoided
-      // rule) — an empty consumer must checksum as 0, not NPE hours in
-      df.agg(coalesce(sum(pmod(xxhash64(df.columns.map(col): _*),
-        lit(1000000007L))), lit(0L))).head().getLong(0)
+      checksum(df, df.columns.toSeq)
     }.sum
-    val (pairDefSec, pairDefChk, pairDefSb) =
-      measure("graph_family_default")(graphChecksum())
+    val pairDefChk = measure("graph_family_default",
+      "graph_family_default")(graphChecksum())._2
     spark.conf.set("graft.dedup.pairsPath", pairPath)
-    val (pairArtSec, pairArtChk, pairArtSb) =
-      try measure("graph_family_pairs_artifact")(graphChecksum())
+    val pairArtChk =
+      try measure("graph_family_pairs_artifact",
+        "graph_family_artifact")(graphChecksum())._2
       finally spark.conf.unset("graft.dedup.pairsPath")
     require(pairDefChk == pairArtChk,
       s"pairs-artifact graph-family checksum $pairArtChk != default " +
@@ -429,17 +310,14 @@ object Stress {
     // the flatness claim).
     val docsAll = graft.sources.Tables.documents(spark, dir)
       .select("doc_id", "text")
-    val deltaCut = if (k > 1) (k - 1).toLong * CopyStride
+    val deltaCut = if (k > 1) (k - 1).toLong * Tool.CopyStride
       else graft.operators.Dedup.idCut(docsAll)
     val oldSlice = docsAll.filter(col("doc_id") < deltaCut)
-    graft.ops.Materialize.pairGraphOf(spark, oldSlice,
-      s"$dir-pairdelta-old", dir)
-    hygiene()
-    val (pairDeltaSec, _, pairDeltaSb) = measure("pair_graph_delta") {
-      graft.ops.Materialize.pairGraphDelta(spark, dir,
-        s"$dir-pairdelta-old", s"$dir-pairdelta-new")
-      spark.read.parquet(s"$dir-pairdelta-new").count()
-    }
+    Materialize.pairGraphOf(spark, oldSlice, s"$dir-pairdelta-old", dir)
+    Tool.reset(spark)
+    measureWrite("pair_graph_delta", "pair_delta", s"$dir-pairdelta-new")(
+      Materialize.pairGraphDelta(spark, dir, s"$dir-pairdelta-old",
+        s"$dir-pairdelta-new"))
     // the quantity that IS ∝ batch: the delta-scoped candidate join's
     // volume (Σ df_prefix·df_prefix_new). With the batch pinned to one
     // copy, this must stay ~FLAT across K while the full join's
@@ -448,31 +326,24 @@ object Stress {
     // corpus-proportional floors (the df-order shingle scan, which
     // prefix completeness forces, and the merged-artifact rewrite,
     // pure columnar I/O)
-    val (_, pairDeltaCands, _) = measure("pair_delta_candidates")(
+    out("pair_delta_candidates") = measure("pair_delta_candidates")(
       graft.operators.Dedup.jaccardPrefixStage(spark, docsAll,
-        _.filter(col("doc_id") >= deltaCut))._2.count())
-    graft.ops.Materialize.lexicalIndexOf(spark, oldSlice,
-      s"$dir-lexdelta-old", dir)
-    hygiene()
-    val (lexFullSec, _, lexFullSb) = measure("lexical_index_full") {
-      graft.ops.Materialize.lexicalIndexOf(spark, docsAll,
-        s"$dir-lexfull", dir)
-      spark.read.parquet(s"$dir-lexfull/postings").count()
-    }
-    val (lexDeltaSec, _, lexDeltaSb) = measure("lexical_index_delta") {
-      graft.ops.Materialize.lexicalIndexDelta(spark, dir,
-        s"$dir-lexdelta-old", s"$dir-lexdelta-new")
-      spark.read.parquet(s"$dir-lexdelta-new/postings").count()
-    }
+        _.filter(col("doc_id") >= deltaCut))._2.count())._2
+    Materialize.lexicalIndexOf(spark, oldSlice, s"$dir-lexdelta-old", dir)
+    Tool.reset(spark)
+    measureWrite("lexical_index_full", "lexical_full",
+      s"$dir-lexfull/postings")(
+      Materialize.lexicalIndexOf(spark, docsAll, s"$dir-lexfull", dir))
+    measureWrite("lexical_index_delta", "lexical_delta",
+      s"$dir-lexdelta-new/postings")(Materialize.lexicalIndexDelta(spark,
+        dir, s"$dir-lexdelta-old", s"$dir-lexdelta-new"))
     // append mode: ONLY the batch is written (plus vocabulary-sized
     // merged stats) — the one refresh whose wall must stay ~flat
     // across K (the merge writer's corpus-proportional rewrite is the
     // term it deletes); the count reads the batch generation alone
-    val (lexAppendSec, _, lexAppendSb) = measure("lexical_index_append") {
-      graft.ops.Materialize.lexicalIndexAppend(spark, dir,
-        s"$dir-lexdelta-old", s"$dir-lexappend-new")
-      spark.read.parquet(s"$dir-lexappend-new/postings").count()
-    }
+    measureWrite("lexical_index_append", "lexical_append",
+      s"$dir-lexappend-new/postings")(Materialize.lexicalIndexAppend(spark,
+        dir, s"$dir-lexdelta-old", s"$dir-lexappend-new"))
     // feature store: the natural boundary is temporal (a daily
     // refresh), so the batch here is the post-midpoint DAYS — user
     // volume in the batch grows ∝ K like the corpus (events scale by
@@ -482,26 +353,20 @@ object Stress {
     val fsEv = graft.operators.Training.pitEvents(spark, dir)
     val fsB = fsEv.agg(min("day"), max("day")).head()
     val fsCut = (fsB.getLong(0) + fsB.getLong(1)) / 2
-    graft.ops.Materialize.featureStoreOf(spark,
+    Materialize.featureStoreOf(spark,
       fsEv.filter(col("day") <= fsCut), s"$dir-featdelta-old", dir)
-    hygiene()
-    val (featFullSec, _, featFullSb) = measure("feature_store_full") {
-      graft.ops.Materialize.featureStore(spark, dir, s"$dir-featfull")
-      spark.read.parquet(s"$dir-featfull/snapshots").count()
-    }
-    val (featDeltaSec, _, featDeltaSb) = measure("feature_store_delta") {
-      graft.ops.Materialize.featureStoreDelta(spark, dir,
-        s"$dir-featdelta-old", s"$dir-featdelta-new")
-      spark.read.parquet(s"$dir-featdelta-new/snapshots").count()
-    }
+    Tool.reset(spark)
+    measureWrite("feature_store_full", "feature_full",
+      s"$dir-featfull/snapshots")(
+      Materialize.featureStore(spark, dir, s"$dir-featfull"))
+    measureWrite("feature_store_delta", "feature_delta",
+      s"$dir-featdelta-new/snapshots")(Materialize.featureStoreDelta(spark,
+        dir, s"$dir-featdelta-old", s"$dir-featdelta-new"))
     // append mode: only the batch days' snapshots + O(users) totals
     // are written — the merge writer's history rewrite is deleted
-    val (featAppendSec, _, featAppendSb) =
-      measure("feature_store_append") {
-        graft.ops.Materialize.featureStoreAppend(spark, dir,
-          s"$dir-featdelta-old", s"$dir-featappend-new")
-        spark.read.parquet(s"$dir-featappend-new/snapshots").count()
-      }
+    measureWrite("feature_store_append", "feature_append",
+      s"$dir-featappend-new/snapshots")(Materialize.featureStoreAppend(
+        spark, dir, s"$dir-featdelta-old", s"$dir-featappend-new"))
     // signature append (round 13): bands/sigs are pure per-doc facts,
     // so the generation holds ONLY the batch — with the batch pinned
     // to one copy, wall AND shuffle must stay ~flat across K (the
@@ -509,14 +374,11 @@ object Stress {
     // index build is untimed setup; the additive-provenance sanity
     // check below is the cheap value guard (DedupSpec pins full
     // row-identity at fixture SF).
-    graft.ops.Materialize.minhashIndexOf(spark, oldSlice,
-      s"$dir-mhappend-old", dir)
-    hygiene()
-    val (mhAppendSec, _, mhAppendSb) = measure("minhash_index_append") {
-      graft.ops.Materialize.minhashIndexAppend(spark, dir,
-        s"$dir-mhappend-old", s"$dir-mhappend-new")
-      spark.read.parquet(s"$dir-mhappend-new/sigs").count()
-    }
+    Materialize.minhashIndexOf(spark, oldSlice, s"$dir-mhappend-old", dir)
+    Tool.reset(spark)
+    measureWrite("minhash_index_append", "minhash_append",
+      s"$dir-mhappend-new/sigs")(Materialize.minhashIndexAppend(spark, dir,
+        s"$dir-mhappend-old", s"$dir-mhappend-new"))
     require(graft.ops.ArtifactTag
         .readProps(spark, s"$dir-mhappend-new")("n_docs").toLong ==
       docsAll.count(),
@@ -532,26 +394,20 @@ object Stress {
       .select("vec_id", "embedding")
     val vecCut = if (k > 1) (k - 1).toLong * 5000L else 2500L
     val vecOld = vecsAll.filter(col("vec_id") < vecCut)
-    graft.ops.Materialize.ivfIndexOf(spark, vecOld,
-      s"$dir-ivfappend-old", dir)
-    hygiene()
-    val (ivfAppendSec, _, ivfAppendSb) = measure("ivf_index_append") {
-      graft.ops.Materialize.ivfIndexAppend(spark, dir,
-        s"$dir-ivfappend-old", s"$dir-ivfappend-new")
-      spark.read.parquet(s"$dir-ivfappend-new/index").count()
-    }
+    Materialize.ivfIndexOf(spark, vecOld, s"$dir-ivfappend-old", dir)
+    Tool.reset(spark)
+    measureWrite("ivf_index_append", "ivf_append",
+      s"$dir-ivfappend-new/index")(Materialize.ivfIndexAppend(spark, dir,
+        s"$dir-ivfappend-old", s"$dir-ivfappend-new"))
     require(graft.ops.ArtifactTag
         .readProps(spark, s"$dir-ivfappend-new")("n_vecs").toLong ==
       vecsAll.count(),
       "ivf append-chain provenance lost vectors vs the corpus")
-    graft.ops.Materialize.pqIndexOf(spark, vecOld,
-      s"$dir-pqappend-old", dir)
-    hygiene()
-    val (pqAppendSec, _, pqAppendSb) = measure("pq_index_append") {
-      graft.ops.Materialize.pqIndexAppend(spark, dir,
-        s"$dir-pqappend-old", s"$dir-pqappend-new")
-      spark.read.parquet(s"$dir-pqappend-new/codes").count()
-    }
+    Materialize.pqIndexOf(spark, vecOld, s"$dir-pqappend-old", dir)
+    Tool.reset(spark)
+    measureWrite("pq_index_append", "pq_append",
+      s"$dir-pqappend-new/codes")(Materialize.pqIndexAppend(spark, dir,
+        s"$dir-pqappend-old", s"$dir-pqappend-new"))
     // vector refresh TICK (round 15): the streaming ingest loop's
     // whole foreachBatch body — marker-guarded landing into the table
     // of record + one frozen generation per family + head flip —
@@ -566,12 +422,11 @@ object Stress {
       .parquet(s"$tickDir/embeddings.parquet")
     val tickState = graft.streaming.Pipelines.initVecRefresh(spark,
       tickDir, s"$tickDir-chain")
-    hygiene()
+    Tool.reset(spark)
     val tickBatch = vecsAll.filter(col("vec_id") >= vecCut)
-    val (vecTickSec, _, vecTickSb) = measure("vec_refresh_tick") {
-      graft.streaming.Pipelines.vecRefreshTick(tickState)(tickBatch, 0L)
-      spark.read.parquet(s"$tickDir-chain/ivf-g1/index").count()
-    }
+    measureWrite("vec_refresh_tick", "vec_tick",
+      s"$tickDir-chain/ivf-g1/index")(
+      graft.streaming.Pipelines.vecRefreshTick(tickState)(tickBatch, 0L))
     require(graft.ops.ArtifactTag.readProps(spark,
         tickState.head("ivf"))("n_vecs").toLong == vecsAll.count(),
       "vec tick chain provenance lost vectors vs the corpus")
@@ -579,46 +434,31 @@ object Stress {
     // builds they claim row-identity with (the graphChecksum rule —
     // a speedup for different answers must fail loudly here, not in
     // some later consumer)
-    def fileChecksum(path: String, cols: Seq[String]): Long = {
-      val df = spark.read.parquet(path)
-      df.agg(coalesce(sum(pmod(xxhash64(cols.map(col): _*),
-        lit(1000000007L))), lit(0L))).head().getLong(0)
-    }
-    require(fileChecksum(s"$dir-pairdelta-new",
-        Seq("a_id", "b_id", "inter", "na", "nb")) ==
-      fileChecksum(pairPath, Seq("a_id", "b_id", "inter", "na", "nb")),
+    def fileChecksum(path: String, cols: Seq[String]): Long =
+      checksum(spark.read.parquet(path), cols)
+    val pairCols = Seq("a_id", "b_id", "inter", "na", "nb")
+    val postCols = Seq("tok", "doc_id", "dl", "tf")
+    val snapCols = Seq("user_id", "day", "n_events_prior",
+      "n_purchases_prior", "value_centi_prior", "days_active_prior")
+    require(fileChecksum(s"$dir-pairdelta-new", pairCols) ==
+      fileChecksum(pairPath, pairCols),
       "pair delta artifact diverged from the full pair build")
-    require(fileChecksum(s"$dir-lexdelta-new/postings",
-        Seq("tok", "doc_id", "dl", "tf")) ==
-      fileChecksum(s"$dir-lexfull/postings",
-        Seq("tok", "doc_id", "dl", "tf")),
+    require(fileChecksum(s"$dir-lexdelta-new/postings", postCols) ==
+      fileChecksum(s"$dir-lexfull/postings", postCols),
       "lexical delta postings diverged from the full index build")
     // the append CHAIN (old generation ∪ batch generation) must carry
     // the same rows as the merged rebuild — the checksum is an
     // order-insensitive sum, so chain value = Σ generation values
-    require(fileChecksum(s"$dir-lexdelta-old/postings",
-        Seq("tok", "doc_id", "dl", "tf")) +
-      fileChecksum(s"$dir-lexappend-new/postings",
-        Seq("tok", "doc_id", "dl", "tf")) ==
-      fileChecksum(s"$dir-lexfull/postings",
-        Seq("tok", "doc_id", "dl", "tf")),
+    require(fileChecksum(s"$dir-lexdelta-old/postings", postCols) +
+      fileChecksum(s"$dir-lexappend-new/postings", postCols) ==
+      fileChecksum(s"$dir-lexfull/postings", postCols),
       "append-chain postings diverged from the full index build")
-    require(fileChecksum(s"$dir-featdelta-new/snapshots",
-        Seq("user_id", "day", "n_events_prior", "n_purchases_prior",
-          "value_centi_prior", "days_active_prior")) ==
-      fileChecksum(s"$dir-featfull/snapshots",
-        Seq("user_id", "day", "n_events_prior", "n_purchases_prior",
-          "value_centi_prior", "days_active_prior")),
+    require(fileChecksum(s"$dir-featdelta-new/snapshots", snapCols) ==
+      fileChecksum(s"$dir-featfull/snapshots", snapCols),
       "feature-store delta snapshots diverged from the full build")
-    require(fileChecksum(s"$dir-featdelta-old/snapshots",
-        Seq("user_id", "day", "n_events_prior", "n_purchases_prior",
-          "value_centi_prior", "days_active_prior")) +
-      fileChecksum(s"$dir-featappend-new/snapshots",
-        Seq("user_id", "day", "n_events_prior", "n_purchases_prior",
-          "value_centi_prior", "days_active_prior")) ==
-      fileChecksum(s"$dir-featfull/snapshots",
-        Seq("user_id", "day", "n_events_prior", "n_purchases_prior",
-          "value_centi_prior", "days_active_prior")),
+    require(fileChecksum(s"$dir-featdelta-old/snapshots", snapCols) +
+      fileChecksum(s"$dir-featappend-new/snapshots", snapCols) ==
+      fileChecksum(s"$dir-featfull/snapshots", snapCols),
       "feature-store append chain diverged from the full build")
     // dup-payment organic receipt: the K-copy fact corpus above
     // multiplies every customer-day K× — a planted K-clique of TRUE
@@ -629,36 +469,31 @@ object Stress {
     // direction instead: K custkey-offset copies (customers grow K×,
     // per-customer same-day density constant) — suspect pairs and
     // shuffle must grow ∝ K
-    val ordersBase = graft.sources.Tables.table(spark, sfDir, "orders")
-    (0 until k).map(i => ordersBase
-        .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * keyOff))
-        .withColumn("o_custkey", col("o_custkey") + lit(i.toLong * keyOff)))
-      .reduce(_ unionAll _)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dir-dup/orders.parquet")
-    val (_, dupPairsOrganic, _) = measure("dup_payment_pairs_organic")(
+    Tool.writeParts(Tool.keyCopies(
+        graft.sources.Tables.table(spark, sfDir, "orders"), k,
+        "o_orderkey", "o_custkey"), s"$dir-dup/orders.parquet")
+    out("dup_payment_pairs_organic") = measure("dup_payment_pairs_organic")(
       SparkEntry.queries("orders_dup_payment_audit")(spark, s"$dir-dup")
-        .count())
+        .count())._2
     // mrr probe-workload receipt: the probe panel is a fixed COUNT
     // (graft.mrr.nProbes, default 50), so the scored-pair volume must
     // follow the panel's query terms' postings — ~flat across K on the
     // namespaced corpus (each probe's terms match only its own copy's
     // docs), where the round-8 mod-50 RATE would have grown probes,
     // and with them candidate volume, ∝ K
-    val (_, mrrScoredRows, _) = measure("mrr_scored_rows")(
-      graft.operators.Retrieval.mrrScored(spark, dir).count())
+    out("mrr_scored_rows") = measure("mrr_scored_rows")(
+      graft.operators.Retrieval.mrrScored(spark, dir).count())._2
     // kcore rounds receipt: h-index rounds-to-fixpoint must track the
     // densest component's coreness diameter, NOT corpus size — flat
     // across K on the namespaced-copy corpus
-    var kcoreRounds = 0
     measure("kcore_rounds_to_fixpoint") {
       val (res, r) = graft.operators.Dedup.kcoreWithRounds(
         graft.operators.Dedup.ngramJaccard(spark, dir)
           .select("a_id", "b_id"), 30)
-      kcoreRounds = r
+      out("kcore_rounds") = r
       res.count()
     }
-    // no persistence on hubPairs: measure()'s hygiene pass unpersists
+    // no persistence on hubPairs: measure()'s reset unpersists
     // every RDD between measurements, which would invalidate a
     // localCheckpoint before the second wedge receipt reads it
     // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — a checkpoint truncates
@@ -672,68 +507,16 @@ object Stress {
       .unionAll(spark.range(1, h)
         .select(col("id").as("a_id"), (col("id") + 1).as("b_id")))
       .distinct()
-    val (_, wedgesOriented, _) = measure("triangle_wedges_oriented")(
-      graft.operators.Dedup.triangleWedges(hubPairs).count())
-    val (_, wedgesMid, _) = measure("triangle_wedges_midvertex")(
+    out("triangle_wedges_oriented") = measure("triangle_wedges_oriented")(
+      graft.operators.Dedup.triangleWedges(hubPairs).count())._2
+    out("triangle_wedges_midvertex") = measure("triangle_wedges_midvertex")(
       hubPairs.groupBy(col("b_id").as("m")).agg(count(lit(1)).as("dl"))
         .join(hubPairs.groupBy(col("a_id").as("m"))
           .agg(count(lit(1)).as("dg")), "m")
-        .agg(sum(col("dl") * col("dg")).as("w")).head().getLong(0))
+        .agg(sum(col("dl") * col("dg")).as("w")).head().getLong(0))._2
 
-    val qJson = results.map { case (n, s, r, sb) =>
-      "\"" + n + "\":{\"sec\":" + s + ",\"rows\":" + r +
-        ",\"shuffle_bytes\":" + sb + "}"
-    }.mkString("{", ",", "}")
-    println(s"""{"stress_scale":$k,"n_docs":${nBase * k},"n_vecs":$nVecs,""" +
-      s""""lsh_candidates":$lshCands,"ngram_candidates":$ngramCands,""" +
-      s""""jaccard_prefix_candidates":$prefixCands,""" +
-      s""""triangle_wedges_oriented":$wedgesOriented,""" +
-      s""""triangle_wedges_midvertex":$wedgesMid,""" +
-      s""""semantic_candidates_prod":$semCands,""" +
-      s""""dbscan_candidates_prod":$dbCands,""" +
-      s""""dbscan_lsh_planes":$dbPlanes,""" +
-      s""""phash_capped_band_rows":$phashSurvivors,""" +
-      s""""phash_avoided_pairs":$phashAvoided,""" +
-      s""""cc_inc_touched_supernodes":$ccTouched,""" +
-      s""""cc_inc_contracted_edges":$ccContracted,""" +
-      s""""cc_inc_old_components":$ccOldComponents,""" +
-      s""""cc_inc_default_sec":$ccDefSec,""" +
-      s""""cc_inc_default_shuffle":$ccDefSb,""" +
-      s""""cc_inc_artifact_sec":$ccArtSec,""" +
-      s""""cc_inc_artifact_shuffle":$ccArtSb,""" +
-      s""""pair_graph_build_sec":$pairBuildSec,""" +
-      s""""pair_graph_build_shuffle":$pairBuildSb,""" +
-      s""""pair_delta_candidates":$pairDeltaCands,""" +
-      s""""graph_family_default_sec":$pairDefSec,""" +
-      s""""graph_family_default_shuffle":$pairDefSb,""" +
-      s""""graph_family_artifact_sec":$pairArtSec,""" +
-      s""""graph_family_artifact_shuffle":$pairArtSb,""" +
-      s""""pair_delta_sec":$pairDeltaSec,""" +
-      s""""pair_delta_shuffle":$pairDeltaSb,""" +
-      s""""lexical_full_sec":$lexFullSec,""" +
-      s""""lexical_full_shuffle":$lexFullSb,""" +
-      s""""lexical_delta_sec":$lexDeltaSec,""" +
-      s""""lexical_delta_shuffle":$lexDeltaSb,""" +
-      s""""lexical_append_sec":$lexAppendSec,""" +
-      s""""lexical_append_shuffle":$lexAppendSb,""" +
-      s""""feature_full_sec":$featFullSec,""" +
-      s""""feature_full_shuffle":$featFullSb,""" +
-      s""""feature_delta_sec":$featDeltaSec,""" +
-      s""""feature_delta_shuffle":$featDeltaSb,""" +
-      s""""feature_append_sec":$featAppendSec,""" +
-      s""""feature_append_shuffle":$featAppendSb,""" +
-      s""""minhash_append_sec":$mhAppendSec,""" +
-      s""""minhash_append_shuffle":$mhAppendSb,""" +
-      s""""ivf_append_sec":$ivfAppendSec,""" +
-      s""""ivf_append_shuffle":$ivfAppendSb,""" +
-      s""""pq_append_sec":$pqAppendSec,""" +
-      s""""pq_append_shuffle":$pqAppendSb,""" +
-      s""""vec_tick_sec":$vecTickSec,""" +
-      s""""vec_tick_shuffle":$vecTickSb,""" +
-      s""""dup_payment_pairs_organic":$dupPairsOrganic,""" +
-      s""""mrr_scored_rows":$mrrScoredRows,""" +
-      s""""kcore_rounds":$kcoreRounds,""" +
-      s""""queries":$qJson}""")
+    out("queries") = Tool.obj(results)
+    println(Tool.obj(out))
     spark.stop()
   }
 }
@@ -752,21 +535,11 @@ object Stress {
 object StressDbscan {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.session(Tool.cpus())
     graft.plans.GraftFunctions.register(spark)
     val nVecs = k * 5000
     // the same deterministic synthesis as Stress's embeddings table
-    val emb = spark.range(0, nVecs).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), j =>
-        ((pmod(xxhash64(col("id"), j), lit(2000L)) - 1000L)
-          .cast("double") / 1000.0).cast("float")).as("embedding"))
+    val emb = Tool.embeddings(spark, nVecs).select("vec_id", "embedding")
     // the PRODUCTION rule (Fns.lshPlanes: occupancy-constant with the
     // 24-plane cap), not an inline copy — the receipt must measure a
     // plane count production would actually run

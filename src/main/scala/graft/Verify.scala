@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,34 +9,26 @@ object Verify {
     // driver always calls with 2 args = full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the correctness dump runs the sketch family in md5 (oracle)
-      // hash mode: the MinHash/SimHash pipelines then replay
-      // end-to-end in DuckDB, so the gate hash-checks them instead of
-      // rows-only. xxhash64 stays the scale default everywhere else
-      // (Bench, Stress, serving); DedupSpec pins the two modes'
-      // verified pair sets equal on the fixture, and ApproxSpec pins
-      // the IVF/approx-profile mode equivalences (round 14): ✅SQL for
-      // the sketch/IVF/HLL families certifies GATE-MODE hashing, with
-      // the scale default covered by those pins — see SURVEY §2's
-      // hash-mode note. See Fns.Md5ModeConf.
-      //
-      // Per-SF soundness: sfDir is arbitrary here, but two oracles
-      // carry SF-linked pins — the neardup_kcore oracle is a static
-      // KcoreOracleRounds h-index unroll (DedupSpec's convergence pin
-      // follows SPARK_GRAFT_GATE_SF; export it when gating at a
-      // non-default SF), and the bruteforce baselines carry the
-      // graft.bruteforce.maxRows guard. A gate SF change re-runs that
-      // pin, not this file.
-      .config(graft.ops.Fns.Md5ModeConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    // the correctness dump runs the sketch family in md5 (oracle)
+    // hash mode: the MinHash/SimHash pipelines then replay
+    // end-to-end in DuckDB, so the gate hash-checks them instead of
+    // rows-only. xxhash64 stays the scale default everywhere else
+    // (Bench, Stress, serving); DedupSpec pins the two modes'
+    // verified pair sets equal on the fixture, and ApproxSpec pins
+    // the IVF/approx-profile mode equivalences (round 14): ✅SQL for
+    // the sketch/IVF/HLL families certifies GATE-MODE hashing, with
+    // the scale default covered by those pins — see SURVEY §2's
+    // hash-mode note. See Fns.Md5ModeConf.
+    //
+    // Per-SF soundness: sfDir is arbitrary here, but two oracles
+    // carry SF-linked pins — the neardup_kcore oracle is a static
+    // KcoreOracleRounds h-index unroll (DedupSpec's convergence pin
+    // follows SPARK_GRAFT_GATE_SF; export it when gating at a
+    // non-default SF), and the bruteforce baselines carry the
+    // graft.bruteforce.maxRows guard. A gate SF change re-runs that
+    // pin, not this file.
+    val spark =
+      Tool.session(Tool.cpus("4"), graft.ops.Fns.Md5ModeConf -> "true")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -48,8 +38,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracleJson(only))
+    Tool.writeFile(s"$outDir/oracle_sql.json", oracleJson(only))
     spark.stop()
   }
 

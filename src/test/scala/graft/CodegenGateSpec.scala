@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.DataType
   * proving the codegen gate detects the failure class it exists for:
   * interpreted `eval` works, but `doGenCode` emits invalid Java, so
   * under default confs Spark silently falls back to interpreted
-  * execution (the 10×+ regression CodegenAudit hunts) while the
+  * execution (the 10×+ regression the codegen audit hunts) while the
   * strict gate turns the same plan into a hard failure. */
 case class BrokenCodegen(child: Expression) extends UnaryExpression {
   override def dataType: DataType = child.dataType
@@ -28,8 +28,8 @@ case class BrokenCodegen(child: Expression) extends UnaryExpression {
   * a janino compile failure in any hot-path expression is normally a
   * SILENT fall-back to interpreted eval (wrong by 10×+ at 100 TB,
   * invisible to every correctness check), and this spec makes it a
-  * red test in scripts/snapshot.sh instead. `graft.CodegenAudit`
-  * remains the standalone dev tool for ad-hoc runs at other SFs. */
+  * red test in scripts/snapshot.sh instead. `graft.Profile` under the
+  * same two confs is the standalone run at other SFs. */
 class CodegenGateSpec extends SparkSpec {
 
   /** Run `body` with codegen strictness ON (compile failures throw

@@ -47,9 +47,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
             }) n.incrementAndGet()
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.listenerManager.register(l)
-    try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+    try { body; org.apache.spark.GraftBus.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(l)
     n.get
   }
@@ -65,9 +65,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         got.add(Option(e.properties))
     }
-    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+    try { body; org.apache.spark.GraftBus.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
     got.toArray(Array.empty[Option[java.util.Properties]]).toSeq
       .map(_.orNull)
