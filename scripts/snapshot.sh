@@ -16,14 +16,16 @@
 # fallback disabled — a janino compile failure in any expression is a
 # silent 10×+ interpreted fallback in production and a red gate here;
 # ToolsSpec covers the dev mains' shared scaffolding (Profile's
-# per-stage counts, the plan census, the median-of-3 failure rule).
+# per-stage counts, the plan census, the median-of-3 failure rule);
+# GraftConfSpec checks every conf knob's parse and range refusal and the
+# oracle-dump rule across two live sessions.
 # Exit is nonzero on any failure — wire it in front of the commit and
 # a stale contract cannot land.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec' \
+if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec' \
     > /tmp/snapshot_gate.log 2>&1; then
-  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools green)"
+  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf green)"
 else
   tail -40 /tmp/snapshot_gate.log >&2
   echo "snapshot gate FAILED — contract drift or a broken query; do NOT commit" >&2

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import graft.ops.GraftConf.{CcLabelsPath, CcOldLabelsPath, FeaturesStorePath,
+  LexIndexPath, MinhashOldIndexPath, PairsPath, SimhashOldIndexPath}
 
 /** SERVING-MODE benchmark — the round-over-round regression line for
   * the conf-routed artifact paths (round-11 verdict task #5). `Bench`
@@ -26,24 +28,25 @@ object BenchServing {
   /** (query, conf route) — every query whose plan changes when the
     * serving confs are set, with the route that serves it. */
   val Served: Seq[(String, String)] = Seq(
-    "neardup_degree_dist" -> "graft.dedup.pairsPath",
-    "neardup_pagerank" -> "graft.dedup.pairsPath",
-    "neardup_triangles" -> "graft.dedup.pairsPath",
-    "neardup_kcore" -> "graft.dedup.pairsPath",
-    "neardup_quality_delta" -> "graft.dedup.pairsPath",
-    "dedup_cross_source_rate" -> "graft.dedup.pairsPath",
-    "minhash_tuning_curve" -> "graft.dedup.pairsPath",
-    "curation_funnel" -> "graft.dedup.pairsPath",
-    "dedup_clusters" -> "graft.cc.labelsPath",
-    "dedup_soft_weights" -> "graft.cc.labelsPath",
-    "dedup_best_survivor" -> "graft.cc.labelsPath",
-    "dedup_cluster_size_dist" -> "graft.cc.labelsPath",
-    "cc_incremental" -> "graft.cc.oldLabelsPath",
-    "dedup_simhash_incremental" -> "graft.simhash.oldIndexPath",
-    "dedup_minhash_incremental" -> "graft.minhash.oldIndexPath",
-    "bm25_from_index" -> "graft.lex.indexPath",
-    "phrase_from_index" -> "graft.lex.indexPath",
-    "feature_pit_from_index" -> "graft.features.storePath")
+    "neardup_degree_dist" -> PairsPath,
+    "neardup_pagerank" -> PairsPath,
+    "neardup_triangles" -> PairsPath,
+    "neardup_kcore" -> PairsPath,
+    "neardup_quality_delta" -> PairsPath,
+    "dedup_cross_source_rate" -> PairsPath,
+    "minhash_tuning_curve" -> PairsPath,
+    "curation_funnel" -> PairsPath,
+    "dedup_clusters" -> CcLabelsPath,
+    "dedup_soft_weights" -> CcLabelsPath,
+    "dedup_best_survivor" -> CcLabelsPath,
+    "dedup_cluster_size_dist" -> CcLabelsPath,
+    "cc_incremental" -> CcOldLabelsPath,
+    "dedup_simhash_incremental" -> SimhashOldIndexPath,
+    "dedup_minhash_incremental" -> MinhashOldIndexPath,
+    "bm25_from_index" -> LexIndexPath,
+    "phrase_from_index" -> LexIndexPath,
+    "feature_pit_from_index" -> FeaturesStorePath)
+    .map { case (q, knob) => q -> knob.key }
 
   /** Iterative kernels localCheckpoint their edge input before the
     * loop, so their FINAL executed plan roots at checkpoint-RDD scans
@@ -70,7 +73,7 @@ object BenchServing {
     val pairs = graft.ops.Scratch.dir("bench-pairs")
     builds("pair_graph") =
       Tool.secs(graft.ops.Materialize.pairGraph(spark, sfDir, pairs))
-    spark.conf.set("graft.dedup.pairsPath", pairs)
+    spark.conf.set(PairsPath.key, pairs)
     val labels = graft.ops.Scratch.dir("bench-cclabels")
     builds("cc_labels") =
       Tool.secs(graft.ops.Materialize.ccLabels(spark, sfDir, labels))
@@ -96,12 +99,12 @@ object BenchServing {
     val feat = graft.ops.Scratch.dir("bench-featstore")
     builds("feature_store") =
       Tool.secs(graft.ops.Materialize.featureStore(spark, sfDir, feat))
-    spark.conf.set("graft.cc.labelsPath", labels)
-    spark.conf.set("graft.cc.oldLabelsPath", oldLabels)
-    spark.conf.set("graft.simhash.oldIndexPath", simOld)
-    spark.conf.set("graft.minhash.oldIndexPath", mhOld)
-    spark.conf.set("graft.lex.indexPath", lex)
-    spark.conf.set("graft.features.storePath", feat)
+    spark.conf.set(CcLabelsPath.key, labels)
+    spark.conf.set(CcOldLabelsPath.key, oldLabels)
+    spark.conf.set(SimhashOldIndexPath.key, simOld)
+    spark.conf.set(MinhashOldIndexPath.key, mhOld)
+    spark.conf.set(LexIndexPath.key, lex)
+    spark.conf.set(FeaturesStorePath.key, feat)
 
     // ---- timing (the Bench methodology: untimed warmup, 3 timed
     // passes, per-query median; state dropped off the clock)

@@ -151,10 +151,10 @@ object ServeBench {
     val pairPath = graft.ops.Scratch.dir("servebench-pairs")
     val buildSec =
       Tool.secs(graft.ops.Materialize.pairGraph(spark, sfDir, pairPath))
-    spark.conf.set("graft.dedup.pairsPath", pairPath)
+    spark.conf.set(graft.ops.GraftConf.PairsPath.key, pairPath)
     val served =
       try pairQs.map(q => q -> steadyOf(q)).toMap
-      finally spark.conf.unset("graft.dedup.pairsPath")
+      finally spark.conf.unset(graft.ops.GraftConf.PairsPath.key)
     sb ++= "\n## Pair-graph artifact (graft.dedup.pairsPath)\n\n"
     sb ++= "Six graph metrics re-derive the verified pair frame " +
       "in-query; `Materialize.pairGraph`\npersists it once per " +

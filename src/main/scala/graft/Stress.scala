@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Materialize
+import graft.ops.{GraftConf, Materialize}
 
 /** Scale-stress harness for the dedup/ANN suite: synthesizes a K×-scaled
   * corpus from the sf0.1 testdata and measures the operators on it, so
@@ -28,7 +28,9 @@ import graft.ops.Materialize
   */
 object Stress {
   def main(args: Array[String]): Unit = {
-    val k = args.headOption.map(_.toInt).getOrElse(4)
+    val usage = "runMain graft.Stress [K] [sfDir]"
+    if (args.length > 2) Tool.usage(usage, "expected at most 2 arguments")
+    val k = Tool.intArg(args, 0, "K", 1, usage).getOrElse(4)
     val sfDir =
       if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = Tool.session(Tool.cpus())
@@ -147,17 +149,17 @@ object Stress {
     // semantic-dedup receipt: intra-cell candidate pairs under the
     // PRODUCTION cell-size knob (cells ∝ n, target occupancy 256) must
     // grow ~K — the oracle-mode 256-cell cap would grow them ~K²/C
-    spark.conf.set("graft.semantic.cellSize", "256")
+    spark.conf.set(GraftConf.SemanticCellSize.key, "256")
     out("semantic_candidates_prod") = measure("semantic_candidates_prod")(
       graft.operators.Dedup.semanticStage(spark, dir)._2.count())._2
-    spark.conf.unset("graft.semantic.cellSize")
+    spark.conf.unset(GraftConf.SemanticCellSize.key)
     // dbscan production receipt: under the occupancy-scaled plane
     // count (buckets ∝ n, the embeddingLsh rule) the hyperplane
     // candidate volume and the full production DBSCAN must grow ~K —
     // the guarded all-pairs oracle baseline would grow ~K²
-    val dbPlanes =
-      graft.ops.Fns.lshPlanes(spark, "graft.dbscan.lshPlanes", nVecs)
-    spark.conf.set("graft.dbscan.lshPlanes", dbPlanes.toString)
+    val dbPlanes = GraftConf.DbscanLshPlanes(spark)
+      .getOrElse(graft.ops.Fns.lshPlanes(nVecs))
+    spark.conf.set(GraftConf.DbscanLshPlanes.key, dbPlanes.toString)
     out("dbscan_lsh_planes") = dbPlanes
     out("dbscan_candidates_prod") = measure("dbscan_candidates_prod")(
       graft.operators.Dedup.hyperplaneCandidates(
@@ -166,7 +168,7 @@ object Stress {
         .count())._2
     measure("cluster_dbscan_prod")(
       SparkEntry.queries("cluster_dbscan")(spark, dir).count())
-    spark.conf.unset("graft.dbscan.lshPlanes")
+    spark.conf.unset(GraftConf.DbscanLshPlanes.key)
     // phash hot-band receipt on a DEGENERATE corpus (every payload
     // identical — the blank-frame pile-up): all rows land in 4 band
     // buckets; the df-cap must report them and bound the candidate
@@ -254,11 +256,11 @@ object Stress {
       Seq("doc_id", "cluster_id", "is_survivor"))
     val ccDefChk =
       measure("cc_incremental_default", "cc_inc_default")(ccChecksum())._2
-    spark.conf.set("graft.cc.oldLabelsPath", ccOldPath)
+    spark.conf.set(GraftConf.CcOldLabelsPath.key, ccOldPath)
     val ccArtChk =
       try measure("cc_incremental_artifact", "cc_inc_artifact")(
         ccChecksum())._2
-      finally spark.conf.unset("graft.cc.oldLabelsPath")
+      finally spark.conf.unset(GraftConf.CcOldLabelsPath.key)
     require(ccDefChk == ccArtChk,
       s"artifact-mode cc_incremental output checksum $ccArtChk != " +
         s"default $ccDefChk — the modes diverged")
@@ -286,11 +288,11 @@ object Stress {
     }.sum
     val pairDefChk = measure("graph_family_default",
       "graph_family_default")(graphChecksum())._2
-    spark.conf.set("graft.dedup.pairsPath", pairPath)
+    spark.conf.set(GraftConf.PairsPath.key, pairPath)
     val pairArtChk =
       try measure("graph_family_pairs_artifact",
         "graph_family_artifact")(graphChecksum())._2
-      finally spark.conf.unset("graft.dedup.pairsPath")
+      finally spark.conf.unset(GraftConf.PairsPath.key)
     require(pairDefChk == pairArtChk,
       s"pairs-artifact graph-family checksum $pairArtChk != default " +
         s"$pairDefChk — the modes diverged")
@@ -534,7 +536,9 @@ object Stress {
   * compounding. Usage: runMain graft.StressDbscan [K] */
 object StressDbscan {
   def main(args: Array[String]): Unit = {
-    val k = args.headOption.map(_.toInt).getOrElse(64)
+    val usage = "runMain graft.StressDbscan [K]"
+    if (args.length > 1) Tool.usage(usage, "expected at most 1 argument")
+    val k = Tool.intArg(args, 0, "K", 1, usage).getOrElse(64)
     val spark = Tool.session(Tool.cpus())
     graft.plans.GraftFunctions.register(spark)
     val nVecs = k * 5000
@@ -543,8 +547,8 @@ object StressDbscan {
     // the PRODUCTION rule (Fns.lshPlanes: occupancy-constant with the
     // 24-plane cap), not an inline copy — the receipt must measure a
     // plane count production would actually run
-    val planes =
-      graft.ops.Fns.lshPlanes(spark, "graft.dbscan.lshPlanes", nVecs)
+    val planes = GraftConf.DbscanLshPlanes(spark)
+      .getOrElse(graft.ops.Fns.lshPlanes(nVecs))
     val t0 = System.nanoTime()
     val cands = graft.operators.Dedup.hyperplaneCandidates(
       emb, nBands = 8, nPlanes = planes).count()

@@ -321,7 +321,7 @@ private[graft] object Tool {
     // synthetic vocabulary: one query-term set per copy tag, so
     // per-term df stays 1/K of docs and total term-row volume scales
     // exactly K× (query volume per sub-corpus constant)
-    spark.conf.set(graft.operators.Retrieval.QTermsConf,
+    spark.conf.set(graft.ops.GraftConf.QTerms.key,
       (0 until k).map(i => "q" + ('a' + i).toChar)
         .flatMap(t => graft.operators.Retrieval.QTerms.map(t + _))
         .mkString(","))

@@ -2,13 +2,22 @@ package graft
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val Usage = "runMain graft.Verify <sfDir> <outDir> [name,name,...]"
+
   def main(args: Array[String]): Unit = {
+    if (args.length < 2 || args.length > 3)
+      Tool.usage(Usage, "expected 2 or 3 arguments")
     val sfDir = args(0)
     val outDir = args(1)
     // optional 3rd arg: comma-separated query subset (dev loop — the
     // driver always calls with 2 args = full dump)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      args.lift(2).map(_.split(",").toSet.filter(_.nonEmpty))
+    only.foreach { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      if (names.isEmpty || unknown.nonEmpty) Tool.usage(Usage,
+        s"unknown query in '${args(2)}': ${unknown.mkString(",")}")
+    }
     // the correctness dump runs the sketch family in md5 (oracle)
     // hash mode: the MinHash/SimHash pipelines then replay
     // end-to-end in DuckDB, so the gate hash-checks them instead of
@@ -18,7 +27,7 @@ object Verify {
     // the IVF/approx-profile mode equivalences (round 14): ✅SQL for
     // the sketch/IVF/HLL families certifies GATE-MODE hashing, with
     // the scale default covered by those pins — see SURVEY §2's
-    // hash-mode note. See Fns.Md5ModeConf.
+    // hash-mode note. See GraftConf.Md5Mode.
     //
     // Per-SF soundness: sfDir is arbitrary here, but two oracles
     // carry SF-linked pins — the neardup_kcore oracle is a static
@@ -28,7 +37,7 @@ object Verify {
     // graft.bruteforce.maxRows guard. A gate SF change re-runs that
     // pin, not this file.
     val spark =
-      Tool.session(Tool.cpus("4"), graft.ops.Fns.Md5ModeConf -> "true")
+      Tool.session(Tool.cpus("4"), graft.ops.GraftConf.Md5Mode.key -> "true")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

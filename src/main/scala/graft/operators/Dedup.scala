@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Fns
+import graft.ops.{Fns, GraftConf}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -234,7 +234,7 @@ object Dedup {
     * DedupSpec pins that the knob is honored and that extra rounds
     * preserve the degree structure. */
   def pagerank(s: SparkSession, d: String): DataFrame = {
-    val iters = s.conf.getOption("graft.pagerank.iters").fold(3)(_.toInt)
+    val iters = GraftConf.PagerankIters(s)
     pagerankOf(verifiedPairs(s, d).select("a_id", "b_id"), iters)
   }
 
@@ -242,7 +242,6 @@ object Dedup {
     * kernel, shared with the spec (which pins depth semantics on a
     * chain graph the clique-shaped testdata cannot exhibit). */
   private[graft] def pagerankOf(pairs: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"graft.pagerank.iters must be >= 1: $iters")
     val edges = pairs
       .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .toDF("src", "dst")
@@ -289,7 +288,7 @@ object Dedup {
     * by the node — fine-grained keys, hub work deg·log deg), and
     * max(min(rank, nbr_h)) per node. The sequence is monotone
     * non-increasing, so convergence is guaranteed; non-convergence
-    * within `graft.kcore.maxIters` (default 30) throws loudly ([[
+    * within [[KcoreMaxIters]] rounds throws loudly ([[
     * clusters]]' guard precedent). Oracle-checked ✅ since round 13:
     * the DuckDB oracle unrolls [[KcoreOracleRounds]] h-index rounds as
     * static CTEs over the same replayed pair graph — exact whenever
@@ -299,8 +298,10 @@ object Dedup {
     * pins the result against brute-force min-degree peeling and
     * double-runs for determinism. */
   def kcore(s: SparkSession, d: String): DataFrame =
-    kcoreOf(verifiedPairs(s, d).select("a_id", "b_id"),
-      s.conf.getOption("graft.kcore.maxIters").fold(30)(_.toInt))
+    kcoreOf(verifiedPairs(s, d).select("a_id", "b_id"), KcoreMaxIters)
+
+  /** [[kcore]]'s round cap. */
+  private val KcoreMaxIters = 30
 
   /** [[kcore]] over an explicit pair frame — the spec entry point. */
   private[graft] def kcoreOf(pairs: DataFrame, maxIters: Int): DataFrame =
@@ -350,8 +351,7 @@ object Dedup {
     if (changed > 0)
       throw new IllegalStateException(
         s"k-core h-index iteration did not converge in $maxIters " +
-          s"rounds ($changed nodes still changing); raise " +
-          "graft.kcore.maxIters")
+          s"rounds ($changed nodes still changing)")
     (h.select(col("doc_id"), col("h").as("coreness"))
       .orderBy("doc_id"), iter)
   }
@@ -587,10 +587,8 @@ object Dedup {
     * when `graft.semantic.cellSize` is set, else the 256-capped
     * oracle-replayable √n recipe (see [[semantic]]'s scale note). */
   private[graft] def semanticCells(s: SparkSession, n: Long): Int =
-    s.conf.getOption("graft.semantic.cellSize") match {
-      case Some(t) =>
-        val target = t.toLong
-        require(target > 0, s"graft.semantic.cellSize must be > 0: $t")
+    GraftConf.SemanticCellSize(s) match {
+      case Some(target) =>
         math.max(8L, (n + target - 1) / target).toInt
       case None =>
         math.min(256L,
@@ -1042,7 +1040,7 @@ object Dedup {
     * both sides alike. */
   def incrementalFrames(newBatch: DataFrame, corpus: DataFrame): DataFrame = {
     val s = newBatch.sparkSession
-    val maxDf = s.conf.getOption("graft.dedup.maxShingleDf").fold(100)(_.toInt)
+    val maxDf = GraftConf.MaxShingleDf(s)
     val tagged = corpus.select(col("doc_id"), col("text"), lit(0).as("is_new"))
       .unionAll(
         newBatch.select(col("doc_id"), col("text"), lit(1).as("is_new")))
@@ -1111,11 +1109,11 @@ object Dedup {
     * and emits per family: generation count (which IS the per-probe
     * read amplification — a chain serve opens every generation),
     * base-build and cumulative slice counts, the appended mass in ppm,
-    * and a compact/keep decision at the conf'd thresholds
-    * (`graft.chain.maxGenerations`, default 4 — the [[graft.ops
+    * and a compact/keep decision at fixed thresholds
+    * ([[ChainMaxGenerations]] = 4 — the [[graft.ops
     * .Materialize.genChain]] 64-generation hard stop's operating
-    * margin; `graft.chain.maxAppendedPpm`, default 750000 — compact
-    * once ¾ of the corpus lives outside the base build, the point
+    * margin; [[ChainMaxAppendedPpm]] = 750000 — compact once ¾ of
+    * the corpus lives outside the base build, the point
     * where per-generation row-group pruning has lost the base sort's
     * benefit for most rows). A `compact` row's executor is the
     * family's existing writer (`ivfIndexCompact` / `pqIndexCompact` /
@@ -1131,10 +1129,6 @@ object Dedup {
     * corpus cut replays (id midpoints for doc/vector families, the
     * day midpoint for the feature store). */
   def indexCompactionPlan(s: SparkSession, d: String): DataFrame = {
-    val maxGen =
-      s.conf.getOption("graft.chain.maxGenerations").fold(4L)(_.toLong)
-    val maxPpm =
-      s.conf.getOption("graft.chain.maxAppendedPpm").fold(750000L)(_.toLong)
     val chains: Seq[(String, String)] = Seq(
       "features" -> Training.featAppendPath(s, d),
       "ivf" -> Similarity.vecScratch(s, d, "ivf-chain" + hashModeTag,
@@ -1151,8 +1145,13 @@ object Dedup {
         graft.ops.Materialize.simhashIndexOf,
         graft.ops.Materialize.simhashIndexAppend))
     chainHealth(s, chains.map { case (f, h) => (f, h, d) },
-      maxGen, maxPpm)
+      ChainMaxGenerations, ChainMaxAppendedPpm)
   }
+
+  /** [[indexCompactionPlan]]'s thresholds — constants the plan and the
+    * oracle text share. */
+  private val ChainMaxGenerations = 4L
+  private val ChainMaxAppendedPpm = 750000L
 
   /** The planner core over explicit (family, head, corpus-tag)
     * chains — factored out so MaterializeSpec can audit a chain it
@@ -1188,8 +1187,8 @@ object Dedup {
 
   /** Small-file compaction planner over the survivor corpus — the
     * lakehouse-maintenance stage after [[materializeSurvivors]]: given
-    * a target output-file size (`graft.compaction.targetChars`, default
-    * 8192), assign every survivor doc (doc_id order within its (split,
+    * a target output-file size ([[CompactionTargetChars]]), assign
+    * every survivor doc (doc_id order within its (split,
     * lang) partition) to the output file index `prior_chars div
     * target` — the deterministic size-based rolling writer — and emit
     * the per-file manifest (doc count, char mass, doc_id range) a
@@ -1200,7 +1199,7 @@ object Dedup {
     * funnels each of the ~3×|langs| partition values through ONE task —
     * the exact skew [[graft.ops.Materialize.partitioned]]'s scaladoc
     * warns about, fatal at 100 TB. Instead: (1) docs bucket by
-    * `doc_id div G` (G = `graft.compaction.planGroup`, default 1024);
+    * `doc_id div G` (G = [[CompactionPlanGroup]]);
     * (2) per-bucket char sums — n/G rows — take the coarse running
     * total (a window over the TINY aggregated frame); (3) the
     * fine-grained within-bucket prefix runs partitioned by (split,
@@ -1210,17 +1209,11 @@ object Dedup {
     * one-level prefix — identical values, so the hash gate also proves
     * the decomposition correct. */
   def compactionPlan(s: SparkSession, d: String): DataFrame = {
-    val target =
-      s.conf.getOption("graft.compaction.targetChars").fold(8192L)(_.toLong)
-    val group =
-      s.conf.getOption("graft.compaction.planGroup").fold(1024L)(_.toLong)
-    require(target >= 1 && group >= 1,
-      s"compaction knobs must be >= 1: target=$target group=$group")
     val w = org.apache.spark.sql.expressions.Window
     val unb = org.apache.spark.sql.expressions.Window.unboundedPreceding
     val base = graft.ops.Materialize.survivorFrame(s, d)
       .select(col("split"), col("lang"), col("doc_id"), col("n_chars"),
-        expr(s"doc_id div $group").as("grp"))
+        expr(s"doc_id div $CompactionPlanGroup").as("grp"))
     val coarse = base.groupBy("split", "lang", "grp")
       .agg(sum("n_chars").as("grp_chars"))
       .withColumn("grp_offset",
@@ -1235,12 +1228,17 @@ object Dedup {
             .rowsBetween(unb, -1)), lit(0L)))
       .join(coarse, Seq("split", "lang", "grp"))
       .withColumn("file_idx",
-        expr(s"(grp_offset + local_prior) div $target"))
+        expr(s"(grp_offset + local_prior) div $CompactionTargetChars"))
       .groupBy("split", "lang", "file_idx")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("file_chars"),
         min("doc_id").as("min_doc_id"), max("doc_id").as("max_doc_id"))
       .orderBy("split", "lang", "file_idx")
   }
+
+  /** [[compactionPlan]]'s target output-file size in chars — shared
+    * with its oracle text — and its prefix-sum bucket width. */
+  private val CompactionTargetChars = 8192L
+  private val CompactionPlanGroup = 1024L
 
   /** Corpus-level near-dup profiling with the mergeable MinHash-union
     * aggregate ([[graft.plans.MinHashUnion]], a native
@@ -1258,7 +1256,7 @@ object Dedup {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
     // mode-routed signature family ([[minhashBands]]'s rule); the
     // element-wise-min union is family-agnostic either way
-    val fn = if (Fns.md5Mode) MinHashUniName else MinHashName
+    val fn = if (GraftConf.Md5Mode.active) MinHashUniName else MinHashName
     val sigs = shingleArrays(s, d).join(docs, "doc_id")
       .select(col("source"),
         call_function(fn, col("hs")).as("sig"))
@@ -1341,7 +1339,7 @@ object Dedup {
   def embeddingLsh(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val nPlanes = Fns.lshPlanes(s, "graft.lsh.planes", e.count())
+    val nPlanes = GraftConf.LshPlanes(s).getOrElse(Fns.lshPlanes(e.count()))
     val cands = hyperplaneCandidates(e, nBands = 8, nPlanes = nPlanes)
     cands
       .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")),
@@ -1396,7 +1394,7 @@ object Dedup {
     * DedupSpec pins the two modes row-identical for every family
     * member and the serving-mode plan free of loop machinery. */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
-    s.conf.getOption("graft.cc.labelsPath") match {
+    GraftConf.CcLabelsPath(s) match {
       case Some(p) =>
         // the artifact's _graft_corpus sidecar must name THIS corpus:
         // a session serving two corpora with one labelsPath left set
@@ -1418,7 +1416,7 @@ object Dedup {
     * those very files (tag/stage-guarded) instead of re-deriving the
     * candidate join, which is the nightly one-pair-job composition. */
   private[graft] def loopLabels(s: SparkSession, d: String): DataFrame = {
-    val maxIters = s.conf.getOption("graft.cc.maxIters").fold(50)(_.toInt)
+    val maxIters = GraftConf.CcMaxIters(s)
     ccLoop(Tables.documents(s, d).select("doc_id"),
         verifiedPairs(s, d).select("a_id", "b_id"), maxIters)
       .select(col("doc_id"), col("label").as("cluster_id"))
@@ -1430,7 +1428,7 @@ object Dedup {
     * cycle's [[ccIncremental]] contracts against. */
   private[graft] def loopLabelsOf(s: SparkSession, docs: DataFrame)
       : DataFrame = {
-    val maxIters = s.conf.getOption("graft.cc.maxIters").fold(50)(_.toInt)
+    val maxIters = GraftConf.CcMaxIters(s)
     ccLoop(docs.select("doc_id"),
         ngramJaccardOf(s, docs).select("a_id", "b_id"), maxIters)
       .select(col("doc_id"), col("label").as("cluster_id"))
@@ -1459,6 +1457,12 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** The candidate-stage part of a pair artifact's scratch key. */
+  private def stageKey(s: SparkSession): String =
+    if (GraftConf.CandidateStage(s) == "dfcap")
+      s"dfcap${GraftConf.MaxShingleDf(s)}"
+    else "prefix"
+
   /** The verified pair graph served from the MATERIALIZED
     * [[graft.ops.Materialize.pairGraph]] artifact — the
     * [[clustersFromIndex]] treatment for the pair frame itself:
@@ -1475,10 +1479,7 @@ object Dedup {
     * (the drift [[verifiedPairs]] refuses via props on user-supplied
     * paths). */
   def pairsFromIndex(s: SparkSession, d: String): DataFrame = {
-    val stageKey =
-      if (candidateStage(s) == "dfcap") s"dfcap${maxShingleDf(s)}"
-      else "prefix"
-    val path = graft.ops.BuildOnce.scratchPath(s"pairs-$stageKey", d)
+    val path = graft.ops.BuildOnce.scratchPath(s"pairs-${stageKey(s)}", d)
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.pairGraph(s, d, path)
     }
@@ -1503,10 +1504,8 @@ object Dedup {
     * candidate-stage configuration ([[pairsFromIndex]]'s drift rule:
     * a stage or df-cap flip mid-JVM maps to a different artifact). */
   def pairsDeltaRefresh(s: SparkSession, d: String): DataFrame = {
-    val stageKey =
-      if (candidateStage(s) == "dfcap") s"dfcap${maxShingleDf(s)}"
-      else "prefix"
-    val root = graft.ops.BuildOnce.scratchPath(s"pairsdelta-$stageKey", d)
+    val root =
+      graft.ops.BuildOnce.scratchPath(s"pairsdelta-${stageKey(s)}", d)
     graft.ops.BuildOnce.ensure(root, d) {
       val docs = Tables.documents(s, d).select("doc_id", "text")
       // cold start (the midpoint leaves no old half — 0-2 docs): a
@@ -1668,7 +1667,7 @@ object Dedup {
 
   private def ccIncrementalPrefix(s: SparkSession, d: String)
       : (DataFrame, Long, DataFrame, DataFrame, DataFrame, Int) = {
-    val maxIters = s.conf.getOption("graft.cc.maxIters").fold(50)(_.toInt)
+    val maxIters = GraftConf.CcMaxIters(s)
     val docs = Tables.documents(s, d)
     // existing state: labels over the old subgraph (a_id < b_id, so a
     // pair is old×old exactly when b_id < cut). Dual-mode, the
@@ -1691,7 +1690,7 @@ object Dedup {
     // DedupSpec pins the two modes output-identical with the artifact
     // written from the old slice.
     val (cut, oldLabels, dPairs) =
-      s.conf.getOption("graft.cc.oldLabelsPath") match {
+      GraftConf.CcOldLabelsPath(s) match {
         case Some(p) =>
           graft.ops.ArtifactTag.require(s, p, d) // wrong-corpus guard
           val labels = s.read.parquet(p)
@@ -1708,19 +1707,8 @@ object Dedup {
           // so configuration drift is refused at read time. Artifacts
           // written before the props sidecar are not admissible.
           val props = graft.ops.ArtifactTag.readProps(s, p)
-          val stage = candidateStage(s)
-          require(props.get("pair_stage").contains(stage),
-            s"old-labels artifact at $p was built under pair stage " +
-              s"'${props.getOrElse("pair_stage", "<none>")}' but this " +
-              s"session runs '$stage' (graft.dedup.candidateStage) — " +
-              "rebuild the artifact or match the conf")
-          require(stage != "dfcap"
-              || props.get("max_shingle_df")
-                   .contains(maxShingleDf(s).toString),
-            s"old-labels artifact at $p was built with maxShingleDf=" +
-              s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
-              s"session caps at ${maxShingleDf(s)} — a df-cap change " +
-              "between cycles changes the pair graph; rebuild")
+          graft.ops.Materialize.requirePairStage(s, props,
+            s"old-labels artifact at $p")
           // coverage guard: the boundary rule assumes monotone id
           // allocation (every current doc below the artifact's max id
           // was labeled by the previous cycle). Id reuse or backfill
@@ -1735,17 +1723,11 @@ object Dedup {
           // (doc_id, text) scan of the old slice per invocation —
           // far below relabeling (no shingling, no pair join, no
           // loop); a deployment on an immutable store may downgrade
-          // to the id-level guard with graft.cc.trustOldContent=true
-          // (count + anti-join: catches backfill, not substitution) —
-          // or with the generalized graft.artifact.trustOldContent
-          // that governs the delta/append writers, so one knob covers
-          // every artifact family (round-12 review: the cc path was
-          // the one holdout needing its own setting)
+          // to the id-level guard with graft.artifact.trustOldContent
+          // (count + anti-join: catches backfill, not substitution),
+          // the one knob that also governs the delta/append writers
           val below = docs.filter(col("doc_id") < aCut)
-          if (s.conf.getOption("graft.cc.trustOldContent")
-              .contains("true")
-              || s.conf.getOption("graft.artifact.trustOldContent")
-                .contains("true")) {
+          if (GraftConf.TrustOldContent(s)) {
             val nBelow = below.count()
             require(nBelow == stats.getLong(1),
               s"artifact at $p labels ${stats.getLong(1)} docs but the " +
@@ -1888,14 +1870,15 @@ object Dedup {
     * a map-side expression now. */
   private def shingleHashes(text: Column): Column =
     array_distinct(transform(Fns.shingles3(Fns.tokens(text)),
-      h => if (Fns.md5Mode) Fns.md5Hash52(h) else xxhash64(h)))
+      h => if (GraftConf.Md5Mode.active) Fns.md5Hash52(h) else xxhash64(h)))
 
   /** Scratch-path suffix separating the two hash modes' signature
-    * indexes inside ONE JVM ([[Fns.Md5ModeConf]]): BuildOnce caches
+    * indexes inside ONE JVM ([[GraftConf.Md5Mode]]): BuildOnce caches
     * per path, so without the suffix a mode flip mid-session (the
     * DedupSpec equivalence pins do exactly that) would serve an
     * xxhash64-built index to an md5-mode probe. */
-  private[graft] def hashModeTag: String = if (Fns.md5Mode) "-m5" else ""
+  private[graft] def hashModeTag: String =
+    if (GraftConf.Md5Mode.active) "-m5" else ""
 
   /** (doc_id, h) rows: distinct xxhash64'd 3-gram shingles — the flat
     * (inverted-index) view of [[shingleHashes]]; `explode` drops
@@ -2001,23 +1984,12 @@ object Dedup {
     * row-identical for all six consumers and the serving plans
     * pair-derivation-free. */
   private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    s.conf.getOption("graft.dedup.pairsPath") match {
+    GraftConf.PairsPath(s) match {
       case Some(p) =>
         graft.ops.ArtifactTag.require(s, p, d)
         val props = graft.ops.ArtifactTag.readProps(s, p)
-        val stage = candidateStage(s)
-        require(props.get("pair_stage").contains(stage),
-          s"pair-graph artifact at $p was built under pair stage " +
-            s"'${props.getOrElse("pair_stage", "<none>")}' but this " +
-            s"session runs '$stage' (graft.dedup.candidateStage) — " +
-            "rebuild the artifact or match the conf")
-        require(stage != "dfcap"
-            || props.get("max_shingle_df")
-                 .contains(maxShingleDf(s).toString),
-          s"pair-graph artifact at $p was built with maxShingleDf=" +
-            s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
-            s"session caps at ${maxShingleDf(s)} — a df-cap change " +
-            "changes the pair graph; rebuild")
+        graft.ops.Materialize.requirePairStage(s, props,
+          s"pair-graph artifact at $p")
         // opt-in content audit (round-11 verdict task #4): replay the
         // writer's corpus checksum before serving — the guard the cc
         // label reader applies unconditionally, here behind a conf
@@ -2026,8 +1998,7 @@ object Dedup {
         // the tag binds the corpus dir and write-once forbids
         // in-place mutation). An audit pass sets it to close the
         // corpus-regenerated-in-place class the tag cannot see.
-        if (s.conf.getOption("graft.dedup.verifyPairsContent")
-            .contains("true")) {
+        if (GraftConf.VerifyPairsContent(s)) {
           graft.ops.ArtifactTag.requireProvVersion(props, p)
           val (n, xor) = graft.ops.Materialize.ccSliceChecksum(
             Tables.documents(s, d).select("doc_id", "text"))
@@ -2057,7 +2028,7 @@ object Dedup {
     * hazard between the registered query and what consumers read). */
   private def ngramJaccardRawOf(s: SparkSession,
       docs: DataFrame): DataFrame =
-    if (candidateStage(s) == "dfcap") {
+    if (GraftConf.CandidateStage(s) == "dfcap") {
       val (cands, sizes) = ngramCandidateStageOf(s, docs)
       jaccardVerifyRaw(cands, sizes)
     } else {
@@ -2073,20 +2044,8 @@ object Dedup {
     * re-reads its edges. */
   private def verifiedPairsMat(s: SparkSession, d: String): DataFrame = {
     val pairs = verifiedPairs(s, d).select("a_id", "b_id")
-    if (s.conf.getOption("graft.dedup.pairsPath").isDefined) pairs
+    if (GraftConf.PairsPath(s).isDefined) pairs
     else pairs.localCheckpoint()
-  }
-
-  /** Conf-routed candidate stage of [[ngramJaccard]] (default
-    * `prefix`, see there). Package-private: the CC label artifact
-    * writer records it in the `_graft_props` sidecar so
-    * [[ccIncremental]]'s artifact mode can refuse stage drift. */
-  private[graft] def candidateStage(s: SparkSession): String = {
-    val v = s.conf.getOption("graft.dedup.candidateStage")
-      .getOrElse("prefix")
-    require(v == "prefix" || v == "dfcap",
-      s"graft.dedup.candidateStage must be prefix|dfcap, got $v")
-    v
   }
 
   /** Frame-input variant of [[ngramJaccard]] — same conf routing, so
@@ -2244,7 +2203,7 @@ object Dedup {
     * delta rows it appends to the stored artifact). */
   private[graft] def deltaPairGraph(s: SparkSession, d: String,
       cut: Long): DataFrame =
-    if (candidateStage(s) == "dfcap") ngramDeltaPairs(s, d, cut)
+    if (GraftConf.CandidateStage(s) == "dfcap") ngramDeltaPairs(s, d, cut)
     else prefixDeltaPairs(s, d, cut)
 
   /** [[deltaPairGraph]]'s (a_id, b_id) projection — what the CC
@@ -2310,12 +2269,6 @@ object Dedup {
     ngramCandidateStageOf(s,
       Tables.documents(s, d).select("doc_id", "text"))
 
-  /** The df-cap bound, one resolution site (recorded in the CC label
-    * artifact's props sidecar under dfcap mode — a cap change between
-    * cycles changes the pair graph, so the reader must see it). */
-  private[graft] def maxShingleDf(s: SparkSession): Int =
-    s.conf.getOption("graft.dedup.maxShingleDf").fold(100)(_.toInt)
-
   /** Frame-input variant of [[ngramCandidateStage]] — candidate pairs
     * over an explicit (doc_id, text) corpus slice, with the slice's
     * OWN df statistics for the hot-shingle cap (the semantics a
@@ -2330,7 +2283,7 @@ object Dedup {
   private def ngramCandidateStageOf(
       s: SparkSession, docs: DataFrame,
       bSide: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
-    val maxDf = maxShingleDf(s)
+    val maxDf = GraftConf.MaxShingleDf(s)
     // materialize the index ONCE: it has four consumers (hot-set agg,
     // anti-join probe, both self-join sides via sizes) and only the
     // exchange — not the tokenize+lead window itself — is reused by
@@ -2438,13 +2391,13 @@ object Dedup {
     * for a (doc_id, hs) frame — shared by the in-query candidate stage
     * and the materialized [[graft.ops.Materialize.minhashIndex]]. */
   private def minhashBands(docs: DataFrame): DataFrame = {
-    // mode routing ([[Fns.Md5ModeConf]]): md5 mode signs with the
+    // mode routing ([[GraftConf.Md5Mode]]): md5 mode signs with the
     // UniHash universal family and combines a band's two 31-bit rows
     // as hi·2³¹ + lo (< 2⁶², plain BIGINT on both engines — DuckDB
     // replays it); scale mode keeps splitmix sigs + an xxhash64
     // combine. Both are injective per band, so the bucket joins
     // downstream are mode-agnostic.
-    val md5 = Fns.md5Mode
+    val md5 = GraftConf.Md5Mode.active
     val fn = if (md5) graft.plans.SignatureFunctions.MinHashUniName
       else graft.plans.SignatureFunctions.MinHashName
     def combine(lo: Column, hi: Column): Column =
@@ -2491,7 +2444,7 @@ object Dedup {
   def minhashIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val (cut, path) = oldIndexMode(s, docs, d,
-        "graft.minhash.oldIndexPath").getOrElse {
+        GraftConf.MinhashOldIndexPath).getOrElse {
       val mCut = idCut(docs)
       val p = graft.ops.BuildOnce.scratchPath("minhash-old" + hashModeTag, d)
       graft.ops.BuildOnce.ensure(p, d) {
@@ -2667,12 +2620,13 @@ object Dedup {
     graft.plans.SignatureFunctions.register(s)
     val sigs = docs
       .select(col("doc_id"), explode(Fns.tokens(col("text"))).as("w"))
-      // mode-routed token hash ([[Fns.Md5ModeConf]]): the md5-derived
+      // mode-routed token hash ([[GraftConf.Md5Mode]]): the md5-derived
       // 64-bit value's bits are replayable digit-by-digit in DuckDB
       // (the oracle never assembles the long — it votes straight off
       // hex digits), xxhash64 is the scale default
       .select(col("doc_id"),
-        (if (Fns.md5Mode) Fns.md5Hash64(col("w")) else xxhash64(col("w")))
+        (if (GraftConf.Md5Mode.active) Fns.md5Hash64(col("w"))
+         else xxhash64(col("w")))
           .as("h"))
       .groupBy("doc_id")
       .agg(collect_list("h").as("hs"))
@@ -2757,7 +2711,7 @@ object Dedup {
   def simhashIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val (cut, path) = oldIndexMode(s, docs, d,
-        "graft.simhash.oldIndexPath").getOrElse {
+        GraftConf.SimhashOldIndexPath).getOrElse {
       val mCut = idCut(docs)
       val p = graft.ops.BuildOnce.scratchPath("simhash-old" + hashModeTag, d)
       graft.ops.BuildOnce.ensure(p, d) {
@@ -2798,8 +2752,8 @@ object Dedup {
     * checks replay the same table). DedupSpec pins artifact mode ≡
     * midpoint mode on the same slice and spec-asserts the refusals. */
   private def oldIndexMode(s: SparkSession, docs: DataFrame, d: String,
-      confKey: String): Option[(Long, String)] =
-    s.conf.getOption(confKey).map { p =>
+      knob: GraftConf.Knob[Option[String]]): Option[(Long, String)] =
+    knob(s).map { p =>
       graft.ops.ArtifactTag.require(s, p, d)
       val props = graft.ops.ArtifactTag.readProps(s, p)
       require(props.contains("max_doc_id"),
@@ -2836,14 +2790,14 @@ object Dedup {
     * explicit fold. */
   def embeddingCosine(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val maxRows = s.conf.getOption("graft.bruteforce.maxRows")
-      .fold(100000L)(_.toLong)
+    val maxRows = GraftConf.BruteforceMaxRows(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val n = e.count()
     if (n > maxRows) throw new IllegalArgumentException(
       s"dedup_embedding_bruteforce is an all-pairs ORACLE BASELINE " +
         s"(O(n²) cartesian): corpus has $n rows > " +
-        s"graft.bruteforce.maxRows=$maxRows. Use dedup_embedding_lsh " +
+        s"${GraftConf.BruteforceMaxRows.key}=$maxRows. Use " +
+        "dedup_embedding_lsh " +
         "(the bucketed scale path), or raise the bound deliberately.")
     // spread the STREAMED side: the nested-loop baseline's parallelism
     // is its left input's partition count ([[graft.ops.Spread]])
@@ -2871,13 +2825,12 @@ object Dedup {
     * [[embeddingLsh]] candidates instead. */
   def embeddingThresholdSweep(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val maxRows = s.conf.getOption("graft.bruteforce.maxRows")
-      .fold(100000L)(_.toLong)
+    val maxRows = GraftConf.BruteforceMaxRows(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val n = e.count()
     if (n > maxRows) throw new IllegalArgumentException(
       s"embedding_threshold_sweep scores all pairs (oracle baseline): " +
-        s"corpus has $n rows > graft.bruteforce.maxRows=$maxRows. " +
+        s"corpus has $n rows > ${GraftConf.BruteforceMaxRows.key}=$maxRows. " +
         "Sweep over dedup_embedding_lsh candidates instead, or raise " +
         "the bound deliberately.")
     val swept = e.toDF("a_id", "a_emb").join(e.toDF("b_id", "b_emb"),
@@ -2971,7 +2924,7 @@ object Dedup {
        |  (CASE WHEN doc = min(r) THEN 1 ELSE 0 END) AS is_survivor
        |FROM reach GROUP BY doc ORDER BY doc_id""".stripMargin
 
-  /** The md5-mode (gate-mode, [[Fns.Md5ModeConf]]) replay of the
+  /** The md5-mode (gate-mode, [[GraftConf.Md5Mode]]) replay of the
     * MinHash-LSH pipeline, shared by the three minhash oracle entries
     * (in-query, from-index ≡ by construction, incremental = the same
     * set restricted to new-touching pairs): distinct 3-gram shingles →
@@ -3082,8 +3035,9 @@ object Dedup {
           .mkString("[", ", ", "]")}::DOUBLE[])"
       }
     }.mkString("(VALUES ", ", ", ")")
-    s"""WITH np AS (SELECT ${Fns.lshPlanesOracle("graft.lsh.planes",
-        "(SELECT count(*) FROM embeddings)")} AS np),
+    val np = GraftConf.LshPlanes.oracle.fold(
+      Fns.sqlLshPlanes("(SELECT count(*) FROM embeddings)"))(_.toString)
+    s"""WITH np AS (SELECT $np AS np),
        |pl AS (SELECT band, p, pv FROM $values t(band, p, pv)
        |       WHERE p < (SELECT np FROM np)),
        |bk AS (
@@ -3111,47 +3065,6 @@ object Dedup {
   private val SqlIdCut =
     "(SELECT (min(doc_id) + max(doc_id)) // 2 FROM documents)"
 
-  /** Dump-time ambiguity guard for the incremental sketch oracles —
-    * the [[graft.operators.TextAnalysis]] `oracleKnob` discipline
-    * applied to a PATH conf: when a live session routes
-    * `dedup_minhash_incremental` / `dedup_simhash_incremental` at a
-    * persisted previous-cycle index, the artifact (not the midpoint)
-    * defines the cut, and the midpoint-replay SQL below would be a
-    * false oracle. Refuse the dump instead of emitting it. */
-  private def requireSelfContainedIncremental(): Unit = {
-    val sessions = (SparkSession.getActiveSession.toSeq ++
-      SparkSession.getDefaultSession).distinct
-    Seq("graft.minhash.oldIndexPath", "graft.simhash.oldIndexPath")
-      .foreach { k =>
-        val set = sessions.flatMap(_.conf.getOption(k))
-        require(set.isEmpty,
-          s"$k is set ($set) in a live session at oracle-dump time — " +
-            "the incremental sketch oracles replay the self-contained " +
-            "midpoint cut, not an artifact boundary; unset the conf " +
-            "to dump, or skip these keys")
-      }
-  }
-
-  /** Dump-time knob resolution for the chain-health thresholds — the
-    * [[graft.operators.TextAnalysis]] `oracleKnob` discipline: the
-    * dumped SQL must interpolate the value the Spark plan reads;
-    * ambiguity across live sessions refuses. */
-  private def chainKnob(key: String, default: Long): Long = {
-    val sessions = (SparkSession.getActiveSession.toSeq ++
-      SparkSession.getDefaultSession).distinct
-    // fold the default PER SESSION (the oracleKnob rule): a session
-    // that left the conf unset resolves to the default its Spark plan
-    // will use, so a set-vs-default split across live sessions is an
-    // ambiguity too, not a silent pick of the set value
-    val vals = sessions
-      .map(_.conf.getOption(key).map(_.toLong).getOrElse(default))
-      .distinct
-    require(vals.size <= 1,
-      s"$key is ambiguous at oracle-dump time: " +
-        s"${vals.mkString(" vs ")} — align the conf or dump from a " +
-        "single session")
-    vals.headOption.getOrElse(default)
-  }
 
   /** The `index_compaction_plan` replay: provenance is exact by
     * construction (append admission re-verifies it every cycle), so
@@ -3163,8 +3076,6 @@ object Dedup {
     * an EMPTY events table (`featScratch`'s cold-start fallback — a
     * non-empty table always has a non-empty ≤-midpoint-day half). */
   private def sqlIndexCompactionPlan: String = {
-    val maxGen = chainKnob("graft.chain.maxGenerations", 4L)
-    val maxPpm = chainKnob("graft.chain.maxAppendedPpm", 750000L)
     s"""WITH dstat AS (
        |  SELECT count(*)::BIGINT AS total,
        |    (count(*) FILTER (WHERE doc_id < $SqlIdCut))::BIGINT
@@ -3210,16 +3121,25 @@ object Dedup {
        |  FROM fam)
        |SELECT family, n_generations, rows_base, rows_total,
        |  appended_ppm,
-       |  CASE WHEN n_generations > $maxGen OR appended_ppm > $maxPpm
+       |  CASE WHEN n_generations > $ChainMaxGenerations OR appended_ppm > $ChainMaxAppendedPpm
        |    THEN 'compact' ELSE 'keep' END AS decision
        |FROM h ORDER BY family""".stripMargin
   }
 
   def oracles: Map[String, String] = {
-    requireSelfContainedIncremental()
+    // with a previous-cycle index routed in a live session, the
+    // artifact (not the midpoint) defines the incremental sketch
+    // queries' cut, and their midpoint-replay SQL would be a false
+    // oracle: refuse the dump instead of emitting it
+    Seq(GraftConf.MinhashOldIndexPath, GraftConf.SimhashOldIndexPath)
+      .foreach(k => require(k.oracle.isEmpty,
+        s"${k.key} is set in a live session at oracle-dump time — the " +
+          "incremental sketch oracles replay the self-contained " +
+          "midpoint cut, not an artifact boundary; unset the conf to " +
+          "dump, or skip these keys"))
     Map(
     "index_compaction_plan" -> sqlIndexCompactionPlan,
-    // ——— md5-gate-mode sketch-family oracles ([[Fns.Md5ModeConf]]:
+    // ——— md5-gate-mode sketch-family oracles ([[GraftConf.Md5Mode]]:
     // graft.Verify dumps and runs with the conf ON, so these replays
     // see the exact hashes the Spark plans computed; DedupSpec pins
     // the xxhash64 scale mode's pair sets against the same fixture)
@@ -3787,7 +3707,7 @@ object Dedup {
          |WHERE d.doc_id >= (SELECT c FROM cut)
          |ORDER BY d.doc_id""".stripMargin,
     "compaction_plan" ->
-      """WITH surv AS (
+      s"""WITH surv AS (
         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
         |d AS (SELECT documents.* FROM documents JOIN surv USING (doc_id)),
         |sp AS (
@@ -3805,7 +3725,7 @@ object Dedup {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
         |      AS prior_chars
         |  FROM sp)
-        |SELECT split, lang, (prior_chars // 8192)::BIGINT AS file_idx,
+        |SELECT split, lang, (prior_chars // $CompactionTargetChars)::BIGINT AS file_idx,
         |  count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS file_chars,
         |  min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
         |FROM pre GROUP BY split, lang, file_idx

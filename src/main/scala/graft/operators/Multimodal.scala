@@ -146,7 +146,7 @@ object Multimodal {
     * pins that capping df > 2 on the fixture changes candidates. */
   private[graft] def phashBandStage(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val maxDf = s.conf.getOption("graft.phash.maxBandDf").fold(100)(_.toInt)
+    val maxDf = graft.ops.GraftConf.PhashMaxBandDf(s)
     val sigs = graft.ops.Spread(Tables.documents(s, d))
       .withColumn("payload", payloadCol)
       .select(col("doc_id"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Fns
+import graft.ops.{Fns, GraftConf}
 import graft.sources.Tables
 
 /** §2B — relational / general query engine over the TPC-H-ish star schema.
@@ -255,14 +255,14 @@ object Relational {
   private[graft] def approxProfileOf(melted: DataFrame): DataFrame = {
     val m = 16384
     // Hash leaf routes through the md5 gate mode (round 14, the
-    // sketch-family rule — [[graft.ops.Fns.Md5ModeConf]]): xxhash64
+    // sketch-family rule — [[GraftConf.Md5Mode]]): xxhash64
     // over the typed pair at scale; under the gate, md5Hash52 of a
     // CANONICAL string key — 's:'+vs for string columns, 'd:'+the
     // DECIMAL(28,6) form of vd for numeric ones (every profiled value
     // is exact on that grid: integer keys, 2-decimal prices, integer
     // epoch-µs — and both engines print the decimal with full scale),
     // so DuckDB replays the register frame digit-for-digit.
-    val md5 = Fns.md5Mode
+    val md5 = GraftConf.Md5Mode.active
     val hashExpr =
       if (md5) Fns.md5Hash52(
         when(col("vs").isNotNull, concat(lit("s:"), col("vs")))

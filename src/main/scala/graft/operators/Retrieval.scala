@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Fns
+import graft.ops.{Fns, GraftConf}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -138,12 +138,13 @@ object Retrieval {
     * [[sqlMrrRanks]] interpolates the knob into the oracle text at
     * dump time (the round-10 verdict's stronger option — round 9 froze
     * the oracle at LIMIT 50 and declared non-default values a Verify
-    * precondition). Both sides resolve through [[mrrNProbes]], so the
-    * Spark plan and the dumped SQL can never disagree on the panel
-    * size within one session; RetrievalOracleSpec replays the full
-    * Verify → DuckDB comparison at a non-default size. */
+    * precondition). Both sides resolve through
+    * [[GraftConf.MrrNProbes]], so the Spark plan and the dumped SQL can
+    * never disagree on the panel size within one session;
+    * RetrievalOracleSpec replays the full Verify → DuckDB comparison
+    * at a non-default size. */
   private[graft] def mrrScored(s: SparkSession, d: String): DataFrame = {
-    val nProbes = mrrNProbes(s)
+    val nProbes = GraftConf.MrrNProbes(s)
     val c = Tables.documents(s, d)
       .select(col("doc_id"), Fns.tokens(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
@@ -358,7 +359,7 @@ object Retrieval {
     * as a lambda variable (the [[TextAnalysis.winnowFingerprint]]
     * anti-inlining pattern). */
   def snippetExtract(s: SparkSession, d: String): DataFrame = {
-    val terms = qTerms
+    val terms = GraftConf.QTerms.active
     val top = bm25Scores(s, d)
       .select(col("doc_id"), (round(col("score"), 4) + lit(0.0)).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id")).limit(5)
@@ -392,20 +393,9 @@ object Retrieval {
     * rare term (`dup`, df ≈ 5% of docs — the discriminative signal)
     * plus three common ones, so scores mix an idf spike with tf/length
     * normalization. A FIXED query (not a per-row join) keeps the
-    * operator shape = one corpus scan + tiny broadcast frames. */
+    * operator shape = one corpus scan + tiny broadcast frames. The
+    * default of [[GraftConf.QTerms]]; the oracles replay it. */
   private[graft] val QTerms = Seq("dup", "spark", "hash", "window")
-
-  /** Conf key overriding [[QTerms]] (comma-separated) — the stress
-    * harness sets it to the tag-prefixed vocabulary of its synthetic
-    * corpora so the lexical stages do representative work there; the
-    * oracle contract always runs at the default. */
-  private[graft] val QTermsConf = "graft.retrieval.qterms"
-
-  private def qTerms: Seq[String] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption(QTermsConf))
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(QTerms)
 
   private val K1 = 1.2
   private val B = 0.75
@@ -432,7 +422,7 @@ object Retrieval {
     * but the per-query compute shape (tiny per-term frames × broadcast
     * stats) is already the right one. */
   private[graft] def bm25Scores(s: SparkSession, d: String): DataFrame =
-    bm25ScoresWide(Tables.documents(s, d), qTerms)
+    bm25ScoresWide(Tables.documents(s, d), GraftConf.QTerms.active)
 
   /** Wide-form BM25 scoring over a (doc_id, text) frame — the
     * shuffle-free rewrite of the explode+groupBy kernel (round 16;
@@ -537,7 +527,7 @@ object Retrieval {
     *    [[Similarity]] index guard; test-harness reality, and what
     *    the DuckDB oracle's hash gate replays). */
   private def lexIndexPath(s: SparkSession, d: String): String =
-    s.conf.getOption("graft.lex.indexPath") match {
+    GraftConf.LexIndexPath(s) match {
       case Some(p) =>
         graft.ops.ArtifactTag.require(s, p, d)
         p
@@ -569,7 +559,7 @@ object Retrieval {
     * delta-refresh composition serves with exactly the plan the
     * steady-state twin runs (postings point-read + 1-row stats). */
   private def bm25Serve(s: SparkSession, path: String): DataFrame = {
-    val terms = qTerms
+    val terms = GraftConf.QTerms.active
     // chain-aware read: a merged artifact is a 1-element chain (one
     // scan — the pinned steady-state plan); an append chain unions
     // per-generation sorted scans, the term filter pruning row groups
@@ -786,7 +776,7 @@ object Retrieval {
     * a 5-literal-id pushed scan — constant work however large the
     * corpus. */
   def bm25Prf(s: SparkSession, d: String): DataFrame = {
-    val terms = qTerms
+    val terms = GraftConf.QTerms.active
     // base ranking: ONE wide-form pass; its top-20 (whose 5-row prefix
     // IS the feedback set — same (b4 desc, doc_id) order) is bounded
     // result-page metadata, collected once so the feedback-doc filter
@@ -1011,37 +1001,6 @@ object Retrieval {
        |ORDER BY rank""".stripMargin
   }
 
-  /** ONE resolution site for the probe-panel size — the Spark plan
-    * ([[mrrScored]]) and the oracle text ([[sqlMrrRanks]]) both read
-    * it, so the two sides cannot drift within a session. */
-  private[graft] def mrrNProbes(s: SparkSession): Int =
-    s.conf.getOption("graft.mrr.nProbes").fold(50)(_.toInt)
-
-  /** [[mrrNProbes]] for the oracle side, which has no session
-    * parameter (the driver contract dumps `oracleSql` as a plain
-    * string map): the ACTIVE (else default) session's conf — Verify
-    * dumps queries and oracle text in one session, so both resolve
-    * identically there — falling back to the default 50 when no
-    * session exists (oracle text must stay constructible
-    * session-free). Round-12 advisor fix: in a JVM holding TWO
-    * sessions whose `graft.mrr.nProbes` values disagree, the dumped
-    * SQL could interpolate the other session's panel size while the
-    * Spark plan uses its own — silently failing (or wrongly passing)
-    * the hash gate — so disagreement is refused at dump time instead
-    * of first-resolved-wins. */
-  private def mrrNProbesOracle: Int = {
-    val sessions = (org.apache.spark.sql.SparkSession.getActiveSession
-      .toSeq ++ org.apache.spark.sql.SparkSession.getDefaultSession).distinct
-    val resolved = sessions.map(mrrNProbes).distinct
-    require(resolved.size <= 1,
-      s"graft.mrr.nProbes is ambiguous at oracle-dump time: the live " +
-        s"sessions resolve ${resolved.mkString(" vs ")} — the dumped " +
-        "oracle SQL would interpolate one panel size while a Spark " +
-        "plan uses the other; dump from a single session or align " +
-        "the conf across sessions")
-    resolved.headOption.getOrElse(50)
-  }
-
   /** Shared oracle prefix of the two panel evals — probe panel, BM25
     * scoring, and the per-probe rank CTEs, ending at `agg` (one text,
     * two rollups: MRR and hit-rate@k replay the identical ranks).
@@ -1056,7 +1015,7 @@ object Retrieval {
        |      WHERE len(w) > 0),
        |g AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM c),
        |probes AS (SELECT doc_id AS probe_id FROM c
-       |           ORDER BY hk, doc_id LIMIT $mrrNProbesOracle),
+       |           ORDER BY hk, doc_id LIMIT ${GraftConf.MrrNProbes.oracle}),
        |pt AS (
        |  SELECT probe_id, tok FROM (
        |    SELECT probe_id, tok, row_number() OVER (

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Fns
+import graft.ops.{Fns, GraftConf}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -89,7 +89,7 @@ object Similarity {
     * key-shuffles, linear in edges. */
   def clusterDbscan(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val maxIters = s.conf.getOption("graft.cc.maxIters").fold(50)(_.toInt)
+    val maxIters = GraftConf.CcMaxIters(s)
     val e = graft.ops.Spread(
       Tables.embeddings(s, d).select("vec_id", "embedding"))
     // reused by degree, core-edge, and border stages — materialize once
@@ -135,11 +135,8 @@ object Similarity {
     * the Stress harness counts candidate rows under the knob. */
   private[graft] def dbscanPairs(s: SparkSession, e: DataFrame)
       : DataFrame =
-    s.conf.getOption("graft.dbscan.lshPlanes") match {
-      case Some(p) =>
-        val nPlanes = p.toInt
-        require(nPlanes > 0 && nPlanes <= 24,
-          s"graft.dbscan.lshPlanes must be in [1, 24]: $p")
+    GraftConf.DbscanLshPlanes(s) match {
+      case Some(nPlanes) =>
         Dedup.hyperplaneCandidates(e, nBands = 8, nPlanes = nPlanes)
           .join(e.select(col("vec_id").as("a_id"),
             col("embedding").as("a_emb")), "a_id")
@@ -148,14 +145,13 @@ object Similarity {
           .filter(cos(col("a_emb"), col("b_emb")) >= 0.35)
           .select("a_id", "b_id")
       case None =>
-        val maxRows = s.conf.getOption("graft.bruteforce.maxRows")
-          .fold(100000L)(_.toLong)
+        val maxRows = GraftConf.BruteforceMaxRows(s)
         val n = e.count()
         if (n > maxRows) throw new IllegalArgumentException(
           s"cluster_dbscan scores all pairs (oracle baseline): corpus " +
-            s"has $n rows > graft.bruteforce.maxRows=$maxRows. Set " +
-            "graft.dbscan.lshPlanes to route the pair stage through " +
-            "hyperplane-LSH candidates at scale.")
+            s"has $n rows > ${GraftConf.BruteforceMaxRows.key}=$maxRows. " +
+            s"Set ${GraftConf.DbscanLshPlanes.key} to route the pair " +
+            "stage through hyperplane-LSH candidates at scale.")
         e.toDF("a_id", "a_emb")
           .join(e.toDF("b_id", "b_emb"), col("a_id") < col("b_id"))
           .filter(cos(col("a_emb"), col("b_emb")) >= 0.35)
@@ -1500,14 +1496,15 @@ object Similarity {
 
     // seed: the C vectors with smallest hash(vec_id) — deterministic
     // uniform sample, no RNG state. Hash leaf routes through the md5
-    // gate mode ([[Fns.Md5ModeConf]], round 14): xxhash64 at scale,
+    // gate mode ([[GraftConf.Md5Mode]], round 14): xxhash64 at scale,
     // md5-digit integers under the gate so the DuckDB oracle replays
     // seed choice — and with it the whole Lloyd trajectory —
     // digit-for-digit. (hk, vec_id) order: hash ties (absent in
     // practice at 52 bits) must not leave seed choice to sort
     // nondeterminism.
     var cents = e.withColumn("hk",
-        if (Fns.md5Mode) Fns.md5Hash52(col("vec_id").cast("string"))
+        if (GraftConf.Md5Mode.active)
+          Fns.md5Hash52(col("vec_id").cast("string"))
         else xxhash64(col("vec_id")))
       .orderBy("hk", "vec_id").limit(c)
       .select(col("embedding"))
@@ -1689,7 +1686,7 @@ object Similarity {
     * pseudo-random vectors derived from MurmurHash3(p, j) — no RNG
     * state, reproducible across runs. The plane count scales with the
     * corpus by the same [[graft.ops.Fns.lshPlanes]] rule as
-    * `dedup_embedding_lsh` (override: `graft.ann.planes`), so expected
+    * `dedup_embedding_lsh` (no override), so expected
     * bucket occupancy — and with it per-probe candidate evaluation —
     * stays constant as n grows instead of growing linearly as it would
     * with a fixed plane count. Rows-only check: recall vs
@@ -1707,7 +1704,7 @@ object Similarity {
   def annLsh(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
-    val nPlanes = Fns.lshPlanes(s, "graft.ann.planes", e.count())
+    val nPlanes = Fns.lshPlanes(e.count())
     val planes: Seq[Column] = (0 until nPlanes).map { p =>
       array(annPlaneComps(p).map(c => lit(c)): _*)
     }
@@ -1755,9 +1752,7 @@ object Similarity {
     * recall MONOTONE in nprobe. */
   def knnGraphIvf(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val nprobe = s.conf.getOption("graft.knngraph.nprobe").fold(2)(_.toInt)
-    require(nprobe >= 1 && nprobe <= 256,
-      s"graft.knngraph.nprobe must be in [1, 256]: $nprobe")
+    val nprobe = GraftConf.KnngraphNprobe(s)
     val path = graft.ops.BuildOnce.scratchPath("ivf" + Dedup.hashModeTag, d)
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.ivfIndex(s, d, path)
@@ -1921,8 +1916,8 @@ object Similarity {
     * constants are driver-side literals, so the WHOLE pipeline —
     * sign buckets → multi-probe → exact cosine re-rank — replays in
     * DuckDB. Every clamp-reachable plane (p < 24) ships in the VALUES
-    * relation; the run-time filter picks the count-derived (or
-    * conf-interpolated) prefix, exactly as the Spark plan does.
+    * relation; the run-time filter picks the count-derived prefix,
+    * exactly as the Spark plan does.
     * `cos > 0 ⟺ dot > 0` (positive norms; a zero vector fails both
     * sides), so the bucket replay needs only the bit-stable dot
     * fold. */
@@ -1930,7 +1925,7 @@ object Similarity {
     val values = (0 until 24).map { p =>
       s"($p, ${annPlaneComps(p).mkString("[", ", ", "]")}::DOUBLE[])"
     }.mkString("(VALUES ", ", ", ")")
-    s"""WITH np AS (SELECT ${Fns.lshPlanesOracle("graft.ann.planes",
+    s"""WITH np AS (SELECT ${Fns.sqlLshPlanes(
         "(SELECT count(*) FROM embeddings)")} AS np),
        |pl AS (SELECT p, pv FROM $values t(p, pv)
        |       WHERE p < (SELECT np FROM np)),
@@ -2092,7 +2087,7 @@ object Similarity {
 
   /** The full [[ivfBuild]] + probe-cell replay as CTEs: √n-scaled C,
     * md5-hash-ordered seeds (the gate-mode hash — [[ivfBuild]] routes
-    * its seed hash through [[Fns.Md5ModeConf]], so the oracle replays
+    * its seed hash through [[GraftConf.Md5Mode]], so the oracle replays
     * seed choice digit-for-digit), 2 grid-rounded Lloyd passes
     * (`ic1`, `ic2`), the final assignment (`ia2`), and the `nprobe`
     * cells nearest the query (`ipc`). Requires [[sqlEmbPrefix]]. */
@@ -2268,25 +2263,10 @@ object Similarity {
        |FROM short JOIN e USING (vec_id), q
        |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin
 
-  /** `graft.knngraph.nprobe` resolved for oracle interpolation (the
-    * [[graft.operators.TextAnalysis]] `oracleKnob` discipline: the
-    * dumped SQL must use the value the Spark plan reads; ambiguity
-    * across live sessions refuses). */
-  private def knnNprobeOracle: Int = {
-    val sessions =
-      (SparkSession.getActiveSession.toSeq ++
-        SparkSession.getDefaultSession).distinct
-    val vals =
-      sessions.flatMap(_.conf.getOption("graft.knngraph.nprobe")).distinct
-    require(vals.size <= 1,
-      s"graft.knngraph.nprobe is ambiguous at oracle-dump time: $vals — " +
-        "align the conf or dump from a single session")
-    vals.headOption.map(_.toInt).getOrElse(2)
-  }
-
   /** The kNN-graph replay: per-vector top-`nprobe` cells, cell-member
     * candidates, exact-cosine top-3 per probe. */
-  private def sqlKnnGraphIvf: String =
+  private def sqlKnnGraphIvf: String = {
+    val nprobe = GraftConf.KnngraphNprobe.oracle
     s"""WITH $sqlEmbPrefix,
        |$sqlIvfBlock,
        |tc AS (
@@ -2295,7 +2275,7 @@ object Similarity {
        |      row_number() OVER (PARTITION BY e.vec_id
        |        ORDER BY ${Fns.sqlCosine("e.emb", "ic2.cvec")} DESC,
        |          ic2.cid) AS rn
-       |    FROM e CROSS JOIN ic2) WHERE rn <= $knnNprobeOracle),
+       |    FROM e CROSS JOIN ic2) WHERE rn <= $nprobe),
        |cand AS (
        |  SELECT tc.probe_id, a.vec_id FROM tc JOIN ia2 a USING (cid)
        |  WHERE a.vec_id <> tc.probe_id),
@@ -2312,6 +2292,7 @@ object Similarity {
        |  FROM r)
        |SELECT probe_id, neighbor_id, rk, cos_sim FROM rk WHERE rk <= 3
        |ORDER BY probe_id, rk""".stripMargin
+  }
 
   /** The FULL `pca_power_topcomp` replay (round 14 — the last
     * iterative-float rows-only query flips): the exact-integer Gram

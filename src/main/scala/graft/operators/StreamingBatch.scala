@@ -67,8 +67,9 @@ object StreamingBatch {
     val root = graft.ops.BuildOnce.scratchPath(
       "tickrefresh" + Dedup.hashModeTag, d)
     graft.ops.BuildOnce.ensure(root, d) {
-      val flipped = Seq("graft.lex.indexPath",
-        "graft.minhash.oldIndexPath", "graft.simhash.oldIndexPath")
+      val flipped = Seq(graft.ops.GraftConf.LexIndexPath,
+        graft.ops.GraftConf.MinhashOldIndexPath,
+        graft.ops.GraftConf.SimhashOldIndexPath).map(_.key)
       val saved = flipped.map(k => k -> s.conf.getOption(k))
       try {
         val docs = Tables.documents(s, d).select("doc_id", "text")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Fns
+import graft.ops.{Fns, GraftConf}
 import graft.sources.Tables
 
 /** §2E — text analysis over `documents`.
@@ -81,8 +81,7 @@ object TextAnalysis {
     * broadcast into a per-row filter — no shuffle of the corpus, no
     * window; the 100 TB cost is the tokenize scan itself. */
   def samplePpsTokens(s: SparkSession, d: String): DataFrame = {
-    val k = ppsTargetDocs(s) // ONE resolution rule with the oracle
-    require(k >= 1, s"graft.pps.targetDocs out of range: $k")
+    val k = GraftConf.PpsTargetDocs(s)
     val docs = withToks(s, d)
       .select(col("doc_id"), col("source"),
         size(col("toks")).cast("long").as("n_tokens"),
@@ -115,8 +114,7 @@ object TextAnalysis {
     * rows) + one broadcast scalar — the plan is vocabulary-of-sources
     * sized metadata at any corpus size. */
   def mixtureTemperaturePlan(s: SparkSession, d: String): DataFrame = {
-    val budget = tempBudgetTokens(s) // ONE resolution rule, both sides
-    require(budget >= 1, s"tempBudgetTokens out of range: $budget")
+    val budget = GraftConf.TempBudgetTokens(s)
     val src = Tables.documents(s, d)
       .select(col("source"),
         size(Fns.tokens(col("text"))).cast("long").as("nt"))
@@ -282,13 +280,18 @@ object TextAnalysis {
       .orderBy(col("margin_milli"), col("doc_id"))
       .limit(20)
 
+  /** The share of the corpus's tokens [[mixtureTokenBudgetPlan]]
+    * spends, in percent — one constant for the plan and the oracle
+    * text. */
+  private val MixtureBudgetPct = 60L
+
   /** Token-budget WATERFILLING across sources — the mixture planner
     * that answers "we can afford B training tokens; how much of each
     * source?" with the classic fair-allocation rule: find the level L
     * so every source keeps min(tokens, L) and the total just fits B —
     * small sources keep everything, big sources cap at L (the
-    * max-min-fair allocation). B = total · `graft.mixture.budgetPct`
-    * (default 60) div 100, derived in-engine so the oracle replays it.
+    * max-min-fair allocation). B = total · [[MixtureBudgetPct]] div
+    * 100, derived in-engine so the oracle replays it.
     *
     * The level has a closed relational form (no iteration): sort
     * sources by tokens ASC with prefix sums; over segment k the spend
@@ -301,8 +304,6 @@ object TextAnalysis {
     * PER-SOURCE frame — metadata-sized at any corpus scale (sources
     * ≪ docs); the only data-sized work is one token-count aggregate. */
   def mixtureTokenBudgetPlan(s: SparkSession, d: String): DataFrame = {
-    val pct = s.conf.getOption("graft.mixture.budgetPct").fold(60L)(_.toLong)
-    require(pct >= 1 && pct <= 100, s"budgetPct out of range: $pct")
     val w = org.apache.spark.sql.expressions.Window
     val src = Tables.documents(s, d)
       .select(col("source"), size(Fns.tokens(col("text"))).cast("long")
@@ -317,7 +318,7 @@ object TextAnalysis {
     val tot = src.agg(sum("n_tokens").as("total"),
         count(lit(1)).as("n"))
       .select(col("total"), col("n"),
-        expr(s"total * $pct div 100").as("budget"))
+        expr(s"total * $MixtureBudgetPct div 100").as("budget"))
     val level = ord.crossJoin(broadcast(tot))
       .select(col("total"), col("budget"),
         when(col("total") <= col("budget"), col("n_tokens"))
@@ -1215,7 +1216,7 @@ object TextAnalysis {
     * .Dedup]] shingleRowsOf note — without it the whole gram build
     * serializes onto one task).
     *
-    * Mode-routed gram identity ([[Fns.Md5ModeConf]]): every consumer
+    * Mode-routed gram identity ([[GraftConf.Md5Mode]]): every consumer
     * joins/dedups on `h` (hash-agnostic given injectivity); md5 mode
     * also carries the second digest half `h2` so the Bloom probes can
     * derive k positions as (h + i·h2) mod m — the Kirsch–Mitzenheimer
@@ -1226,7 +1227,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(array_distinct(transform(
           Fns.shingles5(Fns.tokens(col("text"))), g =>
-            if (Fns.md5Mode) struct(Fns.md5Hash52(g).as("h"),
+            if (GraftConf.Md5Mode.active) struct(Fns.md5Hash52(g).as("h"),
               Fns.md5Hash52b(g).as("h2"))
             else struct(xxhash64(g).as("h"), lit(0L).as("h2")))))
           .as("gh"))
@@ -1236,7 +1237,7 @@ object TextAnalysis {
     * twin for the regime where even the benchmark 5-gram set is too big
     * to ship as a broadcast hash relation: the benchmark folds into a
     * fixed-size position set (k = 3 seeded xxhash64 probes into an
-    * m = 2²⁰ slot space, `graft.bloom.hashes` / `graft.bloom.bits`) and
+    * m = 2²⁰ slot space, [[BloomHashes]] / [[GraftConf.BloomBits]]) and
     * corpus shingles test membership against it as a pure per-row map
     * lookup — NO join on the corpus side at all, just a broadcast
     * scalar. Entirely `functions` composition (map_from_entries +
@@ -1264,18 +1265,15 @@ object TextAnalysis {
       s" THEN $u - 18446744073709551616::HUGEINT ELSE $u END)::BIGINT"
   }
 
-  /** ONE resolution rule for the Bloom knobs — read by the plan and
-    * interpolated into the oracle at dump time ([[oracleKnob]]). */
-  private def bloomBits(s: SparkSession): Long =
-    s.conf.getOption("graft.bloom.bits").fold(1L << 20)(_.toLong)
-  private def bloomHashes(s: SparkSession): Long =
-    s.conf.getOption("graft.bloom.hashes").fold(3L)(_.toLong)
+  /** Bloom probes per gram — one constant for the plan and the oracle
+    * text. */
+  private val BloomHashes = 3
 
   def bloomDecontaminate(s: SparkSession, d: String): DataFrame = {
     val benchMax = 20L
-    val mSlots = bloomBits(s)
-    val k = bloomHashes(s).toInt
-    // mode-routed probe family ([[Fns.Md5ModeConf]]): md5 mode derives
+    val mSlots = GraftConf.BloomBits(s)
+    val k = BloomHashes
+    // mode-routed probe family ([[GraftConf.Md5Mode]]): md5 mode derives
     // the k slots Kirsch–Mitzenheimer-style from the gram digest's two
     // 52-bit halves — (h + i·h2) mod m, plain BIGINT both engines, so
     // the whole sketch (build → probe → census) replays in DuckDB and
@@ -1284,7 +1282,7 @@ object TextAnalysis {
     def positions(h: org.apache.spark.sql.Column,
         h2: org.apache.spark.sql.Column)
         : Seq[org.apache.spark.sql.Column] =
-      if (Fns.md5Mode)
+      if (GraftConf.Md5Mode.active)
         (0 until k).map(i => pmod(h + lit(i.toLong) * h2, lit(mSlots)))
       else (0 until k).map(i => pmod(xxhash64(h, lit(i)), lit(mSlots)))
     val sh = shingle5Rows(s, d)
@@ -1466,7 +1464,7 @@ object TextAnalysis {
   /** 64-bit fingerprints — a content hash of the full text plus a
     * rolling rotate-XOR hash folded over the token stream (bitwise
     * ops: order-sensitive like a polynomial hash, but no ANSI
-    * overflow). Mode-routed leaf hashes ([[Fns.Md5ModeConf]]):
+    * overflow). Mode-routed leaf hashes ([[GraftConf.Md5Mode]]):
     * xxhash64 + rotate-5 at scale; md5-derived 64-bit hashes +
     * rotate-4 in gate mode — rotating by one hex DIGIT is what lets
     * DuckDB replay the sequential fold without folding: rotation is
@@ -1475,7 +1473,7 @@ object TextAnalysis {
     * rotation + one bit_xor aggregate (✅SQL since round 13). */
   def fingerprint(s: SparkSession, d: String): DataFrame = {
     val (content, roll) =
-      if (Fns.md5Mode)
+      if (GraftConf.Md5Mode.active)
         (Fns.md5Hash64(col("text")),
           aggregate(col("toks"), lit(1125899906842597L),
             (acc, t) => shiftleft(acc, 4)
@@ -1570,31 +1568,6 @@ object TextAnalysis {
     s"[substr($c, 1, i - 1) || substr($c, i + 1, len($c)) " +
       s"for i in generate_series(1, len($c))]"
 
-  /** Resolve a long-valued knob for ORACLE interpolation — the
-    * [[graft.operators.Retrieval]] `mrrNProbesOracle` discipline: the
-    * dumped SQL must use the SAME value the Spark plan reads, and a
-    * JVM with two live sessions holding different values cannot pick
-    * one silently (round-11 advisor finding on the mrr side). */
-  private def oracleKnob(name: String, default: Long,
-      read: SparkSession => Long): Long = {
-    val sessions = (SparkSession.getActiveSession.toSeq ++
-      SparkSession.getDefaultSession).distinct
-    val resolved = sessions.map(read).distinct
-    require(resolved.size <= 1,
-      s"$name is ambiguous at oracle-dump time: the live sessions " +
-        s"resolve ${resolved.mkString(" vs ")} — the dumped oracle " +
-        "SQL would interpolate one value while a Spark plan uses the " +
-        "other; dump from a single session or align the conf")
-    resolved.headOption.getOrElse(default)
-  }
-
-  private def ppsTargetDocs(s: SparkSession): Long =
-    s.conf.getOption("graft.pps.targetDocs").fold(50L)(_.toLong)
-
-  private def tempBudgetTokens(s: SparkSession): Long =
-    s.conf.getOption("graft.mixture.tempBudgetTokens")
-      .fold(1000000L)(_.toLong)
-
   /** A def, not a val: the two knob-bearing oracles interpolate from
     * the live session conf at every dump (the `sqlMrrRanks` rule). */
   def oracles: Map[String, String] = Map(
@@ -1630,10 +1603,10 @@ object TextAnalysis {
     // md5-gate-mode Bloom replay (the Dedup sketch-family rule): the
     // k probe slots derive Kirsch–Mitzenheimer-style from the gram
     // digest's two 52-bit halves, so build → probe → census is plain
-    // integer SQL; m and k interpolate via oracleKnob
+    // integer SQL; m interpolates at dump time (GraftConf's oracle rule)
     "bloom_decontaminate" -> {
-      val m = oracleKnob("graft.bloom.bits", 1L << 20, bloomBits)
-      val k = oracleKnob("graft.bloom.hashes", 3L, bloomHashes)
+      val m = GraftConf.BloomBits.oracle
+      val k = BloomHashes
       s"""WITH t AS (SELECT doc_id, $Toks AS w FROM documents),
          |shl AS (SELECT DISTINCT doc_id,
          |  unnest(${Fns.sqlShingles5("w")}) AS g FROM t),
@@ -2083,7 +2056,7 @@ object TextAnalysis {
          |  FROM src),
          |tot AS (
          |  SELECT sum(n_tokens)::BIGINT AS total, count(*)::BIGINT AS n,
-         |    (sum(n_tokens) * 60 // 100)::BIGINT AS budget
+         |    (sum(n_tokens) * $MixtureBudgetPct // 100)::BIGINT AS budget
          |  FROM src),
          |lv AS (
          |  SELECT max(CASE WHEN total <= budget THEN n_tokens
@@ -2096,8 +2069,8 @@ object TextAnalysis {
          |  (n_tokens > level)::INT AS capped, level AS level_tokens
          |FROM src, lv ORDER BY source""".stripMargin,
     // the target-k knob interpolates from the live session at dump
-    // time ([[oracleKnob]] — the mrr nProbes discipline), so a
-    // non-default graft.pps.targetDocs stays oracle-CHECKABLE. Both
+    // time ([[GraftConf.Knob.oracle]]), so a non-default
+    // graft.pps.targetDocs stays oracle-CHECKABLE. Both
     // sides compare with the SAME one-rounded-multiply double
     // expression — see samplePpsTokens' exactness note.
     "sample_pps_tokens" ->
@@ -2109,14 +2082,13 @@ object TextAnalysis {
          |SELECT doc_id, source, n_tokens, h24
          |FROM t, tot
          |WHERE h24::DOUBLE * w_total::DOUBLE
-         |  < ${oracleKnob("graft.pps.targetDocs", 50L, ppsTargetDocs)}.0
+         |  < ${GraftConf.PpsTargetDocs.oracle}.0
          |    * n_tokens::DOUBLE * 16777216.0
          |ORDER BY doc_id""".stripMargin,
     // the budget knob interpolates the same way; sqrt/floor/micro-
     // scaling mirror the Spark fixed-point pipeline term for term
     "mixture_temperature_plan" -> {
-      val budget = oracleKnob("graft.mixture.tempBudgetTokens",
-        1000000L, tempBudgetTokens)
+      val budget = GraftConf.TempBudgetTokens.oracle
       s"""WITH src AS (
          |  SELECT source, sum(len($Toks))::BIGINT AS n_tokens
          |  FROM documents GROUP BY source

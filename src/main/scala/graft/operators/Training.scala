@@ -782,7 +782,7 @@ object Training {
     // points graft.features.storePath at the persisted — possibly
     // delta-refreshed — store (tag-guarded); unset builds once into
     // scratch (what the DuckDB oracle's hash gate replays)
-    val path = s.conf.getOption("graft.features.storePath") match {
+    val path = graft.ops.GraftConf.FeaturesStorePath(s) match {
       case Some(p) =>
         graft.ops.ArtifactTag.require(s, p, d)
         p

@@ -22,12 +22,9 @@ object Fns {
   val Stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "in", "is", "on", "to", "for", "with")
 
-  /** Conf key selecting the corpus-wide tokenizer mode (see [[tokens]]). */
-  val UnicodeConf = "graft.text.unicode"
-
   /** Word tokens — the tokenizer every text/dedup operator shares. By
     * default ASCII ([[tokensA]]; matches the oracle's `[^a-z]+` split);
-    * setting `graft.text.unicode=true` on the session routes EVERY
+    * setting [[GraftConf.TextUnicode]] on the session routes EVERY
     * caller to [[tokensU]], making Unicode a corpus-wide MODE rather
     * than a single query's behavior — a multilingual corpus flips one
     * conf, and tokenization, shingling, MinHash, and quality scoring
@@ -35,11 +32,7 @@ object Fns {
     * the active session (operators build their columns inside a query
     * method, where one is always active). */
   def tokens(text: Column): Column =
-    if (unicodeMode) tokensU(text) else tokensA(text)
-
-  private def unicodeMode: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption(UnicodeConf)).exists(_.toBoolean)
+    if (GraftConf.TextUnicode.active) tokensU(text) else tokensA(text)
 
   /** ASCII word tokens: lower → split `[^a-z]+` → drop empties. */
   def tokensA(text: Column): Column =
@@ -153,34 +146,9 @@ object Fns {
         s"::BIGINT * ${1L << (4 * (6 - i))}"
     }.mkString("(", " + ", ")")
 
-  /** Conf key selecting the ORACLE-REPLAYABLE hash mode for the sketch
-    * family (MinHash/SimHash signatures, their band keys, and the
-    * shingle-set hashes they verify over). Default OFF = `xxhash64`
-    * leaf hashes + the splitmix64 permutation core — the scale
-    * default: one engine-native 64-bit hash per gram/token, nothing
-    * to parse. ON = md5-derived integer hashes ([[md5Hash52]] /
-    * [[md5Hash64]]) + a universal-family permutation core
-    * ([[graft.plans.UniHash]]) that DuckDB replays digit-for-digit,
-    * making the WHOLE LSH pipeline — signatures → band keys →
-    * candidate join → exact verification — hash-gateable end to end.
-    * [[graft.Verify]] turns this on for the correctness dump (the
-    * driver gate thus checks the md5 pipeline against full SQL
-    * oracles); every other entry point (Bench, Stress, serving)
-    * keeps the scale default, and DedupSpec pins the two modes'
-    * verified pair sets equal on the fixture corpus. Resolved at
-    * plan-construction time from the active session, like
-    * [[UnicodeConf]]. */
-  val Md5ModeConf = "graft.hash.md5Mode"
-
-  /** Whether the active session runs the sketch family in md5 (oracle)
-    * hash mode — see [[Md5ModeConf]]. */
-  def md5Mode: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption(Md5ModeConf)).exists(_.toBoolean)
-
   /** 52-bit content hash (first THIRTEEN md5 hex digits) — the
     * engine-agnostic gram identity for md5-mode shingle sets
-    * ([[Md5ModeConf]]): wide enough that corpus-SF gram collisions are
+    * ([[GraftConf.Md5Mode]]): wide enough that corpus-SF gram collisions are
     * negligible (75k distinct grams → P ≈ 6·10⁻⁷ at sf0.01 — and a
     * collision would fail the oracle gate loudly, never silently),
     * narrow enough that universal-family permutation arithmetic
@@ -247,44 +215,24 @@ object Fns {
   /** Corpus-scaled hyperplane count for sign-LSH bucketing. With p
     * planes a band has 2^p buckets, so expected occupancy is n/2^p — a
     * FIXED p keeps per-band candidate volume quadratic in n. Instead
-    * p = ceil(log2(n / targetBucket)), clamped to [4, 24] and
-    * overridable via `confKey`, holds expected bucket occupancy — hence
-    * per-row candidate work — constant as the corpus grows. The one
-    * driver-side `count()` for n is a metadata-cheap scan. Shared by
-    * `dedup_embedding_lsh` and `ann_lsh_topk` so the two sign-LSH
-    * operators scale by the same rule. */
-  def lshPlanes(s: org.apache.spark.sql.SparkSession, confKey: String,
-      n: => Long, targetBucket: Long = 64L): Int =
-    s.conf.getOption(confKey).map(_.toInt).getOrElse {
-      // INTEGER search for the smallest p with targetBucket·2^p ≥ n —
-      // mathematically ceil(log2(n/targetBucket)), but with no
-      // floating log whose ulp could flip the answer at exact-power
-      // boundaries; that exactness is what lets a DuckDB oracle
-      // replay the plane count from its own count(*) (round 13 —
-      // `ann_lsh_topk` / `dedup_embedding_lsh` hash gating).
-      val nn = math.max(1L, n)
-      var p = 0
-      while (p < 24 && (targetBucket << p) < nn) p += 1
-      math.max(4, p)
-    }
-
-  /** Dump-time resolution of a plane-count knob (the TextAnalysis
-    * `oracleKnob` discipline applied to [[lshPlanes]]): a live
-    * session's explicit conf interpolates as a constant; unset
-    * resolves to the count-derived [[sqlLshPlanes]] integer search
-    * the Spark plan itself uses; ambiguity across live sessions
-    * refuses. Shared by the `ann_lsh_topk` and `dedup_embedding_lsh`
-    * oracles. */
-  def lshPlanesOracle(confKey: String, nExpr: String): String = {
-    val sessions =
-      (org.apache.spark.sql.SparkSession.getActiveSession.toSeq ++
-        org.apache.spark.sql.SparkSession.getDefaultSession).distinct
-    val vals = sessions.flatMap(_.conf.getOption(confKey)).distinct
-    require(vals.size <= 1,
-      s"$confKey is ambiguous at oracle-dump time: $vals — align the " +
-        "conf or dump from a single session")
-    vals.headOption.map(v => s"${v.toInt}")
-      .getOrElse(sqlLshPlanes(nExpr))
+    * p = ceil(log2(n / targetBucket)), clamped to [4, 24], holds
+    * expected bucket occupancy — hence per-row candidate work —
+    * constant as the corpus grows; the caller's one `count()` for n
+    * is a metadata-cheap scan. Shared by
+    * `dedup_embedding_lsh` (which [[GraftConf.LshPlanes]] overrides)
+    * and `ann_lsh_topk` so the two sign-LSH operators scale by the
+    * same rule. */
+  def lshPlanes(n: Long, targetBucket: Long = 64L): Int = {
+    // INTEGER search for the smallest p with targetBucket·2^p ≥ n —
+    // mathematically ceil(log2(n/targetBucket)), but with no
+    // floating log whose ulp could flip the answer at exact-power
+    // boundaries; that exactness is what lets a DuckDB oracle
+    // replay the plane count from its own count(*) (round 13 —
+    // `ann_lsh_topk` / `dedup_embedding_lsh` hash gating).
+    val nn = math.max(1L, n)
+    var p = 0
+    while (p < 24 && (targetBucket << p) < nn) p += 1
+    math.max(4, p)
   }
 
   /** DuckDB SQL scalar mirroring [[lshPlanes]]' integer search, for an

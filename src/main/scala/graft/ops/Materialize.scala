@@ -415,8 +415,28 @@ object Materialize {
     * and the label writer, so a reader's drift refusal always compares
     * against the same keys. */
   private def pairStageProps(s: SparkSession): Map[String, String] = Map(
-    "pair_stage" -> graft.operators.Dedup.candidateStage(s),
-    "max_shingle_df" -> graft.operators.Dedup.maxShingleDf(s).toString)
+    "pair_stage" -> GraftConf.CandidateStage(s),
+    "max_shingle_df" -> GraftConf.MaxShingleDf(s).toString)
+
+  /** The reader side of [[pairStageProps]]: refuses a pair-derived
+    * artifact (`what`) built under another candidate stage, or under
+    * dfcap with another df cap, than this session runs — pairs derived
+    * under a different stage diverge exactly where the cap bites. */
+  private[graft] def requirePairStage(s: SparkSession,
+      props: Map[String, String], what: String): Unit = {
+    val stage = GraftConf.CandidateStage(s)
+    require(props.get("pair_stage").contains(stage),
+      s"$what was built under pair stage " +
+        s"'${props.getOrElse("pair_stage", "<none>")}' but this session " +
+        s"runs '$stage' (${GraftConf.CandidateStage.key}) — rebuild the " +
+        "artifact or match the conf")
+    require(stage != "dfcap" || props.get("max_shingle_df")
+        .contains(GraftConf.MaxShingleDf(s).toString),
+      s"$what was built with maxShingleDf=" +
+        s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
+        s"session caps at ${GraftConf.MaxShingleDf(s)} — a df-cap " +
+        "change changes the pair graph; rebuild")
+  }
 
   /** INCREMENTAL refresh of the pair-graph artifact — the last
     * rebuild-whole cost in the dedup serving story (round-11 verdict
@@ -451,24 +471,10 @@ object Materialize {
       newPath: String): Unit = {
     requireFresh(s, newPath)
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val stage = graft.operators.Dedup.candidateStage(s)
     val (a, deltaPairs) = admit(s, dir, oldPath, Docs, docs,
         "pair-graph artifact", "run the full pairGraph build instead",
-        props => {
-        require(props.get("pair_stage").contains(stage),
-          s"pair-graph artifact at $oldPath was built under pair stage " +
-            s"'${props.getOrElse("pair_stage", "<none>")}' but this " +
-            s"session runs '$stage' (graft.dedup.candidateStage) — a " +
-            "delta under a different stage diverges from a rebuild; " +
-            "rebuild the artifact or match the conf")
-        require(stage != "dfcap"
-            || props.get("max_shingle_df")
-                 .contains(graft.operators.Dedup.maxShingleDf(s).toString),
-          s"pair-graph artifact at $oldPath was built with maxShingleDf=" +
-            s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
-            s"session caps at ${graft.operators.Dedup.maxShingleDf(s)} " +
-            "— a df-cap change changes the pair graph; rebuild")
-      })(graft.operators.Dedup.deltaPairGraph(s, dir, _))
+        requirePairStage(s, _, s"pair-graph artifact at $oldPath"))(
+      graft.operators.Dedup.deltaPairGraph(s, dir, _))
     pairsPart(newPath, s.read.parquet(oldPath)
       .select("a_id", "b_id", "inter", "na", "nb").unionAll(deltaPairs))
     seal(s, newPath, dir, a.next ++ pairStageProps(s))
@@ -563,17 +569,6 @@ object Materialize {
     (r.getLong(0), xorAt(r, 1))
   }
 
-  /** The [[graft.operators.Dedup]] `graft.cc.trustOldContent`
-    * downgrade, generalized to every refresh writer: a deployment on
-    * an IMMUTABLE store may skip the below-cut content hash (the one
-    * corpus-proportional md5 in a refresh) and keep only the count
-    * guard — catches backfill and dropped rows, NOT 1:1 substitution
-    * or in-place edits, which an immutable store rules out by
-    * construction. Default off: the checksum replay is the guard that
-    * makes a refreshed artifact trustworthy on a mutable store. */
-  private def trustOldContent(s: SparkSession): Boolean =
-    s.conf.getOption("graft.artifact.trustOldContent").contains("true")
-
   /** An admitted refresh: the parent's props and the new generation's
     * provenance (parent ⊕ batch). */
   private final case class Admitted(parent: Map[String, String],
@@ -593,7 +588,7 @@ object Materialize {
     * nothing, so a refused admission still leaves no file behind.
     * ONE conditional aggregate over `frame` serves both the guard and
     * the new sidecar: the below-cut count and xor (count only under
-    * [[trustOldContent]]) must equal the parent's recorded facts, and
+    * [[GraftConf.TrustOldContent]]) must equal the parent's recorded facts, and
     * the batch's (≥ cut) count, xor and max id merge with them
     * additively — n adds, xor XORs, max maxes — into the next
     * generation's provenance. Sound because the corpus is the disjoint
@@ -616,7 +611,7 @@ object Materialize {
       s"$what at $oldPath carries no ${k.max} provenance — an empty or " +
         s"pre-provenance artifact has no refresh mode; $remedy")
     val cut = props(k.max).toLong + 1L
-    val trust = trustOldContent(s)
+    val trust = GraftConf.TrustOldContent(s)
     val (id, h) = (col(k.id), expr(k.hash))
     val (below, batch) = (id < cut, id >= cut)
     var r: org.apache.spark.sql.Row = null
@@ -672,7 +667,7 @@ object Materialize {
     // labeled. Essentially free — the (n, xor) aggregate above is
     // computed for the props sidecar anyway.
     if (guardPairs)
-      s.conf.getOption("graft.dedup.pairsPath").foreach { pp =>
+      GraftConf.PairsPath(s).foreach { pp =>
         val pairProps = ArtifactTag.readProps(s, pp)
         ArtifactTag.requireProvVersion(pairProps, pp)
         require(pairProps.get("n_docs").contains(n.toString)

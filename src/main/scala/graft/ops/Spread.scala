@@ -55,12 +55,9 @@ import org.apache.spark.sql.DataFrame
   */
 object Spread {
 
-  /** Target-partition override (0 disables spreading entirely). */
-  val PartsConf = "graft.scan.spreadParts"
-
   def apply(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val target = s.conf.getOption(PartsConf).map(_.toInt)
+    val target = GraftConf.SpreadParts(s)
       .getOrElse(s.sparkContext.defaultParallelism)
     if (target <= 1) df
     else if (df.rdd.getNumPartitions >= target) df

@@ -31,7 +31,7 @@ object Mix64 {
 }
 
 /** The md5-mode permutation family (`graft.hash.md5Mode` — see
-  * [[graft.ops.Fns.Md5ModeConf]]): h_i(x) = (A_i·(x mod P) + B_i) mod
+  * [[graft.ops.GraftConf.Md5Mode]]): h_i(x) = (A_i·(x mod P) + B_i) mod
   * P over the Mersenne prime P = 2³¹−1 — the classic universal family,
   * chosen because every step is plain non-overflowing BIGINT
   * arithmetic on BOTH engines (A_i < 2³¹, x mod P < 2³¹ ⇒ products

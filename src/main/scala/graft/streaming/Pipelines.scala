@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.GraftConf
 
 /** Structured Streaming pipelines (the streaming side of §2G).
   *
@@ -221,11 +222,12 @@ object Pipelines {
     * a tick IS the previous cycle, continuously. */
   private val DocFamilies: Seq[(String,
       (SparkSession, String, String, String) => Unit, String)] = Seq(
-    ("lex", graft.ops.Materialize.lexicalIndexAppend, "graft.lex.indexPath"),
+    ("lex", graft.ops.Materialize.lexicalIndexAppend,
+      GraftConf.LexIndexPath.key),
     ("minhash", graft.ops.Materialize.minhashIndexAppend,
-      "graft.minhash.oldIndexPath"),
+      GraftConf.MinhashOldIndexPath.key),
     ("simhash", graft.ops.Materialize.simhashIndexAppend,
-      "graft.simhash.oldIndexPath"))
+      GraftConf.SimhashOldIndexPath.key))
 
   /** Initialize the doc-side refresh run: one FULL generation (g0)
     * per family over the corpus as it stands, serving confs pointed
@@ -371,7 +373,7 @@ object Pipelines {
     val st = new RefreshState(s, dir, root)
     graft.ops.Materialize.featureStore(s, dir, s"$root/features-g0")
     st.flip("features", s"$root/features-g0",
-      Some("graft.features.storePath"))
+      Some(GraftConf.FeaturesStorePath.key))
     st
   }
 
@@ -400,7 +402,7 @@ object Pipelines {
       }
       appendIdempotent(st, "features",
         graft.ops.Materialize.featureStoreAppend,
-        Some("graft.features.storePath"), batchId)
+        Some(GraftConf.FeaturesStorePath.key), batchId)
     }
   }
 

@@ -242,7 +242,7 @@ class ApproxSpec extends SparkSpec {
     // silently diverge between modes.
     val defProf = Relational.tableProfileApprox(spark, sf0001).collect()
       .map(r => r.getString(0) -> r).toMap
-    val m5 = withConf(graft.ops.Fns.Md5ModeConf -> "true") {
+    val m5 = withConf(graft.ops.GraftConf.Md5Mode.key -> "true") {
       val m5Prof = Relational.tableProfileApprox(spark, sf0001).collect()
       // IVF under the gate: the mode-tagged artifact must serve the
       // md5-mode build — from-index ≡ in-query in gate mode too
@@ -748,16 +748,15 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("sign-LSH plane count scales with corpus size, conf-overridable") {
-    import graft.ops.Fns
-    def planes(n: Long) = Fns.lshPlanes(spark, "graft.test.planes", n)
+    import graft.ops.{Fns, GraftConf}
+    def planes(n: Long) = GraftConf.LshPlanes(spark).getOrElse(Fns.lshPlanes(n))
     assert(planes(500L) === 4) // test-SF corpora: clamped floor
     assert(planes(1000000L) === 14) // 1M rows → occupancy stays ~64
     assert(planes(1000000000L) === 24) // clamp ceiling at 1G rows
-    spark.conf.set("graft.test.planes", "7")
-    try assert(planes(1000000000L) === 7) // explicit override wins
-    finally spark.conf.unset("graft.test.planes")
-    // both sign-LSH operators use this same rule (compile-time check
-    // that the conf keys stay distinct per operator)
+    withConf(GraftConf.LshPlanes.key -> "7") {
+      assert(planes(1000000000L) === 7) // explicit override wins
+    }
+    // both sign-LSH operators use this same rule
     val lshRecall = {
       val exact = graft.operators.Similarity
         .annBruteforce(spark, sf0001).collect().map(_.getLong(0)).toSet

@@ -101,7 +101,7 @@ class CodegenGateSpec extends SparkSpec {
     val md5Keys = Seq("dedup_minhash_lsh", "dedup_simhash",
       "dedup_source_minhash", "bloom_decontaminate",
       "text_fingerprint", "mm_feature_extract")
-    withConf(graft.ops.Fns.Md5ModeConf -> "true") {
+    withConf(graft.ops.GraftConf.Md5Mode.key -> "true") {
       strict {
         val failures = md5Keys.flatMap { name =>
           try { SparkEntry.queries(name)(spark, sf0001).count(); None }

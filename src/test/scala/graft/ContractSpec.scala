@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - §2 key set == `SparkEntry.queries.keySet` (both directions);
   *  - rows marked ✅SQL == `SparkEntry.oracleSql.keySet` (a ✅ row
   *    without an oracle is an unchecked claim; an oracle without a ✅
-  *    mark under-sells a checked one).
+  *    mark under-sells a checked one);
+  *  - README's knob list == [[graft.ops.GraftConf.all]], and no other
+  *    source names a `graft.*` key.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -96,6 +98,48 @@ class ContractSpec extends AnyFunSuite {
     assert(last.group(3).toInt ===
       SparkEntry.queries.size - SparkEntry.oracleSql.size,
       "latest §7x narrative rows-only count != queries − oracles")
+  }
+
+  test("README knob list == the GraftConf registry, defaults and ranges " +
+      "included") {
+    val readme = {
+      val src = scala.io.Source.fromFile("README.md", "UTF-8")
+      try src.getLines().toVector finally src.close()
+    }
+    val Item = """- `(graft\.[^`]+)` = .*""".r
+    val lines = readme.dropWhile(!_.startsWith("Knobs (Spark conf)"))
+      .takeWhile(!_.startsWith("## "))
+      .collect { case l @ Item(key) => key -> l }
+    val keys = lines.map(_._1)
+    assert(keys.distinct.size === keys.size, s"README lists a knob twice")
+    val registry = graft.ops.GraftConf.all.map(_.key).toSet
+    assert(keys.toSet === registry,
+      s"README only: ${(keys.toSet -- registry).mkString(", ")}; " +
+        s"registry only: ${(registry -- keys.toSet).mkString(", ")}")
+    graft.ops.GraftConf.all.foreach { k =>
+      val line = lines.toMap.apply(k.key)
+      assert(line.startsWith(s"- `${k.key}` = ${k.defaultText} (${k.range})"),
+        s"README default or range drifted for ${k.key}: $line")
+    }
+  }
+
+  test("no source outside the registry names a graft.* conf key") {
+    // a string literal that starts with a conf-shaped key; class
+    // references (`graft.plans.JobHistoryAttrs…`) are capitalized
+    val Key = "\"graft\\.[a-z]+\\.[a-z]".r
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.toString.endsWith(".scala")
+        && p.getFileName.toString != "GraftConf.scala")
+      .flatMap { p =>
+        val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+        try src.getLines().zipWithIndex.toVector
+          .filter { case (l, _) => Key.findFirstIn(l).isDefined }
+          .map { case (l, i) => s"$p:${i + 1}: ${l.trim}" }
+        finally src.close()
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("§2 ✅SQL markers == SparkEntry.oracleSql key set") {

@@ -626,7 +626,7 @@ class DedupSpec extends SparkSpec {
       .groupBy(_._1).values.filter(_.length > 1)
       .flatMap(_.map(_._2).sorted.combinations(2).map(p => (p(0), p(1))))
       .toSet
-    withConf(graft.ops.Fns.Md5ModeConf -> "true") {
+    withConf(graft.ops.GraftConf.Md5Mode.key -> "true") {
       // MinHash: verification is EXACT Jaccard on candidates, so the
       // two modes can only differ by a banding recall miss
       // (≈ 1e-8 at j ≥ 0.5) — pin full equality on the fixture
@@ -720,7 +720,7 @@ class DedupSpec extends SparkSpec {
     // midpoint cut; with graft.{minhash,simhash}.oldIndexPath set,
     // the ARTIFACT defines the cut and the dumped SQL would be a
     // false oracle — building the oracle map must refuse loudly
-    // rather than emit it (the oracleKnob ambiguity discipline).
+    // rather than emit it (GraftConf's dump-time rule).
     withConf("graft.minhash.oldIndexPath" -> "/tmp/nowhere") {
       val e = intercept[IllegalArgumentException] {
         SparkEntry.oracleSql
@@ -855,9 +855,10 @@ class DedupSpec extends SparkSpec {
         Dedup.queries("cc_incremental")(spark, dir2).collect()
       }
       assert(e2.getMessage.contains("checksum"), e2.getMessage)
-      // with graft.cc.trustOldContent=true the downgraded id-level
-      // guard accepts the substitution (disclosed: it cannot see it)
-      withConf("graft.cc.trustOldContent" -> "true") {
+      // with graft.artifact.trustOldContent=true the downgraded
+      // id-level guard accepts the substitution (disclosed: it cannot
+      // see it)
+      withConf("graft.artifact.trustOldContent" -> "true") {
         assert(Dedup.queries("cc_incremental")(spark, dir2).count() === 8)
       }
     } finally spark.conf.unset("graft.cc.oldLabelsPath")

@@ -439,8 +439,8 @@ class MaterializeSpec extends SparkSpec {
       Materialize.lexicalIndexDelta(spark, dir, oldP, s"$base/n4")
     }
     assert(e4.getMessage.contains("write-once"), e4.getMessage)
-    // immutable-store downgrade (graft.artifact.trustOldContent, the
-    // graft.cc.trustOldContent precedent): the content replay is
+    // immutable-store downgrade (graft.artifact.trustOldContent, which
+    // cc_incremental's artifact mode honors too): the content replay is
     // skipped — a same-count in-place edit passes (the documented
     // trade an immutable store rules out by construction) but a count
     // drift still refuses

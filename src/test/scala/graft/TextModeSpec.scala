@@ -14,9 +14,9 @@ import graft.ops.Fns
 class TextModeSpec extends SparkSpec {
 
   private def withUnicode[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(Fns.UnicodeConf, on.toString)
+    spark.conf.set(graft.ops.GraftConf.TextUnicode.key, on.toString)
     try body
-    finally spark.conf.unset(Fns.UnicodeConf)
+    finally spark.conf.unset(graft.ops.GraftConf.TextUnicode.key)
   }
 
   test("mode routing: accented text fragments in ASCII, stays whole in Unicode") {
