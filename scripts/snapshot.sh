@@ -18,14 +18,15 @@
 # ToolsSpec covers the dev mains' shared scaffolding (Profile's
 # per-stage counts, the plan census, the median-of-3 failure rule);
 # GraftConfSpec checks every conf knob's parse and range refusal and the
-# oracle-dump rule across two live sessions.
+# oracle-dump rule across two live sessions; CcPathsSpec pins the CC
+# loop's driver-side and distributed paths row-identical.
 # Exit is nonzero on any failure — wire it in front of the commit and
 # a stale contract cannot land.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec' \
+if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec graft.CcPathsSpec' \
     > /tmp/snapshot_gate.log 2>&1; then
-  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf green)"
+  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf + CcPaths green)"
 else
   tail -40 /tmp/snapshot_gate.log >&2
   echo "snapshot gate FAILED — contract drift or a broken query; do NOT commit" >&2

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.chaining._
 
-import org.apache.spark.{GraftBus, SparkContext}
+import org.apache.spark.{GraftBlocks, GraftBus, SparkContext}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,11 +54,10 @@ private[graft] object Tool {
     * — measured as 3-5× wall inflation with UNCHANGED shuffle bytes
     * (the giveaway that it was the harness, not the operator). Queries
     * are independent jobs in production; drop leftover state between
-    * them. */
+    * them, without `RDD.unpersist`'s WARN per checkpointed RDD. */
   def reset(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    GraftBlocks.releaseAll(spark.sparkContext)
   }
 
   /** One stage: summed task time, task count, wall (submission →

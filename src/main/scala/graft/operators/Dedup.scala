@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.GraftBlocks
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.ops.{Fns, GraftConf}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
@@ -342,12 +344,12 @@ object Dedup {
         // checkpoint in the same job (the ccLoop round-13 trim)
         .localCheckpoint(eager = false)
       changed = joined.filter(col("h") =!= col("h2")).count()
-      prev.unpersist()
+      GraftBlocks.release(prev)
       prev = joined
       h = joined.select(col("doc_id"), col("h2").as("h"))
       iter += 1
     }
-    edges.unpersist()
+    GraftBlocks.release(edges)
     if (changed > 0)
       throw new IllegalStateException(
         s"k-core h-index iteration did not converge in $maxIters " +
@@ -1354,20 +1356,22 @@ object Dedup {
   }
 
   /** Near-dup clustering: connected components over the verified
-    * Jaccard-pair graph via min-label propagation WITH pointer jumping
-    * (label ← label(label) each round), so convergence is
+    * Jaccard-pair graph ([[ccLoop]]). A pair graph of at most
+    * [[CcMaxEdges]] edges is collected once and labeled by a driver-side
+    * union-find; a larger one runs min-label propagation WITH pointer
+    * jumping (label ← label(label) each round), so convergence is
     * O(log component-diameter) rounds — a 20-hop chain needs ~5 rounds,
-    * not 20. Per round: one co-partitioned edge⋈label join + groupBy,
-    * then the jump join; ONE action (the convergence count reads the
-    * persisted round output directly — the old label rides along in an
-    * `old` column, so nothing is executed twice). Lineage is truncated
-    * with `localCheckpoint` every round (swap for a reliable
-    * `checkpoint` dir on a multi-executor cluster) so the logical plan
-    * stays bounded however many rounds run. Non-convergence within
-    * `graft.cc.maxIters` (default 50) throws — a silently split
-    * component must never look like a result. Output: every doc with
-    * its component root (min doc_id reachable) and a survivor flag
-    * (root keeps, rest drop). */
+    * not 20. Per distributed round: one co-partitioned edge⋈label join
+    * + groupBy, then the jump join; ONE action (the convergence count
+    * reads the persisted round output directly — the old label rides
+    * along in an `old` column, so nothing is executed twice). Lineage
+    * is truncated with `localCheckpoint` every round (swap for a
+    * reliable `checkpoint` dir on a multi-executor cluster) so the
+    * logical plan stays bounded however many rounds run.
+    * Non-convergence within `graft.cc.maxIters` (default 50) rounds
+    * throws — a silently split component must never look like a
+    * result. Output: every doc with its component root (min doc_id
+    * reachable) and a survivor flag (root keeps, rest drop). */
   def clusters(s: SparkSession, d: String): DataFrame =
     clusterLabels(s, d)
       .select(col("doc_id"), col("cluster_id"),
@@ -1381,12 +1385,11 @@ object Dedup {
     *
     *  - `graft.cc.labelsPath` SET → serving mode: ONE scan of the
     *    [[graft.ops.Materialize.ccLabels]] artifact at that path. A
-    *    nightly pipeline pays the pointer-jumping loop once at
-    *    refresh; every downstream consumer in the same run then reads
-    *    doc_id-sorted parquet instead of re-running O(log diameter)
-    *    join rounds each (at sf0.1 the loop dominates all four
-    *    queries' wall time; at 100 TB it is the difference between
-    *    one CC job and four).
+    *    nightly pipeline pays the pair stage and the CC labeling
+    *    once at refresh; every downstream consumer in the same run
+    *    then reads doc_id-sorted parquet instead of re-deriving both
+    *    (at 100 TB, where the labeling runs O(log diameter) join
+    *    rounds, it is the difference between one CC job and four).
     *  - unset → oracle mode: the in-query loop over the verified
     *    near-dup graph (hash-gated against the recursive-CTE
     *    closure).
@@ -1528,22 +1531,111 @@ object Dedup {
       .orderBy("a_id", "b_id")
   }
 
-  /** [[clusters]]' min-label + pointer-jump loop over an explicit
-    * (nodes, a_id<b_id pairs) graph — (doc_id, label) out, label = min
-    * id reachable. `nodes` must contain every pair endpoint (the jump
-    * self-join is total only then). Package-private: [[ccIncremental]]
-    * runs it twice (old subgraph; contracted delta graph). */
+  /** Edge rows up to which [[ccLoop]] labels on the driver: 2^20
+    * (a_id, b_id) pairs are ~32 MB of primitive longs (the endpoints
+    * and their sorted copy), and none of it, nor the Row copy
+    * collected through [[graft.ops.Bounded]], outlives the call — the
+    * labels leave as a local relation of the non-root endpoints. */
+  private[graft] val CcMaxEdges = 1 << 20
+
+  /** The `localBound` every [[ccLoop]] call runs under by default:
+    * [[CcMaxEdges]]. Specs rebind it around a whole query
+    * (`ccBound.withValue(-1)`) to run the query's loops distributed and
+    * compare the two paths row for row; nothing else rebinds it. */
+  private[graft] val ccBound = new scala.util.DynamicVariable(CcMaxEdges)
+
+  /** [[clusters]]' connected components over an explicit (nodes,
+    * a_id<b_id pairs) graph — (doc_id, label) out, one row per distinct
+    * node, label = min id reachable. `nodes` must contain every pair
+    * endpoint. The pair frame is materialized once and collected
+    * through [[graft.ops.Bounded]]: within `localBound` edges, a
+    * min-root union-find runs on the driver ([[localLabels]]) — no
+    * job per round; above it, the distributed pointer-jumping rounds
+    * ([[ccRounds]]) run from the same materialized pairs, so the pair
+    * stage never runs twice. Min-id labels are unique, so the two
+    * paths are row-identical (CcPathsSpec pins them on the same graphs).
+    * Package-private: [[ccIncremental]] runs it twice (old subgraph;
+    * contracted delta graph), and specs force the distributed path
+    * with a negative `localBound` (0 still labels an empty edge set
+    * locally). */
   private[graft] def ccLoop(nodes: DataFrame, pairs: DataFrame,
+      maxIters: Int, localBound: Int = ccBound.value): DataFrame = {
+    val mat = pairs.select("a_id", "b_id").localCheckpoint()
+    graft.ops.Bounded.collect(mat, localBound) match {
+      case Some(edges) =>
+        GraftBlocks.release(mat)
+        localLabels(nodes, edges)
+      case None => ccRounds(nodes, mat, maxIters)
+    }
+  }
+
+  /** Min-root union-find over collected (a_id, b_id) rows, joined back
+    * onto `distinct(nodes)`. Endpoints are sorted and deduplicated, so
+    * an id's index order is its id order and linking the larger root
+    * under the smaller one keeps every root the component's min id.
+    * Only non-root endpoints become label rows — a root or an
+    * edge-free node labels itself through the `coalesce` — and they
+    * enter the plan as a broadcast local relation. */
+  private def localLabels(nodes: DataFrame, edges: Array[Row]): DataFrame = {
+    val n = edges.length
+    val ends = new Array[Long](2 * n)
+    var i = 0
+    while (i < n) {
+      ends(2 * i) = edges(i).getLong(0)
+      ends(2 * i + 1) = edges(i).getLong(1)
+      i += 1
+    }
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var m = 0
+    i = 0
+    while (i < ids.length) {
+      if (m == 0 || ids(m - 1) != ids(i)) { ids(m) = ids(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    i = 0
+    while (i < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, m, ends(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, m, ends(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    val roots = new java.util.ArrayList[Row]()
+    i = 0
+    while (i < m) {
+      val r = find(i)
+      if (r != i) roots.add(Row(ids(i), ids(r)))
+      i += 1
+    }
+    val labels = nodes.sparkSession.createDataFrame(roots, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("root", LongType, nullable = false))))
+    nodes.select("doc_id").distinct()
+      .join(broadcast(labels), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("label"))
+  }
+
+  /** [[ccLoop]]'s distributed path: min-label + pointer-jump rounds over
+    * the materialized pair checkpoint `mat`, which it releases once the
+    * edge table is built. */
+  private def ccRounds(nodes: DataFrame, mat: DataFrame,
       maxIters: Int): DataFrame = {
     // localCheckpoint (not a mere persist): it materializes AND truncates
     // the logical plan to a scan, so the per-round plan stays O(1) —
     // otherwise each round embeds the full upstream pipeline and the jump
     // self-join TRIPLES the tree per round (exponential planning blowup)
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
+    val edges = mat
+      .unionAll(mat.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .toDF("src", "dst")
       .repartition(col("src")) // co-partition with the per-round join key
       .localCheckpoint()
+    GraftBlocks.release(mat)
     // Round state: (doc_id, label, fresh). `fresh` marks nodes whose
     // label changed last round — the FRONTIER (round 14: only a node
     // whose label CHANGED last round can propagate new information;
@@ -1604,17 +1696,17 @@ object Dedup {
       // computed once here and serves as convergence predicate AND
       // next round's frontier (jump-moved nodes included — their
       // out-edges must re-fire).
-      val mat = next
+      val step = next
         .select(col("doc_id"), col("label"),
           (col("label") =!= col("old")).as("fresh"))
         .localCheckpoint(eager = false)
-      changed = mat.filter(col("fresh")).count()
-      if (cached != null) cached.unpersist()
-      cached = mat
-      state = mat
+      changed = step.filter(col("fresh")).count()
+      if (cached != null) GraftBlocks.release(cached)
+      cached = step
+      state = step
       iter += 1
     }
-    edges.unpersist()
+    GraftBlocks.release(edges)
     if (changed > 0)
       throw new IllegalStateException(
         s"connected-components did not converge in $maxIters rounds " +

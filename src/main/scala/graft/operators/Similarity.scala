@@ -64,7 +64,9 @@ object Similarity {
     * away). Neighborhood = cosine ≥ 0.35; CORE = ≥ 2 neighbors
     * (minPts 3 counting the point itself, the Ester et al. 1996
     * default); clusters = connected components of the core-core graph
-    * (min-vec_id labels via [[Dedup.ccLoop]]'s pointer-jumping rounds);
+    * (min-vec_id labels via [[Dedup.ccLoop]]: a driver-side union-find
+    * within [[Dedup.CcMaxEdges]] core edges, pointer-jumping rounds
+    * above);
     * BORDER = non-core adjacent to ≥ 1 core, deterministically joined
     * to the smallest adjacent core label; everything else is noise
     * (cluster −1). Output: one row per vector (role, cluster).
@@ -84,8 +86,8 @@ object Similarity {
     * plane count — ε = 0.35 is a WIDE neighborhood, θ ≈ 69.5°, so
     * per-band collision is 0.614^planes and deployments keep planes
     * small: DedupSpec pins the fixture recall and the ⊆-of-exact
-    * invariant). The CC loop is already the O(log diameter)
-    * pointer-jumping path; degree/border stages are one explode +
+    * invariant). Above the edge bound the CC loop is the O(log
+    * diameter) pointer-jumping path; degree/border stages are one explode +
     * key-shuffles, linear in edges. */
   def clusterDbscan(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)

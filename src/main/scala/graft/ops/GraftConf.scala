@@ -140,7 +140,8 @@ private[graft] object GraftConf {
   val BruteforceMaxRows = long("graft.bruteforce.maxRows", 100000L,
     "the all-pairs oracle baselines throw above this many rows")
   val CcMaxIters = int("graft.cc.maxIters", 50, 1,
-    "connected-components round cap; throws on non-convergence")
+    "connected-components round cap on the distributed path (pair graphs " +
+      "above 2^20 edges); throws on non-convergence")
   val PagerankIters = int("graft.pagerank.iters", 3, 1,
     "power-iteration rounds; raise for converged values on deep chains (> 3 " +
       "truncates lineage per round)")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -161,33 +162,61 @@ class DedupSpec extends SparkSpec {
       "every verified pair must be a prefix candidate (completeness)")
   }
 
-  test("CC pointer jumping converges on a 30-doc chain in few rounds") {
-    // doc i = 12 consecutive words of a rolling vocabulary: consecutive
-    // docs share 9/11 shingles (jaccard ≥ 0.5 up to distance 3) → one
-    // 30-doc component with ~10-hop diameter
+  /** The 30-doc chain: doc i = 12 consecutive words of a rolling
+    * vocabulary, so consecutive docs share 9/11 shingles (jaccard ≥ 0.5
+    * up to distance 3) → one 30-doc component with ~10-hop diameter. */
+  private def chainDir(): String = {
     val words = (0 until 45).map(i => "w" + alpha(i))
-    val texts = (0 until 30).map(i => words.slice(i, i + 12).mkString(" "))
-    val dir = docsDir(texts)
+    docsDir((0 until 30).map(i => words.slice(i, i + 12).mkString(" ")))
+  }
+
+  /** [[Dedup.ccLoop]] forced onto its distributed rounds over the
+    * corpus's verified pair graph — the round cap only binds there. */
+  private def distributedCc(dir: String, maxIters: Int): DataFrame =
+    Dedup.ccLoop(graft.sources.Tables.documents(spark, dir).select("doc_id"),
+      Dedup.verifiedPairs(spark, dir).select("a_id", "b_id"), maxIters,
+      localBound = -1)
+
+  test("CC pointer jumping converges on a 30-doc chain in few rounds") {
     // 6 rounds suffice only because of the label(label) jump (one-hop
     // propagation needs ~diameter rounds)
-    withConf("graft.cc.maxIters" -> "6") {
-      val out = Dedup.clusters(spark, dir).collect()
-      assert(out.length === 30)
-      assert(out.forall(_.getLong(1) === 0L), "all docs in root-0 cluster")
-      assert(out.count(_.getInt(2) === 1) === 1)
-    }
+    val out = distributedCc(chainDir(), 6).collect()
+    assert(out.length === 30)
+    assert(out.forall(_.getLong(1) === 0L), "all docs in root-0 cluster")
+    assert(out.count(r => r.getLong(0) === r.getLong(1)) === 1)
   }
 
   test("CC fails loudly when the iteration cap is too low") {
-    val words = (0 until 45).map(i => "w" + alpha(i))
-    val texts = (0 until 30).map(i => words.slice(i, i + 12).mkString(" "))
-    val dir = docsDir(texts)
-    withConf("graft.cc.maxIters" -> "1") {
-      val e = intercept[IllegalStateException] {
-        Dedup.clusters(spark, dir).collect()
-      }
-      assert(e.getMessage.contains("did not converge"))
+    val e = intercept[IllegalStateException] {
+      distributedCc(chainDir(), 1).collect()
     }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("the CC loop launches no job per round: a 2-doc graph and the " +
+      "30-doc chain take the same number of jobs") {
+    val pair = docsDir(Seq("alpha beta gamma delta epsilon zeta eta",
+      "alpha beta gamma delta epsilon zeta theta"))
+    val chain = chainDir()
+    val listener = Tool.listener(spark)
+    try {
+      // the corpus and pair stages run first, off the count: how many
+      // jobs they take depends on the corpus, not on the loop
+      def jobs(dir: String, localBound: Int): Int = {
+        val nodes = graft.sources.Tables.documents(spark, dir)
+          .select("doc_id").localCheckpoint()
+        val pairs = Dedup.verifiedPairs(spark, dir).select("a_id", "b_id")
+          .localCheckpoint()
+        listener.measure(spark)(
+          Dedup.ccLoop(nodes, pairs, 50, localBound).collect())._3.jobs
+      }
+      val (nPair, nChain) =
+        (jobs(pair, Dedup.CcMaxEdges), jobs(chain, Dedup.CcMaxEdges))
+      assert(nPair === nChain, s"2 docs: $nPair jobs, 30-doc chain: $nChain")
+      // the count does see rounds: the distributed loop needs more of
+      // them on the chain
+      assert(jobs(chain, -1) > jobs(pair, -1))
+    } finally listener.close()
   }
 
   test("bestSurvivor keeps token-less docs with the default −3000 logit") {
