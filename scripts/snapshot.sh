@@ -19,14 +19,16 @@
 # per-stage counts, the plan census, the median-of-3 failure rule);
 # GraftConfSpec checks every conf knob's parse and range refusal and the
 # oracle-dump rule across two live sessions; CcPathsSpec pins the CC
-# loop's driver-side and distributed paths row-identical.
+# loop's driver-side and distributed paths row-identical; ParquetReadSpec
+# pins the one-footer parquet reader to Spark's inferred schemas, with
+# no job launched while frames are constructed.
 # Exit is nonzero on any failure — wire it in front of the commit and
 # a stale contract cannot land.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec graft.CcPathsSpec' \
+if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec graft.CcPathsSpec graft.ParquetReadSpec' \
     > /tmp/snapshot_gate.log 2>&1; then
-  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf + CcPaths green)"
+  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf + CcPaths + ParquetRead green)"
 else
   tail -40 /tmp/snapshot_gate.log >&2
   echo "snapshot gate FAILED — contract drift or a broken query; do NOT commit" >&2

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{GraftConf, Materialize}
+import graft.ops.{GraftConf, Materialize, Parquet}
 
 /** Scale-stress harness for the dedup/ANN suite: synthesizes a K×-scaled
   * corpus from the sf0.1 testdata and measures the operators on it, so
@@ -62,7 +62,7 @@ object Stress {
     // a writer receipt: times `write`, then counts the rows it wrote
     def measureWrite(tag: String, key: String, rows: String)(
         write: => Unit): Unit =
-      measure(tag, key) { write; spark.read.parquet(rows).count() }
+      measure(tag, key) { write; Parquet.read(spark, rows).count() }
     val dir = Tool.scaledCorpus(spark, sfDir, k)
 
     // optional 3rd arg: comma-separated subset (delta sweeps for newly
@@ -437,7 +437,7 @@ object Stress {
     // a speedup for different answers must fail loudly here, not in
     // some later consumer)
     def fileChecksum(path: String, cols: Seq[String]): Long =
-      checksum(spark.read.parquet(path), cols)
+      checksum(Parquet.read(spark, path), cols)
     val pairCols = Seq("a_id", "b_id", "inter", "na", "nb")
     val postCols = Seq("tok", "doc_id", "dl", "tf")
     val snapCols = Seq("user_id", "day", "n_events_prior",

@@ -4,7 +4,7 @@ import org.apache.spark.GraftBlocks
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.ops.{Fns, GraftConf}
+import graft.ops.{Fns, GraftConf, Parquet}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -1094,7 +1094,7 @@ object Dedup {
   def materializeSurvivors(s: SparkSession, d: String): DataFrame = {
     val path = graft.ops.Scratch.dir("survivors")
     graft.ops.Materialize.survivorCorpus(s, d, path)
-    s.read.parquet(path)
+    Parquet.read(s, path)
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").as("sum_chars"),
@@ -1405,7 +1405,7 @@ object Dedup {
         // corpus A's labels (the tag travels WITH the artifact, so
         // the check holds across JVMs, not just within one process)
         graft.ops.ArtifactTag.require(s, p, d)
-        s.read.parquet(p).select("doc_id", "cluster_id")
+        Parquet.read(s, p).select("doc_id", "cluster_id")
       case None => loopLabels(s, d)
     }
 
@@ -1454,7 +1454,7 @@ object Dedup {
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.ccLabels(s, d, path)
     }
-    s.read.parquet(path)
+    Parquet.read(s, path)
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).cast("int").as("is_survivor"))
       .orderBy("doc_id")
@@ -1486,7 +1486,7 @@ object Dedup {
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.pairGraph(s, d, path)
     }
-    s.read.parquet(path)
+    Parquet.read(s, path)
       .select("a_id", "b_id", "inter", "na", "nb")
       .orderBy("a_id", "b_id")
   }
@@ -1526,7 +1526,7 @@ object Dedup {
           s"$root/new")
       }
     }
-    s.read.parquet(s"$root/new")
+    Parquet.read(s, s"$root/new")
       .select("a_id", "b_id", "inter", "na", "nb")
       .orderBy("a_id", "b_id")
   }
@@ -1785,7 +1785,7 @@ object Dedup {
       GraftConf.CcOldLabelsPath(s) match {
         case Some(p) =>
           graft.ops.ArtifactTag.require(s, p, d) // wrong-corpus guard
-          val labels = s.read.parquet(p)
+          val labels = Parquet.read(s, p)
             .select(col("doc_id"), col("cluster_id").as("label"))
           val stats = labels.agg(max("doc_id"), count(lit(1))).head()
           require(!stats.isNullAt(0),
@@ -2103,7 +2103,7 @@ object Dedup {
               "artifact (regenerated in place, edited, or extended); " +
               "rebuild the pair graph or delta-refresh it")
         }
-        s.read.parquet(p).select("a_id", "b_id", "inter", "na", "nb")
+        Parquet.read(s, p).select("a_id", "b_id", "inter", "na", "nb")
       case None => ngramJaccardRaw(s, d)
     }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Fns, GraftConf}
+import graft.ops.{Fns, GraftConf, Parquet}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -569,7 +569,7 @@ object Retrieval {
         graft.ops.ArtifactTag.readTag(s, path), "postings",
         Seq("tok", "doc_id", "dl", "tf"))
       .filter(col("tok").isin(terms: _*))
-    val g = s.read.parquet(s"$path/stats")
+    val g = Parquet.read(s, s"$path/stats")
     bm25FromTf(post, g, terms)
       .select(col("doc_id"), (round(col("score"), 4) + lit(0.0)).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id"))
@@ -653,7 +653,7 @@ object Retrieval {
     * gramstats reads the HEAD generation (cumulative by writer
     * contract); grams resolve the chain like postings do. */
   private def phraseServe(s: SparkSession, path: String): DataFrame = {
-    val top = s.read.parquet(s"$path/gramstats")
+    val top = Parquet.read(s, s"$path/gramstats")
       .orderBy(col("n").desc, col("gram")).limit(1)
       .head().getString(0)
     graft.ops.Materialize.chainRead(s, path,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Fns, GraftConf}
+import graft.ops.{Fns, GraftConf, Parquet}
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -726,7 +726,7 @@ object Similarity {
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.pqIndex(s, d, path)
     }
-    (s.read.parquet(s"$path/codes"), s.read.parquet(s"$path/codebooks"))
+    (Parquet.read(s, s"$path/codes"), Parquet.read(s, s"$path/codebooks"))
   }
 
   /** Product-quantization ANN (the PQ half of the classic IVF-PQ
@@ -1102,7 +1102,7 @@ object Similarity {
   def annIvfFromIndex(s: SparkSession, d: String): DataFrame = {
     val (path, cids) = ivfPrunedCells(s, d)
     ivfProbeTail(s, d,
-      s.read.parquet(s"$path/index").filter(col("cid").isin(cids: _*)))
+      Parquet.read(s, s"$path/index").filter(col("cid").isin(cids: _*)))
   }
 
   /** Ensure the materialized IVF index exists (build-once per
@@ -1157,7 +1157,7 @@ object Similarity {
     val qRow = Tables.embeddings(s, d).select("vec_id", "embedding")
       .orderBy("vec_id").limit(1).head()
     val qEmb = qRow.getSeq[Float](1).map(_.toDouble).toArray
-    s.read.parquet(s"$path/centroids")
+    Parquet.read(s, s"$path/centroids")
       .collect() // C ≤ 256 rows: bounded quantizer metadata
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .map { case (cid, cv) => (cosSeq(cv, qEmb), cid) }
@@ -1277,7 +1277,7 @@ object Similarity {
     pqProbe(s, d,
       graft.ops.Materialize.chainRead(s, head, d, "codes",
         Seq("vec_id", "sub", "code")),
-      s.read.parquet(s"$head/codebooks"))
+      Parquet.read(s, s"$head/codebooks"))
   }
 
   /** `ann_ivf_tuning_curve` — the IVF operating-point table (round-14
@@ -1316,7 +1316,7 @@ object Similarity {
     val q = Tables.embeddings(s, d).select("vec_id", "embedding")
       .orderBy("vec_id").limit(1)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val scored = s.read.parquet(s"$path/index")
+    val scored = Parquet.read(s, s"$path/index")
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim",
@@ -1414,7 +1414,7 @@ object Similarity {
   def annIvfPqFromIndex(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val (path, cids) = ivfPrunedCells(s, d)
-    val cand = s.read.parquet(s"$path/index")
+    val cand = Parquet.read(s, s"$path/index")
       .filter(col("cid").isin(cids: _*))
       .select("vec_id")
     val (codes, cb) = pqIndexFrames(s, d)
@@ -1638,7 +1638,7 @@ object Similarity {
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.sqIndex(s, d, path)
     }
-    sqServe(s, d, s.read.parquet(path))
+    sqServe(s, d, Parquet.read(s, path))
   }
 
   /** (vec_id, embedding, qs) with the symmetric unit-norm int8 codes —
@@ -1759,8 +1759,8 @@ object Similarity {
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.ivfIndex(s, d, path)
     }
-    val idx = s.read.parquet(s"$path/index")
-    val cents = s.read.parquet(s"$path/centroids")
+    val idx = Parquet.read(s, s"$path/index")
+    val cents = Parquet.read(s, s"$path/centroids")
     val top2 = idx.select("vec_id", "embedding")
       .crossJoin(broadcast(cents))
       .withColumn("cc", cos(Fns.asDouble(col("embedding")), col("cvec")))

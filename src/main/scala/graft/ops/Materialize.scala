@@ -475,7 +475,7 @@ object Materialize {
         "pair-graph artifact", "run the full pairGraph build instead",
         requirePairStage(s, _, s"pair-graph artifact at $oldPath"))(
       graft.operators.Dedup.deltaPairGraph(s, dir, _))
-    pairsPart(newPath, s.read.parquet(oldPath)
+    pairsPart(newPath, Parquet.read(s, oldPath)
       .select("a_id", "b_id", "inter", "na", "nb").unionAll(deltaPairs))
     seal(s, newPath, dir, a.next ++ pairStageProps(s))
   }
@@ -845,7 +845,7 @@ object Materialize {
   private[graft] def chainRead(s: SparkSession, path: String,
       tag: String, part: String, cols: Seq[String]): DataFrame =
     genChain(s, path, tag)
-      .map(p => s.read.parquet(s"$p/$part")
+      .map(p => Parquet.read(s, s"$p/$part")
         .select(cols.map(col): _*))
       .reduce(_ unionAll _)
 
@@ -896,7 +896,7 @@ object Materialize {
     * totals, so a union would double-count). */
   private def gramstatsMerged(s: SparkSession, oldPath: String,
       newGrams: DataFrame): DataFrame =
-    s.read.parquet(s"$oldPath/gramstats").select("gram", "n")
+    Parquet.read(s, s"$oldPath/gramstats").select("gram", "n")
       .unionAll(gramCounts(newGrams))
       .groupBy("gram").agg(sum("n").as("n"))
 
@@ -1002,7 +1002,7 @@ object Materialize {
     val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val (a, (assigned, cents)) = admit(s, dir, oldPath, Vecs, vecs,
         "ivf index", "re-index with the full ivf writer instead") { cut =>
-      val cents = s.read.parquet(s"$oldPath/centroids")
+      val cents = Parquet.read(s, s"$oldPath/centroids")
       (graft.operators.Similarity
         .ivfAssignFrozen(vecs.filter(col("vec_id") >= cut), cents), cents)
     }
@@ -1022,7 +1022,7 @@ object Materialize {
     val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val (a, (codes, cb)) = admit(s, dir, oldPath, Vecs, vecs,
         "pq index", "re-index with the full pq writer instead") { cut =>
-      val cb = s.read.parquet(s"$oldPath/codebooks")
+      val cb = Parquet.read(s, s"$oldPath/codebooks")
       (graft.operators.Similarity
         .pqEncodeFrozen(vecs.filter(col("vec_id") >= cut), cb), cb)
     }
@@ -1040,7 +1040,7 @@ object Materialize {
     compact(s, dir, headPath, newPath)(ivfParts(newPath,
       chainRead(s, headPath, dir, "index",
         Seq("vec_id", "embedding", "cid")),
-      s.read.parquet(s"$headPath/centroids")))
+      Parquet.read(s, s"$headPath/centroids")))
 
   /** [[ivfIndexCompact]] for the PQ chain: codes re-sort to one
     * vec_id-range artifact, head codebooks + props carry over. */
@@ -1048,7 +1048,7 @@ object Materialize {
       newPath: String): Unit =
     compact(s, dir, headPath, newPath)(pqParts(newPath,
       chainRead(s, headPath, dir, "codes", Seq("vec_id", "sub", "code")),
-      s.read.parquet(s"$headPath/codebooks")))
+      Parquet.read(s, s"$headPath/codebooks")))
 
   /** Materialize the SQ serving index — the (vec_id, qs) symmetric
     * unit-norm int8 code table behind `ann_sq_from_index`: 64 longs
@@ -1173,7 +1173,7 @@ object Materialize {
     val w = org.apache.spark.sql.expressions.Window
     val prior = w.partitionBy("user_id").orderBy("day")
       .rowsBetween(w.unboundedPreceding, -1)
-    val oldTotals = s.read.parquet(s"$oldPath/totals")
+    val oldTotals = Parquet.read(s, s"$oldPath/totals")
       .select(col("user_id"), col("n_total").as("t_n"),
         col("n_purch_total").as("t_purch"), col("v_total").as("t_v"),
         col("days_total").as("t_days"))
@@ -1200,7 +1200,7 @@ object Materialize {
     * rule. ONE definition for the merge and append writers. */
   private def featTotalsMerged(s: SparkSession, oldPath: String,
       newDaily: DataFrame): DataFrame =
-    s.read.parquet(s"$oldPath/totals")
+    Parquet.read(s, s"$oldPath/totals")
       .select("user_id", "n_total", "n_purch_total", "v_total",
         "days_total")
       .unionAll(totalsOf(newDaily))

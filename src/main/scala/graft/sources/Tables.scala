@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Parquet
 
 /** Typed loaders for the driver-generated star schema.
   *
@@ -11,12 +12,13 @@ import org.apache.spark.sql.functions._
   * be partitioned/bucketed tables; at 100 TB the fact tables (`lineitem`,
   * `orders`, `events`) shuffle on their join/agg keys and the dimension
   * tables (`region`, `nation`, `supplier`, `part`, `customer`) stay
-  * broadcast-able.
+  * broadcast-able. Every loader reads through [[graft.ops.Parquet]], so
+  * building a table's frame runs no schema-inference job.
   */
 object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -36,9 +38,10 @@ object Tables {
     *  - TIMESTAMP µs (current data): plain schema inference works; `ts`
     *    arrives as TimestampType/TimestampNTZType and `ts_us` is
     *    `unix_micros` (sessions run in UTC, so NTZ→TZ is identity);
-    *  - TIMESTAMP(NANOS) (earlier generations): inference REJECTS the
-    *    file ([PARQUET_TYPE_ILLEGAL]), so on that failure we re-read
-    *    with an explicit `ts BIGINT` schema — the vectorized reader
+    *  - TIMESTAMP(NANOS) (earlier generations): the footer's schema
+    *    conversion REJECTS the file ([PARQUET_TYPE_ILLEGAL], thrown on
+    *    the driver by [[graft.ops.Parquet.read]]), so on that failure we
+    *    re-read with an explicit `ts BIGINT` schema — the vectorized reader
     *    decodes the raw INT64 ns — and truncate `ts div 1000`,
     *    bit-identical to DuckDB's ns→µs truncation. Reader-scoped, no
     *    session conf (`nanosAsLong` is not honored by 4.1 inference;
@@ -47,7 +50,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     try {
-      val df = spark.read.parquet(path)
+      val df = Parquet.read(spark, path)
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           df.withColumn("ts_us", expr("ts div 1000"))

@@ -142,6 +142,23 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("no source outside ops/Parquet.scala calls read.parquet") {
+    // a direct read would bring back Spark's schema-inference job
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.toString.endsWith(".scala")
+        && !p.endsWith(java.nio.file.Paths.get("ops", "Parquet.scala")))
+      .flatMap { p =>
+        val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+        try src.getLines().zipWithIndex.toVector
+          .filter { case (l, _) => l.contains("read.parquet(") }
+          .map { case (l, i) => s"$p:${i + 1}: ${l.trim}" }
+        finally src.close()
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("§2 ✅SQL markers == SparkEntry.oracleSql key set") {
     val marked = inventory.collect { case (k, "✅SQL") => k }.toSet
     val sql = SparkEntry.oracleSql.keySet
