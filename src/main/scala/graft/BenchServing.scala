@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.ops.{GraftConf, Materialize, Scratch}
 import graft.ops.GraftConf.{CcLabelsPath, CcOldLabelsPath, FeaturesStorePath,
   LexIndexPath, MinhashOldIndexPath, PairsPath, SimhashOldIndexPath}
 
@@ -9,17 +11,16 @@ import graft.ops.GraftConf.{CcLabelsPath, CcOldLabelsPath, FeaturesStorePath,
   * deliberately times every registered query in its oracle-replayable
   * DEFAULT mode, so the artifact-mode wins (pair graph, CC labels,
   * signature indexes, lexical index, feature store) live only in
-  * one-off receipts: an artifact-path regression — say a lost plan pin
-  * quietly re-introducing a corpus scan into a from-index serve — was
-  * invisible to the bench. This main builds every serving artifact
-  * once (build seconds recorded separately), routes the ~18
-  * conf-consuming queries through them, and emits ONE JSON line
+  * one-off receipts: an artifact-path regression was invisible to the
+  * bench. This main builds every serving artifact once
+  * ([[buildArtifacts]], build seconds recorded separately), routes the
+  * ~18 conf-consuming queries through them, and emits ONE JSON line
   * (`bench_serving.json`) with per-query median-of-3 timings under the
   * same hygiene rules as `Bench` (untimed whole-panel warmup,
   * Tool.reset off the clock). It also regenerates the serving-plan
   * census (`docs/PLANS_SERVING.md`): shuffle/broadcast/codegen counts
-  * per serving plan plus a checked "reads its artifact" column, so a
-  * routing regression is visible structurally, not just as wall time.
+  * per serving plan. That each route reads its artifact is pinned by
+  * ServingRouteSpec over the same [[buildArtifacts]] and [[Served]].
   *
   *   sbt "runMain graft.BenchServing [sfDir]"
   */
@@ -48,14 +49,41 @@ object BenchServing {
     "feature_pit_from_index" -> FeaturesStorePath)
     .map { case (q, knob) => q -> knob.key }
 
-  /** Iterative kernels localCheckpoint their edge input before the
-    * loop, so their FINAL executed plan roots at checkpoint-RDD scans
-    * and structurally cannot show the artifact read (it happened one
-    * plan earlier, inside the checkpoint). Their routing is pinned by
-    * DedupSpec's mode-equality + plan tests instead; the census marks
-    * them n/a rather than reporting a false regression. */
-  private val CheckpointedKernels: Set[String] =
-    Set("neardup_pagerank", "neardup_kcore")
+  /** Builds every serving artifact of `sfDir` once into this JVM's
+    * scratch root and sets each [[Served]] route on `spark` to it;
+    * returns the build seconds per artifact, in build order. Order
+    * matters: the pair graph goes first and its conf is set
+    * immediately, so the CC label build itself serves off one pair
+    * scan — the nightly one-pair-job composition DEPLOY.md
+    * prescribes. */
+  def buildArtifacts(spark: SparkSession, sfDir: String)
+      : Seq[(String, Double)] = {
+    val builds = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    def build(name: String, dir: String, route: GraftConf.Knob[_])(
+        write: String => Unit): Unit = {
+      val path = Scratch.dir(dir)
+      builds += name -> Tool.secs(write(path))
+      spark.conf.set(route.key, path)
+    }
+    build("pair_graph", "bench-pairs", PairsPath)(
+      Materialize.pairGraph(spark, sfDir, _))
+    build("cc_labels", "bench-cclabels", CcLabelsPath)(
+      Materialize.ccLabels(spark, sfDir, _))
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+      .select("doc_id", "text")
+    val old = docs.filter(col("doc_id") < graft.operators.Dedup.idCut(docs))
+    build("old_cc_labels", "bench-oldlabels", CcOldLabelsPath)(
+      Materialize.ccLabelsOf(spark, old, _, sfDir))
+    build("old_simhash_index", "bench-simhash-old", SimhashOldIndexPath)(
+      Materialize.simhashIndexOf(spark, old, _, sfDir))
+    build("old_minhash_index", "bench-minhash-old", MinhashOldIndexPath)(
+      Materialize.minhashIndexOf(spark, old, _, sfDir))
+    build("lexical_index", "bench-lex", LexIndexPath)(
+      Materialize.lexicalIndex(spark, sfDir, _))
+    build("feature_store", "bench-featstore", FeaturesStorePath)(
+      Materialize.featureStore(spark, sfDir, _))
+    builds.toSeq
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0)
@@ -65,46 +93,8 @@ object BenchServing {
     val spark = Tool.session(Tool.cpus())
 
     // ---- build every serving artifact once (recorded, off the query
-    // clock). Order matters: the pair graph goes first and its conf is
-    // set immediately, so the CC label build itself serves off one
-    // pair scan — the nightly one-pair-job composition DEPLOY.md
-    // prescribes.
-    val builds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val pairs = graft.ops.Scratch.dir("bench-pairs")
-    builds("pair_graph") =
-      Tool.secs(graft.ops.Materialize.pairGraph(spark, sfDir, pairs))
-    spark.conf.set(PairsPath.key, pairs)
-    val labels = graft.ops.Scratch.dir("bench-cclabels")
-    builds("cc_labels") =
-      Tool.secs(graft.ops.Materialize.ccLabels(spark, sfDir, labels))
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-      .select("doc_id", "text")
-    val cut = graft.operators.Dedup.idCut(docs)
-    val old = docs.filter(col("doc_id") < cut)
-    val oldLabels = graft.ops.Scratch.dir("bench-oldlabels")
-    builds("old_cc_labels") =
-      Tool.secs(graft.ops.Materialize.ccLabelsOf(spark, old, oldLabels,
-        sfDir))
-    val simOld = graft.ops.Scratch.dir("bench-simhash-old")
-    builds("old_simhash_index") =
-      Tool.secs(graft.ops.Materialize.simhashIndexOf(spark, old, simOld,
-        sfDir))
-    val mhOld = graft.ops.Scratch.dir("bench-minhash-old")
-    builds("old_minhash_index") =
-      Tool.secs(graft.ops.Materialize.minhashIndexOf(spark, old, mhOld,
-        sfDir))
-    val lex = graft.ops.Scratch.dir("bench-lex")
-    builds("lexical_index") =
-      Tool.secs(graft.ops.Materialize.lexicalIndex(spark, sfDir, lex))
-    val feat = graft.ops.Scratch.dir("bench-featstore")
-    builds("feature_store") =
-      Tool.secs(graft.ops.Materialize.featureStore(spark, sfDir, feat))
-    spark.conf.set(CcLabelsPath.key, labels)
-    spark.conf.set(CcOldLabelsPath.key, oldLabels)
-    spark.conf.set(SimhashOldIndexPath.key, simOld)
-    spark.conf.set(MinhashOldIndexPath.key, mhOld)
-    spark.conf.set(LexIndexPath.key, lex)
-    spark.conf.set(FeaturesStorePath.key, feat)
+    // clock), then time the routed queries
+    val builds = buildArtifacts(spark, sfDir)
 
     // ---- timing (the Bench methodology: untimed warmup, 3 timed
     // passes, per-query median; state dropped off the clock)
@@ -119,36 +109,23 @@ object BenchServing {
     sb ++= s"Emitted by `sbt \"runMain graft.BenchServing $sfDir\"` " +
       "with every serving conf set\n(pairsPath, cc.labelsPath, " +
       "cc.oldLabelsPath, {simhash,minhash}.oldIndexPath,\n" +
-      "lex.indexPath, features.storePath). `artifact scan` checks the " +
-      "executed plan\nreads the routed artifact's files; timings are " +
-      "median-of-3 (Bench hygiene).\nBuild costs (one-time per " +
-      "refresh) are in bench_serving.json `builds`.\n\n"
+      "lex.indexPath, features.storePath). Timings are median-of-3 " +
+      "(Bench hygiene).\nBuild costs (one-time per refresh) are in " +
+      "bench_serving.json `builds`.\n\n"
     sb ++= "| query | conf route | median s | shuffles | broadcasts " +
-      "| codegen spans | artifact scan |\n|---|---|---|---|---|---|---|\n"
+      "| codegen spans |\n|---|---|---|---|---|---|\n"
     val median = stats.toMap
     Served.foreach { case (name, route) =>
       try {
         val full = Tool.finalPlan(SparkEntry.queries(name)(spark, sfDir))
         val (nSh, nBc, nCg) = Tool.census(full)
-        // the structural "actually served from the artifact" check: the
-        // executed plan scans the routed artifact's scratch dir.
-        // cc_incremental and the signature incrementals also read the
-        // corpus (their delta half is in-query by design), so the check
-        // is contains-artifact, not corpus-free.
-        val artifact = spark.conf.get(route).split('/').last
-        val reads =
-          if (CheckpointedKernels(name))
-            "n/a (kernel checkpoints edges; spec-pinned)"
-          else if (full.contains(artifact)) "yes"
-          else "NO — ROUTING REGRESSION"
         val m = median(name)._1
-        sb ++= f"| $name | $route | $m%.2f | $nSh | $nBc | $nCg | " +
-          s"$reads |\n"
+        sb ++= f"| $name | $route | $m%.2f | $nSh | $nBc | $nCg |\n"
         Tool.reset(spark)
       } catch {
         case e: Throwable =>
           val msg = String.valueOf(e.getMessage).linesIterator.take(1)
-          sb ++= s"| $name | $route | FAILED: ${msg.mkString} | | | | |\n"
+          sb ++= s"| $name | $route | FAILED: ${msg.mkString} | | | |\n"
       }
     }
     Tool.writeFile("docs/PLANS_SERVING.md", sb.toString)

@@ -129,12 +129,15 @@ object Stress {
     // pre-verification candidate volume grows ∝ n, never n²
     out("lsh_candidates") = measure("minhash_lsh_candidates")(
       graft.operators.Dedup.minhashCandidateStage(spark, dir)._1.count())._2
+    // df-capped index receipt: the candidates dedup_containment
+    // verifies (the same index dedup_incremental scopes to its batch)
     out("ngram_candidates") = measure("ngram_candidates")(
       graft.operators.Dedup.ngramCandidateStage(spark, dir)._1.count())._2
-    // prefix-filter receipt: candidates from the rarest-⌊n/2⌋+1 prefix
-    // index must grow ∝ n like the df-capped index's — but with ZERO
-    // false negatives at any corpus (the completeness the cap trades
-    // away); same stage the query itself verifies
+    // prefix-filter receipt: the candidates dedup_ngram_jaccard and
+    // dedup_jaccard_prefix verify, from the rarest-⌊n/2⌋+1 prefix
+    // index; they must grow ∝ n like the df-capped index's — but with
+    // ZERO false negatives at any corpus (the completeness the cap
+    // trades away)
     out("jaccard_prefix_candidates") = measure("jaccard_prefix_candidates")(
       graft.operators.Dedup.jaccardPrefixStage(spark,
         graft.sources.Tables.documents(spark, dir)

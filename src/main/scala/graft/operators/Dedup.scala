@@ -35,7 +35,7 @@ object Dedup {
     "dedup_exact" -> exact,
     "dedup_exact_survivors" -> exactSurvivors,
     "dedup_ngram_jaccard" -> ngramJaccard,
-    "dedup_jaccard_prefix" -> jaccardPrefix,
+    "dedup_jaccard_prefix" -> ngramJaccard,
     "minhash_tuning_curve" -> minhashTuningCurve,
     "dedup_minhash_lsh" -> minhashLsh,
     "dedup_minhash_from_index" -> minhashFromIndex,
@@ -448,8 +448,8 @@ object Dedup {
     * convention).
     *
     * Scale shape: the pair frame's cost is [[ngramJaccard]]'s
-    * (df-capped, measured linear); the two score joins key on doc id;
-    * the histogram is a ≤ 8-row map-side-combined rollup. */
+    * (prefix-filtered, measured linear); the two score joins key on
+    * doc id; the histogram is a ≤ 8-row map-side-combined rollup. */
   def qualityDelta(s: SparkSession, d: String): DataFrame = {
     val q = TextAnalysis.qualityLogitScore(s, d)
       .select(col("doc_id"), col("logit_milli"))
@@ -1007,8 +1007,9 @@ object Dedup {
     * `graft.dedup.maxShingleDf` (default 100) while the oracle SQL is
     * uncapped — parity holds because the cap drops NOTHING at oracle
     * SFs (measured max shingle df: 7 at sf0.01, 25 at sf0.1; see
-    * [[ngramJaccard]]). If testdata ever grows a shingle with df > 100
-    * the hash gate breaks HERE first — raise the conf or re-measure. */
+    * [[ngramCandidateStage]]). If testdata ever grows a shingle with
+    * df > 100 the hash gate breaks HERE first — raise the conf or
+    * re-measure. */
   def incremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val bounds = docs.agg(min("doc_id"), max("doc_id")).head()
@@ -1036,10 +1037,10 @@ object Dedup {
     * shingles (the `is_new` filter below — DedupSpec pins it on the
     * plan), so the inverted-index join costs Σ_shingle df_new·df_all —
     * proportional to the batch, not the corpus squared; old×old pairs
-    * are never generated. The same df-cap as [[ngramJaccard]] bounds
-    * hot shingles; the hot set is computed over corpus+batch together,
-    * so a shingle that goes hot only with the new batch is dropped from
-    * both sides alike. */
+    * are never generated. The same df-cap as [[ngramCandidateStage]]
+    * bounds hot shingles; the hot set is computed over corpus+batch
+    * together, so a shingle that goes hot only with the new batch is
+    * dropped from both sides alike. */
   def incrementalFrames(newBatch: DataFrame, corpus: DataFrame): DataFrame = {
     val s = newBatch.sparkSession
     val maxDf = GraftConf.MaxShingleDf(s)
@@ -1460,12 +1461,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The candidate-stage part of a pair artifact's scratch key. */
-  private def stageKey(s: SparkSession): String =
-    if (GraftConf.CandidateStage(s) == "dfcap")
-      s"dfcap${GraftConf.MaxShingleDf(s)}"
-    else "prefix"
-
   /** The verified pair graph served from the MATERIALIZED
     * [[graft.ops.Materialize.pairGraph]] artifact — the
     * [[clustersFromIndex]] treatment for the pair frame itself:
@@ -1475,14 +1470,9 @@ object Dedup {
     * join. The oracle replays the full uncapped all-pairs Jaccard
     * SQL, so the ARTIFACT (not just the in-query stage) is hash-gated
     * end to end — exactly the guarantee the ten conf-routed consumers
-    * of `graft.dedup.pairsPath` lean on. The scratch key includes the
-    * candidate-stage configuration: BuildOnce caches per (path, tag),
-    * so a stage or df-cap flip mid-JVM must map to a DIFFERENT
-    * artifact rather than silently serving the previous stage's pairs
-    * (the drift [[verifiedPairs]] refuses via props on user-supplied
-    * paths). */
+    * of `graft.dedup.pairsPath` lean on. */
   def pairsFromIndex(s: SparkSession, d: String): DataFrame = {
-    val path = graft.ops.BuildOnce.scratchPath(s"pairs-${stageKey(s)}", d)
+    val path = graft.ops.BuildOnce.scratchPath("pairs", d)
     graft.ops.BuildOnce.ensure(path, d) {
       graft.ops.Materialize.pairGraph(s, d, path)
     }
@@ -1503,12 +1493,9 @@ object Dedup {
     * uncapped all-pairs Jaccard SQL, so the delta writer's
     * row-identity-to-rebuild contract is hash-gated by the driver
     * end to end — not just spec-pinned (DedupSpec pins the equality
-    * and the refusal matrix besides). Scratch key includes the
-    * candidate-stage configuration ([[pairsFromIndex]]'s drift rule:
-    * a stage or df-cap flip mid-JVM maps to a different artifact). */
+    * and the refusal matrix besides). */
   def pairsDeltaRefresh(s: SparkSession, d: String): DataFrame = {
-    val root =
-      graft.ops.BuildOnce.scratchPath(s"pairsdelta-${stageKey(s)}", d)
+    val root = graft.ops.BuildOnce.scratchPath("pairsdelta", d)
     graft.ops.BuildOnce.ensure(root, d) {
       val docs = Tables.documents(s, d).select("doc_id", "text")
       // cold start (the midpoint leaves no old half — 0-2 docs): a
@@ -1766,8 +1753,8 @@ object Dedup {
     // cluster-family labelsPath precedent: `graft.cc.oldLabelsPath`
     // SET → the persisted previous-cycle artifact
     // (Materialize.ccLabelsOf over the old corpus) is READ and the
-    // pair work is DELTA-SCOPED (ngramDeltaPairs: the candidate
-    // self-join's b side is new docs only, Σ df·df_new) — neither the
+    // pair work is DELTA-SCOPED (deltaPairs: the prefix self-join's
+    // b side is new docs only, Σ df_prefix·df_prefix_new) — neither the
     // old loop nor the old×old pair graph re-runs, which is the whole
     // incremental contract. In artifact mode the old/new boundary is
     // DEFINED BY THE ARTIFACT (cut = max labeled id + 1): the old set
@@ -1792,14 +1779,13 @@ object Dedup {
             s"old-labels artifact at $p is EMPTY — an empty previous " +
               "cycle has no incremental mode; run the full labeling")
           val aCut = stats.getLong(0) + 1L
-          // provenance guard (round-9 advisor fix #1): the labels were
-          // built under a specific candidate stage (and df-cap, under
-          // dfcap) — contracting against them with DELTA pairs from a
-          // different stage can diverge exactly where the cap bites,
-          // so configuration drift is refused at read time. Artifacts
-          // written before the props sidecar are not admissible.
+          // provenance guard (round-9 advisor fix #1): labels built
+          // from another pair stage's graph can miss pairs the prefix
+          // delta finds, so only prefix-stamped labels are admitted.
+          // Artifacts written before the props sidecar are not
+          // admissible.
           val props = graft.ops.ArtifactTag.readProps(s, p)
-          graft.ops.Materialize.requirePairStage(s, props,
+          graft.ops.Materialize.requirePairStage(props,
             s"old-labels artifact at $p")
           // coverage guard: the boundary rule assumes monotone id
           // allocation (every current doc below the artifact's max id
@@ -2011,34 +1997,35 @@ object Dedup {
 
   /** Exact Jaccard ≥ 0.5 near-dup pairs — the pair source the whole
     * near-dup family (CC clustering, degree/pagerank/kcore/triangles,
-    * quality delta, tuning curve) consumes. DUAL candidate stage,
-    * routed by `graft.dedup.candidateStage`:
+    * quality delta, tuning curve) consumes, registered under both
+    * `dedup_ngram_jaccard` and `dedup_jaccard_prefix`.
     *
-    *  - `"prefix"` (the DEFAULT since round 10) — positional prefix
-    *    filtering ([[jaccardPrefix]]): provably COMPLETE at every
-    *    corpus (hot-shingle-only pairs included) and, measured at
-    *    every Stress K, ~3.65× fewer candidates than the df-capped
-    *    index — strictly dominant, hence the default.
-    *  - `"dfcap"` — the df-capped inverted-index self-join below,
-    *    kept for the degenerate corpus whose documents are so short
-    *    that even their RAREST ⌊n/2⌋+1 shingles are boilerplate
-    *    (there the prefix postings themselves go quadratic and the
-    *    cap's bounded-loss trade is the right one).
+    * Candidates come from POSITIONAL PREFIX FILTERING (SSJoin,
+    * Chaudhuri et al. ICDE'06; all-pairs, Bayardo et al. WWW'07),
+    * which keeps every true pair at every corpus, hot-shingle-only
+    * pairs included. Each doc indexes only its ⌊n/2⌋+1 globally
+    * RAREST shingles (rarity order = df asc, hash tie-break).
+    * Prefix-filter lemma: J(a,b) ≥ t forces |a∩b| ≥ ⌈t/(1+t)·(na+nb)⌉,
+    * and the J-length bound (nb ≥ t·na and na ≥ t·nb) lifts that to
+    * ≥ ⌈t·nx⌉ for BOTH sides, so prefixes of length nx − ⌈t·nx⌉ + 1 —
+    * at t = ½ exactly ⌊nx/2⌋ + 1 (integer arithmetic, no float
+    * threshold) — must share a shingle. Candidates are therefore a
+    * SUPERSET of the true pair set, and the exact array-intersect
+    * verify (3·inter ≥ na+nb, integer-exact) makes the output
+    * row-identical to the uncapped all-pairs oracle.
     *
-    * The dfcap branch's scale guard: the inverted-index self-join
-    * costs Σ_shingle df², so a single hot shingle (df = 10⁶ at corpus
-    * scale) is a quadratic blowout. Shingles with document frequency
-    * above `graft.dedup.maxShingleDf` (default 100) are dropped BEFORE
-    * the join — from the index and the sizes alike, so the semantics
-    * stay a clean exact Jaccard, just over the informative (df ≤ cap)
-    * shingle sets. At the oracle SFs the cap drops nothing (max df is
-    * 7 at sf0.01, 25 at sf0.1 — measured), so BOTH branches equal the
-    * uncapped oracle SQL; DedupSpec pins the capped behavior — and
-    * the default path's completeness — on a synthetic hot-shingle
-    * corpus. The hot set is found with a map-side-combined hash
-    * groupBy and is TINY by construction (heavy hitters: at most
-    * |corpus-shingles|/cap rows), so it broadcasts and the drop is a
-    * map-side anti-join. */
+    * Scale shape: candidate volume is Σ_h df_prefix(h)² over PREFIX
+    * postings only. Hot shingles sort LAST in the rarity order, so
+    * they almost never enter a prefix; a df-10⁶ boilerplate shingle
+    * contributes 0 candidate pairs unless some doc is so short that
+    * even its rarest half is boilerplate. Measured at every Stress K,
+    * that is ~3.65× fewer candidates than the df-capped index
+    * [[containment]] runs. The size-compatibility filter
+    * (2·min(na,nb) ≥ max(na,nb), from J ≥ ½) prunes length-mismatched
+    * collisions before the pair distinct. Stages: one shingle scan
+    * (checkpointed — df agg, rarity-rank window, verify arrays all
+    * reuse it), one doc_id-partitioned rank window (fine keys), one
+    * equi-join on prefix shingle hash, candidate-scoped verify. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
     ngramJaccardOf(s, Tables.documents(s, d).select("doc_id", "text"))
 
@@ -2062,10 +2049,10 @@ object Dedup {
     *    DuckDB oracle replays).
     *
     * Serving-mode guards: the `_graft_corpus` tag must name THIS
-    * corpus, and the `_graft_props` candidate-stage provenance must
-    * match the session's conf (a dfcap-built graph is missing exactly
-    * the hot-only pairs a prefix session expects — the
-    * [[ccIncremental]] drift-refusal rule). The writer's content
+    * corpus, and the `_graft_props` pair-stage stamp must be the
+    * prefix stage's ([[graft.ops.Materialize.requirePairStage]]: a
+    * graph built by another stage can miss the hot-only pairs this
+    * one keeps). The writer's content
     * checksum is NOT replayed per serve by default: a per-serve
     * (doc_id, text) scan would rival some consumers' whole cost, the
     * tag binds the corpus dir, and the write-once discipline forbids
@@ -2080,7 +2067,7 @@ object Dedup {
       case Some(p) =>
         graft.ops.ArtifactTag.require(s, p, d)
         val props = graft.ops.ArtifactTag.readProps(s, p)
-        graft.ops.Materialize.requirePairStage(s, props,
+        graft.ops.Materialize.requirePairStage(props,
           s"pair-graph artifact at $p")
         // opt-in content audit (round-11 verdict task #4): replay the
         // writer's corpus checksum before serving — the guard the cc
@@ -2115,18 +2102,11 @@ object Dedup {
   private def ngramJaccardRaw(s: SparkSession, d: String): DataFrame =
     ngramJaccardRawOf(s, Tables.documents(s, d).select("doc_id", "text"))
 
-  /** ONE candidate-stage dispatch for both sort variants (review
-    * round 16: a duplicated `candidateStage` switch was a silent-drift
-    * hazard between the registered query and what consumers read). */
   private def ngramJaccardRawOf(s: SparkSession,
-      docs: DataFrame): DataFrame =
-    if (GraftConf.CandidateStage(s) == "dfcap") {
-      val (cands, sizes) = ngramCandidateStageOf(s, docs)
-      jaccardVerifyRaw(cands, sizes)
-    } else {
-      val (arr, cands) = jaccardPrefixStage(s, docs)
-      prefixVerifyRaw(arr, cands)
-    }
+      docs: DataFrame): DataFrame = {
+    val (arr, cands) = jaccardPrefixStage(s, docs)
+    prefixVerifyRaw(arr, cands)
+  }
 
   /** [[verifiedPairs]]' (a_id, b_id) projection, MATERIALIZED for
     * multi-consumer kernels: serving mode is already a re-consumable
@@ -2140,63 +2120,19 @@ object Dedup {
     else pairs.localCheckpoint()
   }
 
-  /** Frame-input variant of [[ngramJaccard]] — same conf routing, so
-    * every slice-scoped consumer ([[loopLabelsOf]], DedupSpec's
-    * adversarial corpora) runs the very stage the registered query
-    * runs. */
+  /** Frame-input variant of [[ngramJaccard]], so every slice-scoped
+    * consumer ([[loopLabelsOf]], DedupSpec's adversarial corpora) runs
+    * the very stage the registered query runs. */
   private[graft] def ngramJaccardOf(
       s: SparkSession, docs: DataFrame): DataFrame =
     ngramJaccardRawOf(s, docs).orderBy("a_id", "b_id")
 
-  /** Exact Jaccard ≥ 0.5 pairs via POSITIONAL PREFIX FILTERING
-    * (SSJoin, Chaudhuri et al. ICDE'06; all-pairs, Bayardo et al.
-    * WWW'07) — the PROVABLY-COMPLETE scale path beside the df-capped
-    * index of [[ngramJaccard]]: where the cap DROPS hot shingles (and
-    * with them any pair whose only shared shingles are hot — a
-    * disclosed approximation that happens to be lossless at the test
-    * SFs), prefix filtering keeps every true pair at every corpus.
-    * Each doc indexes only its ⌊n/2⌋+1 globally RAREST shingles
-    * (rarity order = df asc, hash tie-break). Prefix-filter lemma:
-    * J(a,b) ≥ t forces |a∩b| ≥ ⌈t/(1+t)·(na+nb)⌉, and the J-length
-    * bound (nb ≥ t·na and na ≥ t·nb) lifts that to ≥ ⌈t·nx⌉ for BOTH
-    * sides, so prefixes of length nx − ⌈t·nx⌉ + 1 — at t = ½ exactly
-    * ⌊nx/2⌋ + 1 (integer arithmetic, no float threshold) — must share
-    * a shingle. Candidates are therefore a SUPERSET of the true pair
-    * set, and the exact array-intersect verify makes the output
-    * row-identical to the uncapped all-pairs oracle, hot keys
-    * included — same columns and acceptance predicate as
-    * [[ngramJaccard]] (3·inter ≥ na+nb, integer-exact).
-    *
-    * Scale shape: candidate volume is Σ_h df_prefix(h)² over PREFIX
-    * postings only. Hot shingles sort LAST in the rarity order, so
-    * they almost never enter a prefix — the boundedness the df-cap
-    * buys, without its false negatives; a df-10⁶ boilerplate shingle
-    * contributes 0 candidate pairs unless some doc is so short that
-    * even its rarest half is boilerplate (exactly the pairs the cap
-    * would silently lose). The size-compatibility filter
-    * (2·min(na,nb) ≥ max(na,nb), from J ≥ ½) prunes length-mismatched
-    * collisions before the pair distinct. Stages: one shingle scan
-    * (checkpointed — df agg, rarity-rank window, verify arrays all
-    * reuse it), one doc_id-partitioned rank window (fine keys), one
-    * equi-join on prefix shingle hash, candidate-scoped verify. */
-  def jaccardPrefix(s: SparkSession, d: String): DataFrame =
-    jaccardPrefixOf(s, Tables.documents(s, d).select("doc_id", "text"))
-
-  /** Frame-input variant of [[jaccardPrefix]] — lets DedupSpec run the
-    * adversarial hot-shingle corpus where the df-capped path provably
-    * loses a pair and this path keeps it. */
-  private[graft] def jaccardPrefixOf(
-      s: SparkSession, docs: DataFrame): DataFrame = {
-    val (arr, cands) = jaccardPrefixStage(s, docs)
-    prefixVerify(arr, cands)
-  }
-
-  /** Shared exact-verify tail of [[jaccardPrefixOf]],
-    * [[prefixDeltaPairs]] and [[verifyCandidates]]: candidate
-    * id-pairs × the full (uncapped) per-doc shingle arrays — for the
-    * prefix path the SAME materialized (doc_id, hs, n) frame the
-    * stage derived its postings from, so the verify pays no second
-    * tokenize/group pass — → row-identical to the all-pairs oracle. */
+  /** Shared exact-verify tail of [[deltaPairGraph]] and
+    * [[verifyCandidates]]: candidate id-pairs × the full (uncapped)
+    * per-doc shingle arrays — for the prefix path the SAME
+    * materialized (doc_id, hs, n) frame the stage derived its postings
+    * from, so the verify pays no second tokenize/group pass — →
+    * row-identical to the all-pairs oracle. */
   private def prefixVerify(arr: DataFrame, cands: DataFrame): DataFrame =
     prefixVerifyRaw(arr, cands).orderBy("a_id", "b_id")
 
@@ -2222,7 +2158,7 @@ object Dedup {
       .filter(col("inter") * 3 >= col("na") + col("nb"))
       .select("a_id", "b_id", "inter", "na", "nb")
 
-  /** Shared prefix-filter stage of [[jaccardPrefixOf]]: (checkpointed
+  /** Shared prefix-filter stage of [[ngramJaccard]]: (checkpointed
     * per-doc (doc_id, hs, n) shingle arrays, candidate id-pairs). ONE
     * definition for the query and its Stress receipt (the
     * [[ccIncrementalPrefix]] discipline), so the receipt counts the
@@ -2255,7 +2191,7 @@ object Dedup {
       .localCheckpoint()
     // `bSide` optionally restricts the self-join's b side — the HIGHER
     // doc_id of each emitted pair — before the join (the
-    // [[ngramCandidateStageOf]] delta scoping): candidate cost drops
+    // [[deltaPairGraph]] delta scoping): candidate cost drops
     // from Σ df_prefix² to Σ df_prefix·df_prefix_new while the rarity
     // order and prefixes stay corpus-wide, so the lemma still covers
     // every pair whose higher endpoint survives the predicate.
@@ -2267,36 +2203,23 @@ object Dedup {
     (arr, cands)
   }
 
-  /** Delta-scoped [[jaccardPrefix]]: verified pairs touching docs with
-    * id ≥ `cut` only (a_id < b_id, so that is b_id ≥ cut) — the
-    * prefix-filter twin of [[ngramDeltaPairs]], row-identical to
-    * `jaccardPrefix.filter(b_id >= cut)` and COMPLETE at every corpus
-    * (the df-capped delta inherits the cap's hot-only-pair loss; this
-    * one inherits the lemma). One corpus shingle scan is still paid
-    * (df stats and verify arrays are corpus-wide); the candidate join
-    * is Σ df_prefix·df_prefix_new — linear in the delta. */
-  private def prefixDeltaPairs(s: SparkSession, d: String,
+  /** Delta-scoped [[ngramJaccard]], FULL five columns (a_id, b_id,
+    * inter, na, nb): verified pairs touching docs with id ≥ `cut`
+    * only (a_id < b_id, so that is b_id ≥ cut), row-identical to
+    * `ngramJaccard.filter(b_id >= cut)` and COMPLETE at every corpus
+    * (it inherits the prefix lemma). One corpus shingle scan is still
+    * paid (df stats and verify arrays are corpus-wide); the candidate
+    * join is Σ df_prefix·df_prefix_new — linear in the delta.
+    * Consumers: [[ccIncremental]]'s artifact mode (id projection via
+    * [[deltaPairs]]) and [[graft.ops.Materialize.pairGraphDelta]] (the
+    * whole frame — the delta rows it appends to the stored artifact). */
+  private[graft] def deltaPairGraph(s: SparkSession, d: String,
       cut: Long): DataFrame = {
     val (arr, cands) = jaccardPrefixStage(s,
       Tables.documents(s, d).select("doc_id", "text"),
       _.filter(col("doc_id") >= cut))
     prefixVerify(arr, cands)
   }
-
-  /** Conf-routed delta-pair source, FULL five columns (a_id, b_id,
-    * inter, na, nb) — verified pairs touching docs with id ≥ `cut`
-    * only, from the same `graft.dedup.candidateStage` switch as
-    * [[ngramJaccard]], so an incremental pair graph always comes from
-    * the stage the full graph would use (a mode split here was the
-    * round-9 ADVICE drift hazard: old labels built under one stage,
-    * delta pairs under another). Consumers: [[ccIncremental]]'s
-    * artifact mode (id projection via [[deltaPairs]]) and
-    * [[graft.ops.Materialize.pairGraphDelta]] (the whole frame — the
-    * delta rows it appends to the stored artifact). */
-  private[graft] def deltaPairGraph(s: SparkSession, d: String,
-      cut: Long): DataFrame =
-    if (GraftConf.CandidateStage(s) == "dfcap") ngramDeltaPairs(s, d, cut)
-    else prefixDeltaPairs(s, d, cut)
 
   /** [[deltaPairGraph]]'s (a_id, b_id) projection — what the CC
     * contraction consumes. */
@@ -2322,8 +2245,8 @@ object Dedup {
     * engines — IEEE doubles, no libm `pow` whose ulp varies), and each
     * pair's probability floors onto the 10⁻⁶ grid BEFORE the mean, so
     * the aggregate is an associative integer sum. Scale: one scan over
-    * [[ngramJaccard]]'s verified pairs (already linear via the
-    * df-capped index), 4-row fan-out, ≤ 4-group rollup. */
+    * [[ngramJaccard]]'s verified pairs (already linear via the prefix
+    * filter), 4-row fan-out, ≤ 4-group rollup. */
   def minhashTuningCurve(s: SparkSession, d: String): DataFrame = {
     def sq(c: Column, k: Int): Column = (1 to k).foldLeft(c)((a, _) => a * a)
     def ppm(jr: Column, sqk: Int): Column =
@@ -2352,29 +2275,21 @@ object Dedup {
       .orderBy("rows_per_band")
   }
 
-  /** Candidate stage of [[ngramJaccard]] — (candidate pairs with
-    * intersection counts, per-doc sizes) — exposed package-private so
-    * the Stress harness can count raw shared-shingle candidates: the
-    * quantity that must grow ∝ n (df-capped Σ df²), never n². */
+  /** The df-capped inverted index — (candidate pairs with
+    * intersection counts, per-doc sizes) — behind [[containment]], and
+    * exposed package-private so the Stress harness can count raw
+    * shared-shingle candidates: the quantity that must grow ∝ n
+    * (df-capped Σ df²), never n². Shingles with document frequency
+    * above `graft.dedup.maxShingleDf` (default 100) are dropped BEFORE
+    * the join — from the index and the sizes alike, so the semantics
+    * stay a clean exact count over the informative (df ≤ cap) shingle
+    * sets. At the oracle SFs the cap drops nothing (max df is 7 at
+    * sf0.01, 25 at sf0.1 — measured). The hot set is found with a
+    * map-side-combined hash groupBy and is TINY by construction (heavy
+    * hitters: at most |corpus-shingles|/cap rows), so it broadcasts and
+    * the drop is a map-side anti-join. */
   private[graft] def ngramCandidateStage(
-      s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ngramCandidateStageOf(s,
-      Tables.documents(s, d).select("doc_id", "text"))
-
-  /** Frame-input variant of [[ngramCandidateStage]] — candidate pairs
-    * over an explicit (doc_id, text) corpus slice, with the slice's
-    * OWN df statistics for the hot-shingle cap (the semantics a
-    * nightly run has when it labels its corpus: at the oracle SFs the
-    * cap drops nothing, so slice-vs-full pair graphs agree wherever
-    * both are defined). `bSide` optionally restricts the self-join's
-    * b side (the HIGHER doc_id of each emitted pair): with a
-    * new-batch predicate the join cost drops from Σ df² to
-    * Σ df·df_new — the [[incrementalFrames]] scoping, expressed at
-    * the candidate stage — while df stats, sizes, and the a side
-    * still cover the full input (verification semantics unchanged). */
-  private def ngramCandidateStageOf(
-      s: SparkSession, docs: DataFrame,
-      bSide: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+      s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val maxDf = GraftConf.MaxShingleDf(s)
     // materialize the index ONCE: it has four consumers (hot-set agg,
     // anti-join probe, both self-join sides via sizes) and only the
@@ -2383,38 +2298,20 @@ object Dedup {
     // multi-executor cluster this would be persist(MEMORY_AND_DISK) or
     // a reliable checkpoint; the storage is O(corpus shingles) rows of
     // (id, hash) — 16 bytes each.
-    val all = shingleRowsOf(docs.select(col("doc_id"), col("text"),
-        lit(0).as("is_new")))
+    val all = shingleRowsOf(Tables.documents(s, d)
+        .select(col("doc_id"), col("text"), lit(0).as("is_new")))
       .drop("is_new")
       .localCheckpoint()
     val hot = all.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("h")
     val idx = all.join(broadcast(hot), Seq("h"), "left_anti")
     val sizes = idx.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val cands = idx.as("a").join(bSide(idx).as("b"),
+    val cands = idx.as("a").join(idx.as("b"),
         col("a.h") === col("b.h")
           && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .agg(count(lit(1)).as("inter"))
     (cands, sizes)
-  }
-
-  /** Verified near-dup pairs TOUCHING the delta only (a_id < b_id, so
-    * a pair touches a new doc exactly when b_id ≥ cut): the b side of
-    * the candidate self-join is restricted to new docs BEFORE the
-    * join, so the cost is Σ_h df·df_new — linear in the delta where
-    * the full graph's Σ df² is linear in the corpus — while df caps
-    * and sizes stay corpus-wide, making the output row-identical to
-    * `ngramJaccard.filter(b_id >= cut)`. One corpus shingle scan is
-    * still paid (dfs + sizes need it); a deployment that wants to
-    * skip that too persists the shingle index (the minhash-index
-    * treatment), which changes nothing downstream of `cands`. */
-  private def ngramDeltaPairs(s: SparkSession, d: String,
-      cut: Long): DataFrame = {
-    val (cands, sizes) = ngramCandidateStageOf(s,
-      Tables.documents(s, d).select("doc_id", "text"),
-      _.filter(col("doc_id") >= cut))
-    jaccardVerify(cands, sizes)
   }
 
   /** Exact-verify candidate pairs against the doc store — the batch
@@ -2432,12 +2329,7 @@ object Dedup {
       cands.select("a_id", "b_id").distinct())
 
   /** Join candidate (a_id, b_id, inter) with sizes and keep j ≥ 0.5. */
-  private def jaccardVerify(cands: DataFrame, sizes: DataFrame): DataFrame =
-    jaccardVerifyRaw(cands, sizes).orderBy("a_id", "b_id")
-
-  /** [[jaccardVerify]] without the presentation sort — the
-    * [[prefixVerifyRaw]] rule on the dfcap branch. */
-  private def jaccardVerifyRaw(cands: DataFrame, sizes: DataFrame)
+  private[graft] def jaccardVerify(cands: DataFrame, sizes: DataFrame)
       : DataFrame =
     cands
       .join(sizes.withColumnRenamed("doc_id", "a_id")
@@ -2446,6 +2338,7 @@ object Dedup {
         .withColumnRenamed("n", "nb"), "b_id")
       .filter(col("inter") * 3 >= col("na") + col("nb"))
       .select("a_id", "b_id", "inter", "na", "nb")
+      .orderBy("a_id", "b_id")
 
   /** MinHash(128) signatures; LSH with 64 bands × 2 rows (candidate
     * recall ≈ 1-1e-8 at j = 0.5); exact Jaccard verify on candidates
@@ -2958,10 +2851,9 @@ object Dedup {
   private val StopL =
     Fns.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
-  /** The uncapped all-pairs exact-Jaccard join — the shared oracle for
-    * [[ngramJaccard]] (whose df-cap drops nothing at oracle SFs) and
-    * [[jaccardPrefix]] (exact at EVERY corpus by the prefix-filter
-    * lemma): one text, two keys. */
+  /** The uncapped all-pairs exact-Jaccard join — the oracle of
+    * [[ngramJaccard]] (exact at EVERY corpus by the prefix-filter
+    * lemma) under both of its keys: one text, two keys. */
   private lazy val sqlJaccardAllPairs: String =
     s"""WITH sh AS (SELECT doc_id, $Sh AS s FROM documents),
        |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),

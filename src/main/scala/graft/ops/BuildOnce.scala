@@ -49,20 +49,6 @@ object BuildOnce {
       s"scratch artifact at $path was built for $got, requested for $tag")
   }
 
-  /** BENCH-ONLY: forget every built artifact and delete its scratch
-    * directory, so a latency harness can charge EACH query's cold row
-    * its own index build — with the cache left warm, run-order
-    * artifact sharing makes from-index cold columns incomparable
-    * (round-10 SERVING_LATENCY: ann_ivfpq_from_index "cold" 1.02 s <
-    * ann_pq_from_index 6.46 s only because earlier rows had already
-    * built the shared codebooks). Single-session dev harnesses only:
-    * a concurrent session in this JVM would race the deletion. */
-  private[graft] def resetForBench(): Unit = {
-    val keys = built.keySet.toArray(Array.empty[String])
-    keys.foreach { p => Scratch.delete(new java.io.File(p)) }
-    built.clear()
-  }
-
   /** Scratch path for artifact `kind` over corpus `dir`, keyed on the
     * md5 of the FULL dir (not hashCode — colliding hashCodes of two
     * dirs must not silently share an artifact). */

@@ -120,14 +120,8 @@ private[graft] object GraftConf {
     v => Some(v.split(",").toSeq.filter(_.nonEmpty)).filter(_.nonEmpty))
 
   // ——— near-dup candidates and graphs
-  val CandidateStage = new Knob[String]("graft.dedup.candidateStage",
-    "prefix", Text("prefix or dfcap"),
-    "exact near-dup candidate stage: the positional prefix filter, or the " +
-      "df-capped shingle index",
-    v => Some(v).filter(Set("prefix", "dfcap")))
   val MaxShingleDf = int("graft.dedup.maxShingleDf", 100, 1,
-    "hot-shingle cap of the dfcap stage, dedup_containment and " +
-      "dedup_incremental")
+    "hot-shingle cap of dedup_containment and dedup_incremental")
   val LshPlanes = optInt("graft.lsh.planes", 1, 24,
     "dedup_embedding_lsh hyperplanes per band; unset = scales with the corpus")
   val DbscanLshPlanes = optInt("graft.dbscan.lshPlanes", 1, 24,
@@ -195,10 +189,10 @@ private[graft] object GraftConf {
       "below-cut slice by count only, not by checksum")
 
   val all: Seq[Knob[_]] = Seq(TextUnicode, Md5Mode, SpreadParts, QTerms,
-    CandidateStage, MaxShingleDf, LshPlanes, DbscanLshPlanes,
-    SemanticCellSize, BruteforceMaxRows, CcMaxIters, PagerankIters,
-    PhashMaxBandDf, KnngraphNprobe, MrrNProbes, BloomBits, PpsTargetDocs,
-    TempBudgetTokens, PairsPath, VerifyPairsContent, CcLabelsPath,
-    CcOldLabelsPath, MinhashOldIndexPath, SimhashOldIndexPath,
-    LexIndexPath, FeaturesStorePath, TrustOldContent)
+    MaxShingleDf, LshPlanes, DbscanLshPlanes, SemanticCellSize,
+    BruteforceMaxRows, CcMaxIters, PagerankIters, PhashMaxBandDf,
+    KnngraphNprobe, MrrNProbes, BloomBits, PpsTargetDocs, TempBudgetTokens,
+    PairsPath, VerifyPairsContent, CcLabelsPath, CcOldLabelsPath,
+    MinhashOldIndexPath, SimhashOldIndexPath, LexIndexPath,
+    FeaturesStorePath, TrustOldContent)
 }

@@ -384,10 +384,8 @@ object Materialize {
     * `graft.dedup.pairsPath`, and every consumer starts from a pure
     * parquet scan of 5-long rows.
     *
-    * Provenance (`_graft_props`): the candidate-stage configuration
-    * the pairs were built under (readers refuse stage/df-cap drift —
-    * a dfcap-built graph is missing exactly the hot-only pairs the
-    * prefix stage keeps) plus the [[ccSliceChecksum]] of the source
+    * Provenance (`_graft_props`): the [[PairStage]] stamp (readers
+    * refuse any other) plus the [[ccSliceChecksum]] of the source
     * corpus and its max_doc_id — the cut [[pairGraphDelta]] refreshes
     * from. */
   def pairGraph(s: SparkSession, dir: String, path: String): Unit =
@@ -397,46 +395,35 @@ object Materialize {
   /** [[pairGraph]] over an explicit (doc_id, text) corpus slice —
     * `tag` is the corpus directory the slice came from (the
     * [[ccLabelsOf]] tagging discipline). Always computes fresh pairs
-    * via the conf-routed candidate stage — never reads
+    * via the prefix-filter stage — never reads
     * `graft.dedup.pairsPath` back (the [[graft.operators.Dedup
     * .loopLabels]] self-reference rule). */
   def pairGraphOf(s: SparkSession, docs: DataFrame, path: String,
       tag: String): Unit = {
     requireFresh(s, path)
     pairsPart(path, graft.operators.Dedup.ngramJaccardOf(s, docs))
-    seal(s, path, tag, sliceProps(Docs, docs) ++ pairStageProps(s))
+    seal(s, path, tag, sliceProps(Docs, docs) ++ PairStage)
   }
 
   private def pairsPart(path: String, pairs: DataFrame): Unit =
     sortedWrite(pairs, path, Seq("a_id", "b_id"), Seq("a_id", "b_id"))
 
-  /** The candidate-stage configuration props a pair-derived artifact
-    * records — ONE definition for the full writer, the delta writer,
-    * and the label writer, so a reader's drift refusal always compares
-    * against the same keys. */
-  private def pairStageProps(s: SparkSession): Map[String, String] = Map(
-    "pair_stage" -> GraftConf.CandidateStage(s),
-    "max_shingle_df" -> GraftConf.MaxShingleDf(s).toString)
+  /** The pair-stage stamp a pair-derived artifact records — ONE
+    * definition for the full writer, the delta writer, and the label
+    * writer, so a reader's refusal always compares against the same
+    * key. */
+  private val PairStage: Map[String, String] = Map("pair_stage" -> "prefix")
 
-  /** The reader side of [[pairStageProps]]: refuses a pair-derived
-    * artifact (`what`) built under another candidate stage, or under
-    * dfcap with another df cap, than this session runs — pairs derived
-    * under a different stage diverge exactly where the cap bites. */
-  private[graft] def requirePairStage(s: SparkSession,
-      props: Map[String, String], what: String): Unit = {
-    val stage = GraftConf.CandidateStage(s)
-    require(props.get("pair_stage").contains(stage),
+  /** The reader side of [[PairStage]]: refuses a pair-derived artifact
+    * (`what`) with any other stamp, or none — pairs from another
+    * candidate stage (an older build's df-capped index) can miss the
+    * hot-only pairs the prefix stage keeps. */
+  private[graft] def requirePairStage(props: Map[String, String],
+      what: String): Unit =
+    require(props.get("pair_stage") == PairStage.get("pair_stage"),
       s"$what was built under pair stage " +
-        s"'${props.getOrElse("pair_stage", "<none>")}' but this session " +
-        s"runs '$stage' (${GraftConf.CandidateStage.key}) — rebuild the " +
-        "artifact or match the conf")
-    require(stage != "dfcap" || props.get("max_shingle_df")
-        .contains(GraftConf.MaxShingleDf(s).toString),
-      s"$what was built with maxShingleDf=" +
-        s"${props.getOrElse("max_shingle_df", "<none>")} but this " +
-        s"session caps at ${GraftConf.MaxShingleDf(s)} — a df-cap " +
-        "change changes the pair graph; rebuild")
-  }
+        s"'${props.getOrElse("pair_stage", "<none>")}' but graft builds " +
+        "pairs only with the 'prefix' stage — rebuild the artifact")
 
   /** INCREMENTAL refresh of the pair-graph artifact — the last
     * rebuild-whole cost in the dedup serving story (round-11 verdict
@@ -447,37 +434,34 @@ object Materialize {
     * are a pure parquet scan of `oldPath`, and only the NEW-TOUCHING
     * pairs (b_id ≥ cut) are computed, via the delta-scoped candidate
     * stage ([[graft.operators.Dedup.deltaPairGraph]]: the self-join's
-    * b side is new docs only, so candidate cost is Σ df·df_new —
-    * linear in the batch where the full build's Σ df² is linear in
-    * the corpus). The merged output is written WRITE-ONCE to
-    * `newPath` with current-corpus provenance (parent ⊕ batch, see
-    * [[admit]]), so the next refresh deltas from it in turn.
+    * b side is new docs only, so candidate cost is Σ df·df_new over
+    * prefix postings — linear in the batch where the full build's
+    * Σ df² is linear in the corpus). The merged output is written
+    * WRITE-ONCE to `newPath` with current-corpus provenance (parent ⊕
+    * batch, see [[admit]]), so the next refresh deltas from it in
+    * turn.
     *
-    * Content contract: under the default `prefix` stage the output is
-    * row-identical to a full [[pairGraph]] rebuild at every corpus
-    * (the prefix lemma is exact; old pairs ARE the true old×old set,
-    * delta pairs ARE the true new-touching set — DedupSpec pins the
-    * equality on a fixture whose delta touches old pairs). Under
-    * `dfcap` the old rows keep the df statistics of THEIR build time,
-    * so a from-scratch rebuild under grown dfs may cap differently —
-    * the cap's own disclosed approximation, inherited, never widened
-    * (stage and cap-value drift are still refused).
+    * Content contract: the output is row-identical to a full
+    * [[pairGraph]] rebuild at every corpus (the prefix lemma is exact;
+    * old pairs ARE the true old×old set, delta pairs ARE the true
+    * new-touching set — DedupSpec pins the equality on a fixture whose
+    * delta touches old pairs).
     *
     * Guards, in order: `_graft_corpus` tag must name THIS corpus;
-    * candidate-stage/df-cap drift refused; then the rest of
-    * [[admit]]'s matrix (a stale pair graph silently corrupts every
-    * downstream graph metric). */
+    * an old artifact without the [[PairStage]] stamp is refused; then
+    * the rest of [[admit]]'s matrix (a stale pair graph silently
+    * corrupts every downstream graph metric). */
   def pairGraphDelta(s: SparkSession, dir: String, oldPath: String,
       newPath: String): Unit = {
     requireFresh(s, newPath)
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val (a, deltaPairs) = admit(s, dir, oldPath, Docs, docs,
         "pair-graph artifact", "run the full pairGraph build instead",
-        requirePairStage(s, _, s"pair-graph artifact at $oldPath"))(
+        requirePairStage(_, s"pair-graph artifact at $oldPath"))(
       graft.operators.Dedup.deltaPairGraph(s, dir, _))
     pairsPart(newPath, Parquet.read(s, oldPath)
       .select("a_id", "b_id", "inter", "na", "nb").unionAll(deltaPairs))
-    seal(s, newPath, dir, a.next ++ pairStageProps(s))
+    seal(s, newPath, dir, a.next ++ PairStage)
   }
 
   /** Materialize the connected-component LABEL artifact — the
@@ -683,10 +667,10 @@ object Materialize {
       }
     sortedWrite(labels, path, Seq("doc_id"), Seq("doc_id"))
     // provenance props (round-9 advisor fixes #1+#2): the pair-stage
-    // configuration the labels were built under, and the content
-    // checksum of the labeled slice — cc_incremental's reader refuses
-    // stage/cap drift and silent slice substitution
-    seal(s, path, tag, pairStageProps(s) ++ Map(
+    // stamp and the content checksum of the labeled slice —
+    // cc_incremental's reader refuses another stage's labels and
+    // silent slice substitution
+    seal(s, path, tag, PairStage ++ Map(
       "prov_ver" -> ArtifactTag.ProvVersion,
       "n_docs" -> n.toString, "content_xor" -> xor.toString))
   }

@@ -59,6 +59,12 @@ class DedupSpec extends SparkSpec {
     sb.toString
   }
 
+  /** Exact Jaccard ≥ 0.5 pairs verified over the df-capped index. */
+  private def cappedPairs(dir: String): Array[org.apache.spark.sql.Row] = {
+    val (cands, sizes) = Dedup.ngramCandidateStage(spark, dir)
+    Dedup.jaccardVerify(cands, sizes).collect()
+  }
+
   test("df-cap drops hot shingles from candidates AND sizes") {
     // 6 docs that all share one hot shingle ("hot hot hot") but are
     // otherwise disjoint, plus one genuine near-dup pair (6, 7)
@@ -71,20 +77,19 @@ class DedupSpec extends SparkSpec {
       "alpha beta gamma delta epsilon zeta eta",
       "alpha beta gamma delta epsilon zeta theta")
     val dir = docsDir(uniq ++ nearDup)
-    // cap 5 < df 6: the hot shingle is dropped; the only surviving pair
-    // is the near-dup one, with sizes that EXCLUDE capped shingles
-    // (the dfcap branch is conf-routed since the round-10 default flip)
-    withConf("graft.dedup.candidateStage" -> "dfcap",
-        "graft.dedup.maxShingleDf" -> "5") {
-      val rows = Dedup.ngramJaccard(spark, dir).collect()
+    // cap 5 < df 6: the df-capped index (dedup_containment's and
+    // dedup_incremental's) drops the hot shingle; the only surviving
+    // pair is the near-dup one, with sizes that EXCLUDE capped shingles
+    withConf("graft.dedup.maxShingleDf" -> "5") {
+      val rows = cappedPairs(dir)
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((6L, 7L)))
       // 7 tokens → 5 shingles each, all df ≤ cap, 4 shared
       assert(rows(0).getAs[Long]("inter") === 4L)
       assert(rows(0).getAs[Long]("na") === 5L)
     }
-    // DEFAULT (prefix) path: hot-shingle pairs appear iff jaccard ≥ 0.5
-    // — docs 0-5 share 1 of 4+4-1 shingles, so still no pair; near-dup
-    // pair remains, with UNCAPPED sizes
+    // the pair stage (prefix filter): hot-shingle pairs appear iff
+    // jaccard ≥ 0.5 — docs 0-5 share 1 of 4+4-1 shingles, so still no
+    // pair; the near-dup pair remains, with UNCAPPED sizes
     val rows = Dedup.ngramJaccard(spark, dir).collect()
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((6L, 7L)))
     assert(rows(0).getAs[Long]("inter") === 4L)
@@ -92,13 +97,12 @@ class DedupSpec extends SparkSpec {
   }
 
   test("prefix-filter jaccard ≡ inverted-index jaccard on real data") {
-    // at sf0.001 the df-cap drops nothing, so both conf branches must
-    // equal the exact pair set — full-row equality including
-    // inter/na/nb (the default branch IS the prefix filter since the
-    // round-10 flip, so the dfcap branch is pinned via the conf)
-    val exact = withConf("graft.dedup.candidateStage" -> "dfcap") {
-      Dedup.ngramJaccard(spark, sf0001).collect()
-    }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+    // at sf0.001 the df-cap drops nothing, so the pairs verified over
+    // the df-capped index (the one dedup_incremental verifies over)
+    // must equal the prefix filter's — full-row equality including
+    // inter/na/nb
+    val exact = cappedPairs(sf0001)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
     val pfx = Dedup.ngramJaccard(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -121,16 +125,13 @@ class DedupSpec extends SparkSpec {
     val dir = docsDir(long ++ short)
     withConf("graft.dedup.maxShingleDf" -> "5") {
       // the capped index drops all four B-shingles → pair (6,7) lost
-      // (dfcap branch pinned via the conf since the round-10 flip)
-      val capped = withConf("graft.dedup.candidateStage" -> "dfcap") {
-        Dedup.ngramJaccard(spark, dir).collect()
-      }
+      val capped = cappedPairs(dir)
       assert(capped.isEmpty, "df-cap should lose the hot-only pair")
-      // the DEFAULT path is the prefix filter: each doc indexes its
+      // the pair stage is the prefix filter: each doc indexes its
       // rarest ⌊n/2⌋+1 shingles — the lemma guarantees the (6,7)
       // prefixes collide (inter = 4 ≥ ⌈n/2⌉ = 3) — and the uncapped
       // verify recovers the exact row even with the df-cap conf SET
-      // (the cap is inert on the prefix branch)
+      // (the cap is inert on the prefix filter)
       val pfx = Dedup.ngramJaccard(spark, dir).collect()
       assert(pfx.map(r => (r.getLong(0), r.getLong(1))).toSeq
         === Seq((6L, 7L)))
@@ -153,7 +154,7 @@ class DedupSpec extends SparkSpec {
     val bound = arr
       .agg(sum(expr("n div 2 + 1"))).collect()(0).getLong(0)
     assert(bound < nAll, "prefix bound should undercut the full index")
-    val verified = Dedup.jaccardPrefix(spark, sf0001)
+    val verified = Dedup.ngramJaccard(spark, sf0001)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val candSet = cands.collect()
@@ -846,8 +847,8 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset("graft.cc.oldLabelsPath")
   }
 
-  test("incremental CC artifact guards: stage drift and slice " +
-      "substitution are refused at read time") {
+  test("incremental CC artifact guard: slice substitution is refused " +
+      "at read time") {
     // a dedicated corpus: 8 docs, ids 0-7, midpoint cut = 3 → old
     // slice = {0,1,2} (docsDir texts need ≥ 3 letter tokens to shingle)
     val texts = (0 until 8).map { i =>
@@ -865,15 +866,6 @@ class DedupSpec extends SparkSpec {
     try {
       // sanity: the artifact serves its own corpus
       assert(Dedup.queries("cc_incremental")(spark, dir).count() === 8)
-      // stage drift: labels were built under the default (prefix)
-      // stage; a dfcap session must be refused
-      withConf("graft.dedup.candidateStage" -> "dfcap") {
-        val e = intercept[IllegalArgumentException] {
-          Dedup.queries("cc_incremental")(spark, dir).collect()
-        }
-        assert(e.getMessage.contains("pair_stage") ||
-          e.getMessage.contains("pair stage"), e.getMessage)
-      }
       // slice substitution: same ids, one old doc's text edited
       // in-place — count-equality guards pass, the checksum must not
       val edited = texts.updated(1, "omega psi chi phi upsilon")
@@ -947,8 +939,8 @@ class DedupSpec extends SparkSpec {
       "pairs_from_index plan should read only the pair artifact")
   }
 
-  test("pair-graph artifact guards: wrong corpus and stage drift are " +
-      "refused at read time") {
+  test("pair-graph artifact guards: a wrong corpus is refused at read " +
+      "time") {
     val dir = docsDir(Seq(
       "alpha beta gamma delta epsilon zeta eta",
       "alpha beta gamma delta epsilon zeta theta",
@@ -964,20 +956,56 @@ class DedupSpec extends SparkSpec {
         Dedup.queries("neardup_degree_dist")(spark, sf0001).collect()
       }
       assert(e.getMessage.contains("built for corpus"), e.getMessage)
-      // stage drift: pairs were built under the default (prefix)
-      // stage; a dfcap session must be refused
-      withConf("graft.dedup.candidateStage" -> "dfcap") {
-        val e2 = intercept[IllegalArgumentException] {
-          Dedup.queries("neardup_pagerank")(spark, dir).collect()
-        }
-        assert(e2.getMessage.contains("pair stage"), e2.getMessage)
-      }
     }
     // write-once: reusing the pair path throws
     val e3 = intercept[IllegalArgumentException] {
       graft.ops.Materialize.pairGraph(spark, dir, path)
     }
     assert(e3.getMessage.contains("write-once"), e3.getMessage)
+  }
+
+  test("pair-stage stamp: another stage's or no stamp is refused by " +
+      "all three readers") {
+    val texts = (0 until 8).map { i =>
+      val t = alpha(i); s"alpha$t beta$t gamma$t delta$t epsilon$t"
+    }
+    val dir = docsDir(texts)
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val old = docs.filter(col("doc_id") < Dedup.idCut(docs))
+      .select("doc_id", "text")
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-pairstage").toString
+    graft.ops.Materialize.pairGraphOf(spark, old, s"$base/pairs", dir)
+    graft.ops.Materialize.ccLabelsOf(spark, old, s"$base/labels", dir)
+    var refreshes = 0
+    // (reader, the artifact it reads, one read)
+    val readers: Seq[(String, String, () => Unit)] = Seq(
+      ("verifiedPairs", s"$base/pairs", () =>
+        withConf("graft.dedup.pairsPath" -> s"$base/pairs") {
+          Dedup.queries("neardup_degree_dist")(spark, dir).collect()
+        }),
+      ("cc_incremental", s"$base/labels", () =>
+        withConf("graft.cc.oldLabelsPath" -> s"$base/labels") {
+          Dedup.queries("cc_incremental")(spark, dir).collect()
+        }),
+      ("pairGraphDelta", s"$base/pairs", () => {
+        refreshes += 1
+        graft.ops.Materialize.pairGraphDelta(spark, dir, s"$base/pairs",
+          s"$base/new$refreshes")
+      }))
+    readers.foreach { case (reader, path, read) =>
+      val props = graft.ops.ArtifactTag.readProps(spark, path)
+      assert(props.get("pair_stage").contains("prefix"), reader)
+      read() // the writers' own stamp is admitted
+      Seq(props + ("pair_stage" -> "dfcap"), props - "pair_stage")
+        .foreach { stamped =>
+          graft.ops.ArtifactTag.writeProps(spark, path, stamped)
+          val e = intercept[IllegalArgumentException](read())
+          assert(e.getMessage.contains("pair stage"),
+            s"$reader: ${e.getMessage}")
+        }
+      graft.ops.ArtifactTag.writeProps(spark, path, props)
+    }
   }
 
   test("signature incremental artifact-boundary mode: the index " +
@@ -1322,8 +1350,8 @@ class DedupSpec extends SparkSpec {
       "delta artifact provenance must equal the rebuild's")
   }
 
-  test("pair-graph delta guards: wrong corpus, stage drift, edited old " +
-      "slice, provenance-format drift, and missing max_doc_id refuse") {
+  test("pair-graph delta guards: wrong corpus, edited slice, format " +
+      "drift, no max_doc_id") {
     val texts = Seq("alpha beta gamma delta epsilon",
       "alpha beta gamma delta zeta", "eta theta iota kappa lambda",
       "mu nu xi omicron pi")
@@ -1338,12 +1366,6 @@ class DedupSpec extends SparkSpec {
       graft.ops.Materialize.pairGraphDelta(spark, sf0001, oldP, s"$base/n1")
     }
     assert(e.getMessage.contains("built for corpus"), e.getMessage)
-    withConf("graft.dedup.candidateStage" -> "dfcap") {
-      val e2 = intercept[IllegalArgumentException] {
-        graft.ops.Materialize.pairGraphDelta(spark, dir, oldP, s"$base/n2")
-      }
-      assert(e2.getMessage.contains("pair stage"), e2.getMessage)
-    }
     // in-place edit BELOW the cut (same ids, doc 0's text changed):
     // rebind the tag so only the content guard is under test
     val dir2 = docsDir(texts.updated(0, "omega psi chi phi upsilon"))

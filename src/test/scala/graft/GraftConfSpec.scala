@@ -50,7 +50,6 @@ class GraftConfSpec extends SparkSpec {
   test("every text knob refuses an empty value, naming its key") {
     GraftConf.all.filter(_.kind.isInstanceOf[GraftConf.Text])
       .foreach(refused(_, ""))
-    refused(GraftConf.CandidateStage, "suffix")
     refused(GraftConf.QTerms, ",,")
     withConf(GraftConf.QTerms.key -> "a,,b") {
       assert(GraftConf.QTerms(spark) === Seq("a", "b"))

@@ -150,14 +150,9 @@ class PlanAuditSpec extends SparkSpec {
       "triangle enumeration degenerated to a cartesian")
   }
 
-  test("ngram jaccard dfcap branch: bounded shuffles, hot-shingle drop " +
+  test("containment's capped index: bounded shuffles, hot-shingle drop " +
       "is broadcast") {
-    // the dfcap candidate stage is conf-routed since the round-10
-    // default flip; its plan shape still matters for the degenerate
-    // all-hot corpus it exists for
-    spark.conf.set("graft.dedup.candidateStage", "dfcap")
-    val p = try plan("dedup_ngram_jaccard")
-    finally spark.conf.unset("graft.dedup.candidateStage")
+    val p = plan("dedup_containment")
     assert(shuffles(p) <= 5, s"shuffle budget exceeded: ${shuffles(p)}")
     // the df-cap anti-join is PLANNED broadcast (initial plan); at this
     // SF the hot set is empty, so AQE's empty-relation propagation may

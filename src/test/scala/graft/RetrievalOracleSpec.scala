@@ -46,7 +46,7 @@ class RetrievalOracleSpec extends SparkSpec {
       } catch { case _: Throwable => false }
       assume(duck, "python3/duckdb unavailable — DuckDB half skipped")
       // relative path, no directory override: sbt's test cwd IS the
-      // repo root (the ServeBench output-path rule), and pinning an
+      // repo root (where the dev mains write their docs), and pinning an
       // absolute checkout path would validate a worktree's changes
       // against some OTHER clone's check.py
       val pb = new ProcessBuilder("python3", "scripts/check.py",
