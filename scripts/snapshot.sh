@@ -23,14 +23,16 @@
 # pins the one-footer parquet reader to Spark's inferred schemas, with
 # no job launched while frames are constructed; ServingRouteSpec builds
 # every serving artifact and pins that each conf-routed query's final
-# plan scans its artifact.
+# plan scans its artifact; AdmissionSpec pins that every reader and
+# writer admitting an old artifact below its cut refuses an edited or
+# backfilled old slice with the same named message.
 # Exit is nonzero on any failure — wire it in front of the commit and
 # a stale contract cannot land.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec graft.CcPathsSpec graft.ParquetReadSpec graft.ServingRouteSpec' \
+if sbt -batch 'testOnly graft.ContractSpec graft.QueriesSmokeSpec graft.ScaleContractSpec graft.CodegenGateSpec graft.ToolsSpec graft.GraftConfSpec graft.CcPathsSpec graft.ParquetReadSpec graft.ServingRouteSpec graft.AdmissionSpec' \
     > /tmp/snapshot_gate.log 2>&1; then
-  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf + CcPaths + ParquetRead + ServingRoute green)"
+  echo "snapshot gate OK (Contract + QueriesSmoke + ScaleContract + CodegenGate + Tools + GraftConf + CcPaths + ParquetRead + ServingRoute + Admission green)"
 else
   tail -40 /tmp/snapshot_gate.log >&2
   echo "snapshot gate FAILED — contract drift or a broken query; do NOT commit" >&2

@@ -250,7 +250,9 @@ object Dedup {
       .localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    val n = deg.count()
+    // a pair-free graph has no node to rank: n = 0 leaves `deg` empty,
+    // so the output is empty whatever the (guarded) divisor is
+    val n = math.max(deg.count(), 1L)
     val init = 1000000000000L / n
     val base = 150000000000L / n // (1 − 0.85)·10¹² div n
     var pr = deg.select(col("src").as("doc_id"), lit(init).as("pr"))
@@ -1138,13 +1140,13 @@ object Dedup {
         graft.ops.Materialize.ivfIndexOf,
         graft.ops.Materialize.ivfIndexAppend),
       "lex" -> Retrieval.lexAppendPath(s, d),
-      "minhash" -> sigScratch(s, d, "minhash-chain",
+      "minhash" -> midpointRefresh(s, d, "minhash-chain" + hashModeTag,
         graft.ops.Materialize.minhashIndexOf,
         graft.ops.Materialize.minhashIndexAppend),
       "pq" -> Similarity.vecScratch(s, d, "pq-chain",
         graft.ops.Materialize.pqIndexOf,
         graft.ops.Materialize.pqIndexAppend),
-      "simhash" -> sigScratch(s, d, "simhash-chain",
+      "simhash" -> midpointRefresh(s, d, "simhash-chain" + hashModeTag,
         graft.ops.Materialize.simhashIndexOf,
         graft.ops.Materialize.simhashIndexAppend))
     chainHealth(s, chains.map { case (f, h) => (f, h, d) },
@@ -1494,29 +1496,12 @@ object Dedup {
     * row-identity-to-rebuild contract is hash-gated by the driver
     * end to end — not just spec-pinned (DedupSpec pins the equality
     * and the refusal matrix besides). */
-  def pairsDeltaRefresh(s: SparkSession, d: String): DataFrame = {
-    val root = graft.ops.BuildOnce.scratchPath("pairsdelta", d)
-    graft.ops.BuildOnce.ensure(root, d) {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      // cold start (the midpoint leaves no old half — 0-2 docs): a
-      // production first night runs the FULL build, and the
-      // composition degrades the same way instead of refusing a
-      // tiny-but-valid corpus the in-query twin handles fine
-      val old =
-        if (docs.isEmpty) docs
-        else docs.filter(col("doc_id") < idCut(docs))
-      if (old.isEmpty)
-        graft.ops.Materialize.pairGraphOf(s, docs, s"$root/new", d)
-      else {
-        graft.ops.Materialize.pairGraphOf(s, old, s"$root/old", d)
-        graft.ops.Materialize.pairGraphDelta(s, d, s"$root/old",
-          s"$root/new")
-      }
-    }
-    Parquet.read(s, s"$root/new")
+  def pairsDeltaRefresh(s: SparkSession, d: String): DataFrame =
+    Parquet.read(s, midpointRefresh(s, d, "pairsdelta",
+        graft.ops.Materialize.pairGraphOf,
+        graft.ops.Materialize.pairGraphDelta))
       .select("a_id", "b_id", "inter", "na", "nb")
       .orderBy("a_id", "b_id")
-  }
 
   /** Edge rows up to which [[ccLoop]] labels on the driver: 2^20
     * (a_id, b_id) pairs are ~32 MB of primitive longs (the endpoints
@@ -1744,6 +1729,34 @@ object Dedup {
     (bounds.getLong(0) + bounds.getLong(1)) / 2
   }
 
+  /** The test-harness refresh ritual behind the registered doc-id
+    * delta and append compositions (pair graph, lexical index,
+    * minhash and simhash chains): split at [[idCut]], `full` indexes
+    * the old half as the "previous cycle" at `root`/old, and `refresh`
+    * brings it to the whole corpus at `root`/new. Cold start (the
+    * midpoint leaves no old half — 0-2 docs) runs the full build
+    * straight into `root`/new: a production first night does the
+    * same, instead of refusing a tiny-but-valid corpus the in-query
+    * twin handles. Built once per JVM and corpus; returns `root`/new,
+    * the artifact the composition serves. */
+  private[graft] def midpointRefresh(s: SparkSession, d: String,
+      kind: String, full: (SparkSession, DataFrame, String, String) => Unit,
+      refresh: (SparkSession, String, String, String) => Unit): String = {
+    val root = graft.ops.BuildOnce.scratchPath(kind, d)
+    graft.ops.BuildOnce.ensure(root, d) {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      val old =
+        if (docs.isEmpty) docs
+        else docs.filter(col("doc_id") < idCut(docs))
+      if (old.isEmpty) full(s, docs, s"$root/new", d)
+      else {
+        full(s, old, s"$root/old", d)
+        refresh(s, d, s"$root/old", s"$root/new")
+      }
+    }
+    s"$root/new"
+  }
+
   private def ccIncrementalPrefix(s: SparkSession, d: String)
       : (DataFrame, Long, DataFrame, DataFrame, DataFrame, Int) = {
     val maxIters = GraftConf.CcMaxIters(s)
@@ -1757,7 +1770,8 @@ object Dedup {
     // b side is new docs only, Σ df_prefix·df_prefix_new) — neither the
     // old loop nor the old×old pair graph re-runs, which is the whole
     // incremental contract. In artifact mode the old/new boundary is
-    // DEFINED BY THE ARTIFACT (cut = max labeled id + 1): the old set
+    // DEFINED BY THE ARTIFACT (cut = its recorded max_doc_id + 1, the
+    // max labeled id): the old set
     // is exactly what the previous cycle labeled, so a batch that
     // shifts the current corpus's id midpoint can neither double-emit
     // docs the artifact covers nor drop uncovered ones — deriving cut
@@ -1771,72 +1785,35 @@ object Dedup {
     val (cut, oldLabels, dPairs) =
       GraftConf.CcOldLabelsPath(s) match {
         case Some(p) =>
-          graft.ops.ArtifactTag.require(s, p, d) // wrong-corpus guard
+          // [[graft.ops.Materialize.admitDocs]]: tag, pair-stage stamp
+          // (labels from another stage's graph can miss pairs the
+          // prefix delta finds), provenance version, the artifact's
+          // max_doc_id + 1 as the cut, and the below-cut checksum (id
+          // reuse, backfill or in-place edits of already-labeled docs
+          // would serve stale labels) — all beside the delta pairs
+          val (aCut, dPairs) = graft.ops.Materialize.admitDocs(s, d, p,
+              docs, "old-labels artifact", "run the full labeling instead",
+              graft.ops.Materialize.requirePairStage(_,
+                s"old-labels artifact at $p")) { cut =>
+            (cut, deltaPairs(s, d, cut).localCheckpoint())
+          }
           val labels = Parquet.read(s, p)
             .select(col("doc_id"), col("cluster_id").as("label"))
-          val stats = labels.agg(max("doc_id"), count(lit(1))).head()
-          require(!stats.isNullAt(0),
-            s"old-labels artifact at $p is EMPTY — an empty previous " +
-              "cycle has no incremental mode; run the full labeling")
-          val aCut = stats.getLong(0) + 1L
-          // provenance guard (round-9 advisor fix #1): labels built
-          // from another pair stage's graph can miss pairs the prefix
-          // delta finds, so only prefix-stamped labels are admitted.
-          // Artifacts written before the props sidecar are not
-          // admissible.
-          val props = graft.ops.ArtifactTag.readProps(s, p)
-          graft.ops.Materialize.requirePairStage(props,
-            s"old-labels artifact at $p")
-          // coverage guard: the boundary rule assumes monotone id
-          // allocation (every current doc below the artifact's max id
-          // was labeled by the previous cycle). Id reuse or backfill
-          // below aCut would otherwise VANISH from the output — not
-          // old (absent from the artifact), not new (below the cut).
-          // Round-9 advisor fix #2: count equality alone cannot detect
-          // SUBSTITUTION (1:1 id reuse) or in-place text edits of
-          // already-labeled docs, both of which would serve stale
-          // labels — so the default guard is the writer's content
-          // checksum over (doc_id, md5(text)), replayed on the
-          // current below-cut slice. Cost: one projection-pruned
-          // (doc_id, text) scan of the old slice per invocation —
-          // far below relabeling (no shingling, no pair join, no
-          // loop); a deployment on an immutable store may downgrade
-          // to the id-level guard with graft.artifact.trustOldContent
-          // (count + anti-join: catches backfill, not substitution),
-          // the one knob that also governs the delta/append writers
-          val below = docs.filter(col("doc_id") < aCut)
+          // under graft.artifact.trustOldContent admission checks the
+          // below-cut COUNT only; an id swapped below the cut (one
+          // dropped, one backfilled) keeps the count, and its doc would
+          // vanish from the output — not old (absent from the
+          // artifact), not new (below the cut)
           if (GraftConf.TrustOldContent(s)) {
-            val nBelow = below.count()
-            require(nBelow == stats.getLong(1),
-              s"artifact at $p labels ${stats.getLong(1)} docs but the " +
-                s"corpus has $nBelow docs below its boundary ($aCut) — " +
-                "id reuse/backfill breaks the incremental id contract; " +
-                "run the full labeling instead")
-            val missing = below.select("doc_id")
+            val missing = docs.filter(col("doc_id") < aCut).select("doc_id")
               .join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
               .count()
             require(missing == 0,
               s"$missing docs below the boundary ($aCut) are absent " +
                 s"from the artifact at $p — id backfill breaks the " +
                 "incremental id contract; run the full labeling instead")
-          } else {
-            // version gate BEFORE the replay: a checksum-formula
-            // change must read as "provenance format changed", not
-            // as id reuse / in-place edits (round-11 advisor finding)
-            graft.ops.ArtifactTag.requireProvVersion(props, p)
-            val (n, xor) = graft.ops.Materialize.ccSliceChecksum(
-              below.select("doc_id", "text"))
-            require(props.get("n_docs").contains(n.toString)
-                && props.get("content_xor").contains(xor.toString),
-              s"old-slice checksum mismatch at $p (artifact " +
-                s"n=${props.getOrElse("n_docs", "<none>")} " +
-                s"xor=${props.getOrElse("content_xor", "<none>")}, " +
-                s"corpus n=$n xor=$xor) — the docs below the boundary " +
-                s"($aCut) are not the slice the previous cycle " +
-                "labeled (id reuse, backfill, or in-place edits); " +
-                "run the full labeling instead")
           }
-          (aCut, labels, deltaPairs(s, d, aCut).localCheckpoint())
+          (aCut, labels, dPairs)
         case None =>
           val mCut = idCut(docs)
           // verifiedPairsMat, not an unconditional localCheckpoint: in
@@ -2077,19 +2054,14 @@ object Dedup {
         // the tag binds the corpus dir and write-once forbids
         // in-place mutation). An audit pass sets it to close the
         // corpus-regenerated-in-place class the tag cannot see.
-        if (GraftConf.VerifyPairsContent(s)) {
-          graft.ops.ArtifactTag.requireProvVersion(props, p)
-          val (n, xor) = graft.ops.Materialize.ccSliceChecksum(
-            Tables.documents(s, d).select("doc_id", "text"))
-          require(props.get("n_docs").contains(n.toString)
-              && props.get("content_xor").contains(xor.toString),
-            s"pair-graph content audit FAILED at $p (artifact " +
-              s"n=${props.getOrElse("n_docs", "<none>")} " +
-              s"xor=${props.getOrElse("content_xor", "<none>")}, " +
-              s"corpus n=$n xor=$xor) — the corpus changed under the " +
-              "artifact (regenerated in place, edited, or extended); " +
-              "rebuild the pair graph or delta-refresh it")
-        }
+        if (GraftConf.VerifyPairsContent(s))
+          graft.ops.Materialize.requireSameSlice(props, p,
+            graft.ops.Materialize.ccSliceChecksum(
+              Tables.documents(s, d).select("doc_id", "text")),
+            "pair-graph content audit",
+            "the corpus changed under the artifact (regenerated in " +
+              "place, edited, or extended); rebuild the pair graph or " +
+              "delta-refresh it")
         Parquet.read(s, p).select("a_id", "b_id", "inter", "na", "nb")
       case None => ngramJaccardRaw(s, d)
     }
@@ -2423,27 +2395,17 @@ object Dedup {
     * (DedupSpec pins that equality row-for-row). Rows-only 🔶 like
     * the other MinHash paths (LSH recall < 1 by design). Dual-mode
     * boundary since round 11: `graft.minhash.oldIndexPath` SET → the
-    * persisted previous-cycle index DEFINES the cut ([[oldIndexMode]]
-    * — tag, provenance, and checksum guards); unset → the
-    * self-contained midpoint replay. */
+    * persisted previous-cycle index DEFINES the cut ([[oldIndex]]);
+    * unset → the self-contained midpoint replay. */
   def minhashIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val (cut, path) = oldIndexMode(s, docs, d,
-        GraftConf.MinhashOldIndexPath).getOrElse {
-      val mCut = idCut(docs)
-      val p = graft.ops.BuildOnce.scratchPath("minhash-old" + hashModeTag, d)
-      graft.ops.BuildOnce.ensure(p, d) {
-        graft.ops.Materialize.minhashIndexOf(s,
-          docs.filter(col("doc_id") < mCut).select("doc_id", "text"),
-          p, d)
-      }
-      (mCut, p)
-    }
     graft.plans.SignatureFunctions.register(s)
-    val newArr = shingleArraysOf(
-        docs.filter(col("doc_id") >= cut).select("doc_id", "text"))
-      .localCheckpoint()
-    val newBands = minhashBands(newArr).localCheckpoint()
+    val (path, (newArr, newBands)) = oldIndex(s, d, docs,
+        GraftConf.MinhashOldIndexPath, "minhash",
+        graft.ops.Materialize.minhashIndexOf) { batch =>
+      val arr = shingleArraysOf(batch).localCheckpoint()
+      (arr, minhashBands(arr).localCheckpoint())
+    }
     // the old side resolves the GENERATION CHAIN (1 element for a
     // merged index; per-generation sorted scans for an append chain,
     // each still row-group-pruned by the probed buckets)
@@ -2532,30 +2494,6 @@ object Dedup {
       .orderBy("a_id", "b_id")
   }
 
-  /** Build-once scratch composition behind the signature
-    * append-refresh queries — the [[graft.operators.Retrieval]]
-    * `lexScratch` shape on the signature side: old-half index (g0) +
-    * one append GENERATION for the rest (g1). Returns the chain
-    * head. `full` writes a slice index; `append` writes a
-    * generation. */
-  private def sigScratch(s: SparkSession, d: String, kind: String,
-      full: (SparkSession, DataFrame, String, String) => Unit,
-      append: (SparkSession, String, String, String) => Unit): String = {
-    val root = graft.ops.BuildOnce.scratchPath(kind + hashModeTag, d)
-    graft.ops.BuildOnce.ensure(root, d) {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val old =
-        if (docs.isEmpty) docs
-        else docs.filter(col("doc_id") < idCut(docs))
-      if (old.isEmpty) full(s, docs, s"$root/new", d)
-      else {
-        full(s, old, s"$root/g0", d)
-        append(s, d, s"$root/g0", s"$root/new")
-      }
-    }
-    s"$root/new"
-  }
-
   /** `dedup_minhash_append_refresh` — the GENERATIONAL ingest cycle
     * registered as a query (the `bm25_append_refresh` discipline on
     * the dedup side): old-half band index → one
@@ -2566,7 +2504,7 @@ object Dedup {
     * row-for-row, so the same oracle hash-gates the whole
     * write-append-serve loop at the driver gate. */
   def minhashAppendRefresh(s: SparkSession, d: String): DataFrame =
-    minhashServe(s, d, sigScratch(s, d, "minhash-chain",
+    minhashServe(s, d, midpointRefresh(s, d, "minhash-chain" + hashModeTag,
       graft.ops.Materialize.minhashIndexOf,
       graft.ops.Materialize.minhashIndexAppend))
 
@@ -2574,7 +2512,7 @@ object Dedup {
     * the simhash banded index; output ≡ [[simhash]] row-for-row. */
   def simhashAppendRefresh(s: SparkSession, d: String): DataFrame =
     simhashPairs(graft.ops.Materialize.chainRead(s,
-      sigScratch(s, d, "simhash-chain",
+      midpointRefresh(s, d, "simhash-chain" + hashModeTag,
         graft.ops.Materialize.simhashIndexOf,
         graft.ops.Materialize.simhashIndexAppend),
       d, "bands", Seq("doc_id", "sig", "k", "bh")))
@@ -2690,78 +2628,59 @@ object Dedup {
     * (the documents scan carries a pushed doc_id ≥ cut filter).
     * Rows-only 🔶 like the rest of the simhash family. Dual-mode
     * boundary since round 11: `graft.simhash.oldIndexPath` SET → the
-    * persisted previous-cycle index DEFINES the cut ([[oldIndexMode]]
-    * — tag, provenance, and checksum guards); unset → the
-    * self-contained midpoint replay. */
+    * persisted previous-cycle index DEFINES the cut ([[oldIndex]]);
+    * unset → the self-contained midpoint replay. */
   def simhashIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val (cut, path) = oldIndexMode(s, docs, d,
-        GraftConf.SimhashOldIndexPath).getOrElse {
-      val mCut = idCut(docs)
-      val p = graft.ops.BuildOnce.scratchPath("simhash-old" + hashModeTag, d)
-      graft.ops.BuildOnce.ensure(p, d) {
-        graft.ops.Materialize.simhashIndexOf(s,
-          docs.filter(col("doc_id") < mCut).select("doc_id", "text"),
-          p, d)
-      }
-      (mCut, p)
+    val (path, newBands) = oldIndex(s, d, docs,
+        GraftConf.SimhashOldIndexPath, "simhash",
+        graft.ops.Materialize.simhashIndexOf) {
+      simhashBandedOf(s, _).localCheckpoint()
     }
-    val newBands = simhashBandedOf(s,
-        docs.filter(col("doc_id") >= cut).select("doc_id", "text"))
-      .localCheckpoint()
     // chain-aware old side (the [[minhashIncremental]] rule)
     val oldBands = graft.ops.Materialize.chainRead(s, path, d,
       "bands", Seq("doc_id", "sig", "k", "bh"))
     simhashPairs(oldBands.unionAll(newBands), newBands)
   }
 
-  /** Artifact-boundary mode for the signature-family incremental
-    * queries — the [[ccIncremental]] `graft.cc.oldLabelsPath`
-    * production shape applied to [[simhashIncremental]] /
-    * [[minhashIncremental]]: when `confKey` points at the PERSISTED
-    * previous-cycle index ([[graft.ops.Materialize.simhashIndexOf]] /
-    * `minhashIndexOf` over the old corpus), the INDEX defines the
-    * old/new cut — its recorded max doc_id + 1 — so a batch that
-    * shifts the current table's id midpoint can neither double-sign
-    * docs the index covers nor drop uncovered ones. Guards, in order:
-    * the `_graft_corpus` tag must name THIS corpus; the index must
-    * carry provenance (empty or pre-provenance indexes have no
-    * incremental mode); and the writer's content checksum must replay
-    * on the current below-cut slice (id reuse, backfill, or in-place
-    * edits of already-indexed docs refuse loudly — stale signatures
-    * silently drop near-dup pairs, the worst dedup failure). The
-    * checksum costs one projection-pruned (doc_id, text) scan of the
-    * old slice — far below re-signing (no tokenize, no vote, no
-    * bucket join). Returns None when `confKey` is unset — the
+  /** The old index and the batch side of the signature-family
+    * incremental queries — the [[ccIncremental]]
+    * `graft.cc.oldLabelsPath` production shape applied to
+    * [[simhashIncremental]] / [[minhashIncremental]]. When `knob`
+    * points at the PERSISTED previous-cycle index (`full` — the
+    * family's slice writer — over the old corpus),
+    * [[graft.ops.Materialize.admitDocs]] admits it: tag, provenance,
+    * the recorded max doc_id + 1 as the cut (a batch that shifts the
+    * current table's id midpoint can neither double-sign docs the
+    * index covers nor drop uncovered ones), and the below-cut checksum
+    * (stale signatures silently drop near-dup pairs, the worst dedup
+    * failure) — with `sign`, the batch's checkpointed signatures,
+    * computed beside the checksum aggregate. Unset → the
     * self-contained midpoint replay (test-harness reality: the twin
-    * checks replay the same table). DedupSpec pins artifact mode ≡
-    * midpoint mode on the same slice and spec-asserts the refusals. */
-  private def oldIndexMode(s: SparkSession, docs: DataFrame, d: String,
-      knob: GraftConf.Knob[Option[String]]): Option[(Long, String)] =
-    knob(s).map { p =>
-      graft.ops.ArtifactTag.require(s, p, d)
-      val props = graft.ops.ArtifactTag.readProps(s, p)
-      require(props.contains("max_doc_id"),
-        s"signature index at $p carries no max_doc_id provenance — an " +
-          "empty or pre-provenance index has no incremental mode; " +
-          "rebuild it with the Materialize writer")
-      val cut = props("max_doc_id").toLong + 1L
-      // version gate before the checksum replay (the ccIncremental
-      // rule): a formula change reads as "rebuild", not corruption
-      graft.ops.ArtifactTag.requireProvVersion(props, p)
-      val (n, xor) = graft.ops.Materialize.ccSliceChecksum(
-        docs.filter(col("doc_id") < cut).select("doc_id", "text"))
-      require(props.get("n_docs").contains(n.toString)
-          && props.get("content_xor").contains(xor.toString),
-        s"old-slice checksum mismatch at $p (index " +
-          s"n=${props.getOrElse("n_docs", "<none>")} " +
-          s"xor=${props.getOrElse("content_xor", "<none>")}, " +
-          s"corpus n=$n xor=$xor) — the docs below the boundary " +
-          s"($cut) are not the slice the previous cycle signed (id " +
-          "reuse, backfill, or in-place edits); re-sign the corpus " +
-          "instead")
-      (cut, p)
+    * checks replay the same table), `full` writing the old-half index
+    * once into scratch. Returns (old index path, the signed batch).
+    * DedupSpec pins artifact mode ≡ midpoint mode on the same
+    * slice; AdmissionSpec pins the refusals. */
+  private def oldIndex[A](s: SparkSession, d: String, docs: DataFrame,
+      knob: GraftConf.Knob[Option[String]], family: String,
+      full: (SparkSession, DataFrame, String, String) => Unit)(
+      sign: DataFrame => A): (String, A) = {
+    def slice(keep: Column) = docs.filter(keep).select("doc_id", "text")
+    def batch(cut: Long) = sign(slice(col("doc_id") >= cut))
+    knob(s) match {
+      case Some(p) =>
+        (p, graft.ops.Materialize.admitDocs(s, d, p, docs, s"$family index",
+          s"re-sign the corpus with the full $family writer instead")(batch))
+      case None =>
+        val cut = idCut(docs)
+        val p = graft.ops.BuildOnce.scratchPath(
+          s"$family-old" + hashModeTag, d)
+        graft.ops.BuildOnce.ensure(p, d) {
+          full(s, slice(col("doc_id") < cut), p, d)
+        }
+        (p, batch(cut))
     }
+  }
 
   /** `dedup_embedding_bruteforce` — exact cosine ≥ 0.45 near-dup pairs
     * by DELIBERATE all-pairs join: this is the small-SF oracle baseline
@@ -3054,8 +2973,8 @@ object Dedup {
     * construction (append admission re-verifies it every cycle), so
     * each chain's counts recompute straight from the corpus midpoint
     * cuts — doc-side families (lex/minhash/simhash) collapse to one
-    * generation when the base slice is empty (the `sigScratch` /
-    * `lexScratch` rule), the vector families always build base +
+    * generation when the base slice is empty (the [[midpointRefresh]]
+    * rule), the vector families always build base +
     * append (`vecScratch`), and the feature chain collapses only on
     * an EMPTY events table (`featScratch`'s cold-start fallback — a
     * non-empty table always has a non-empty ≤-midpoint-day half). */

@@ -593,37 +593,13 @@ object Retrieval {
 
   /** Build-once scratch composition behind the two delta-refresh
     * queries: old-half index + [[graft.ops.Materialize
-    * .lexicalIndexDelta]] refresh to the full corpus. Returns the
-    * REFRESHED artifact's path. */
+    * .lexicalIndexDelta]] refresh to the full corpus
+    * ([[Dedup.midpointRefresh]]). Returns the REFRESHED artifact's
+    * path. */
   private def lexDeltaPath(s: SparkSession, d: String): String =
-    lexScratch(s, d, "lexdelta",
+    Dedup.midpointRefresh(s, d, "lexdelta",
+      graft.ops.Materialize.lexicalIndexOf,
       graft.ops.Materialize.lexicalIndexDelta)
-
-  /** The shared old-half-then-refresh scratch ritual of
-    * [[lexDeltaPath]] and [[lexAppendPath]] — ONE definition of the
-    * boundary rule and the cold-start fallback (the midpoint leaves
-    * no old half on a 0-2 doc corpus: a production first night runs
-    * the FULL build, and the composition degrades the same way
-    * instead of refusing a corpus the in-query twin handles). */
-  private def lexScratch(s: SparkSession, d: String, kind: String,
-      refresh: (SparkSession, String, String, String) => Unit)
-      : String = {
-    val root = graft.ops.BuildOnce.scratchPath(kind, d)
-    graft.ops.BuildOnce.ensure(root, d) {
-      val docs = graft.sources.Tables.documents(s, d)
-        .select("doc_id", "text")
-      val old =
-        if (docs.isEmpty) docs
-        else docs.filter(col("doc_id") < Dedup.idCut(docs))
-      if (old.isEmpty)
-        graft.ops.Materialize.lexicalIndexOf(s, docs, s"$root/new", d)
-      else {
-        graft.ops.Materialize.lexicalIndexOf(s, old, s"$root/old", d)
-        refresh(s, d, s"$root/old", s"$root/new")
-      }
-    }
-    s"$root/new"
-  }
 
   /** Exact-phrase search served from the MATERIALIZED positional gram
     * index — [[phraseSearch]]'s serving twin: the standing phrase is
@@ -688,10 +664,11 @@ object Retrieval {
 
   /** Build-once scratch composition behind the append-refresh queries:
     * old-half index + [[graft.ops.Materialize.lexicalIndexAppend]]
-    * generation for the rest ([[lexScratch]]). Returns the chain
-    * HEAD. */
+    * generation for the rest ([[Dedup.midpointRefresh]]). Returns the
+    * chain HEAD. */
   private[graft] def lexAppendPath(s: SparkSession, d: String): String =
-    lexScratch(s, d, "lexappend",
+    Dedup.midpointRefresh(s, d, "lexappend",
+      graft.ops.Materialize.lexicalIndexOf,
       graft.ops.Materialize.lexicalIndexAppend)
 
   /** DuckDB mirror of the standing-phrase search — ONE definition for

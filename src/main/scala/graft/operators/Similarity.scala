@@ -1193,8 +1193,8 @@ object Similarity {
   }
 
   /** Build-once scratch composition behind the vector append-refresh
-    * queries (the [[graft.operators.Dedup]] `sigScratch` shape on the
-    * embedding side): base-half index (g0) + ONE append generation
+    * queries (the [[graft.operators.Dedup.midpointRefresh]] shape on
+    * the embedding side): base-half index (g0) + ONE append generation
     * for the rest. Returns the chain head. */
   private[graft] def vecScratch(s: SparkSession, d: String, kind: String,
       full: (SparkSession, DataFrame, String, String) => Unit,
@@ -1203,7 +1203,7 @@ object Similarity {
     graft.ops.BuildOnce.ensure(root, d) {
       val vecs = Tables.embeddings(s, d).select("vec_id", "embedding")
       val bounds = vecs.agg(min("vec_id"), max("vec_id")).head()
-      // empty-corpus guard (the sigScratch rule): a null min means no
+      // empty-corpus guard (the midpointRefresh rule): a null min means no
       // vectors — refuse loudly rather than NPE inside the cut math
       require(!bounds.isNullAt(0),
         s"vector append-refresh needs a non-empty embeddings table in $d")

@@ -179,14 +179,16 @@ private[graft] object GraftConf {
     "feature store feature_pit_from_index reads; unset = built once into " +
       "scratch")
   /** A deployment on an IMMUTABLE store may skip the below-cut content
-    * hash (the one corpus-proportional md5 in a refresh) and keep only
-    * the count guard — catches backfill and dropped rows, NOT 1:1
-    * substitution or in-place edits, which an immutable store rules out
-    * by construction. Default off: the checksum replay is the guard
-    * that makes a refreshed artifact trustworthy on a mutable store. */
+    * hash (the one corpus-proportional md5 in a refresh or an
+    * artifact-mode incremental read) and keep only the count guard —
+    * catches backfill and dropped rows, NOT 1:1 substitution or
+    * in-place edits, which an immutable store rules out by
+    * construction. Default off: the checksum replay is the guard that
+    * makes a refreshed or incrementally read artifact trustworthy on a
+    * mutable store. */
   val TrustOldContent = flag("graft.artifact.trustOldContent",
-    "immutable stores: refresh writers and cc_incremental check the " +
-      "below-cut slice by count only, not by checksum")
+    "immutable stores: every below-cut admission checks the old slice by " +
+      "count only, not by checksum")
 
   val all: Seq[Knob[_]] = Seq(TextUnicode, Md5Mode, SpreadParts, QTerms,
     MaxShingleDf, LshPlanes, DbscanLshPlanes, SemanticCellSize,

@@ -385,9 +385,8 @@ object Materialize {
     * parquet scan of 5-long rows.
     *
     * Provenance (`_graft_props`): the [[PairStage]] stamp (readers
-    * refuse any other) plus the [[ccSliceChecksum]] of the source
-    * corpus and its max_doc_id — the cut [[pairGraphDelta]] refreshes
-    * from. */
+    * refuse any other) plus the [[sliceProps]] of the source corpus —
+    * its max_doc_id is the cut [[pairGraphDelta]] refreshes from. */
   def pairGraph(s: SparkSession, dir: String, path: String): Unit =
     pairGraphOf(s, Tables.documents(s, dir).select("doc_id", "text"),
       path, dir)
@@ -543,14 +542,33 @@ object Materialize {
       (if (r.isNullAt(2)) Nil else Seq(k.max -> r.getLong(2).toString))
   }
 
-  /** The (n_docs, content_xor) checksum of a (doc_id, text) slice —
-    * the [[Docs]] formula, shared with `cc_incremental`'s
-    * artifact-mode reader (round-9 advisor fix #2: the coverage guard
-    * compared only row counts, so 1:1 doc_id reuse or in-place edits
-    * of already-labeled docs served stale labels silently). */
-  private[graft] def ccSliceChecksum(docs: DataFrame): (Long, Long) = {
-    val r = docs.agg(count(lit(1L)), expr(s"bit_xor(${Docs.hash})")).head()
-    (r.getLong(0), xorAt(r, 1))
+  /** The (n_docs, content_xor) facts of a (doc_id, text) slice —
+    * [[sliceProps]]' one aggregate read back as numbers, the actual
+    * side of the [[requireSameSlice]] audit. */
+  private[graft] def ccSliceChecksum(docs: DataFrame): (Long, Long) =
+    docFacts(sliceProps(Docs, docs))
+
+  private def docFacts(props: Map[String, String]): (Long, Long) =
+    (props(Docs.n).toLong, props(Docs.xor).toLong)
+
+  /** THE full-slice comparison — the one check that is not a
+    * below-cut admission: the (n, xor) facts `props` recorded at
+    * `path` must equal `actual`, the facts of the whole corpus the
+    * artifact is about to serve or feed. The provenance version is
+    * checked first, so a formula change reads as "rebuild", not as
+    * corpus drift. `what` names the check, `why` the consequence and
+    * the remedy. */
+  private[graft] def requireSameSlice(props: Map[String, String],
+      path: String, actual: (Long, Long), what: String,
+      why: String): Unit = {
+    ArtifactTag.requireProvVersion(props, path)
+    val (n, xor) = actual
+    require(props.get(Docs.n).contains(n.toString)
+        && props.get(Docs.xor).contains(xor.toString),
+      s"$what: full-slice checksum mismatch at $path (artifact " +
+        s"n=${props.getOrElse(Docs.n, "<none>")} " +
+        s"xor=${props.getOrElse(Docs.xor, "<none>")}, corpus n=$n " +
+        s"xor=$xor) — $why")
   }
 
   /** An admitted refresh: the parent's props and the new generation's
@@ -558,10 +576,12 @@ object Materialize {
   private final case class Admitted(parent: Map[String, String],
       next: Map[String, String])
 
-  /** THE admission path of every refresh writer (lexical, feature
-    * store, minhash/simhash, ivf/pq, pair graph — append and delta
-    * alike). Guards, in order: `_graft_corpus` tag must name `dir`;
-    * the caller's `guard` over the parent props (pair-stage drift);
+  /** THE below-cut admission — of every refresh writer (lexical,
+    * feature store, minhash/simhash, ivf/pq, pair graph — append and
+    * delta alike) and, through [[admitDocs]], of every artifact reader
+    * that takes its cut from an old artifact. Guards, in order:
+    * `_graft_corpus` tag must name `dir`; the caller's `guard` over
+    * the parent props (pair-stage drift);
     * provenance version ([[ArtifactTag.requireProvVersion]] — a
     * formula change reads as "rebuild", not as corpus corruption); the
     * boundary key's presence (empty or pre-provenance artifacts have
@@ -630,49 +650,49 @@ object Materialize {
                 else r.getLong(2).toString))), prepared.get)
   }
 
+  /** [[admit]] for an artifact READER over a (doc_id, text) corpus —
+    * `dedup_{minhash,simhash}_incremental` and `cc_incremental` in
+    * artifact mode: the same guards, the same aggregate beside the
+    * same kind of `prepare` (the batch's checkpointed frames), and the
+    * same refusals; a reader writes nothing, so only `prepare`'s
+    * result comes back (it receives the cut). */
+  private[graft] def admitDocs[A](s: SparkSession, dir: String,
+      oldPath: String, docs: DataFrame, what: String, remedy: String,
+      guard: Map[String, String] => Unit = _ => ())(
+      prepare: Long => A): A =
+    admit(s, dir, oldPath, Docs, docs, what, remedy, guard)(prepare)._2
+
   private def writeCcLabels(s: SparkSession,
       labels: => DataFrame, // by-name: the CC loop runs jobs eagerly,
       // so evaluate only after the guards pass
       docs: DataFrame, path: String, tag: String,
       guardPairs: Boolean): Unit = {
     requireFresh(s, path)
-    // the checksum of the slice being labeled — computed BEFORE any
+    // the provenance of the slice being labeled — computed BEFORE any
     // file is written, because it double-duties as the stale-pair
     // guard below and a guard failure must leave no half-artifact
-    val (n, xor) = ccSliceChecksum(docs.select("doc_id", "text"))
+    val props = sliceProps(Docs, docs.select("doc_id", "text"))
     // stale-pair guard (round-11 advisor finding): when the edge
     // source is the persisted pair artifact (graft.dedup.pairsPath,
     // see [[graft.operators.Dedup.loopLabels]]), the labels INHERIT
     // its content — but this writer stamps them with a FRESH corpus
     // checksum, so labels built from a stale pair artifact (corpus
     // regenerated in place under the same dir) would pass every
-    // downstream checksum guard. Refuse at write time: the pair
-    // artifact's recorded corpus checksum must match the corpus being
-    // labeled. Essentially free — the (n, xor) aggregate above is
-    // computed for the props sidecar anyway.
+    // downstream checksum guard. Refuse at write time against the
+    // facts the sidecar records anyway — no extra aggregate.
     if (guardPairs)
       GraftConf.PairsPath(s).foreach { pp =>
-        val pairProps = ArtifactTag.readProps(s, pp)
-        ArtifactTag.requireProvVersion(pairProps, pp)
-        require(pairProps.get("n_docs").contains(n.toString)
-            && pairProps.get("content_xor").contains(xor.toString),
-          s"refusing to persist CC labels: the edge source is the " +
-            s"pair artifact at $pp, whose recorded corpus checksum " +
-            s"(n=${pairProps.getOrElse("n_docs", "<none>")} " +
-            s"xor=${pairProps.getOrElse("content_xor", "<none>")}) " +
-            s"does not match the corpus being labeled (n=$n " +
-            s"xor=$xor) — the labels would derive from STALE pairs " +
-            "yet carry a fresh checksum (provenance laundering); " +
-            "rebuild the pair artifact first")
+        requireSameSlice(ArtifactTag.readProps(s, pp), pp, docFacts(props),
+          "refusing to persist CC labels from the pair artifact",
+          "the labels would derive from STALE pairs yet carry a fresh " +
+            "checksum (provenance laundering); rebuild the pair " +
+            "artifact first")
       }
     sortedWrite(labels, path, Seq("doc_id"), Seq("doc_id"))
-    // provenance props (round-9 advisor fixes #1+#2): the pair-stage
-    // stamp and the content checksum of the labeled slice —
-    // cc_incremental's reader refuses another stage's labels and
-    // silent slice substitution
-    seal(s, path, tag, PairStage ++ Map(
-      "prov_ver" -> ArtifactTag.ProvVersion,
-      "n_docs" -> n.toString, "content_xor" -> xor.toString))
+    // the pair-stage stamp and the labeled slice's provenance, max id
+    // included — cc_incremental's reader [[admit]]s the artifact and
+    // takes its cut from it, like every other docs artifact
+    seal(s, path, tag, props ++ PairStage)
   }
 
   /** Materialize the LEXICAL inverted index — the serving artifact the
@@ -814,8 +834,10 @@ object Materialize {
           "pointers are corrupt; rebuild the artifact")
       require(out.size < 64,
         s"artifact chain at $path exceeds 64 generations — compact it " +
-          "(the family's merge writer over the chain head collapses " +
-          "the chain into one artifact)")
+          "into one artifact: sigIndexCompact, ivfIndexCompact or " +
+          "pqIndexCompact over the chain head for the minhash, simhash, " +
+          "IVF and PQ indexes; the family's merge writer over the chain " +
+          "head (lexicalIndexDelta, featureStoreDelta) for the others")
       ArtifactTag.require(s, p, tag)
       out += p
       p = ArtifactTag.readProps(s, p).getOrElse("parent", null)

@@ -484,7 +484,7 @@ class ApproxSpec extends SparkSpec {
     assert(phD.map(_.toString).toSeq === phQ.map(_.toString).toSeq,
       "phrase_delta_refresh diverged from the in-query phrase_search")
     // the append compositions share the scratch/serve-routing surface
-    // (lexScratch + chain serve) and get the same pin
+    // (Dedup.midpointRefresh + chain serve) and get the same pin
     val bmA = Retrieval.bm25AppendRefresh(spark, sf0001).collect()
     assert(bmA.map(_.toString).toSeq === bmQ.map(_.toString).toSeq,
       "bm25_append_refresh diverged from the in-query bm25_topk")

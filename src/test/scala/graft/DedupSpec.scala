@@ -1426,6 +1426,52 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("all ten pair consumers run on a pair-free corpus, in-query and " +
+      "artifact-served") {
+    val consumers = Seq("neardup_degree_dist", "neardup_pagerank",
+      "neardup_triangles", "neardup_kcore", "neardup_quality_delta",
+      "dedup_cross_source_rate", "minhash_tuning_curve",
+      "curation_funnel", "dedup_clusters", "cc_incremental")
+    // sf0.001's first 8 documents, every column kept, each text
+    // rewritten so no shingle is shared by any two: the verified pair
+    // graph is empty (the other tables are sf0.001's own)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pairfree")
+    new java.io.File(sf0001).listFiles()
+      .filter(_.getName != "documents.parquet")
+      .foreach(f => java.nio.file.Files.createSymbolicLink(
+        tmp.resolve(f.getName), f.toPath))
+    val dir = tmp.toString
+    val texts = (0 until 8).map { i =>
+      val t = alpha(i); s"alpha$t beta$t gamma$t delta$t epsilon$t"
+    }
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+      .orderBy("doc_id").limit(8).collect()
+    spark.createDataFrame(
+        java.util.Arrays.asList(docs.zip(texts).map { case (r, t) =>
+          org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(
+            r.fieldIndex("text"), t))
+        }: _*), docs.head.schema)
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Dedup.ngramJaccard(spark, dir).count() === 0,
+      "degenerate fixture: a pair was planted")
+    def strs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
+    val inQuery = consumers.map { q =>
+      q -> strs(SparkEntry.queries(q)(spark, dir))
+    }.toMap
+    assert(inQuery("neardup_pagerank").isEmpty,
+      "a pair-free graph has no node to rank")
+    val path = java.nio.file.Files
+      .createTempDirectory("graft-pairfree-art").toString + "/pairs"
+    graft.ops.Materialize.pairGraph(spark, dir, path)
+    withConf("graft.dedup.pairsPath" -> path) {
+      consumers.foreach { q =>
+        assert(strs(SparkEntry.queries(q)(spark, dir)) === inQuery(q),
+          s"$q: artifact-served rows diverged from in-query mode")
+      }
+    }
+  }
+
   test("opt-in pair content audit (graft.dedup.verifyPairsContent) " +
       "refuses a corpus that changed under an unchanged pairsPath") {
     val texts = Seq("alpha beta gamma delta epsilon",
@@ -1489,7 +1535,8 @@ class DedupSpec extends SparkSpec {
     assert(viaDelta === full,
       "cold-start fallback diverged from the full pair build")
     assert(viaDelta.nonEmpty, "degenerate fixture: no planted pair")
-    // the lexical compositions share the fallback rule via lexScratch
+    // the lexical compositions share the fallback rule via
+    // Dedup.midpointRefresh
     assert(graft.operators.Retrieval.bm25AppendRefresh(spark, dir)
       .collect().map(_.toString).toSeq ===
       graft.operators.Retrieval.bm25TopK(spark, dir)
