@@ -139,9 +139,7 @@ object Dedup {
     * distinct) — the graph kernel, reusable for any edge source. The
     * input must already be materialized (three consumers below). */
   private[graft] def trianglesOf(pairs: DataFrame): DataFrame = {
-    val deg = pairs
-      .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("degree"))
+    val deg = degrees(pairs)
       .localCheckpoint() // consumed by stats + both orientation joins
     val stats = deg.agg(count(lit(1)).as("n_nodes"),
       sum(expr("degree * (degree - 1) div 2")).as("n_wedges"))
@@ -195,13 +193,27 @@ object Dedup {
 
   /** Degree-orient + enumerate wedges from a raw (a_id, b_id) pair
     * frame — the Stress receipt entry point. */
-  private[graft] def triangleWedges(pairs: DataFrame): DataFrame = {
-    val deg = pairs
-      .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
+  private[graft] def triangleWedges(pairs: DataFrame): DataFrame =
+    wedgeCandidates(
+      orientEdges(pairs, degrees(pairs).localCheckpoint()).localCheckpoint())
+
+  /** (doc_id, degree) of every node of an (a_id, b_id) pair frame: both
+    * endpoints of a pair in ONE pass (`explode(array(a_id, b_id))`, see
+    * [[degreeDist]] for why not a union). */
+  private def degrees(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("degree"))
-      .localCheckpoint()
-    wedgeCandidates(orientEdges(pairs, deg).localCheckpoint())
-  }
+
+  /** The directed (src, dst) edges of an undirected (a_id, b_id) pair
+    * frame, both directions of a pair fanned out in one pass: a union
+    * of the pairs with their reverse would run an unmaterialized pair
+    * frame's candidate join and verify once per branch (the
+    * [[degreeDist]] lesson). */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("a_id").as("src"), col("b_id").as("dst")),
+        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** PageRank over the verified near-dup graph — the hub-scoring stage
     * that ranks TEMPLATE documents: a boilerplate page near-duplicating
@@ -244,10 +256,7 @@ object Dedup {
     * kernel, shared with the spec (which pins depth semantics on a
     * chain graph the clique-shaped testdata cannot exhibit). */
   private[graft] def pagerankOf(pairs: DataFrame, iters: Int): DataFrame = {
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .toDF("src", "dst")
-      .localCheckpoint()
+    val edges = undirected(pairs).localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // a pair-free graph has no node to rank: n = 0 leaves `deg` empty,
@@ -319,9 +328,7 @@ object Dedup {
   private[graft] def kcoreWithRounds(pairs: DataFrame, maxIters: Int)
       : (DataFrame, Int) = {
     val w = org.apache.spark.sql.expressions.Window
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .toDF("src", "dst")
+    val edges = undirected(pairs)
       .repartition(col("src")) // co-partition with the per-round join key
       .localCheckpoint()
     var h = edges.groupBy(col("src").as("doc_id"))
@@ -541,7 +548,7 @@ object Dedup {
     * modern corpus build runs ALONGSIDE n-gram dedup: paraphrases and
     * re-renderings share meaning (nearby embeddings) without sharing
     * shingles. Composition of the suite's existing pieces: k-means
-    * cells ([[Similarity.kmeansCells]] — the same seeds/2-Lloyd/
+    * cells ([[Similarity.kmeansFit]] — the same seeds/2-Lloyd/
     * rounded-centroid recipe `cluster_kmeans` runs under the oracle,
     * here with C = clamp(⌈√n⌉, 8, 256) cells so expected cell size is
     * ~√n), then candidate pairs ONLY within a cell (the pair join is
@@ -619,7 +626,8 @@ object Dedup {
       .select(col("vec_id"), Fns.asDouble(col("embedding")).as("emb"))
       .localCheckpoint() // seeds + every Lloyd pass + both pair sides
     val n = e.count()
-    val assigned = Similarity.kmeansCells(e, semanticCells(s, n))
+    val assigned = Similarity.kmeansCells(e,
+        Similarity.kmeansFit(e, semanticCells(s, n)))
       .localCheckpoint() // consumed by both pair sides + the output join
     val m = assigned.join(e, "vec_id")
     val cands = m.as("a").join(m.as("b"),
@@ -686,7 +694,7 @@ object Dedup {
     val cents = Similarity.kmeansFit(base, semanticCells(s, base.count()))
       .localCheckpoint() // frozen — consumed once per assign side
     val assigned = Similarity
-      .kmeansAssign(tagged.select("vec_id", "emb"), cents)
+      .kmeansCells(tagged.select("vec_id", "emb"), cents)
       .join(tagged, "vec_id")
       .localCheckpoint() // consumed by both pair sides + the output join
     val newSide = assigned.filter(col("is_new") === 1)
@@ -819,9 +827,7 @@ object Dedup {
     * (≤ corpus rows) and the degree histogram (≤ max-degree rows).
     * Nothing here exceeds the candidate-join cost already paid. */
   def degreeDist(s: SparkSession, d: String): DataFrame = {
-    val deg = verifiedPairs(s, d)
-      .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("degree"))
+    val deg = degrees(verifiedPairs(s, d))
     Tables.documents(s, d).select("doc_id")
       .join(deg, Seq("doc_id"), "left")
       .select(coalesce(col("degree"), lit(0L)).as("degree"))
@@ -2068,7 +2074,7 @@ object Dedup {
 
   /** [[ngramJaccard]] WITHOUT the presentation sort — the pair frame
     * [[verifiedPairs]] hands to its order-invariant consumers (see
-    * [[prefixVerifyRaw]]; serving mode was already unsorted, so the
+    * [[verifyRaw]]; serving mode was already unsorted, so the
     * two modes now run the same shape). The registered pair-returning
     * queries keep the sorted form. */
   private def ngramJaccardRaw(s: SparkSession, d: String): DataFrame =
@@ -2077,7 +2083,7 @@ object Dedup {
   private def ngramJaccardRawOf(s: SparkSession,
       docs: DataFrame): DataFrame = {
     val (arr, cands) = jaccardPrefixStage(s, docs)
-    prefixVerifyRaw(arr, cands)
+    verifyRaw(cands, arr, arr)
   }
 
   /** [[verifiedPairs]]' (a_id, b_id) projection, MATERIALIZED for
@@ -2099,16 +2105,20 @@ object Dedup {
       s: SparkSession, docs: DataFrame): DataFrame =
     ngramJaccardRawOf(s, docs).orderBy("a_id", "b_id")
 
-  /** Shared exact-verify tail of [[deltaPairGraph]] and
-    * [[verifyCandidates]]: candidate id-pairs × the full (uncapped)
-    * per-doc shingle arrays — for the prefix path the SAME
-    * materialized (doc_id, hs, n) frame the stage derived its postings
-    * from, so the verify pays no second tokenize/group pass — →
-    * row-identical to the all-pairs oracle. */
-  private def prefixVerify(arr: DataFrame, cands: DataFrame): DataFrame =
-    prefixVerifyRaw(arr, cands).orderBy("a_id", "b_id")
+  /** The one exact-verify tail of every pair stage — the prefix
+    * filter ([[deltaPairGraph]], [[verifyCandidates]]) and the three
+    * MinHash paths ([[minhashLsh]], [[minhashIncremental]],
+    * [[minhashServe]]): candidate (a_id, b_id) pairs × the full
+    * (uncapped) (doc_id, hs, n) shingle arrays of each side, exact
+    * Jaccard ≥ 0.5 in integers (3·inter ≥ na + nb), sorted by
+    * (a_id, b_id). For the prefix path both sides are the SAME
+    * materialized frame the stage derived its postings from, so the
+    * verify pays no second tokenize/group pass. */
+  private def verify(cands: DataFrame, aSigs: DataFrame,
+      bSigs: DataFrame): DataFrame =
+    verifyRaw(cands, aSigs, bSigs).orderBy("a_id", "b_id")
 
-  /** [[prefixVerify]] WITHOUT the presentation sort — what
+  /** [[verify]] WITHOUT the presentation sort — what
     * order-invariant pair CONSUMERS read (round 16, guide §2.4 "an
     * orderBy used only to make output deterministic"): the sort is
     * the pair-returning queries' output contract, but every consumer
@@ -2118,12 +2128,12 @@ object Dedup {
     * (`graft.dedup.pairsPath`) always handed consumers an unsorted
     * scan — DedupSpec pins both modes row-identical for all six
     * graph consumers, which is the order-invariance proof. */
-  private def prefixVerifyRaw(arr: DataFrame, cands: DataFrame)
-      : DataFrame =
+  private def verifyRaw(cands: DataFrame, aSigs: DataFrame,
+      bSigs: DataFrame): DataFrame =
     cands
-      .join(arr.select(col("doc_id").as("a_id"), col("hs").as("hs_a"),
+      .join(aSigs.select(col("doc_id").as("a_id"), col("hs").as("hs_a"),
         col("n").as("na")), "a_id")
-      .join(arr.select(col("doc_id").as("b_id"), col("hs").as("hs_b"),
+      .join(bSigs.select(col("doc_id").as("b_id"), col("hs").as("hs_b"),
         col("n").as("nb")), "b_id")
       .withColumn("inter",
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
@@ -2190,7 +2200,7 @@ object Dedup {
     val (arr, cands) = jaccardPrefixStage(s,
       Tables.documents(s, d).select("doc_id", "text"),
       _.filter(col("doc_id") >= cut))
-    prefixVerify(arr, cands)
+    verify(cands, arr, arr)
   }
 
   /** [[deltaPairGraph]]'s (a_id, b_id) projection — what the CC
@@ -2296,9 +2306,10 @@ object Dedup {
     * StreamingSpec pins that equality). Scale shape: candidates are
     * id-pairs (16 bytes), the store side ships only the two shingle-hash
     * arrays per surviving pair — never a corpus×corpus join. */
-  def verifyCandidates(cands: DataFrame, docs: DataFrame): DataFrame =
-    prefixVerify(shingleArraysOf(docs.select("doc_id", "text")),
-      cands.select("a_id", "b_id").distinct())
+  def verifyCandidates(cands: DataFrame, docs: DataFrame): DataFrame = {
+    val arr = shingleArraysOf(docs.select("doc_id", "text"))
+    verify(cands.select("a_id", "b_id").distinct(), arr, arr)
+  }
 
   /** Join candidate (a_id, b_id, inter) with sizes and keep j ≥ 0.5. */
   private[graft] def jaccardVerify(cands: DataFrame, sizes: DataFrame)
@@ -2319,16 +2330,7 @@ object Dedup {
     * hash evals, no 128× row explosion or extra shuffle). */
   def minhashLsh(s: SparkSession, d: String): DataFrame = {
     val (cands, docs) = minhashCandidateStage(s, d)
-    cands
-      .join(docs.select(col("doc_id").as("a_id"), col("hs").as("hs_a"),
-        col("n").as("na")), "a_id")
-      .join(docs.select(col("doc_id").as("b_id"), col("hs").as("hs_b"),
-        col("n").as("nb")), "b_id")
-      .withColumn("inter",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .filter(col("inter") * 3 >= col("na") + col("nb"))
-      .select("a_id", "b_id", "inter", "na", "nb")
-      .orderBy("a_id", "b_id")
+    verify(cands, docs, docs)
   }
 
   /** Candidate stage of [[minhashLsh]] — (distinct band-collision
@@ -2420,19 +2422,7 @@ object Dedup {
       .select(col("o.doc_id").as("a_id"), col("n.doc_id").as("b_id"))
       .distinct()
     val cands = newOld.unionAll(minhashBandPairs(newBands)).distinct()
-    val aSide = oldSigs.select(col("doc_id").as("a_id"),
-        col("hs").as("hs_a"), col("n").as("na"))
-      .unionAll(newArr.select(col("doc_id").as("a_id"),
-        col("hs").as("hs_a"), col("n").as("na")))
-    cands
-      .join(aSide, "a_id")
-      .join(newArr.select(col("doc_id").as("b_id"), col("hs").as("hs_b"),
-        col("n").as("nb")), "b_id")
-      .withColumn("inter",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .filter(col("inter") * 3 >= col("na") + col("nb"))
-      .select("a_id", "b_id", "inter", "na", "nb")
-      .orderBy("a_id", "b_id")
+    verify(cands, oldSigs.unionAll(newArr), newArr)
   }
 
   /** The two frames [[graft.ops.Materialize.minhashIndexOf]] persists
@@ -2482,16 +2472,7 @@ object Dedup {
       Seq("doc_id", "band", "band_sig"))
     val sigs = graft.ops.Materialize.chainRead(s, path, d, "sigs",
       Seq("doc_id", "hs", "n"))
-    minhashBandPairs(bands)
-      .join(sigs.select(col("doc_id").as("a_id"), col("hs").as("hs_a"),
-        col("n").as("na")), "a_id")
-      .join(sigs.select(col("doc_id").as("b_id"), col("hs").as("hs_b"),
-        col("n").as("nb")), "b_id")
-      .withColumn("inter",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .filter(col("inter") * 3 >= col("na") + col("nb"))
-      .select("a_id", "b_id", "inter", "na", "nb")
-      .orderBy("a_id", "b_id")
+    verify(minhashBandPairs(bands), sigs, sigs)
   }
 
   /** `dedup_minhash_append_refresh` — the GENERATIONAL ingest cycle

@@ -310,7 +310,7 @@ object Similarity {
     *
     * Scale shape: ONE posexplode scan, d×n rows collapsing map-side
     * into d (=64) groups — the same Expand-free single pass
-    * [[kmeansFit]]'s centroid step uses; output is d rows. */
+    * [[meanVectors]] runs; output is d rows. */
   def embeddingDimStats(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(posexplode(Fns.asDouble(col("embedding")))
@@ -351,9 +351,9 @@ object Similarity {
     val ref = e.filter(col("vec_id") % 2 === 0)
     val cur = e.filter(col("vec_id") % 2 === 1)
     val cents = kmeansFit(ref, 8).localCheckpoint()
-    val nr = kmeansAssign(ref, cents)
+    val nr = kmeansCells(ref, cents)
       .groupBy("cid").agg(count(lit(1L)).as("n_ref"))
-    val nc = kmeansAssign(cur, cents)
+    val nc = kmeansCells(cur, cents)
       .groupBy("cid").agg(count(lit(1L)).as("n_new"))
     nr.join(nc, Seq("cid"), "full")
       .select(col("cid"),
@@ -386,7 +386,7 @@ object Similarity {
     * to 10⁻⁶.
     *
     * Scale shape: ONE n×C scored pass (broadcast centroid frame, the
-    * [[kmeansAssign]] shape) collapsing map-side into a per-vector
+    * [[kmeansCells]] shape) collapsing map-side into a per-vector
     * sorted C-element array whose head yields own/best-other — no
     * second corpus pass, no window; the per-cell rollup is ≤ C rows.
     * The fit checkpoints once. */
@@ -451,7 +451,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), Fns.asDouble(col("embedding")).as("emb"))
       .localCheckpoint() // consumed by seeding + every Lloyd pass
-    val cells = kmeansCells(e, 8)
+    val cells = kmeansCells(e, kmeansFit(e, 8))
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
     val per = cells.join(docs, col("vec_id") === col("doc_id"))
       .groupBy("cid", "source").agg(count(lit(1)).as("n_docs"))
@@ -526,14 +526,9 @@ object Similarity {
   def centroidClassify(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
-    val cent = e.filter(col("vec_id") >= 50)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("label", "pos")
-      .agg((round(avg(col("v").cast("double")), 4) + lit(0.0)).as("cv"))
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .select(col("label").as("c_label"), col("centroid"))
+    val cent = meanVectors(e.filter(col("vec_id") >= 50), Seq("label"),
+        col("embedding"), round(_, 4) + lit(0.0))
+      .select(col("label").as("c_label"), col("cvec").as("centroid"))
     e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("probe_id"), col("embedding"),
         col("label").as("true_label"))
@@ -863,18 +858,18 @@ object Similarity {
     * build's own encode pass does. */
   private[graft] def pqEncodeFrozen(batch: DataFrame,
       cb: DataFrame): DataFrame =
-    pqAssignTo(pqSub(batch), cb)
+    pqCodes(pqSub(batch), cb)
 
-  /** One L2 argmin assignment of a subvector frame against a
-    * broadcast codebook (smaller cid on ties) — shared by the Lloyd
-    * passes, the final encode, and the frozen batch encode. */
-  private def pqAssignTo(sub: DataFrame, cb: DataFrame): DataFrame =
-    sub.join(broadcast(cb), "sub")
-      .withColumn("d2", l2sq(col("svec"), col("cvec")))
-      .groupBy("vec_id", "sub")
-      .agg(max_by(col("cid"),
-        struct((lit(0) - col("d2")).as("nd"),
-          (lit(0) - col("cid")).as("tb"))).as("code"))
+  /** The (vec_id, sub, code) encode of a subvector frame: the
+    * [[nearest]] codeword of its subspace — shared by the build's
+    * final encode and the frozen batch encode. */
+  private def pqCodes(sub: DataFrame, cb: DataFrame): DataFrame =
+    nearest(sub, cb, Seq("sub"), pqScore)
+      .select(col("vec_id"), col("sub"), col("cid").as("code"))
+
+  /** PQ's score: the negated squared L2, so the highest is the
+    * nearest. */
+  private def pqScore: Column = lit(0) - l2sq(col("svec"), col("cvec"))
 
   /** [[pqBuild]] over an explicit (vec_id, embedding) slice — the
     * base-corpus codebook fit of the generational append cycle. */
@@ -885,25 +880,13 @@ object Similarity {
     // (vec_id, sub, svec): 8 slim rows per vector, consumed by every
     // Lloyd pass + the final encode
     val sub = pqSub(vecs).localCheckpoint()
-    val k = pqK(e.count())
-    val seedIds = e.orderBy("vec_id").limit(k)
-      .select((row_number().over(Window.orderBy("vec_id")) - 1)
-        .cast("int").as("cid"), col("vec_id"))
-    val seeds = sub.join(broadcast(seedIds), "vec_id")
+    val seeds = sub
+      .join(broadcast(smallestIds(e, pqK(e.count()), col("vec_id"))),
+        "vec_id")
       .select(col("sub"), col("cid"), col("svec").as("cvec"))
-    def assign(cb: DataFrame): DataFrame = pqAssignTo(sub, cb)
-    def refresh(assigned: DataFrame): DataFrame =
-      assigned.join(sub, Seq("vec_id", "sub"))
-        .select(col("sub"), col("code").as("cid"),
-          posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy("sub", "cid", "pos").agg(round(avg("v"), 6).as("cv"))
-        .groupBy("sub", "cid")
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-    var cb = seeds
-    (1 to 2).foreach(_ => cb = refresh(assign(cb)))
-    val cbMat = cb.localCheckpoint() // consumed by encode + probe LUT
-    (assign(cbMat), cbMat)
+    val cb = lloyd(sub, seeds, Seq("sub"), pqScore, col("svec"))
+      .localCheckpoint() // consumed by encode + probe LUT
+    (pqCodes(sub, cb), cb)
   }
 
   /** K-means clustering over embeddings UNDER THE ORACLE — the
@@ -913,18 +896,17 @@ object Similarity {
     * step pinned by DuckDB parity, which takes three determinism
     * commitments: seeds are the k=8 smallest vec_ids (no RNG), exactly
     * 2 Lloyd iterations, and centroid components are ROUNDED to 6
-    * decimals between iterations — per-dim averages land on a grid
-    * both engines agree on (cluster sizes ≈ n/8 ≫ 10, so the mean
-    * never sits at a rounding midpoint, SURVEY §4), and every cosine
-    * then compares bit-identical inputs through the same sequential
+    * decimals between iterations ([[meanVectors]] says why), so every
+    * cosine compares bit-identical inputs through the same sequential
     * fold, making the per-vector argmax — ties broken toward the
     * smaller cid on both engines — hash-exact.
     *
-    * Scale shape = [[ivfBuild]]'s: assignment is crossJoin-broadcast of
-    * k centroid rows collapsed map-side by `max_by` (n tiny rows out,
-    * no n×k shuffle); centroid refresh is one posexplode aggregate by
-    * (cid, pos). Everything stays relational — no driver collect at
-    * all, k rows flow as a broadcast frame. */
+    * Scale shape = [[ivfBuild]]'s, one [[lloyd]] loop: assignment is
+    * crossJoin-broadcast of k centroid rows collapsed map-side by
+    * `max_by` ([[nearest]]: n tiny rows out, no n×k shuffle); centroid
+    * refresh is one posexplode aggregate by (cid, pos). Everything
+    * stays relational — no driver collect at all, k rows flow as a
+    * broadcast frame. */
   def clusterKmeans(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     // NO Spread (round 16, verdict #3): same-session A/B at sf0.1/c32
@@ -936,53 +918,98 @@ object Similarity {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), Fns.asDouble(col("embedding")).as("emb"))
       .localCheckpoint() // consumed by seeding + every Lloyd pass
-    kmeansCells(e, 8).orderBy("vec_id")
+    kmeansCells(e, kmeansFit(e, 8)).orderBy("vec_id")
   }
 
-  /** The oracle-replayable k-means kernel shared by [[clusterKmeans]]
-    * (k = 8, the user-facing clustering) and
-    * [[Dedup.semantic]] (k ≈ √n cells): seeds are the k smallest
-    * vec_ids, exactly 2 Lloyd iterations, centroids rounded to 6
-    * decimals between iterations — the determinism recipe documented on
-    * [[clusterKmeans]]. `e` must be (vec_id, emb: array<double>),
-    * already materialized (each Lloyd pass re-consumes it). Returns the
-    * final (vec_id, cid) assignment; k rows only ever flow as a
-    * broadcast frame, nothing collects to the driver. */
-  private[graft] def kmeansCells(e: DataFrame, k: Int): DataFrame =
-    kmeansAssign(e, kmeansFit(e, k))
-
-  /** Nearest-centroid assignment of `(vec_id, emb)` rows against a
-    * `(cid, cvec)` centroid frame — broadcast crossJoin + map-side
-    * max_by argmax (cosine desc, smaller cid on ties). Shared by
-    * [[kmeansCells]] (fit-set assignment) and [[annIndexUpsert]]
-    * (new-batch assignment against FROZEN centroids). */
-  private[graft] def kmeansAssign(e: DataFrame, cents: DataFrame)
+  /** The k-means cells of `(vec_id, emb)` rows against a `(cid, cvec)`
+    * centroid frame: the [[nearest]] centroid by cosine. Shared by the
+    * fit-set assignment ([[clusterKmeans]], [[Dedup.semantic]]) and
+    * the assignments against FROZEN centroids ([[annIndexUpsert]],
+    * [[clusterAssignDrift]], [[Dedup.semanticIncremental]]). Returns
+    * (vec_id, cid); k rows only ever flow as a broadcast frame. */
+  private[graft] def kmeansCells(e: DataFrame, cents: DataFrame)
       : DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("cc", cos(col("emb"), col("cvec")))
-      .groupBy("vec_id")
-      .agg(max_by(col("cid"),
-        struct(col("cc"), (lit(0) - col("cid")).as("tb"))).as("cid"))
+    nearest(e, cents, Nil, kmeansScore)
 
-  /** The k-means fit alone: deterministic first-k seeds, 2 Lloyd
-    * iterations with grid-rounded (1e-6) centroid components so the
-    * oracle replays the trajectory exactly; returns the final
-    * `(cid, cvec)` centroid frame (empty cells drop out). */
-  private[graft] def kmeansFit(e: DataFrame, k: Int): DataFrame = {
-    val seeds = e.orderBy("vec_id").limit(k)
+  private def kmeansScore: Column = cos(col("emb"), col("cvec"))
+
+  /** The k-means fit: the k smallest vec_ids seed the [[lloyd]] loop
+    * (the recipe documented on [[clusterKmeans]]). `e` must be
+    * (vec_id, emb: array<double>), already materialized (each Lloyd
+    * pass re-consumes it). Returns the `(cid, cvec)` centroid frame. */
+  private[graft] def kmeansFit(e: DataFrame, k: Int): DataFrame =
+    lloyd(e, smallestIds(e, k, col("emb").as("cvec")), Nil, kmeansScore,
+      col("emb"))
+
+  /** Seeds of the k-means and PQ fits: the k smallest vec_ids of `e`,
+    * numbered 0…k−1 in vec_id order as `cid`, beside `cols`. */
+  private def smallestIds(e: DataFrame, k: Int, cols: Column*): DataFrame =
+    e.orderBy("vec_id").limit(k)
       .select((row_number().over(Window.orderBy("vec_id")) - 1)
-        .cast("int").as("cid"), col("emb").as("cvec"))
-    def centroids(assigned: DataFrame): DataFrame =
-      assigned.join(e, "vec_id")
-        .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(round(avg("v"), 6).as("cv"))
-        .groupBy("cid")
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-    var cents = seeds
-    (1 to 2).foreach(_ => cents = centroids(kmeansAssign(e, cents)))
-    cents
+        .cast("int").as("cid") +: cols: _*)
+
+  /** Two Lloyd passes from `seeds` — the one loop behind the k-means,
+    * IVF and PQ fits. Each pass assigns every point to its [[nearest]]
+    * centroid under `score`, joins the point back on vec_id (and `on`),
+    * and refreshes each centroid as the [[meanVectors]] of `vec` over
+    * its points, on the 10⁻⁶ grid. `handOff` passes each refreshed
+    * frame on to the next pass: identity keeps it a broadcast frame,
+    * IVF collects it (≤ 256 rows) to the driver. A centroid that
+    * attracts no point drops out. */
+  private def lloyd(points: DataFrame, seeds: DataFrame, on: Seq[String],
+      score: Column, vec: Column,
+      handOff: DataFrame => DataFrame = identity): DataFrame =
+    (1 to 2).foldLeft(seeds) { (cents, _) =>
+      handOff(meanVectors(
+        nearest(points, cents, on, score).join(points, "vec_id" +: on),
+        on :+ "cid", vec, round(_, 6)))
+    }
+
+  /** The nearest `(on…, cid, cvec)` centroid of every `(vec_id, on…)`
+    * point: the broadcast centroid frame joins on `on` (a crossJoin
+    * when empty), and `max_by(cid, (score, −cid))` keeps the highest
+    * score per point, smaller cid on ties. An aggregate, not a
+    * row_number window: the n×C scored rows collapse map-side into n
+    * tiny (vec_id, on…, cid) rows inside the scan task, where a window
+    * would shuffle and sort all n×C rows. The max_by value is cid
+    * alone: a buffer carrying the vector re-copies it on every update
+    * (measured 1.5× slower). */
+  private[graft] def nearest(points: DataFrame, cents: DataFrame,
+      on: Seq[String], score: Column): DataFrame = {
+    val scored =
+      if (on.isEmpty) points.crossJoin(broadcast(cents))
+      else points.join(broadcast(cents), on)
+    scored.withColumn("score", score)
+      .groupBy(("vec_id" +: on).map(col): _*)
+      .agg(max_by(col("cid"),
+        struct(col("score"), (lit(0) - col("cid")).as("tb"))).as("cid"))
   }
+
+  /** The per-`keys` mean of the `vec` arrays of `assigned`, as a
+    * `(keys…, cvec)` frame: one posexplode, one average per
+    * (keys, pos) passed through `cell`, components reassembled in pos
+    * order. One aggregate, map-side combined.
+    *
+    * The Lloyd fits pass `round(_, 6)`: a raw double average differs
+    * across summation orders by ulps, so the oracle could never replay
+    * the trajectory; on the 10⁻⁶ grid both engines hold the identical
+    * double, and every later cosine compares bit-identical inputs.
+    * Cells hold ≫ 10 points, which keeps a mean off the rounding
+    * midpoints (SURVEY §4). The grid makes the means only
+    * APPROXIMATELY order-invariant: a mean within an ulp of a rounding
+    * midpoint can still flip under a different partitioning of the
+    * same rows (for example a different `graft.scan.spreadParts`, see
+    * [[graft.ops.Spread]]); the margin is accepted against the grid
+    * and the passing oracle gate. */
+  private[graft] def meanVectors(assigned: DataFrame, keys: Seq[String],
+      vec: Column, cell: Column => Column): DataFrame =
+    assigned
+      .select(keys.map(col) :+ posexplode(vec).as(Seq("pos", "v")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(cell(avg(col("v").cast("double"))).as("cv"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
+        x => x.getField("cv")).as("cvec"))
 
   /** Vector-index UPSERT — the maintenance path every serving index
     * needs between rebuilds: a new vector batch (here the vec_id ≡ 0
@@ -992,7 +1019,7 @@ object Similarity {
     * before appending: base cell size, vectors added, growth ppm.
     * Growth skew here is the rebuild trigger (a cell absorbing most
     * inserts degrades probe cost until re-fit). Composes [[kmeansFit]]
-    * / [[kmeansAssign]] exactly as [[graft.ops.Materialize.ivfIndex]]
+    * / [[kmeansCells]] exactly as [[graft.ops.Materialize.ivfIndex]]
     * writes and `ann_ivf_from_index` probes.
     *
     * Parity: the fit replays under the oracle (grid-rounded centroids,
@@ -1018,9 +1045,9 @@ object Similarity {
     // centroid frame so the 2-pass Lloyd subplan runs once (the
     // neardup_degree_dist double-subplan lesson)
     val cents = kmeansFit(base, 8).localCheckpoint()
-    val nb = kmeansAssign(base, cents)
+    val nb = kmeansCells(base, cents)
       .groupBy("cid").agg(count(lit(1)).as("n_base"))
-    val ad = kmeansAssign(batch, cents)
+    val ad = kmeansCells(batch, cents)
       .groupBy("cid").agg(count(lit(1)).as("n_added"))
     nb.join(ad, Seq("cid"), "full")
       .select(col("cid"),
@@ -1438,13 +1465,12 @@ object Similarity {
     * smaller cid), embedding joined back co-partitioned. */
   private[graft] def ivfAssignFrozen(e: DataFrame,
       cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("cc", cos(Fns.asDouble(col("embedding")), col("cvec")))
-      .groupBy("vec_id")
-      .agg(max_by(col("cid"),
-        struct(col("cc"), (lit(0) - col("cid")).as("tb"))).as("cid"))
+    nearest(e, cents, Nil, ivfScore)
       .join(e, "vec_id")
       .select("vec_id", "embedding", "cid")
+
+  private def ivfScore: Column =
+    cos(Fns.asDouble(col("embedding")), col("cvec"))
 
   /** [[ivfBuild]] over an explicit (vec_id, embedding) slice — the
     * base-corpus build the generational append cycle starts from. */
@@ -1460,41 +1486,10 @@ object Similarity {
     val c = math.min(256L, math.max(4L, math.round(math.sqrt(n.toDouble))))
       .toInt
 
-    // centroid components ROUND to the 10⁻⁶ grid between iterations —
-    // the [[kmeansFit]] determinism rule (round 14): a raw float avg
-    // differs across summation orders by ulps, so the oracle could
-    // never replay the trajectory; on the grid both engines hold the
-    // identical double (cell sizes ≫ 10 keep the avg off rounding
-    // midpoints, SURVEY §4)
-    def toCentroids(assigned: DataFrame): Array[(Int, Seq[Double])] =
-      assigned
-        .select(col("cid"), posexplode(Fns.asDouble(col("embedding")))
-          .as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(round(avg("v"), 6).as("cv"))
-        .groupBy("cid")
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-        .collect() // C ≤ 256 rows: bounded quantizer metadata
-        .map(r => r.getInt(0) -> r.getSeq[Double](1))
-
-    def centFrame(cents: Array[(Int, Seq[Double])]): DataFrame = {
+    def centFrame(cents: Seq[(Int, Seq[Double])]): DataFrame = {
       import s.implicits._
-      cents.toSeq.toDF("cid", "cvec")
+      cents.toDF("cid", "cvec")
     }
-
-    /** Nearest-cell assignment: n×C scored rows, argmax per vector.
-      * The argmax is `max_by(cid, (cc, -cid))` — NOT a row_number
-      * window: an aggregate gets map-side partial aggregation, so the
-      * n×C scored rows collapse to n tiny (vec_id, cid) rows inside the
-      * scan task (the broadcast crossJoin emits all C scores for a
-      * vector in one partition) and the embedding is joined back
-      * co-partitioned. The window variant shuffled + sorted all n×C
-      * rows each CARRYING its embedding array — at n = 10⁹, C = 256
-      * that is a ~75 TB shuffle per Lloyd pass vs ~n small rows here;
-      * measured faster at sf0.1 too. max_by's value is cid alone
-      * because a buffer carrying the embedding array re-copies it on
-      * every update (measured 1.5× slower). */
-    def assign(cents: DataFrame): DataFrame = ivfAssignFrozen(e, cents)
 
     // seed: the C vectors with smallest hash(vec_id) — deterministic
     // uniform sample, no RNG state. Hash leaf routes through the md5
@@ -1504,25 +1499,27 @@ object Similarity {
     // digit-for-digit. (hk, vec_id) order: hash ties (absent in
     // practice at 52 bits) must not leave seed choice to sort
     // nondeterminism.
-    var cents = e.withColumn("hk",
+    val seeds = e.withColumn("hk",
         if (GraftConf.Md5Mode.active)
           Fns.md5Hash52(col("vec_id").cast("string"))
         else xxhash64(col("vec_id")))
       .orderBy("hk", "vec_id").limit(c)
       .select(col("embedding"))
       .collect() // c ≤ 256 seed rows: bounded quantizer metadata
-      .zipWithIndex
+      .toSeq.zipWithIndex
       .map { case (r, i) =>
         i -> r.getSeq[Float](0).map(_.toDouble)
       }
-    (1 to 2).foreach { _ => // Lloyd refinement (empty cells drop out)
-      cents = toCentroids(assign(centFrame(cents)))
-    }
+    val cents = lloyd(e, centFrame(seeds), Nil, ivfScore,
+      Fns.asDouble(col("embedding")),
+      handOff = cf => centFrame(cf
+        .collect().toSeq // C ≤ 256 rows: bounded quantizer metadata
+        .map(r => r.getInt(0) -> r.getSeq[Double](1))))
     // no checkpoint on the final assignment: each caller consumes it in
     // exactly one action (probe join / index write), and leaving the
     // plan intact keeps the map-side max_by argmax visible to the plan
     // audit (e underneath is already localCheckpoint'd)
-    (assign(centFrame(cents)), centFrame(cents))
+    (ivfAssignFrozen(e, cents), cents)
   }
 
   /** Matryoshka-style DIMENSION-TRUNCATION recall ablation — the
@@ -1816,16 +1813,11 @@ object Similarity {
     * centroid (unrounded centroid, rounded output). */
   def labelSpread(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val cent = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("label", "pos")
-      .agg(avg(col("v").cast("double")).as("cv"))
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
+    val cent = meanVectors(Tables.embeddings(s, d), Seq("label"),
+      col("embedding"), identity)
     Tables.embeddings(s, d)
       .join(broadcast(cent), "label")
-      .withColumn("c", cos(Fns.asDouble(col("embedding")), col("centroid")))
+      .withColumn("c", cos(Fns.asDouble(col("embedding")), col("cvec")))
       .groupBy("label")
       .agg((round(avg("c"), 4) + lit(0.0)).as("avg_cos_to_centroid"),
         count(lit(1)).as("n_vecs"))

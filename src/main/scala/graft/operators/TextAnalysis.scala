@@ -903,7 +903,7 @@ object TextAnalysis {
   }
 
   /** Fixed-SIZE per-stratum sampling — the third sampling mode next to
-    * [[sampleHashDocs]] (global rate) and [[sampleStratified]]
+    * [[sampleHash]] (global rate) and [[sampleStratified]]
     * (per-stratum rate): exactly N = 5 documents per source, selected
     * by content-hash rank (md5 of the text, doc_id tie-break) — the
     * eval-holdout / human-review carve-out, where the budget is a COUNT

@@ -27,12 +27,9 @@ import org.apache.spark.sql.DataFrame
   * is deterministic under task retry. Only row-order-INVARIANT consumers
   * may sit downstream (aggregations, joins, per-row projections — every
   * use in this codebase); order-sensitive folds must keep their explicit
-  * sort keys, never partition order. One documented residual (r15
-  * advice): a Lloyd refresh downstream rounds per-dim AVERAGES to 1e-6,
-  * and a rounded double mean is only approximately order-invariant — a
-  * mean within an ulp of a rounding midpoint could flip under a
-  * different partitioning; accepted against the 1e-6 grid margin and
-  * the passing oracle gate.
+  * sort keys, never partition order. One residual: the Lloyd means
+  * downstream are rounded doubles, only approximately order-invariant
+  * (see [[graft.operators.Similarity.meanVectors]]).
   *
   * Guard scope (r15 advice, medium): `df.rdd.getNumPartitions` counts
   * BYTE-RANGE splits, not non-empty partitions — a single multi-hundred-
